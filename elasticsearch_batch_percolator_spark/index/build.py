@@ -482,7 +482,7 @@ def build_index(
     lineage: str = "",
     fail_after_segments: int | None = None,
     positions: bool = False,
-    encoder: str | None = None,
+    encoder: str = "arrow",
 ) -> IndexManifest:
     """Build (or resume) the compressed inverted index for ``docs``
     (doc_id long, tokens array<string>).
@@ -496,10 +496,8 @@ def build_index(
     positions only where a query needs them; they dominate index size).
 
     ``encoder``: "arrow" (default; whole-segment vectorized mapInArrow) or
-    "pandas" (the per-term reference path; bit-identical output). Falls
-    back to EBP_INDEX_ENCODER when None.
+    "pandas" (the per-term reference path; bit-identical output).
     """
-    encoder = encoder or os.environ.get("EBP_INDEX_ENCODER", "arrow")
     os.makedirs(out_dir, exist_ok=True)
     manifest = read_manifest(out_dir) if resume else None
     t_start = time.perf_counter()
@@ -605,7 +603,7 @@ def append_index(
     docs: DataFrame,
     out_dir: str,
     n_new_segments: int = 8,
-    encoder: str | None = None,
+    encoder: str = "arrow",
     lineage: str = "",
 ) -> IndexManifest:
     """Append NEW documents to a COMPLETE index as additional segments.
@@ -631,7 +629,6 @@ def append_index(
     append leaves the manifest untouched and can simply be re-run (segment
     writes are dynamic-partition overwrites of deterministic ids).
     """
-    encoder = encoder or os.environ.get("EBP_INDEX_ENCODER", "arrow")
     manifest = read_manifest(out_dir)
     if manifest is None:
         raise ValueError(f"no index manifest at {out_dir} — build_index first")

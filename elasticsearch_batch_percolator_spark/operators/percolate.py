@@ -14,12 +14,18 @@ Its per-query loop (E1) is replaced by ONE set-oriented joined plan:
             (WildcardTermsProducer.getTerms:26-53)
   phase 2   exact evaluator (plans/eval_py.py) in ONE Arrow pandas UDF over
             surviving (query, doc) pairs: dict-dispatched compiled
-            predicates + a set-containment fast lane for term conjunctions
-            (measured faster than Catalyst when-chains at every registry
-            size — see the phase-2 comment below)
+            predicates + a set-containment fast lane for term conjunctions;
+            pure term/phrase/wildcard conjunctions may instead verify in
+            Catalyst (the join-verify lane, chosen per registry by cost)
   errors    per-query isolation: a failing phase-2 eval drops that query for
-            that doc and is counted, Meltwater-style skip-and-log
-            (BatchPercolatorService.java:364-368), not YouScan abort
+            that doc and the error itself is dropped — neither counted nor
+            logged (the reference skips and logs,
+            BatchPercolatorService.java:364-368; YouScan aborts)
+
+``percolate()`` runs these as stages over one ``BatchPlan`` — the
+registry-derived driver work, cached per registry version and field layout:
+batch view → batch_terms explode → plan → phase-1 candidates → python verify
+UDF → join-verify lane.
 
 Multi-field documents (A1): ``fields={query_field: source_col | (source_col,
 analyzer)}`` mirrors the reference's PerFieldAnalyzerWrapper
@@ -51,7 +57,6 @@ from pyspark.sql import types as T
 
 from ..plans.eval_py import compile_predicate_fields
 from ..sources.registry import CompiledRegistry
-from .match import match_col
 
 
 # join-verify n-gram streams live in an offset fcol space so ONE need
@@ -70,6 +75,19 @@ from .match import match_col
 # (where it correctly evaluates: a space-bearing value can never equal a
 # tokenizer-produced term).
 _GRAM_FCOL_OFF = 64
+
+# pre-explode prune of batch_terms to the registry's term closure
+# (_bt_prune_sets); a registry whose closure exceeds either cap keeps the
+# full explode (the InSet literal and the per-token LIKE chain must stay
+# cheap)
+_BT_PRUNE = True
+_BT_PRUNE_MAX_TERMS = 20000
+_BT_PRUNE_MAX_PATS = 64
+
+# join-verify "auto" guard: take the lane when its ungated hit estimate is
+# at most this multiple of the python lane's cost (batch token volume +
+# gated candidates) — see _jv_take
+_JV_MAX_RATIO = 1.5
 
 # Worker-process cache of the UNPICKLED verify broadcast + its compiled-
 # predicate memo, keyed by (applicationId, verify-broadcast token) — the
@@ -95,8 +113,8 @@ _GRAM_FCOL_OFF = 64
 # the unpickle and every lazily compiled predicate are paid ONCE per worker
 # per registry version regardless of how pyspark shuffles its Broadcast
 # handles. Requires the package importable on workers (true in local mode
-# and under ``spark-submit --py-files``, the shipping config); if the import
-# fails the UDF degrades to a per-task cache — correct, just cold.
+# and under ``spark-submit --py-files``, the shipping config) — the UDF's
+# pickled references to package functions need it anyway.
 # Capped at 2 entries so a registry hot-swap (version bump → new key)
 # releases the old value instead of accumulating.
 _WORKER_VERIFY_CACHE: dict = {}
@@ -153,11 +171,7 @@ def _atom_df(fc: int, kind: str, v: str, col_df: dict, jv_pat_df: dict) -> int:
         lits = [w for w in v.split(" ") if not w.startswith("\x01")]
         return min(col_df.get((fc, w), 0) for w in lits)
     if kind != "t":
-        n = int(kind[1:])
-        exact = col_df.get((fc + _GRAM_FCOL_OFF * (n - 1), v))
-        if exact is not None:
-            return exact
-        # probe skipped: min-unigram bound over the gram's words
+        # n-gram: min-unigram bound over the gram's words
         return min(col_df.get((fc, w), 0) for w in v.split(" "))
     return col_df.get((fc, v), 0)
 
@@ -174,7 +188,6 @@ def _est_q(jv_specs: dict, col_df: dict, jv_pat_df: dict) -> dict:
 
     cget = col_df.get
     pget = jv_pat_df.get
-    off = _GRAM_FCOL_OFF
     out: dict[str, int] = {}
     for q, s in jv_specs.items():
         tot = 0
@@ -190,12 +203,7 @@ def _est_q(jv_specs: dict, col_df: dict, jv_pat_df: dict) -> dict:
                     if not w.startswith("\x01")
                 )
             else:  # "g<n>"
-                exact = cget((fc + off * (int(kind[1:]) - 1), v))
-                tot += (
-                    exact
-                    if exact is not None
-                    else min(cget((fc, w), 0) for w in v.split(" "))
-                )
+                tot += min(cget((fc, w), 0) for w in v.split(" "))
         out[q] = tot
     return out
 
@@ -213,7 +221,7 @@ def _jv_structs(
     costs seconds per batch, but it only changes when the registry mutates
     or the batch field mapping differs.
 
-    Returns (specs, probe_terms, gram_probe, pat_probe):
+    Returns (specs, probe_terms, pat_probe):
       specs[qid] = (rows, n_required, atoms, gram_cols, never, prows)
         rows  = static need/forbid rows (qid, fcol_eff, term, required)
         prows = pattern rows (qid, fc, n, prefix, like, suffix, required)
@@ -221,7 +229,6 @@ def _jv_structs(
                 dictionary at percolate time (one concrete need row per
                 matching dictionary term/gram, deduped per atom per doc)
       probe_terms = {(fc, word)} forbidden/n-gram words for the df stats probe
-      gram_probe = {(fc, n, gram)} n-gram atoms needing exact df
       pat_probe = {(fc, like)} unigram wildcard patterns needing exact df
     """
     layout = (
@@ -276,7 +283,6 @@ def _jv_structs(
     try:
         specs: dict[str, tuple] = {}
         probe_terms: set[tuple[int, str]] = set()
-        gram_probe: set[tuple[int, int, str]] = set()
         pat_probe: set[tuple[int, str]] = set()
         for qid, (need, forbid) in registry.jv_verify_atoms().items():
             ok, never = True, False
@@ -352,7 +358,6 @@ def _jv_structs(
                     continue
                 if kind != "t":
                     gcols_q.add((used_tok_cols[fc], n))
-                    gram_probe.add((fc, n, v))
                     probe_terms.update((fc, w) for w in v.split(" "))
                 if in_need:
                     rows_q.append((qid, fc_eff, v, True))
@@ -373,7 +378,7 @@ def _jv_structs(
     finally:
         if _gc_was:
             gc.enable()
-    out = (specs, probe_terms, gram_probe, pat_probe)
+    out = (specs, probe_terms, pat_probe)
     registry._jv_struct_cache = (key, out)
     return out
 
@@ -384,8 +389,6 @@ def _bt_prune_sets(
     col_idx: dict,
     jv_specs: dict,
     jv_probe_terms: set,
-    max_terms: int,
-    max_pats: int,
 ) -> tuple[dict, dict] | None:
     """Per-fcol (literal-term set, LIKE-pattern set) covering EVERY term
     the phase-1/stats/join-verify machinery can join batch_terms on:
@@ -405,8 +408,6 @@ def _bt_prune_sets(
         registry.version,
         tuple(sorted(resolve.items())),
         tuple(sorted(col_idx.items())),
-        max_terms,
-        max_pats,
         # the closure includes jv probe words and expansion patterns, and
         # those are EMPTY when the jv lane is off (jv_specs = {}): a set
         # computed under off must not be reused by an auto/force call, or
@@ -441,7 +442,7 @@ def _bt_prune_sets(
                         if v not in s:
                             s.add(v)
                             n_terms += 1
-                            if n_terms > max_terms:
+                            if n_terms > _BT_PRUNE_MAX_TERMS:
                                 return False
                     else:
                         s = pats.setdefault(fc, set())
@@ -460,14 +461,14 @@ def _bt_prune_sets(
                         if p not in s:
                             s.add(p)
                             n_pats += 1
-                            if n_pats > max_pats:
+                            if n_pats > _BT_PRUNE_MAX_PATS:
                                 return False
         for fc, w in jv_probe_terms:
             s = lits.setdefault(fc, set())
             if w not in s:
                 s.add(w)
                 n_terms += 1
-                if n_terms > max_terms:
+                if n_terms > _BT_PRUNE_MAX_TERMS:
                     return False
         for spec in jv_specs.values():
             for _qid, fc, _n, _pre, like, _suf, _req in spec[5]:
@@ -475,7 +476,7 @@ def _bt_prune_sets(
                 if like not in s:
                     s.add(like)
                     n_pats += 1
-                    if n_pats > max_pats:
+                    if n_pats > _BT_PRUNE_MAX_PATS:
                         return False
         return True
 
@@ -727,43 +728,88 @@ def auto_fields(registry: CompiledRegistry, docs: DataFrame) -> dict:
     return out
 
 
-def percolate(
-    spark: SparkSession,
+@dataclass
+class _BatchView:
+    """Stage 1 output: the analyzed batch and its field layout."""
+
+    batch: DataFrame
+    id_t: str  # doc_id column type: "long" or "string"
+    resolve: dict  # query field -> batch column
+    content_of: dict  # query field -> raw content column (highlights)
+    analyzer_names: dict
+    nested_cols: set
+    scalar_cols: set
+    # token columns the gate groups reference; a column's index here is
+    # the tinyint ``fcol`` tag on batch_terms rows
+    used_tok_cols: list
+    col_idx: dict
+
+    @property
+    def layout(self) -> tuple:
+        return (
+            tuple(sorted(self.resolve.items())),
+            tuple(self.used_tok_cols),
+            tuple(sorted(self.nested_cols)),
+            tuple(sorted(self.scalar_cols)),
+        )
+
+    @property
+    def fcol_of(self) -> dict:
+        """query field -> fcol, for fields on an exploded token column."""
+        return {
+            f: self.col_idx[tc]
+            for f, tc in self.resolve.items()
+            if tc in self.col_idx
+        }
+
+
+@dataclass
+class BatchPlan:
+    """Registry-derived artifacts of one percolation, cached on the registry
+    per (version, field layout, jv mode, prune active) and reused by every
+    batch until the registry mutates.
+
+    Built from the FIRST batch's term statistics (stats probe → gate choice
+    and join-verify lane decision). Those statistics only steer performance
+    — which gate each query joins on, which lane verifies it — never
+    results, so a later batch with different statistics reuses the plan
+    safely. At the 225k-query shape this build measured 6.5s of a 17.1s
+    batch (BENCH r2); reusing it skips the stats-probe and bt_count jobs.
+    """
+
+    # join-verify lane: the queries it owns (they skip phase 1), their
+    # static need/forbid rows, pattern rows and (column, n) n-gram streams
+    jv_qids: set
+    jv_rows: list
+    jv_prows: list
+    jv_gram_cols: set
+    # (need, qmask, qmap, pat, patq) broadcast tables — see _jv_tables
+    jv_tables: tuple | None
+    # phase-1 broadcast tables: literal gates, pattern gates, all-docs qids
+    gates_sdf: DataFrame | None
+    patterns_sdf: DataFrame | None
+    alldocs_sdf: DataFrame | None
+    # False when every query is decided exactly by its gate group
+    needs_verify: bool
+    exact_sdf: DataFrame | None  # queries phase 1 decides exactly
+    # python lane: the candidate filter to its queries (None when they are
+    # every candidate-producing query) and the query_id -> vid map (None
+    # when no query is python-verified)
+    pythonic_sdf: DataFrame | None
+    vid_sdf: DataFrame | None
+    n_simple: int  # vids below this are simple-lane rows
+
+
+def _batch_view(
     docs: DataFrame,
     registry: CompiledRegistry,
-    content_col: str = "content",
-    id_col: str = "doc_id",
-    tokenizer=None,
-    fields: dict | str | None = None,
-) -> PercolateResult:
-    """Match every registered query against every doc of the batch.
-
-    ``fields=None`` — single-field mode: one analyzed ``content_col`` serves
-    every query field name (the flat-corpus default).
-    ``fields={qfield: src_col | (src_col, analyzer)}`` — multi-field mode
-    with per-field analyzers (A1); ``analyzer`` ∈ {"ws", "code"} or a
-    Column-function. Queries on unconfigured fields never match (treated as
-    empty fields), isolated per query.
-    ``fields="auto"`` — infer the map from query fields ∩ batch columns
-    with dtype-derived analyzers (``auto_fields``; the reference's
-    documentMapperWithAutoCreate, BatchPercolatorService.java:314).
-    """
+    content_col: str,
+    id_col: str,
+    tokenizer,
+    fields: dict | None,
+) -> _BatchView:
+    """Stage 1: project + analyze the batch into per-field columns."""
     from ..functions.tokenizer import tokenize_code, tokenize_ws
-
-    if fields == "auto":
-        fields = auto_fields(registry, docs)
-
-    import sys as _sys
-    import time as _time
-
-    _prof_on = bool(os.environ.get("EBP_PROF_PLAN"))
-    _prof_t = [_time.perf_counter()]
-
-    def _prof(label: str) -> None:
-        if _prof_on:
-            now = _time.perf_counter()
-            print(f"[ebp-plan] {label}: {now - _prof_t[0]:.2f}s", file=_sys.stderr)
-            _prof_t[0] = now
 
     analyzers = {"ws": tokenize_ws, "code": tokenize_code}
     qfields = sorted(registry.query_fields())
@@ -775,11 +821,9 @@ def percolate(
     # type is threaded through the empty-frame schemas below; every
     # other consumer (joins, groupBys, highlight, scoring) takes the
     # column's type as-is.
-    from pyspark.sql.types import NumericType as _NumT
-
     id_t = (
         "long"
-        if isinstance(docs.schema[id_col].dataType, _NumT)
+        if isinstance(docs.schema[id_col].dataType, T.NumericType)
         else "string"
     )
 
@@ -788,74 +832,53 @@ def percolate(
     # resolved here regardless of the fields configuration, the analog of
     # ES serving _id from metadata rather than the mapping
     uses_id = "_id" in qfields
-
+    sel = [F.col(id_col).cast(id_t).alias("doc_id")]
+    resolve, content_of, analyzer_names = {}, {}, {}
+    nested_cols: set[str] = set()
+    scalar_cols: set[str] = set()
     if fields is None:
         tok = tokenizer or tokenize_ws
-        sel = [
-            F.col(id_col).cast(id_t).alias("doc_id"),
-            F.col(content_col).alias("content"),
-            tok(content_col).alias("tokens"),
-        ]
-        if uses_id:
-            sel.append(F.col(id_col).cast("string").alias("value___id"))
-        batch = docs.select(*sel)
-        resolve = {qf: "tokens" for qf in qfields if qf != "_id"}
-        content_of = {qf: "content" for qf in qfields if qf != "_id"}
-        analyzer_names = {qf: "ws" for qf in qfields if qf != "_id"}
-        nested_cols = set()
-        scalar_cols = set()
-        if uses_id:
-            resolve["_id"] = "value___id"
-            scalar_cols.add("value___id")
-    else:
-        sel = [F.col(id_col).cast(id_t).alias("doc_id")]
-        resolve, content_of, analyzer_names = {}, {}, {}
-        nested_cols: set[str] = set()
-        scalar_cols: set[str] = set()
-        if uses_id:
-            sel.append(F.col(id_col).cast("string").alias("value___id"))
-            resolve["_id"] = "value___id"
-            scalar_cols.add("value___id")
-        for qf in sorted(fields):
-            if qf == "_id":
-                continue  # reserved: always the id column, never remappable
-            spec = fields[qf]
-            src_col, an = spec if isinstance(spec, tuple) else (spec, "ws")
-            if an == "nested":
-                # Q10: the column is a pre-tokenized array<struct> of child
-                # objects (child fields = array<string> tokens); Nested
-                # queries on this path bind per child
-                sel.append(F.col(src_col).alias(f"tokens__{qf}"))
-                resolve[qf] = f"tokens__{qf}"
-                nested_cols.add(f"tokens__{qf}")
-                analyzer_names[qf] = "nested"
-                continue
-            if an == "numeric":
-                # Q12 in percolation: a mapping-typed numeric field — Range
-                # plans read the scalar (the reference's term-on-long-field
-                # becomes a RangeQuery, ConcurrentPercolation.java:53-57)
-                sel.append(F.col(src_col).alias(f"value__{qf}"))
-                resolve[qf] = f"value__{qf}"
-                scalar_cols.add(f"value__{qf}")
-                analyzer_names[qf] = "numeric"
-                continue
-            tok = an if callable(an) else analyzers[an]
-            sel.append(F.col(src_col).alias(f"content__{qf}"))
-            sel.append(tok(src_col).alias(f"tokens__{qf}"))
+        sel += [F.col(content_col).alias("content"), tok(content_col).alias("tokens")]
+        for qf in qfields:
+            if qf != "_id":
+                resolve[qf] = "tokens"
+                content_of[qf] = "content"
+                analyzer_names[qf] = "ws"
+    if uses_id:
+        sel.append(F.col(id_col).cast("string").alias("value___id"))
+        resolve["_id"] = "value___id"
+        scalar_cols.add("value___id")
+    for qf in sorted(fields or ()):
+        if qf == "_id":
+            continue  # reserved: always the id column, never remappable
+        spec = fields[qf]
+        src_col, an = spec if isinstance(spec, tuple) else (spec, "ws")
+        if an == "nested":
+            # Q10: the column is a pre-tokenized array<struct> of child
+            # objects (child fields = array<string> tokens); Nested
+            # queries on this path bind per child
+            sel.append(F.col(src_col).alias(f"tokens__{qf}"))
             resolve[qf] = f"tokens__{qf}"
-            content_of[qf] = f"content__{qf}"
-            analyzer_names[qf] = an if isinstance(an, str) else "ws"
-        batch = docs.select(*sel)
+            nested_cols.add(f"tokens__{qf}")
+            analyzer_names[qf] = "nested"
+            continue
+        if an == "numeric":
+            # Q12 in percolation: a mapping-typed numeric field — Range
+            # plans read the scalar (the reference's term-on-long-field
+            # becomes a RangeQuery, ConcurrentPercolation.java:53-57)
+            sel.append(F.col(src_col).alias(f"value__{qf}"))
+            resolve[qf] = f"value__{qf}"
+            scalar_cols.add(f"value__{qf}")
+            analyzer_names[qf] = "numeric"
+            continue
+        tok = an if callable(an) else analyzers[an]
+        sel.append(F.col(src_col).alias(f"content__{qf}"))
+        sel.append(tok(src_col).alias(f"tokens__{qf}"))
+        resolve[qf] = f"tokens__{qf}"
+        content_of[qf] = f"content__{qf}"
+        analyzer_names[qf] = an if isinstance(an, str) else "ws"
+    batch = docs.select(*sel)
 
-    tok_cols = sorted(set(resolve.values()))
-    cached_frames: list[DataFrame] = []
-
-    # ---- phase 1: candidate (query, doc) pairs via GATE groups ----------
-    # Joining every query term against the batch multiplies each (doc, term)
-    # row by |queries containing term| — 10^8 rows at 225k queries. Instead
-    # each query joins on ONE group: its most selective (lowest batch-df)
-    # necessary condition — the classic rarest-term gate. Candidate volume
-    # becomes sum_q df(gate_q); phase 2 settles the rest.
     # only the columns gate groups actually reference get exploded — an
     # unqueried field never pays the token-explode cost
     used_tok_cols = sorted(
@@ -878,45 +901,60 @@ def percolate(
             f"{len(used_tok_cols)} queried token columns exceed the tinyint "
             "fcol space (127); split the batch by field group"
         )
-    col_idx = {tc: i for i, tc in enumerate(used_tok_cols)}
+    return _BatchView(
+        batch=batch,
+        id_t=id_t,
+        resolve=resolve,
+        content_of=content_of,
+        analyzer_names=analyzer_names,
+        nested_cols=nested_cols,
+        scalar_cols=scalar_cols,
+        used_tok_cols=used_tok_cols,
+        col_idx={tc: i for i, tc in enumerate(used_tok_cols)},
+    )
 
-    # join-verify structures are needed BEFORE batch_terms: their probe
-    # words and expansion patterns are part of the pre-explode prune
-    # closure below (cached per registry+layout, so no repeated cost)
-    jv_mode = os.environ.get("EBP_SIMPLE_JOIN_VERIFY", "auto")
-    if jv_mode != "off":
-        jv_specs, jv_probe_terms, jv_gram_probe, jv_pat_probe = _jv_structs(
-            registry, resolve, col_idx, nested_cols, scalar_cols, used_tok_cols
-        )
-        _prof('jv_structs')
-    else:
-        jv_specs, jv_probe_terms, jv_gram_probe, jv_pat_probe = (
-            {}, set(), set(), set()
-        )
 
-    # ---- gate-term prune ----------------------------------------------
-    # batch_terms only ever joins against the registry's term closure
-    # (gate literals, probe words, pattern matches — _bt_prune_sets), so
-    # tokens outside it can be dropped: at 500k docs x 200 queries the
-    # candidate-generation stage (explode + hash + broadcast probe of
-    # every token) measured 68% of percolate's core-seconds, almost all
-    # on tokens no query references. The prune runs as a codegen WHERE
-    # AFTER the explode, NOT as a filter() lambda on the array: every
-    # higher-order array function is CodegenFallback (interpreted, boxed,
-    # a closure call per element), and the lambda variant of this prune
-    # measured 185 executor-seconds at 400k docs x 40 LIKE patterns where
-    # the fused explode+WHERE (InSet + StartsWith after Catalyst's
-    # LikeSimplification) does the same cut inside whole-stage codegen —
-    # rows die in-pipeline before any materialization or shuffle. Large
-    # registries that exceed the thresholds keep the full explode.
-    # EBP_BT_PRUNE=0 disables.
-    bt_prune = None
-    if os.environ.get("EBP_BT_PRUNE", "1") != "0":
-        bt_prune = _bt_prune_sets(
-            registry, resolve, col_idx, jv_specs, jv_probe_terms,
-            int(os.environ.get("EBP_BT_PRUNE_MAX_TERMS", "20000")),
-            int(os.environ.get("EBP_BT_PRUNE_MAX_PATS", "64")),
-        )
+def _child_token_arrays(batch: DataFrame, tc: str) -> list[Column]:
+    """Nested column ``tc``: per array-typed child field, that field's token
+    arrays flattened over the doc's children (null when the doc has none)."""
+    dt = batch.schema[tc].dataType
+
+    def _getter(name):
+        # NB: one-parameter lambda only — a second (defaulted) parameter
+        # would make F.transform pass the ARRAY INDEX into it
+        return lambda c: c.getField(name)
+
+    return [
+        F.flatten(F.transform(F.col(tc), _getter(f.name)))
+        for f in dt.elementType.fields
+        if isinstance(f.dataType, T.ArrayType)
+    ]
+
+
+def _batch_terms(
+    spark: SparkSession,
+    view: _BatchView,
+    bt_prune: tuple[dict, dict] | None,
+    cached_frames: list,
+) -> DataFrame:
+    """Stage 2: the (doc_id, fcol, term) explode every phase-1, stats and
+    join-verify join reads — one row per distinct token per doc and column.
+
+    The gate-term prune: batch_terms only ever joins against the
+    registry's term closure (gate literals, probe words, pattern matches —
+    _bt_prune_sets), so tokens outside it can be dropped: at 500k docs x
+    200 queries the candidate-generation stage (explode + hash + broadcast
+    probe of every token) measured 68% of percolate's core-seconds, almost
+    all on tokens no query references. The prune runs as a codegen WHERE
+    AFTER the explode, NOT as a filter() lambda on the array: every
+    higher-order array function is CodegenFallback (interpreted, boxed, a
+    closure call per element), and the lambda variant of this prune
+    measured 185 executor-seconds at 400k docs x 40 LIKE patterns where
+    the fused explode+WHERE (InSet + StartsWith after Catalyst's
+    LikeSimplification) does the same cut inside whole-stage codegen —
+    rows die in-pipeline before any materialization or shuffle. Large
+    registries that exceed the thresholds keep the full explode."""
+    batch, scalar_cols, nested_cols = view.batch, view.scalar_cols, view.nested_cols
 
     def _prune_pred(fc: int):
         """Codegen WHERE predicate keeping the term closure of column
@@ -933,13 +971,13 @@ def percolate(
             c = lk if c is None else (c | lk)
         return c
 
-    def _term_rows(tc: str):
-        fcol = F.lit(col_idx[tc]).cast("tinyint").alias("fcol")
+    parts = []
+    for tc in view.used_tok_cols:
         if tc in scalar_cols:
-            return []  # numeric fields carry no gate terms
-        pred = _prune_pred(col_idx[tc])
+            continue  # numeric fields carry no gate terms
+        pred = _prune_pred(view.col_idx[tc])
         if pred is False:
-            return []
+            continue
         if tc not in nested_cols:
             # array_distinct BEFORE the explode = the per-(doc, fcol, term)
             # dedup downstream counting relies on, WITHOUT a shuffle: a
@@ -948,449 +986,378 @@ def percolate(
             # rows to remove partition-local duplicates (measured the
             # single largest memory-traffic stage at 150k docs x 32 cores
             # — the bench box's shared memory bus is the scaling ceiling)
-            rows = batch.select(
-                "doc_id", fcol,
-                F.explode(F.array_distinct(F.col(tc))).alias("term"),
-            )
-            return [rows.where(pred) if pred is not None else rows]
-        # nested column: every child's token arrays flatten into the
-        # parent's gate stream (matches the limiting-filter field remap)
-        dt = batch.schema[tc].dataType
-
-        def _getter(name):
-            # NB: one-parameter lambda only — a second (defaulted) parameter
-            # would make F.transform pass the ARRAY INDEX into it
-            return lambda c: c.getField(name)
-
-        # ALL child token arrays concat + array_distinct + ONE explode:
-        # per-(doc, fcol, term) dedup across children without a shuffle
-        # (cross-child duplicates would otherwise need the global dedup)
-        child_toks = [
-            F.coalesce(
-                F.flatten(F.transform(F.col(tc), _getter(f.name))), F.array()
-            )
-            for f in dt.elementType.fields
-            if isinstance(f.dataType, T.ArrayType)
-        ]
-        if not child_toks:
-            return []
-        merged = child_toks[0]
-        for c in child_toks[1:]:
-            merged = F.concat(merged, c)
+            toks = F.col(tc)
+        else:
+            # nested column: every child's token arrays flatten into the
+            # parent's gate stream (matches the limiting-filter field
+            # remap) — ALL child token arrays concat + array_distinct + ONE
+            # explode: per-(doc, fcol, term) dedup across children without
+            # a shuffle
+            child_toks = [
+                F.coalesce(a, F.array()) for a in _child_token_arrays(batch, tc)
+            ]
+            if not child_toks:
+                continue
+            toks = child_toks[0]
+            for c in child_toks[1:]:
+                toks = F.concat(toks, c)
         rows = batch.select(
-            "doc_id", fcol,
-            F.explode(F.array_distinct(merged)).alias("term"),
+            "doc_id",
+            F.lit(view.col_idx[tc]).cast("tinyint").alias("fcol"),
+            F.explode(F.array_distinct(toks)).alias("term"),
         )
-        return [rows.where(pred) if pred is not None else rows]
-
-    bt_parts = (
-        [p for tc in used_tok_cols for p in _term_rows(tc)]
-        if used_tok_cols
-        else []
-    )
-    if bt_parts:
-        batch_terms = bt_parts[0]
-        for p in bt_parts[1:]:
-            batch_terms = batch_terms.unionByName(p)
-        # per-(doc, fcol, term) uniqueness is established INSIDE each
-        # doc's array (array_distinct above) — parts have disjoint fcols,
-        # so no global dropDuplicates shuffle is needed (it was the
-        # plan's largest exchange: ~|batch tokens| rows moved only to
-        # drop partition-local duplicates). persisted: the gate-
-        # selectivity job, the candidate join and the wildcard dictionary
-        # all reuse this explode (E11: unpersisted with the batch).
-        # EBP_BT_DEDUP=1 restores the old shuffled dedup (A/B hook).
-        if os.environ.get("EBP_BT_DEDUP"):
-            batch_terms = batch_terms.dropDuplicates(["doc_id", "fcol", "term"])
-        elif os.environ.get("EBP_BT_COALESCE", "1") != "0":
-            # shuffle-free partition-count control: the raw explode keeps
-            # the batch's (cores*4) partitioning, and every downstream job
-            # over the cache re-pays that task count; coalesce to one
-            # partition per core (narrow, no data movement) — the compact
-            # layout the old dedup only got as an AQE side effect
-            batch_terms = batch_terms.coalesce(
-                max(1, spark.sparkContext.defaultParallelism)
-            )
-        batch_terms = batch_terms.persist()
-        cached_frames.append(batch_terms)
-        _prof('batch_terms plan')
-    else:
-        batch_terms = spark.createDataFrame(
-            [], f"doc_id {id_t}, fcol tinyint, term string"
+        parts.append(rows.where(pred) if pred is not None else rows)
+    if not parts:
+        return spark.createDataFrame(
+            [], f"doc_id {view.id_t}, fcol tinyint, term string"
         )
+    batch_terms = parts[0]
+    for p in parts[1:]:
+        batch_terms = batch_terms.unionByName(p)
+    # per-(doc, fcol, term) uniqueness is established INSIDE each doc's
+    # array (array_distinct above) — parts have disjoint fcols, so no
+    # global dropDuplicates shuffle is needed (it was the plan's largest
+    # exchange: ~|batch tokens| rows moved only to drop partition-local
+    # duplicates). Shuffle-free partition-count control instead: the raw
+    # explode keeps the batch's (cores*4) partitioning, and every
+    # downstream job over the cache re-pays that task count; coalesce to
+    # one partition per core (narrow, no data movement). Persisted: the
+    # stats probe, the candidate join and the wildcard dictionary all
+    # reuse this explode (E11: unpersisted with the batch).
+    batch_terms = batch_terms.coalesce(
+        max(1, spark.sparkContext.defaultParallelism)
+    ).persist()
+    cached_frames.append(batch_terms)
+    return batch_terms
 
-    # ---- join-verify lane eligibility (phase 2, decided during phase 1) --
-    # Pure term-conjunction queries (must/filter all Terms, must_not all
-    # Terms) on plain token fields can be verified ENTIRELY in Catalyst:
-    #   batch_terms ⋈ broadcast(required+forbidden term table)
-    #   → groupBy (doc, query) → req_hits == n_required AND forbid_hits == 0
-    # No Arrow token shipping, no Python — the lane that scales with cores.
-    # "auto" guards on estimated join volume (sum of batch df over the
-    # query's terms, ungated) vs the gated candidate volume; "force"/"off"
-    # override for tests. (jv structures were computed above, before
-    # batch_terms — their probe words/patterns feed the pre-explode prune.)
 
-    # ---- per-registry batch-plan cache ----------------------------------
-    # Everything from the involved-term stats probe down to the gate /
-    # join-verify table construction is registry-derived driver work plus
-    # TWO stats jobs (the df probe and bt_count) whose results only steer
-    # gate selection and the jv lane choice — performance decisions, not
-    # correctness. At the 225k-query shape this plan build measured 6.5s
-    # of a 17.1s batch (BENCH r2) and repeats per batch with identical
-    # inputs. Cache the artifacts on the registry, keyed by (version,
-    # field layout, jv env); EBP_STATS_REFRESH=N rebuilds every N batches
-    # against the CURRENT batch's stats (0 = reuse until the registry
-    # mutates — stats drift only degrades gate choice, never results).
-    jv_beta = float(os.environ.get("EBP_JV_PER_QUERY_RATIO", "0"))
-    layout = (
-        tuple(sorted(resolve.items())),
-        tuple(used_tok_cols),
-        tuple(sorted(nested_cols)),
-        tuple(sorted(scalar_cols)),
+def _stats_probe(
+    spark: SparkSession,
+    registry: CompiledRegistry,
+    view: _BatchView,
+    jv_probe_terms: set,
+    jv_pat_probe: set,
+    batch_terms: DataFrame,
+) -> tuple[dict, dict, "pd.DataFrame", "pd.DataFrame", dict]:
+    """Batch df of every involved (fcol, term) and of every jv wildcard
+    pattern, and the gate choice they steer. Returns (col_df, term_df,
+    literal-gate pdf, pattern-gate pdf, jv_pat_df)."""
+    # stats-probe vocabulary from the registry's flat gate-group table
+    # (cached per version; the per-query python set comprehension
+    # measured ~10s of driver time at a 10^6-query registry)
+    _, fg_tbl = registry.flat_groups()
+    inv = fg_tbl[fg_tbl["kind"] == "t"]
+    inv = inv.assign(fcol=inv["field"].map(view.fcol_of))
+    inv = inv.dropna(subset=["fcol"])[["fcol", "value"]].drop_duplicates()
+    # forbidden atoms of join-verify candidates aren't gate-group
+    # members — add their words to the stats probe so the volume
+    # estimate covers them
+    involved = sorted(set(zip(inv["fcol"].astype(int), inv["value"])) | jv_probe_terms)
+    col_df, term_df = {}, {}
+    if involved:
+        ipdf = pd.DataFrame(involved, columns=["fcol", "term"])
+        ipdf["fcol"] = ipdf["fcol"].astype("int8")
+        inv_df = spark.createDataFrame(ipdf, "fcol tinyint, term string")
+        col_df = {
+            (int(r["fcol"]), r["term"]): int(r["df"])
+            for r in batch_terms.join(F.broadcast(inv_df), ["fcol", "term"])
+            .groupBy("fcol", "term")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .collect()
+        }
+        # registry.gates keys by (query_field, term): project through
+        # resolve (fields outside every gate group have no column
+        # index — skip them). One pass over col_df grouped by fcol,
+        # then one pass per field over ITS terms — the per-field scan
+        # of the whole col_df was O(fields x batch vocabulary)
+        by_fc: dict[int, list] = {}
+        for (ci, t), d in col_df.items():
+            by_fc.setdefault(ci, []).append((t, d))
+        term_df = {
+            (qf, t): d
+            for qf, fc in view.fcol_of.items()
+            for t, d in by_fc.get(fc, ())
+        }
+    lit_pdf, pat_pdf = registry.gates_pdf(
+        pd.DataFrame(
+            [(f, v, d) for (f, v), d in term_df.items()],
+            columns=["field", "value", "df"],
+        )
     )
-    pc_key = (
-        registry.version,
-        layout,
-        jv_mode,
-        jv_beta,
-        os.environ.get("EBP_JV_MAX_RATIO", "1.5"),
-        os.environ.get("EBP_MAX_WHEN_BRANCHES", "0"),
-        os.environ.get("EBP_MAX_WHEN_CHUNKS", "8"),
-        # bt_count semantics (and so the cached jv lane choice) depend on
-        # whether the pre-explode prune is active
-        bt_prune is not None,
+    # exact hit-volume of jv "w" pattern atoms: rows of batch_terms
+    # matching each pattern (the join the lane would actually pay).
+    # One LIKE-join job on the persisted explode.
+    jv_pat_df: dict[tuple[int, str], int] = {}
+    if jv_pat_probe:
+        ppdf = pd.DataFrame(sorted(jv_pat_probe), columns=["fcol", "like_pat"])
+        ppdf["fcol"] = ppdf["fcol"].astype("int8")
+        probe_sdf = spark.createDataFrame(ppdf, "fcol tinyint, like_pat string")
+        jv_pat_df = {
+            (int(r["fcol"]), r["like_pat"]): int(r["df"])
+            for r in batch_terms.join(F.broadcast(probe_sdf), "fcol")
+            .filter(F.expr("term LIKE like_pat"))
+            .groupBy("fcol", "like_pat")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .collect()
+        }
+    return col_df, term_df, lit_pdf, pat_pdf, jv_pat_df
+
+
+def _raw_token_volume(view: _BatchView) -> int:
+    """Total token count of the batch's queried columns — one columnar
+    scan, no explode."""
+    size_cols = []
+    for tc in view.used_tok_cols:
+        if tc in view.scalar_cols:
+            continue
+        if tc not in view.nested_cols:
+            size_cols.append(F.coalesce(F.size(F.col(tc)), F.lit(0)))
+            continue
+        size_cols.extend(
+            F.coalesce(F.size(a), F.lit(0))
+            for a in _child_token_arrays(view.batch, tc)
+        )
+    if not size_cols:
+        return 0
+    vol = size_cols[0]
+    for c in size_cols[1:]:
+        vol = vol + c
+    return int(view.batch.agg(F.sum(vol).alias("v")).first()["v"] or 0)
+
+
+def _jv_take(
+    jv_mode: str,
+    view: _BatchView,
+    jv_specs: dict,
+    stats: tuple,
+    bt_prune,
+    batch_terms: DataFrame,
+) -> set:
+    """The join-verify lane decision: which jv-eligible queries it owns.
+
+    Pure term-conjunction queries (must/filter all Terms, must_not all
+    Terms) on plain token fields can be verified ENTIRELY in Catalyst:
+      batch_terms ⋈ broadcast(required+forbidden term table)
+      → groupBy (doc, query) → req_hits == n_required AND forbid_hits == 0
+    No Arrow token shipping, no Python — the lane that scales with cores.
+    "force" takes every eligible query; "auto" compares costs. Python-lane
+    cost ≈ Arrow-shipping every candidate doc's tokens (bounded by the
+    batch's token volume, a FIXED cost paid once if ANY query stays
+    pythonic) + per-candidate set checks (≈ gated candidate volume).
+    Join-lane cost ≈ the ungated hit volume of the query's atoms. If the
+    total estimate is comparable to the python lane's fixed + variable
+    cost, take everything (no python lane at all); otherwise fall back to
+    the static-atom subset, else nothing."""
+    col_df, term_df, lit_pdf, _, jv_pat_df = stats
+    if jv_mode == "force":
+        return set(jv_specs)
+    est_q = _est_q(jv_specs, col_df, jv_pat_df)
+    if len(lit_pdf):
+        ldf = lit_pdf[lit_pdf["query_id"].isin(jv_specs.keys())]
+        ldf = ldf.assign(
+            df=[term_df.get((f, t), 0) for f, t in zip(ldf["field"], ldf["term"])]
+        )
+        gate_df_q = ldf.groupby("query_id")["df"].sum().to_dict()
+    else:
+        gate_df_q = {}
+    # the pruned stream no longer proxies the python lane's fixed cost
+    # (Arrow-shipping candidate docs' FULL token arrays) — measure the
+    # batch's raw token volume instead
+    bt_count = (
+        _raw_token_volume(view) if bt_prune is not None else batch_terms.count()
     )
-    refresh = int(os.environ.get("EBP_STATS_REFRESH", "0"))
-    pc = getattr(registry, "_batch_plan_cache", None)
-    if pc is not None and pc["key"] == pc_key and (refresh == 0 or pc["age"] < refresh):
-        pc["age"] += 1
-        art = pc["art"]
-    else:
-        art = {}
-        registry._batch_plan_cache = {"key": pc_key, "age": 1, "art": art}
+    gated_all = sum(gate_df_q.get(q, 0) for q in jv_specs)
+    if sum(est_q.values()) <= _JV_MAX_RATIO * (bt_count + gated_all):
+        return set(jv_specs)
+    # pattern-bearing queries' expansions blew the budget: fall back to
+    # the static-atom subset (never worse than the pre-wildcard lane)
+    static = {q for q, s in jv_specs.items() if not s[5]}
+    est_static = sum(est_q[q] for q in static)
+    gated_static = sum(gate_df_q.get(q, 0) for q in static)
+    if static and est_static <= _JV_MAX_RATIO * (bt_count + gated_static):
+        return static
+    return set()
 
-    if "col_df" in art:
-        col_df = art["col_df"]
-        term_df = art["term_df"]
-        lit_pdf, pat_pdf = art["gate_pdfs"]
-    else:
-        # stats-probe vocabulary from the registry's flat gate-group table
-        # (cached per version; the per-query python set comprehension
-        # measured ~10s of driver time at a 10^6-query registry)
-        _, fg_tbl = registry.flat_groups()
-        if len(fg_tbl):
-            fcol_of = {f: col_idx[tc] for f, tc in resolve.items() if tc in col_idx}
-            inv = fg_tbl[fg_tbl["kind"] == "t"]
-            inv = inv.assign(fcol=inv["field"].map(fcol_of))
-            inv = inv.dropna(subset=["fcol"])[["fcol", "value"]].drop_duplicates()
-            involved_pairs = set(
-                zip(inv["fcol"].astype(int), inv["value"])
-            )
-        else:
-            involved_pairs = set()
-        # forbidden atoms of join-verify candidates aren't gate-group
-        # members — add their words to the stats probe so the volume
-        # estimate covers them
-        involved_pairs |= jv_probe_terms
-        involved = sorted(involved_pairs)
-        term_df = {}
-        col_df = {}
-        if involved:
-            ipdf = pd.DataFrame(involved, columns=["fcol", "term"])
-            ipdf["fcol"] = ipdf["fcol"].astype("int8")
-            inv_df = spark.createDataFrame(ipdf, "fcol tinyint, term string")
-            col_df = {
-                (int(r["fcol"]), r["term"]): int(r["df"])
-                for r in batch_terms.join(F.broadcast(inv_df), ["fcol", "term"])
-                .groupBy("fcol", "term")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .collect()
-            }
-            # registry.gates keys by (query_field, term): project through
-            # resolve (fields outside every gate group have no column
-            # index — skip them). One pass over col_df grouped by fcol,
-            # then one pass per field over ITS terms — the per-field scan
-            # of the whole col_df was O(fields x batch vocabulary)
-            by_fc: dict[int, list] = {}
-            for (ci, t), d in col_df.items():
-                by_fc.setdefault(ci, []).append((t, d))
-            term_df = {
-                (qf, t): d
-                for qf, tc in resolve.items()
-                if tc in col_idx
-                for t, d in by_fc.get(col_idx[tc], ())
-            }
-        if term_df:
-            tdf_pdf = pd.DataFrame(
-                [(f, v, d) for (f, v), d in term_df.items()],
-                columns=["field", "value", "df"],
-            )
-        else:
-            tdf_pdf = None
-        lit_pdf, pat_pdf = registry.gates_pdf(tdf_pdf)
-        _prof('stats probe + gates')
-        art["col_df"], art["term_df"] = col_df, term_df
-        art["gate_pdfs"] = (lit_pdf, pat_pdf)
-        # exact hit-volume of jv "w" pattern atoms: rows of batch_terms
-        # matching each pattern (the join the lane would actually pay).
-        # One LIKE-join job on the persisted explode, cached per registry.
-        jv_pat_df: dict[tuple[int, str], int] = {}
-        if jv_pat_probe:
-            ppdf = pd.DataFrame(
-                sorted(jv_pat_probe), columns=["fcol", "like_pat"]
-            )
-            ppdf["fcol"] = ppdf["fcol"].astype("int8")
-            probe_sdf = spark.createDataFrame(
-                ppdf, "fcol tinyint, like_pat string"
-            )
-            jv_pat_df = {
-                (int(r["fcol"]), r["like_pat"]): int(r["df"])
-                for r in batch_terms.join(F.broadcast(probe_sdf), "fcol")
-                .filter(F.expr("term LIKE like_pat"))
-                .groupBy("fcol", "like_pat")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .collect()
-            }
-            _prof('jv pattern probe')
-        art["jv_pat_df"] = jv_pat_df
 
-    # pick the join-verify set: eligible = every need/forbid field resolves
-    # to a PLAIN exploded token column (nested/scalar views diverge from
-    # batch_terms' flattened rows, so those stay on the python evaluator).
-    # A required term on an unconfigured field can never match — the query
-    # joins with zero rows, same outcome as the python lane.
-    # n-gram atoms ("g<n>") join against a per-(column, n) n-gram stream
-    # whose fcol is offset by _GRAM_FCOL_OFF * (n-1) — one need table, one
-    # aggregate, token and every n-gram containment together
-    jv_qids: set[str] = set()
+def _batch_plan(
+    spark: SparkSession,
+    registry: CompiledRegistry,
+    view: _BatchView,
+    jv_mode: str,
+    jv: tuple,
+    bt_prune,
+    batch_terms: DataFrame,
+) -> BatchPlan:
+    """Stage 3: the registry's cached BatchPlan. On a miss, build everything
+    registry-derived a batch needs: stats probe → gates → jv lane decision
+    → jv tables → gate/pattern/all-docs frames → python qid set → exact,
+    vid and pythonic frames."""
+    # bt_count semantics (and so the cached jv lane choice) depend on
+    # whether the pre-explode prune is active
+    key = (registry.version, view.layout, jv_mode, bt_prune is not None)
+    cached = getattr(registry, "_batch_plan_cache", None)
+    if cached is not None and cached[0] == key:
+        return cached[1]
+    jv_specs, jv_probe_terms, jv_pat_probe = jv
+    stats = _stats_probe(
+        spark, registry, view, jv_probe_terms, jv_pat_probe, batch_terms
+    )
+    jv_qids = (
+        _jv_take(jv_mode, view, jv_specs, stats, bt_prune, batch_terms)
+        if jv_specs
+        else set()
+    )
+    # eligible = every need/forbid field resolves to a PLAIN exploded
+    # token column (nested/scalar views diverge from batch_terms' flattened
+    # rows, so those stay on the python evaluator). A required term on an
+    # unconfigured field can never match — the query joins with zero rows,
+    # same outcome as the python lane. n-gram atoms ("g<n>") join against a
+    # per-(column, n) n-gram stream whose fcol is offset by
+    # _GRAM_FCOL_OFF * (n-1) — one need table, one aggregate, token and
+    # every n-gram containment together
     jv_rows: list[tuple[str, int, str, bool]] = []
     jv_prows: list[tuple[str, int, int, str, str, str, bool]] = []
     jv_nreq: list[tuple[str, int]] = []
     jv_gram_cols: set[tuple[str, int]] = set()
+    for qid in jv_qids:
+        rows_q, nreq, _atoms, gcols_q, never, prows_q = jv_specs[qid]
+        if never:
+            continue  # matched-never: no rows, no group, no match
+        jv_rows.extend(rows_q)
+        jv_prows.extend(prows_q)
+        jv_nreq.append((qid, nreq))
+        jv_gram_cols.update(gcols_q)
 
-    # exact n-gram selectivities: min(unigram df) is a LOOSE upper bound —
-    # the words may rarely be adjacent. The exact-df probe (one extra
-    # explode → broadcast join → countDistinct job) only matters for the
-    # per-query lane choice (level 2 below), which is OFF by default:
-    # measured at the 225k-queries × 20k-docs shape, routing the 45k
-    # phrase queries through the join lane cost ~10s MORE per batch than
-    # their python verification saved (the probe + extra stages outweigh
-    # 178k candidate checks). Set EBP_JV_PER_QUERY_RATIO > 0 to enable.
-    if jv_gram_probe and jv_beta > 0 and "jv_take" not in art:
-        bpdf = pd.DataFrame(
-            sorted(
-                (fc + _GRAM_FCOL_OFF * (n - 1), v) for fc, n, v in jv_gram_probe
-            ),
-            columns=["fcol", "term"],
-        )
-        bpdf["fcol"] = bpdf["fcol"].astype("int16")
-        bp_df = spark.createDataFrame(bpdf, "fcol smallint, term string")
-        bstreams = [
-            _ngram_stream(batch, tc, col_idx[tc] + _GRAM_FCOL_OFF * (n - 1), n)
-            for tc, n in sorted(
-                {(used_tok_cols[fc], n) for fc, n, _ in jv_gram_probe}
-            )
-        ]
-        bs = bstreams[0]
-        for p in bstreams[1:]:
-            bs = bs.unionByName(p)
-        probed = {
-            (int(r["fcol"]), r["term"]): int(r["df"])
-            for r in bs.join(F.broadcast(bp_df), ["fcol", "term"])
-            .groupBy("fcol", "term")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .collect()
+    # phase-1 gate tables: gate rows' query fields map to token columns;
+    # members on unmapped fields are dropped (those contribute no
+    # candidates — an empty field can never satisfy a positive term). A
+    # query whose ENTIRE gate group is unmapped gets zero candidates and
+    # correctly never matches. Join-verify queries skip phase 1 entirely —
+    # their lane is exact on its own, so their gate rows would only inflate
+    # the candidate dedup shuffle.
+    fcol_of = view.fcol_of
+
+    def _map_gates(src: "pd.DataFrame", val_col: str, extra: tuple = ()):
+        if not len(src):
+            return src
+        out = src[~src["query_id"].isin(jv_qids)] if jv_qids else src
+        out = out.assign(fcol=out["field"].map(fcol_of))
+        out = out.dropna(subset=["fcol"])
+        cols = {
+            "query_id": out["query_id"].to_numpy(),
+            "fcol": out["fcol"].to_numpy(dtype="int8"),
+            val_col: out[val_col].to_numpy(),
         }
-        for fc, n, v in jv_gram_probe:  # absent from the batch -> df 0
-            fce = fc + _GRAM_FCOL_OFF * (n - 1)
-            col_df[(fce, v)] = probed.get((fce, v), 0)
+        for c in extra:
+            cols[c] = out[c].to_numpy()
+        return pd.DataFrame(cols)
 
-    if jv_specs and "jv_take" in art:
-        take = art["jv_take"]
-    elif jv_specs:
-        # Two-level cost model. Python-lane cost ≈ Arrow-shipping every
-        # candidate doc's tokens (bounded by |batch_terms|, a FIXED cost
-        # paid once if ANY query stays pythonic) + per-candidate set checks
-        # (≈ gated candidate volume). Join-lane cost ≈ the ungated hit
-        # volume est_q per query.
-        #   Level 1 — if the TOTAL est is comparable to the python lane's
-        #   fixed + variable cost, take everything (no python lane at all).
-        #   Level 2 — otherwise take each query whose own hit volume beats
-        #   its gated candidate volume (phrases with rare bigrams, absent
-        #   terms, ...); the rest keep the rarest-term gate + python lane.
-        est_q = _est_q(jv_specs, col_df, art.get("jv_pat_df", {}))
-        if len(lit_pdf):
-            ldf = lit_pdf[lit_pdf["query_id"].isin(jv_specs.keys())]
-            ldf = ldf.assign(
-                df=[term_df.get((f, t), 0) for f, t in zip(ldf["field"], ldf["term"])]
-            )
-            gate_df_q = ldf.groupby("query_id")["df"].sum().to_dict()
-        else:
-            gate_df_q = {}
-        total_est = sum(est_q.values())
-        if jv_mode == "force":
-            take = set(jv_specs)
-        else:
-            if bt_prune is not None:
-                # the pruned stream no longer proxies the python lane's
-                # fixed cost (Arrow-shipping candidate docs' FULL token
-                # arrays) — measure the batch's raw token volume instead
-                # (one columnar scan of the persisted batch, no explode)
-                size_cols = []
-                for tc in used_tok_cols:
-                    if tc in scalar_cols:
-                        continue
-                    if tc not in nested_cols:
-                        size_cols.append(
-                            F.coalesce(F.size(F.col(tc)), F.lit(0))
-                        )
-                        continue
-                    dt = batch.schema[tc].dataType
+    _, _, lit_pdf, pat_pdf, _ = stats
+    gpdf = _map_gates(lit_pdf, "term")
+    ppdf = _map_gates(pat_pdf, "pattern", ("pkind", "fz", "pfx"))
+    all_doc_qids = registry.all_docs_query_ids()
 
-                    def _g(name):
-                        return lambda c: c.getField(name)
-
-                    size_cols.extend(
-                        F.coalesce(
-                            F.size(
-                                F.flatten(F.transform(F.col(tc), _g(f.name)))
-                            ),
-                            F.lit(0),
-                        )
-                        for f in dt.elementType.fields
-                        if isinstance(f.dataType, T.ArrayType)
-                    )
-                if size_cols:
-                    vol = size_cols[0]
-                    for c in size_cols[1:]:
-                        vol = vol + c
-                    bt_count = int(
-                        batch.agg(F.sum(vol).alias("v")).first()["v"] or 0
-                    )
-                else:
-                    bt_count = 0
-            else:
-                bt_count = batch_terms.count()
-            gated_all = sum(gate_df_q.get(q, 0) for q in jv_specs)
-            ratio = float(os.environ.get("EBP_JV_MAX_RATIO", "1.5"))
-            if total_est <= ratio * (bt_count + gated_all):
-                take = set(jv_specs)
-            else:
-                # pattern-bearing queries' expansions blew the budget:
-                # fall back to the static-atom subset (never worse than
-                # the pre-wildcard lane), then per-query if enabled
-                static = {q for q, s in jv_specs.items() if not s[5]}
-                est_static = sum(est_q[q] for q in static)
-                gated_static = sum(gate_df_q.get(q, 0) for q in static)
-                if static and est_static <= ratio * (bt_count + gated_static):
-                    take = static
-                elif jv_beta > 0:
-                    take = {
-                        q
-                        for q in jv_specs
-                        if est_q[q] <= jv_beta * gate_df_q.get(q, 0)
-                    }
-                else:
-                    take = set()
-            if os.environ.get("EBP_PROF_CANDIDATES"):
-                import sys as _sys
-
-                print(
-                    f"[ebp-prof] jv: {len(take)}/{len(jv_specs)} queries, "
-                    f"est={total_est}, bt={bt_count}, gated={gated_all}",
-                    file=_sys.stderr,
-                )
-    else:
-        take = set()
-    art["jv_take"] = take
-    _prof('jv decision')
-    if jv_specs and "jv_rows" in art:
-        jv_qids, jv_rows, jv_prows, jv_nreq, jv_gram_cols = art["jv_rows"]
-    elif jv_specs:
-        for qid in take:
-            rows_q, nreq, _atoms, gcols_q, never, prows_q = jv_specs[qid]
-            jv_qids.add(qid)
-            if never:
-                continue  # matched-never: no rows, no group, no match
-            jv_rows.extend(rows_q)
-            jv_prows.extend(prows_q)
-            jv_nreq.append((qid, nreq))
-            jv_gram_cols.update(gcols_q)
-        art["jv_rows"] = (jv_qids, jv_rows, jv_prows, jv_nreq, jv_gram_cols)
-
-    # map gate rows' query fields to tokens columns; drop members on
-    # unmapped fields (those contribute no candidates — an empty field can
-    # never satisfy a positive term). A query whose ENTIRE gate group is
-    # unmapped gets zero candidates and correctly never matches. Join-verify
-    # queries skip phase 1 entirely — their lane is exact on its own, so
-    # their gate rows would only inflate the candidate dedup shuffle.
-    if "gates_sdf" not in art:
-        fcol_of = {f: col_idx[tc] for f, tc in resolve.items() if tc in col_idx}
-
-        def _map_gate_pdf(
-            src: "pd.DataFrame", val_col: str, extra: tuple = ()
-        ) -> "pd.DataFrame":
-            if not len(src):
-                return src
-            out = src[~src["query_id"].isin(jv_qids)] if jv_qids else src
-            out = out.assign(fcol=out["field"].map(fcol_of))
-            out = out.dropna(subset=["fcol"])
-            cols = {
-                "query_id": out["query_id"].to_numpy(),
-                "fcol": out["fcol"].to_numpy(dtype="int8"),
-                val_col: out[val_col].to_numpy(),
-            }
-            for c in extra:
-                cols[c] = out[c].to_numpy()
-            return pd.DataFrame(cols)
-
-        gpdf = _map_gate_pdf(lit_pdf, "term")
-        if len(gpdf):
-            art["gates_sdf"] = spark.createDataFrame(
-                gpdf, "query_id string, fcol tinyint, term string"
-            )
-        else:
-            art["gates_sdf"] = None
-        ppdf = _map_gate_pdf(pat_pdf, "pattern", ("pkind", "fz", "pfx"))
-        if len(ppdf):
-            art["patterns_sdf"] = spark.createDataFrame(
+    # ids only: a blob-backed registry (distributed compile) must not
+    # unpickle 10^5 plan trees on the driver just to split the verify set
+    # — the python-evaluator lane reads plans from the verify broadcast's
+    # executor-pickled blobs, never from here
+    verify_ids = registry.gate_verify_ids()
+    verify_set = set(verify_ids)
+    # the join-verify lane owns its queries (phase-1-skipped, exact)
+    pythonic = [q for q in verify_ids if q not in jv_qids]
+    # queries decided exactly by phase 1 pass through without
+    # verification; joining on this (usually small) set beats an
+    # anti-join against the 10^5-row verify set
+    exact_qids = [
+        q for q, cq in registry.queries.items()
+        if not cq.match_none and q not in verify_set
+    ]
+    exact_sdf = _qid_df(spark, exact_qids) if exact_qids else None
+    vid_sdf = pythonic_sdf = None
+    n_simple = 0
+    if pythonic:
+        # query_id -> vid map (vid = unified verify row: simple rows 0..,
+        # then plan rows): candidates join it JVM-side (ONE broadcast hash
+        # table per executor) so no python worker ever builds a 10^6-entry
+        # qid dict or materializes 10^6 qid strings — that build measured
+        # ~47s/worker at 1M queries under 32-way allocation contention.
+        registry.broadcast_verify_plans(spark)
+        s_qids, p_qids = registry.verify_qid_spaces()
+        n_simple = len(s_qids)
+        vid_sdf = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "query_id": s_qids + p_qids,
+                    "vid": np.arange(n_simple + len(p_qids), dtype=np.int32),
+                }
+            ),
+            "query_id string, vid int",
+        )
+        # when EVERY candidate-producing query is pythonic (the
+        # 10^5-registry wholesale path: no exact queries), the semi join
+        # is a no-op — skip it instead of broadcasting a 10^5-row filter
+        if exact_sdf is not None:
+            pythonic_sdf = _qid_df(spark, pythonic)
+    plan = BatchPlan(
+        jv_qids=jv_qids,
+        jv_rows=jv_rows,
+        jv_prows=jv_prows,
+        jv_gram_cols=jv_gram_cols,
+        jv_tables=(
+            _jv_tables(spark, jv_rows, jv_prows, jv_nreq)
+            if jv_rows or jv_prows
+            else None
+        ),
+        gates_sdf=(
+            spark.createDataFrame(gpdf, "query_id string, fcol tinyint, term string")
+            if len(gpdf)
+            else None
+        ),
+        patterns_sdf=(
+            spark.createDataFrame(
                 ppdf,
                 "query_id string, fcol tinyint, pattern string, "
                 "pkind string, fz int, pfx string",
             )
-        else:
-            art["patterns_sdf"] = None
-        all_doc_qids = registry.all_docs_query_ids()
-        art["alldocs_sdf"] = (
-            _qid_df(spark, all_doc_qids) if all_doc_qids else None
-        )
+            if len(ppdf)
+            else None
+        ),
+        alldocs_sdf=_qid_df(spark, all_doc_qids) if all_doc_qids else None,
+        needs_verify=bool(verify_ids),
+        exact_sdf=exact_sdf,
+        pythonic_sdf=pythonic_sdf,
+        vid_sdf=vid_sdf,
+        n_simple=n_simple,
+    )
+    registry._batch_plan_cache = (key, plan)
+    return plan
 
-    _prof('gate tables')
-    # the distinct (fcol, term) batch dictionary feeds BOTH wildcard
-    # expansions (gate patterns of non-jv queries AND the jv lane's
-    # "w"/"wg" need expansion) — built once, persisted when both lanes
-    # consume it so the dedup shuffle isn't paid twice
-    term_dict = None
-    if art["patterns_sdf"] is not None or jv_prows:
-        term_dict = batch_terms.select("fcol", "term").dropDuplicates(
-            ["fcol", "term"]
-        )
-        if art["patterns_sdf"] is not None and jv_prows:
-            term_dict = term_dict.persist()
-            cached_frames.append(term_dict)
-    parts_cand = []
-    if art["gates_sdf"] is not None:
-        parts_cand.append(
-            batch_terms.join(F.broadcast(art["gates_sdf"]), ["fcol", "term"])
-        )
-    if art["patterns_sdf"] is not None:
+
+def _candidates(
+    spark: SparkSession,
+    view: _BatchView,
+    plan: BatchPlan,
+    batch_terms: DataFrame,
+    term_dict: DataFrame | None,
+) -> DataFrame:
+    """Stage 4 (phase 1): candidate (doc_id, query_id) pairs via GATE groups.
+
+    Joining every query term against the batch multiplies each (doc, term)
+    row by |queries containing term| — 10^8 rows at 225k queries. Instead
+    each query joins on ONE group: its most selective (lowest batch-df)
+    necessary condition — the classic rarest-term gate. Candidate volume
+    becomes sum_q df(gate_q); phase 2 settles the rest."""
+    parts = []
+    if plan.gates_sdf is not None:
+        parts.append(batch_terms.join(F.broadcast(plan.gates_sdf), ["fcol", "term"]))
+    if plan.patterns_sdf is not None:
         # pkind-dispatched multi-term expansion, all JVM-side: wildcard via
         # LIKE, regexp via RLIKE (pattern pre-anchored), fuzzy via
         # levenshtein + required-prefix (the reference's
         # automaton-over-index-terms family, WildcardTermsProducer:26-53 /
         # Lucene Fuzzy/RegexpQuery rewriting over the term dictionary)
         expanded = (
-            term_dict.join(F.broadcast(art["patterns_sdf"]), "fcol")
+            term_dict.join(F.broadcast(plan.patterns_sdf), "fcol")
             .filter(
                 ((F.col("pkind") == "like") & F.expr("term LIKE pattern"))
                 | ((F.col("pkind") == "re") & F.expr("term RLIKE pattern"))
@@ -1403,11 +1370,9 @@ def percolate(
             )
             .select("query_id", "fcol", "term")
         )
-        parts_cand.append(batch_terms.join(F.broadcast(expanded), ["fcol", "term"]))
-    if art["alldocs_sdf"] is not None:
-        parts_cand.append(
-            batch.select("doc_id").crossJoin(art["alldocs_sdf"])
-        )
+        parts.append(batch_terms.join(F.broadcast(expanded), ["fcol", "term"]))
+    if plan.alldocs_sdf is not None:
+        parts.append(view.batch.select("doc_id").crossJoin(plan.alldocs_sdf))
 
     # GLOBAL candidate dedup: measured strictly best. A same-window A/B
     # against per-part / no dedup (duplicates folded into the verify
@@ -1417,726 +1382,573 @@ def percolate(
     # (wildcard expansion emits one row per matched dictionary term per
     # doc, an unbounded multiplier). The no-dedup variant only "improved"
     # N->4N efficiency by making the small configuration slower.
-    if not parts_cand:
-        candidates = spark.createDataFrame([], f"doc_id {id_t}, query_id string")
-    else:
-        candidates = parts_cand[0].select("doc_id", "query_id")
-        for p in parts_cand[1:]:
-            candidates = candidates.unionByName(p.select("doc_id", "query_id"))
-        candidates = candidates.dropDuplicates(["doc_id", "query_id"])
+    if not parts:
+        return spark.createDataFrame([], f"doc_id {view.id_t}, query_id string")
+    candidates = parts[0].select("doc_id", "query_id")
+    for p in parts[1:]:
+        candidates = candidates.unionByName(p.select("doc_id", "query_id"))
+    return candidates.dropDuplicates(["doc_id", "query_id"])
 
-    if os.environ.get("EBP_PROF_CANDIDATES"):
-        # perf-attribution hook: materialize the phase-1 candidate set so a
-        # subsequent matches.count() times phase 2 (verify) alone
-        import sys as _sys
-        import time as _time
 
-        candidates = candidates.persist()
-        cached_frames.append(candidates)
-        _t0 = _time.perf_counter()
-        _n = candidates.count()
-        print(
-            f"[ebp-prof] candidates={_n} in {_time.perf_counter() - _t0:.2f}s",
-            file=_sys.stderr,
+def _verify_udf(bc_plans, bc_key, n_simple, qf_to_idx, nested_idx, scalar_idx):
+    """The phase-2 pandas UDF: (vids, *token columns) per doc → hit vids.
+
+    Every name the nested functions close over is picklable driver state
+    (no DataFrames): cloudpickle ships them by value with the UDF."""
+
+    def _bc_state():
+        # worker-side: unpickled broadcast value + predicate memo,
+        # process-persistent. The cache dict MUST come from a runtime
+        # import (see _WORKER_VERIFY_CACHE above) — closing over it
+        # would hand every task a private copy.
+        from elasticsearch_batch_percolator_spark.operators import (
+            percolate as _pm,
         )
 
-    # ---- phase 2: exact verify on survivors only -------------------------
-    # The default verifier is the broadcast compiled-python evaluator: per
-    # candidate it is ONE dict dispatch + a compiled predicate (or the
-    # simple-MUST set-containment lane), with doc-grouped token views. The
-    # alternative Catalyst when-chain re-COMPARES query_id per branch — a
-    # per-row linear scan over the registry — and measured STRICTLY slower
-    # at every registry size on this engine (50k docs x N queries,
-    # local[32], best-of-2): N=100: 4.4s vs 2.1s; N=400: 8.9s vs 2.0s;
-    # N=1500: 31.9s vs 2.3s; N=10k (8 chunks): 203s vs 4.6s. The when-chain
-    # path therefore defaults OFF; set EBP_MAX_WHEN_BRANCHES > 0 to use it
-    # where Python workers are unavailable. Positional queries (spans,
-    # sloppy phrases, positional nested) always use the python evaluator —
-    # the same boundary the reference draws ("positional queries are
-    # magnitudes slower", README.md:127-133).
-    # ids only on the default path: a blob-backed registry (distributed
-    # compile) must not unpickle 10^5 plan trees on the driver just to
-    # split the verify set — the python-evaluator lane reads plans from
-    # the verify broadcast's executor-pickled blobs, never from here
-    verify_ids = set(registry.gate_verify_ids())
-    if "verify_split" in art:
-        columnar, pythonic = art["verify_split"]
-    else:
-        max_branches = int(os.environ.get("EBP_MAX_WHEN_BRANCHES", "0"))
-        max_chunks = int(os.environ.get("EBP_MAX_WHEN_CHUNKS", "8"))
-        if max_branches > 0:
-            # opt-in when-chain path genuinely needs the trees (match_col)
-            verify_plans = registry.gate_verify_plans()
-            columnar = {q: p for q, p in verify_plans.items() if not _is_positional(p)}
-            pythonic = {q: p for q, p in verify_plans.items() if _is_positional(p)}
-            if len(columnar) > max_branches * max_chunks:
-                pythonic.update(columnar)
-                columnar = {}
-        else:
-            columnar = {}
-            # values are never read on this path (predicates compile from
-            # the broadcast blobs) — only the qid key-set matters
-            pythonic = dict.fromkeys(verify_ids)
-        for q in jv_qids:  # join-verify lane owns these (phase-1-skipped, exact)
-            columnar.pop(q, None)
-            pythonic.pop(q, None)
-        art["verify_split"] = (columnar, pythonic)
-    if "exact_sdf" not in art:
-        # queries decided exactly by phase 1 pass through without
-        # verification; joining on this (usually small) set beats an
-        # anti-join against the 10^5-row verify set
-        exact_qids = [
-            q for q, cq in registry.queries.items()
-            if not cq.match_none and q not in verify_ids
-        ]
-        art["exact_sdf"] = _qid_df(spark, exact_qids) if exact_qids else None
-    if not verify_ids:
-        parts = [candidates]
-    elif art["exact_sdf"] is None:
-        parts = []
-    else:
-        parts = [
-            candidates.join(
-                F.broadcast(art["exact_sdf"]), "query_id", "left_semi"
-            )
-        ]
-
-    # scalar batch columns (value__*: numeric Range/Exists targets and the
-    # _id pseudo-field) ride value_fields, NOT token_fields — handing a
-    # scalar to a branch that expects array<string> (e.g. Exists's size())
-    # does not raise at build time, it fails at ANALYSIS time on the whole
-    # when-chain, which the per-query try/except below can't isolate
-    token_cols: dict[str, Column] = {}
-    value_cols: dict[str, Column] = {}
-    for qf in qfields:
-        tc = resolve.get(qf)
-        if tc is None:
-            token_cols[qf] = F.array().cast("array<string>")
-        elif tc in scalar_cols:
-            value_cols[qf] = F.col(tc)
-        else:
-            token_cols[qf] = F.col(tc)
-
-    if columnar:
-        preds: list[Column] = []  # one when-chain per chunk
-        chunk_qids: list[list[str]] = []
-        cur_pred, cur_qids = None, []
-        for qid, plan in list(columnar.items()):
-            try:
-                branch = match_col(plan, token_cols, value_cols)
-            except Exception:
-                # per-query isolation (E10): un-buildable predicate falls
-                # back to the python evaluator, which isolates per row
-                del columnar[qid]
-                pythonic[qid] = plan
-                continue
-            cur_pred = (
-                F.when(F.col("query_id") == qid, branch)
-                if cur_pred is None
-                else cur_pred.when(F.col("query_id") == qid, branch)
-            )
-            cur_qids.append(qid)
-            if len(cur_qids) >= max_branches:
-                preds.append(cur_pred)
-                chunk_qids.append(cur_qids)
-                cur_pred, cur_qids = None, []
-        if cur_qids:
-            preds.append(cur_pred)
-            chunk_qids.append(cur_qids)
-        for pred, qids in zip(preds, chunk_qids):
-            cands = candidates.join(
-                F.broadcast(_qid_df(spark, qids)), "query_id", "left_semi"
-            ).join(batch.select("doc_id", *tok_cols), "doc_id")
-            parts.append(
-                cands.filter(pred.otherwise(F.lit(False))).select("doc_id", "query_id")
-            )
-
-    if pythonic:
-        # plans ship ONCE per executor via a Spark broadcast (pickling 10^5
-        # compiled closures into every task would dominate the job);
-        # predicates compile lazily per worker and memoize. The broadcast is
-        # the registry's CACHED verify-plan dict (a superset of pythonic —
-        # only candidate qids are ever looked up) so its multi-second pickle
-        # is paid once per registry, not once per batch.
-        bc_plans = registry.broadcast_verify_plans(spark)
-        # keyed by the broadcast's own process-unique token, NOT
-        # registry.version: version is per-registry (len(queries) on load)
-        # so two registries in one app can alias and the worker cache
-        # would serve registry A's plans to registry B's batch.
-        _bc_key = (spark.sparkContext.applicationId, registry.verify_bc_token())
-        # query_id -> vid map (vid = unified verify row: simple rows 0..,
-        # then plan rows): candidates join it JVM-side (ONE broadcast hash
-        # table per executor) so no python worker ever builds a 10^6-entry
-        # qid dict or materializes 10^6 qid strings — that build measured
-        # ~47s/worker at 1M queries under 32-way allocation contention.
-        # Hit vids map back to query ids through the SAME DataFrame (the
-        # broadcast exchange is reused within the action).
-        s_qids, p_qids = registry.verify_qid_spaces()
-        _n_simple = len(s_qids)
-        if "vid_sdf" not in art:
-            vid_pdf = pd.DataFrame(
-                {
-                    "query_id": s_qids + p_qids,
-                    "vid": np.arange(_n_simple + len(p_qids), dtype=np.int32),
-                }
-            )
-            art["vid_sdf"] = spark.createDataFrame(
-                vid_pdf, "query_id string, vid int"
-            )
-        vid_sdf = art["vid_sdf"]
-
-        def _bc_state():
-            # worker-side: unpickled broadcast value + predicate memo,
-            # process-persistent. The cache dict MUST come from a runtime
-            # import (see _WORKER_VERIFY_CACHE above) — closing over it
-            # would hand every task a private copy.
-            try:
-                from elasticsearch_batch_percolator_spark.operators import (
-                    percolate as _pm,
-                )
-
-                cache = _pm._WORKER_VERIFY_CACHE
-                fpend = _pm._WORKER_FREEZE_PENDING
-            except ImportError:  # package not shipped: per-task fallback
-                cache = _WORKER_VERIFY_CACHE
-                fpend = _WORKER_FREEZE_PENDING
-            st = cache.get(_bc_key)
-            if st is None:
-                _prof_bc = bool(os.environ.get("EBP_PROF_WORKER"))
-                if _prof_bc:
-                    import time as _bt
-
-                    _b0 = _bt.perf_counter()
-                val = bc_plans.value
-                if _prof_bc:
-                    import json as _bj
-
-                    with open(f"/tmp/ebp_wprof_{os.getpid()}.jsonl", "a") as fh:
-                        fh.write(
-                            _bj.dumps(
-                                {
-                                    "pid": os.getpid(),
-                                    "bc_value_s": round(
-                                        _bt.perf_counter() - _b0, 3
-                                    ),
-                                }
-                            )
-                            + "\n"
-                        )
-                while len(cache) >= 2:
-                    cache.pop(next(iter(cache)))
-                # (value, compiled-plan memo). No qid index of any kind is
-                # built worker-side — candidates arrive as integer vids
-                # (JVM broadcast join, see vid_sdf above). Simple-lane rows
-                # are NOT memoized as python tuples either: materializing a
-                # tuple per candidate vid re-creates, spread over the first
-                # batches, the very ~500MB-per-worker object graph the
-                # columnar form exists to avoid — measured as a 4-5x
-                # slowdown of the first two production batches at 1M
-                # queries (32 workers allocating concurrently). The verify
-                # UDF checks terms straight off the shared buffers instead
-                # (~2-3us per candidate pair, short-circuiting, zero
-                # persistent allocation).
-                st = (val, {})
-                cache[_bc_key] = st
-                # Freeze the freshly built state out of the GC generations.
-                # The columnar broadcast leaves the worker's tracked-object
-                # count SMALL (buffers and strings aren't gc-tracked), so
-                # as the decode/predicate memos grow, CPython's gen2
-                # heuristic (pending > 25% of long-lived) fires full
-                # collections almost continuously over the growing graph —
-                # measured +100s per 20k-doc batch at a 10^6-query registry
-                # (the dict-form broadcast accidentally suppressed this:
-                # its one-burst unpickle pushed long-lived to ~5M objects).
-                # freeze() moves everything alive into the permanent
-                # generation so those scans stay proportional to NEW
-                # objects; the state is worker-lifetime anyway.
-                import gc
-
-                gc.freeze()
-                fpend[0] = True  # this call's transients are pinned too
-            return st, fpend
-
-        def _pred(vid, i, pcols, memo):
-            # plan blobs live in ONE shared buffer (see
-            # broadcast_verify_plans): slice plan row ``i``'s bytes out
-            # lazily — only candidate vids ever pay an unpickle +
-            # predicate compile, memoized per worker (int-keyed)
-            import pickle
-
-            p = memo.get(vid)
-            if p is None:
-                off = pcols["off"]
-                blob = pcols["buf"][off[i] : off[i + 1]]
-                p = compile_predicate_fields(pickle.loads(blob))
-                memo[vid] = p
-            return p
-
-        # group candidates per doc: tokens ship ONCE per doc (not once per
-        # (doc, query) pair — a ~|queries|x blowup at dense candidate sets),
-        # and the token list/set conversions amortize over all its queries.
-        # fieldmap views (one per tokens column) are built once per doc and
-        # shared by every query field resolving to that column.
-        qf_to_idx = {qf: tok_cols.index(tc) for qf, tc in resolve.items()}
-
-        _EMPTY = ([], frozenset())
-        nested_idx = {i for i, tc in enumerate(tok_cols) if tc in nested_cols}
-        scalar_idx = {i for i, tc in enumerate(tok_cols) if tc in scalar_cols}
-        # worker-side attribution (EBP_PROF_WORKER=1): one JSON line per
-        # Arrow batch to /tmp/ebp_wprof_<pid>.jsonl — pairs, memo misses,
-        # time in broadcast load / memo compile / per-pair evaluation.
-        # Diagnosis hook for cold-vs-warm phase-2 behavior at very large
-        # registries; zero-cost when unset (captured at plan build).
-        _wprof = bool(os.environ.get("EBP_PROF_WORKER"))
-
-        @F.pandas_udf(T.ArrayType(T.IntegerType()))
-        def verify_doc(vid_lists: pd.Series, *tok_series: pd.Series) -> pd.Series:
-            if _wprof:
-                import time as _t
-
-                _t0 = _t.perf_counter()
+        cache = _pm._WORKER_VERIFY_CACHE
+        fpend = _pm._WORKER_FREEZE_PENDING
+        st = cache.get(bc_key)
+        if st is None:
+            val = bc_plans.value
+            while len(cache) >= 2:
+                cache.pop(next(iter(cache)))
+            # (value, compiled-plan memo). No qid index of any kind is
+            # built worker-side — candidates arrive as integer vids
+            # (JVM broadcast join, see BatchPlan.vid_sdf). Simple-lane rows
+            # are NOT memoized as python tuples either: materializing a
+            # tuple per candidate vid re-creates, spread over the first
+            # batches, the very ~500MB-per-worker object graph the
+            # columnar form exists to avoid — measured as a 4-5x
+            # slowdown of the first two production batches at 1M
+            # queries (32 workers allocating concurrently). The verify
+            # UDF checks terms straight off the shared buffers instead
+            # (~2-3us per candidate pair, short-circuiting, zero
+            # persistent allocation).
+            st = (val, {})
+            cache[bc_key] = st
+            # Freeze the freshly built state out of the GC generations.
+            # The columnar broadcast leaves the worker's tracked-object
+            # count SMALL (buffers and strings aren't gc-tracked), so
+            # as the decode/predicate memos grow, CPython's gen2
+            # heuristic (pending > 25% of long-lived) fires full
+            # collections almost continuously over the growing graph —
+            # measured +100s per 20k-doc batch at a 10^6-query registry
+            # (the dict-form broadcast accidentally suppressed this:
+            # its one-burst unpickle pushed long-lived to ~5M objects).
+            # freeze() moves everything alive into the permanent
+            # generation so those scans stay proportional to NEW
+            # objects; the state is worker-lifetime anyway.
             import gc
 
-            (_val, memo), _fpend = _bc_state()
-            if _fpend[0]:
-                # a prior call's freeze pinned that call's Arrow batch;
-                # its transients are dead now — unpin everything, collect
-                # their cycles, and leave the memo in gen2 (large
-                # long-lived count => rare full collections). A cold
-                # growth phase below re-freezes and re-arms the flag.
-                gc.unfreeze()
-                gc.collect()
-                _fpend[0] = False
-            scols = _val["simple_cols"]
-            pcols = _val["plan_cols"]
-            # simple-lane buffers, bound locally for the hot loop
-            _flds = scols["fields"]
-            _noff = scols["need_off"]
-            _nf = scols["need_f"]
-            _nt = scols["need_t"]
-            _ntoff = scols["need_t_off"]
-            _foff = scols["forb_off"]
-            _ff = scols["forb_f"]
-            _ft = scols["forb_t"]
-            _ftoff = scols["forb_t_off"]
-            _g0 = len(memo)
-            if _wprof:
-                _t_bc = _t.perf_counter() - _t0
-                _m0 = len(memo)
-            out = []
-            for row in zip(vid_lists, *tok_series):
-                vids = row[0]
-                views = []
-                for ci, s in enumerate(row[1:]):
-                    if ci in scalar_idx:
-                        views.append(s)  # raw scalar for Range predicates
-                        continue
-                    if ci in nested_idx:
-                        # array-typed child fields become lists; scalar
-                        # children (numeric weights etc.) pass through for
-                        # Range predicates — list() on a scalar would raise
-                        # OUTSIDE the per-query try below and abort the
-                        # whole batch (E10 isolation violation)
-                        kids = []
-                        for kid in (s if s is not None else []):
-                            view = {}
-                            for k, v in dict(kid).items():
-                                if v is None:
-                                    view[k] = []
-                                elif isinstance(v, (list, tuple, np.ndarray)):
-                                    view[k] = list(v)
-                                else:
-                                    view[k] = v
-                            kids.append(view)
-                        views.append(kids)
-                    else:
-                        tl = s.tolist() if s is not None else []
-                        views.append((tl, set(tl)))
-                fmap = {qf: views[i] for qf, i in qf_to_idx.items()}
-                hit = []
-                for vid in vids:
-                    try:
-                        if vid < _n_simple:
-                            # term-conjunction fast lane: containment
-                            # checks straight off the columnar buffers —
-                            # short-circuits on the first missing required
-                            # term, allocates nothing that outlives the
-                            # pair (no closure compile, no decoded memo)
-                            ok = True
-                            for j in range(_noff[vid], _noff[vid + 1]):
-                                v = fmap.get(_flds[_nf[j]], _EMPTY)
+            gc.freeze()
+            fpend[0] = True  # this call's transients are pinned too
+        return st, fpend
+
+    def _pred(vid, i, pcols, memo):
+        # plan blobs live in ONE shared buffer (see
+        # broadcast_verify_plans): slice plan row ``i``'s bytes out
+        # lazily — only candidate vids ever pay an unpickle +
+        # predicate compile, memoized per worker (int-keyed)
+        import pickle
+
+        p = memo.get(vid)
+        if p is None:
+            off = pcols["off"]
+            blob = pcols["buf"][off[i] : off[i + 1]]
+            p = compile_predicate_fields(pickle.loads(blob))
+            memo[vid] = p
+        return p
+
+    _EMPTY = ([], frozenset())
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def verify_doc(vid_lists: pd.Series, *tok_series: pd.Series) -> pd.Series:
+        import gc
+
+        (_val, memo), _fpend = _bc_state()
+        if _fpend[0]:
+            # a prior call's freeze pinned that call's Arrow batch;
+            # its transients are dead now — unpin everything, collect
+            # their cycles, and leave the memo in gen2 (large
+            # long-lived count => rare full collections). A cold
+            # growth phase below re-freezes and re-arms the flag.
+            gc.unfreeze()
+            gc.collect()
+            _fpend[0] = False
+        scols = _val["simple_cols"]
+        pcols = _val["plan_cols"]
+        # simple-lane buffers, bound locally for the hot loop
+        _flds = scols["fields"]
+        _noff = scols["need_off"]
+        _nf = scols["need_f"]
+        _nt = scols["need_t"]
+        _ntoff = scols["need_t_off"]
+        _foff = scols["forb_off"]
+        _ff = scols["forb_f"]
+        _ft = scols["forb_t"]
+        _ftoff = scols["forb_t_off"]
+        _g0 = len(memo)
+        out = []
+        for row in zip(vid_lists, *tok_series):
+            vids = row[0]
+            views = []
+            for ci, s in enumerate(row[1:]):
+                if ci in scalar_idx:
+                    views.append(s)  # raw scalar for Range predicates
+                    continue
+                if ci in nested_idx:
+                    # array-typed child fields become lists; scalar
+                    # children (numeric weights etc.) pass through for
+                    # Range predicates — list() on a scalar would raise
+                    # OUTSIDE the per-query try below and abort the
+                    # whole batch (E10 isolation violation)
+                    kids = []
+                    for kid in (s if s is not None else []):
+                        view = {}
+                        for k, v in dict(kid).items():
+                            if v is None:
+                                view[k] = []
+                            elif isinstance(v, (list, tuple, np.ndarray)):
+                                view[k] = list(v)
+                            else:
+                                view[k] = v
+                        kids.append(view)
+                    views.append(kids)
+                else:
+                    tl = s.tolist() if s is not None else []
+                    views.append((tl, set(tl)))
+            fmap = {qf: views[i] for qf, i in qf_to_idx.items()}
+            hit = []
+            for vid in vids:
+                try:
+                    if vid < n_simple:
+                        # term-conjunction fast lane: containment
+                        # checks straight off the columnar buffers —
+                        # short-circuits on the first missing required
+                        # term, allocates nothing that outlives the
+                        # pair (no closure compile, no decoded memo)
+                        ok = True
+                        for j in range(_noff[vid], _noff[vid + 1]):
+                            v = fmap.get(_flds[_nf[j]], _EMPTY)
+                            if (
+                                type(v) is not tuple
+                                or _nt[_ntoff[j] : _ntoff[j + 1]].decode()
+                                not in v[1]
+                            ):
+                                ok = False
+                                break
+                        if ok:
+                            for j in range(_foff[vid], _foff[vid + 1]):
+                                v = fmap.get(_flds[_ff[j]], _EMPTY)
                                 if (
-                                    type(v) is not tuple
-                                    or _nt[_ntoff[j] : _ntoff[j + 1]].decode()
-                                    not in v[1]
+                                    type(v) is tuple
+                                    and _ft[_ftoff[j] : _ftoff[j + 1]].decode()
+                                    in v[1]
                                 ):
                                     ok = False
                                     break
-                            if ok:
-                                for j in range(_foff[vid], _foff[vid + 1]):
-                                    v = fmap.get(_flds[_ff[j]], _EMPTY)
-                                    if (
-                                        type(v) is tuple
-                                        and _ft[_ftoff[j] : _ftoff[j + 1]].decode()
-                                        in v[1]
-                                    ):
-                                        ok = False
-                                        break
-                            if ok:
-                                hit.append(vid)
-                            continue
-                        p = _pred(vid, vid - _n_simple, pcols, memo)
-                        if p is not None and p(fmap):
+                        if ok:
                             hit.append(vid)
-                    except Exception:
-                        pass  # per-query error isolation (E10)
-                out.append(hit)
-                if len(memo) - _g0 > 25000:
-                    # the memos grew a lot: freeze the new worker-lifetime
-                    # entries MID-CALL (a cold batch is one huge Arrow call
-                    # per worker — an end-of-call freeze would let gen2
-                    # churn over the growing graph the whole way through;
-                    # see the note in _bc_state). freeze() is list-merge
-                    # cheap, and the 25k step amortizes it to nothing.
-                    gc.freeze()
-                    _g0 = len(memo)
-                    _fpend[0] = True  # next call unpins this batch
-            if _wprof:
-                import json as _json
+                        continue
+                    p = _pred(vid, vid - n_simple, pcols, memo)
+                    if p is not None and p(fmap):
+                        hit.append(vid)
+                except Exception:
+                    pass  # per-query error isolation (E10)
+            out.append(hit)
+            if len(memo) - _g0 > 25000:
+                # the memos grew a lot: freeze the new worker-lifetime
+                # entries MID-CALL (a cold batch is one huge Arrow call
+                # per worker — an end-of-call freeze would let gen2
+                # churn over the growing graph the whole way through;
+                # see the note in _bc_state). freeze() is list-merge
+                # cheap, and the 25k step amortizes it to nothing.
+                gc.freeze()
+                _g0 = len(memo)
+                _fpend[0] = True  # next call unpins this batch
+        return pd.Series(out)
 
-                with open(f"/tmp/ebp_wprof_{os.getpid()}.jsonl", "a") as fh:
-                    fh.write(
-                        _json.dumps(
-                            {
-                                "pid": os.getpid(),
-                                "wall": round(_t.perf_counter() - _t0, 3),
-                                "t_bc": round(_t_bc, 3),
-                                "docs": len(out),
-                                "pairs": int(sum(len(q) for q in vid_lists)),
-                                "hits": sum(len(h) for h in out),
-                                "memo0": _m0,
-                                "memo1": len(memo),
-                            }
-                        )
-                        + "\n"
-                    )
-            return pd.Series(out)
+    return verify_doc
 
-        # when EVERY candidate-producing query is pythonic (the 10^5-registry
-        # wholesale path: no exact, no columnar), the semi join is a no-op —
-        # skip it instead of broadcasting a 10^5-row filter
-        pythonic_covers_all = not columnar and art["exact_sdf"] is None
-        if "pythonic_sdf" not in art:
-            art["pythonic_sdf"] = (
-                None if pythonic_covers_all else _qid_df(spark, pythonic)
-            )
-        cand_py = (
-            candidates
-            if pythonic_covers_all
-            else candidates.join(
-                F.broadcast(art["pythonic_sdf"]), "query_id", "left_semi"
-            )
-        )
-        # map candidates to integer vids JVM-side (inner join: a candidate
-        # qid outside the verify broadcast could never match — same outcome
-        # the python lane's missing-plan lookup produced, minus the python)
-        cand_py = cand_py.join(F.broadcast(vid_sdf), "query_id")
-        # collect_SET (not list): defensive dedup inside the shuffle this
-        # groupBy already pays, so phase-2 never double-verifies a pair
-        to_verify = (
-            cand_py.groupBy("doc_id")
-            .agg(F.collect_set("vid").alias("vids"))
-            .join(batch.select("doc_id", *tok_cols), "doc_id")
-        )
-        hit_vids = to_verify.select(
-            "doc_id",
-            F.explode(
-                verify_doc(F.col("vids"), *[F.col(tc) for tc in tok_cols])
-            ).alias("vid"),
-        )
-        # hit vids (small) map back through the same broadcast DataFrame
-        # (the exchange is reused within the action)
-        parts.append(
-            hit_vids.join(F.broadcast(vid_sdf), "vid").select(
-                "doc_id", "query_id"
-            )
-        )
 
-    if jv_rows or jv_prows:
-        # ---- join-verify lane: Catalyst-only exact verification ----------
-        # One broadcast hash join (no shuffle of batch_terms) + ONE
-        # bitmask aggregate. Every atom of a query owns one bit of a
-        # 64-bit mask (_jv_structs guards atom count <= 63): a hit row
-        # carries (rbit, fbit) = its atom's bit in the required/forbidden
-        # mask, and groupBy(doc, qidx).bit_or collapses ANY number of
-        # duplicate hits — repeated grams, multiple dictionary expansions
-        # of one wildcard atom — without the per-atom dropDuplicates
-        # exchanges the count formulation needed (two shuffles gone; OR
-        # is idempotent where COUNT is not). Match ⇔ bit_or(rbit) ==
-        # req_mask AND bit_or(fbit) == 0. Docs with no overlap form no
-        # group — correctly absent since every jv query here requires
-        # at least one atom. query ids ship through the aggregate's
-        # exchange DICTIONARY-ENCODED (int qidx, not the string id) —
-        # that exchange is the lane's dominant byte volume at scale;
-        # names are restored by a broadcast join after the mask filter.
-        if "jv_tables" in art:
-            need_sdf, qmask_sdf, qmap_sdf, pat_sdf, patq_sdf = art["jv_tables"]
+def _python_verify(
+    spark: SparkSession,
+    registry: CompiledRegistry,
+    view: _BatchView,
+    plan: BatchPlan,
+    candidates: DataFrame,
+) -> DataFrame:
+    """Stage 5 (phase 2): exact verify of the pythonic queries' candidates
+    by the broadcast compiled-python evaluator — per candidate ONE dict
+    dispatch + a compiled predicate (or the simple-MUST set-containment
+    lane), with doc-grouped token views. Positional queries (spans, sloppy
+    phrases, positional nested) always verify here — the same boundary the
+    reference draws ("positional queries are magnitudes slower",
+    README.md:127-133).
+
+    Plans ship ONCE per executor via a Spark broadcast (pickling 10^5
+    compiled closures into every task would dominate the job); predicates
+    compile lazily per worker and memoize. The broadcast is the registry's
+    CACHED verify-plan dict (a superset of pythonic — only candidate qids
+    are ever looked up) so its multi-second pickle is paid once per
+    registry, not once per batch."""
+    bc_plans = registry.broadcast_verify_plans(spark)
+    # keyed by the broadcast's own process-unique token, NOT
+    # registry.version: version is per-registry (len(queries) on load)
+    # so two registries in one app can alias and the worker cache
+    # would serve registry A's plans to registry B's batch.
+    bc_key = (spark.sparkContext.applicationId, registry.verify_bc_token())
+    # group candidates per doc: tokens ship ONCE per doc (not once per
+    # (doc, query) pair — a ~|queries|x blowup at dense candidate sets),
+    # and the token list/set conversions amortize over all its queries.
+    # fieldmap views (one per tokens column) are built once per doc and
+    # shared by every query field resolving to that column.
+    tok_cols = sorted(set(view.resolve.values()))
+    verify_doc = _verify_udf(
+        bc_plans,
+        bc_key,
+        plan.n_simple,
+        {qf: tok_cols.index(tc) for qf, tc in view.resolve.items()},
+        {i for i, tc in enumerate(tok_cols) if tc in view.nested_cols},
+        {i for i, tc in enumerate(tok_cols) if tc in view.scalar_cols},
+    )
+    cand_py = (
+        candidates
+        if plan.pythonic_sdf is None
+        else candidates.join(F.broadcast(plan.pythonic_sdf), "query_id", "left_semi")
+    )
+    # map candidates to integer vids JVM-side (inner join: a candidate
+    # qid outside the verify broadcast could never match — same outcome
+    # the python lane's missing-plan lookup produced, minus the python)
+    cand_py = cand_py.join(F.broadcast(plan.vid_sdf), "query_id")
+    # collect_SET (not list): defensive dedup inside the shuffle this
+    # groupBy already pays, so phase-2 never double-verifies a pair
+    to_verify = (
+        cand_py.groupBy("doc_id")
+        .agg(F.collect_set("vid").alias("vids"))
+        .join(view.batch.select("doc_id", *tok_cols), "doc_id")
+    )
+    hit_vids = to_verify.select(
+        "doc_id",
+        F.explode(
+            verify_doc(F.col("vids"), *[F.col(tc) for tc in tok_cols])
+        ).alias("vid"),
+    )
+    # hit vids (small) map back through the same broadcast DataFrame
+    # (the exchange is reused within the action)
+    return hit_vids.join(F.broadcast(plan.vid_sdf), "vid").select(
+        "doc_id", "query_id"
+    )
+
+
+def _jv_tables(
+    spark: SparkSession, jv_rows: list, jv_prows: list, jv_nreq: list
+) -> tuple:
+    """Broadcast tables of the join-verify lane: (need, qmask, qmap, pat,
+    patq). Every atom of a query owns one bit of a 64-bit mask; query ids
+    are dictionary-encoded as int qidx (qmap restores the names)."""
+    qidx = {q: i for i, q in enumerate(sorted(q for q, _ in jv_nreq))}
+    # per-query bit assignment: static rows first, then pattern
+    # atoms, in list order (per-query contiguous by construction)
+    bit_ctr: dict[str, int] = {}
+
+    def _next_bit(q: str) -> int:
+        b = bit_ctr.get(q, 0)
+        bit_ctr[q] = b + 1
+        return b
+
+    req_mask: dict[str, int] = {q: 0 for q, _ in jv_nreq}
+    static_rows = []
+    for q, fc, t, req in jv_rows:
+        b = 1 << _next_bit(q)
+        if req:
+            req_mask[q] |= b
+        static_rows.append((qidx[q], fc, t, b if req else 0, 0 if req else b))
+    prow_bits = []
+    for q, fc, n, pre, lk, suf, req in jv_prows:
+        b = 1 << _next_bit(q)
+        if req:
+            req_mask[q] |= b
+        prow_bits.append(b)
+    if static_rows:
+        jpdf = pd.DataFrame(
+            static_rows, columns=["qidx", "fcol", "term", "rbit", "fbit"]
+        ).astype({"qidx": "int32", "fcol": "int16", "rbit": "int64", "fbit": "int64"})
+        need_sdf = spark.createDataFrame(
+            jpdf,
+            "qidx int, fcol smallint, term string, rbit long, fbit long",
+        )
+    else:
+        need_sdf = None
+    mpdf = pd.DataFrame(
+        [(qidx[q], req_mask[q]) for q, _ in jv_nreq], columns=["qidx", "req_mask"]
+    ).astype({"qidx": "int32", "req_mask": "int64"})
+    qmask_sdf = spark.createDataFrame(mpdf, "qidx int, req_mask long")
+    qmap_pdf = pd.DataFrame(
+        sorted((i, q) for q, i in qidx.items()), columns=["qidx", "query_id"]
+    ).astype({"qidx": "int32"})
+    qmap_sdf = spark.createDataFrame(qmap_pdf, "qidx int, query_id string")
+    if not jv_prows:
+        return need_sdf, qmask_sdf, qmap_sdf, None, None
+    # two driver tables: DISTINCT patterns (expanded against the
+    # dictionary once each, however many queries share them) and the
+    # per-(query, atom-bit) fan-out joined after
+    pats = sorted({(fc, n, pre, lk, suf) for _, fc, n, pre, lk, suf, _ in jv_prows})
+    pid_of = {p: i for i, p in enumerate(pats)}
+    ppdf = pd.DataFrame(
+        [(i, *p) for i, p in enumerate(pats)],
+        columns=["pid", "fcol", "n", "prefix", "like_pat", "suffix"],
+    ).astype({"pid": "int32", "fcol": "int8", "n": "int32"})
+    pat_sdf = spark.createDataFrame(
+        ppdf,
+        "pid int, fcol tinyint, n int, prefix string, "
+        "like_pat string, suffix string",
+    )
+    pqdf = pd.DataFrame(
+        [
+            (
+                pid_of[(fc, n, pre, lk, suf)],
+                qidx[q],
+                b if req else 0,
+                0 if req else b,
+            )
+            for b, (q, fc, n, pre, lk, suf, req) in zip(prow_bits, jv_prows)
+        ],
+        columns=["pid", "qidx", "rbit", "fbit"],
+    ).astype({"pid": "int32", "qidx": "int32", "rbit": "int64", "fbit": "int64"})
+    patq_sdf = spark.createDataFrame(pqdf, "pid int, qidx int, rbit long, fbit long")
+    return need_sdf, qmask_sdf, qmap_sdf, pat_sdf, patq_sdf
+
+
+def _join_verify(
+    view: _BatchView,
+    plan: BatchPlan,
+    batch_terms: DataFrame,
+    term_dict: DataFrame | None,
+) -> DataFrame:
+    """Stage 6: the join-verify lane, Catalyst-only exact verification.
+
+    One broadcast hash join (no shuffle of batch_terms) + ONE bitmask
+    aggregate. Every atom of a query owns one bit of a 64-bit mask
+    (_jv_structs guards atom count <= 63): a hit row carries (rbit, fbit)
+    = its atom's bit in the required/forbidden mask, and groupBy(doc,
+    qidx).bit_or collapses ANY number of duplicate hits — repeated grams,
+    multiple dictionary expansions of one wildcard atom — without the
+    per-atom dropDuplicates exchanges the count formulation needed (two
+    shuffles gone; OR is idempotent where COUNT is not). Match ⇔
+    bit_or(rbit) == req_mask AND bit_or(fbit) == 0. Docs with no overlap
+    form no group — correctly absent since every jv query here requires at
+    least one atom. query ids ship through the aggregate's exchange
+    DICTIONARY-ENCODED (int qidx, not the string id) — that exchange is
+    the lane's dominant byte volume at scale; names are restored by a
+    broadcast join after the mask filter."""
+    batch, used_tok_cols, col_idx = view.batch, view.used_tok_cols, view.col_idx
+    need_sdf, qmask_sdf, qmap_sdf, pat_sdf, patq_sdf = plan.jv_tables
+    jv_rows, jv_prows = plan.jv_rows, plan.jv_prows
+
+    # leading-word prune sets per (tc, n), SEPARATE for the static and
+    # the pattern-expansion gram joins (each stream only feeds its own
+    # join): a generated gram can only join if its first token is one
+    # of that join's need atoms' first words. A wildcard-phrase whose
+    # pattern IS the first position disables the prune for its stream
+    # (None = unfiltered), as does an oversized word set.
+    fw_static: dict[tuple[str, int], set | None] = {}
+    fw_pat: dict[tuple[str, int], set | None] = {}
+
+    def _fw_add(m, tc, n, word):
+        if m.get((tc, n), ()) is None:
+            return
+        if word is None:
+            m[(tc, n)] = None
         else:
-            qidx = {q: i for i, q in enumerate(sorted(q for q, _ in jv_nreq))}
-            # per-query bit assignment: static rows first, then pattern
-            # atoms, in list order (per-query contiguous by construction)
-            bit_ctr: dict[str, int] = {}
+            m.setdefault((tc, n), set()).add(word)
 
-            def _next_bit(q: str) -> int:
-                b = bit_ctr.get(q, 0)
-                bit_ctr[q] = b + 1
-                return b
+    for _q, fce, term, _req in jv_rows:
+        if fce >= _GRAM_FCOL_OFF:
+            gn = fce // _GRAM_FCOL_OFF + 1
+            _fw_add(fw_static, used_tok_cols[fce % _GRAM_FCOL_OFF], gn,
+                    term.split(" ")[0])
+    for _q, fc, gn, prefix, _lk, _suf, _req in jv_prows:
+        if gn > 1:
+            _fw_add(fw_pat, used_tok_cols[fc], gn,
+                    prefix.split(" ")[0] if prefix else None)
+    for m in (fw_static, fw_pat):
+        for key, v in m.items():
+            if v is not None and len(v) > 2000:
+                m[key] = None
 
-            req_mask: dict[str, int] = {q: 0 for q, _ in jv_nreq}
-            static_rows = []
-            for q, fc, t, req in jv_rows:
-                b = 1 << _next_bit(q)
-                if req:
-                    req_mask[q] |= b
-                static_rows.append((qidx[q], fc, t, b if req else 0,
-                                    0 if req else b))
-            prow_bits = []
-            for q, fc, n, pre, lk, suf, req in jv_prows:
-                b = 1 << _next_bit(q)
-                if req:
-                    req_mask[q] |= b
-                prow_bits.append(b)
-            if static_rows:
-                jpdf = pd.DataFrame(
-                    static_rows,
-                    columns=["qidx", "fcol", "term", "rbit", "fbit"],
-                )
-                jpdf["qidx"] = jpdf["qidx"].astype("int32")
-                jpdf["fcol"] = jpdf["fcol"].astype("int16")
-                jpdf["rbit"] = jpdf["rbit"].astype("int64")
-                jpdf["fbit"] = jpdf["fbit"].astype("int64")
-                need_sdf = spark.createDataFrame(
-                    jpdf,
-                    "qidx int, fcol smallint, term string, "
-                    "rbit long, fbit long",
-                )
-            else:
-                need_sdf = None
-            mpdf = pd.DataFrame(
-                [(qidx[q], req_mask[q]) for q, _ in jv_nreq],
-                columns=["qidx", "req_mask"],
+    def _gram_union(cols, fw):
+        streams = [
+            _ngram_stream(
+                batch, tc, col_idx[tc] + _GRAM_FCOL_OFF * (n - 1), n,
+                first_words=fw.get((tc, n)),
             )
-            mpdf["qidx"] = mpdf["qidx"].astype("int32")
-            mpdf["req_mask"] = mpdf["req_mask"].astype("int64")
-            qmask_sdf = spark.createDataFrame(mpdf, "qidx int, req_mask long")
-            qmap_pdf = pd.DataFrame(
-                sorted((i, q) for q, i in qidx.items()), columns=["qidx", "query_id"]
-            )
-            qmap_pdf["qidx"] = qmap_pdf["qidx"].astype("int32")
-            qmap_sdf = spark.createDataFrame(qmap_pdf, "qidx int, query_id string")
-            if jv_prows:
-                # two driver tables: DISTINCT patterns (expanded against
-                # the dictionary once each, however many queries share
-                # them) and the per-(query, atom-bit) fan-out joined after
-                pats = sorted(
-                    {(fc, n, pre, lk, suf) for _, fc, n, pre, lk, suf, _ in jv_prows}
-                )
-                pid_of = {p: i for i, p in enumerate(pats)}
-                ppdf = pd.DataFrame(
-                    [(i, fc, n, pre, lk, suf) for (fc, n, pre, lk, suf), i in sorted(pid_of.items(), key=lambda kv: kv[1])],
-                    columns=["pid", "fcol", "n", "prefix", "like_pat", "suffix"],
-                )
-                ppdf["pid"] = ppdf["pid"].astype("int32")
-                ppdf["fcol"] = ppdf["fcol"].astype("int8")
-                ppdf["n"] = ppdf["n"].astype("int32")
-                pat_sdf = spark.createDataFrame(
-                    ppdf,
-                    "pid int, fcol tinyint, n int, prefix string, "
-                    "like_pat string, suffix string",
-                )
-                pqdf = pd.DataFrame(
-                    [
-                        (
-                            pid_of[(fc, n, pre, lk, suf)],
-                            qidx[q],
-                            b if req else 0,
-                            0 if req else b,
-                        )
-                        for b, (q, fc, n, pre, lk, suf, req) in zip(
-                            prow_bits, jv_prows
-                        )
-                    ],
-                    columns=["pid", "qidx", "rbit", "fbit"],
-                )
-                pqdf["pid"] = pqdf["pid"].astype("int32")
-                pqdf["qidx"] = pqdf["qidx"].astype("int32")
-                pqdf["rbit"] = pqdf["rbit"].astype("int64")
-                pqdf["fbit"] = pqdf["fbit"].astype("int64")
-                patq_sdf = spark.createDataFrame(
-                    pqdf, "pid int, qidx int, rbit long, fbit long"
-                )
-            else:
-                pat_sdf = patq_sdf = None
-            art["jv_tables"] = (need_sdf, qmask_sdf, qmap_sdf, pat_sdf, patq_sdf)
+            for tc, n in sorted(cols)
+        ]
+        gs = streams[0]
+        for p in streams[1:]:
+            gs = gs.unionByName(p)
+        return gs
 
-        # leading-word prune sets per (tc, n), SEPARATE for the static and
-        # the pattern-expansion gram joins (each stream only feeds its own
-        # join): a generated gram can only join if its first token is one
-        # of that join's need atoms' first words. A wildcard-phrase whose
-        # pattern IS the first position disables the prune for its stream
-        # (None = unfiltered), as does an oversized word set.
-        fw_static: dict[tuple[str, int], set | None] = {}
-        fw_pat: dict[tuple[str, int], set | None] = {}
-
-        def _fw_add(m, tc, n, word):
-            if m.get((tc, n), ()) is None:
-                return
-            if word is None:
-                m[(tc, n)] = None
-            else:
-                m.setdefault((tc, n), set()).add(word)
-
-        for _q, fce, term, _req in jv_rows:
-            if fce >= _GRAM_FCOL_OFF:
-                gn = fce // _GRAM_FCOL_OFF + 1
-                _fw_add(fw_static, used_tok_cols[fce % _GRAM_FCOL_OFF], gn,
-                        term.split(" ")[0])
-        for _q, fc, gn, prefix, _lk, _suf, _req in jv_prows:
-            if gn > 1:
-                _fw_add(fw_pat, used_tok_cols[fc], gn,
-                        prefix.split(" ")[0] if prefix else None)
-        for m in (fw_static, fw_pat):
-            for key, v in m.items():
-                if v is not None and len(v) > 2000:
-                    m[key] = None
-
-        def _gram_union(cols, fw):
-            streams = [
-                _ngram_stream(
-                    batch, tc, col_idx[tc] + _GRAM_FCOL_OFF * (n - 1), n,
-                    first_words=fw.get((tc, n)),
-                )
-                for tc, n in sorted(cols)
-            ]
-            gs = streams[0]
-            for p in streams[1:]:
-                gs = gs.unionByName(p)
-            return gs
-
-        bt_sm = batch_terms.withColumn("fcol", F.col("fcol").cast("smallint"))
-        hit_parts: list[DataFrame] = []
-        if need_sdf is not None:
-            hit_parts.append(
-                bt_sm.join(F.broadcast(need_sdf), ["fcol", "term"]).select(
-                    "doc_id", "qidx", "rbit", "fbit"
-                )
-            )
-            if jv_gram_cols:
-                # static n-gram streams: contiguous n-grams of each
-                # referenced (column, n) under the offset fcol space.
-                # Repeated grams in one doc OR into the same bit — no
-                # dedup exchange.
-                bhits = _gram_union(jv_gram_cols, fw_static).join(
-                    F.broadcast(need_sdf), ["fcol", "term"]
-                )
-                hit_parts.append(bhits.select("doc_id", "qidx", "rbit", "fbit"))
-        if pat_sdf is not None:
-            # wildcard need expansion: each DISTINCT pattern × the batch
-            # term dictionary (the reference's automaton-over-index-terms,
-            # WildcardTermsProducer.getTerms:26-53) → concrete (fcol_eff,
-            # gram) need rows, fanned out per (query, atom-bit). A doc
-            # satisfies the atom if ANY expansion hits — every expansion
-            # carries the SAME bit, so bit_or IS the any-of semantics.
-            expanded = (
-                term_dict.join(F.broadcast(pat_sdf), "fcol")
-                .filter(F.expr("term LIKE like_pat"))
-                .select(
-                    "pid",
-                    (
-                        F.col("fcol").cast("int")
-                        + F.lit(_GRAM_FCOL_OFF) * (F.col("n") - 1)
-                    ).cast("smallint").alias("fcol"),
-                    F.concat("prefix", "term", "suffix").alias("term"),
-                )
-            )
-            need_pat = expanded.join(F.broadcast(patq_sdf), "pid").select(
-                "fcol", "term", "qidx", "rbit", "fbit"
-            )
-            pat_gram_cols = {
-                (used_tok_cols[fc], n)
-                for _, fc, n, _, _, _, _ in jv_prows
-                if n > 1
-            }
-            pstreams = [bt_sm] if any(
-                n == 1 for _, _, n, _, _, _, _ in jv_prows
-            ) else []
-            if pat_gram_cols:
-                pstreams.append(_gram_union(pat_gram_cols, fw_pat))
-            pstream = pstreams[0]
-            for p in pstreams[1:]:
-                pstream = pstream.unionByName(p)
-            whits = pstream.join(F.broadcast(need_pat), ["fcol", "term"]).select(
+    bt_sm = batch_terms.withColumn("fcol", F.col("fcol").cast("smallint"))
+    hit_parts: list[DataFrame] = []
+    if need_sdf is not None:
+        hit_parts.append(
+            bt_sm.join(F.broadcast(need_sdf), ["fcol", "term"]).select(
                 "doc_id", "qidx", "rbit", "fbit"
             )
-            hit_parts.append(whits)
-        jv_hits = hit_parts[0]
-        for p in hit_parts[1:]:
-            jv_hits = jv_hits.unionByName(p)
-        jv_agg = jv_hits.groupBy("doc_id", "qidx").agg(
-            F.expr("bit_or(rbit)").alias("req_bits"),
-            F.expr("bit_or(fbit)").alias("forbid_bits"),
         )
-        parts.append(
-            jv_agg.join(F.broadcast(qmask_sdf), "qidx")
-            .filter(
-                (F.col("req_bits") == F.col("req_mask"))
-                & (F.col("forbid_bits") == 0)
+        if plan.jv_gram_cols:
+            # static n-gram streams: contiguous n-grams of each
+            # referenced (column, n) under the offset fcol space.
+            # Repeated grams in one doc OR into the same bit — no
+            # dedup exchange.
+            bhits = _gram_union(plan.jv_gram_cols, fw_static).join(
+                F.broadcast(need_sdf), ["fcol", "term"]
             )
-            .join(F.broadcast(qmap_sdf), "qidx")
-            .select("doc_id", "query_id")
+            hit_parts.append(bhits.select("doc_id", "qidx", "rbit", "fbit"))
+    if pat_sdf is not None:
+        # wildcard need expansion: each DISTINCT pattern × the batch
+        # term dictionary (the reference's automaton-over-index-terms,
+        # WildcardTermsProducer.getTerms:26-53) → concrete (fcol_eff,
+        # gram) need rows, fanned out per (query, atom-bit). A doc
+        # satisfies the atom if ANY expansion hits — every expansion
+        # carries the SAME bit, so bit_or IS the any-of semantics.
+        expanded = (
+            term_dict.join(F.broadcast(pat_sdf), "fcol")
+            .filter(F.expr("term LIKE like_pat"))
+            .select(
+                "pid",
+                (
+                    F.col("fcol").cast("int")
+                    + F.lit(_GRAM_FCOL_OFF) * (F.col("n") - 1)
+                ).cast("smallint").alias("fcol"),
+                F.concat("prefix", "term", "suffix").alias("term"),
+            )
         )
+        need_pat = expanded.join(F.broadcast(patq_sdf), "pid").select(
+            "fcol", "term", "qidx", "rbit", "fbit"
+        )
+        pat_gram_cols = {
+            (used_tok_cols[fc], n)
+            for _, fc, n, _, _, _, _ in jv_prows
+            if n > 1
+        }
+        pstreams = [bt_sm] if any(
+            n == 1 for _, _, n, _, _, _, _ in jv_prows
+        ) else []
+        if pat_gram_cols:
+            pstreams.append(_gram_union(pat_gram_cols, fw_pat))
+        pstream = pstreams[0]
+        for p in pstreams[1:]:
+            pstream = pstream.unionByName(p)
+        whits = pstream.join(F.broadcast(need_pat), ["fcol", "term"]).select(
+            "doc_id", "qidx", "rbit", "fbit"
+        )
+        hit_parts.append(whits)
+    jv_hits = hit_parts[0]
+    for p in hit_parts[1:]:
+        jv_hits = jv_hits.unionByName(p)
+    jv_agg = jv_hits.groupBy("doc_id", "qidx").agg(
+        F.expr("bit_or(rbit)").alias("req_bits"),
+        F.expr("bit_or(fbit)").alias("forbid_bits"),
+    )
+    return (
+        jv_agg.join(F.broadcast(qmask_sdf), "qidx")
+        .filter(
+            (F.col("req_bits") == F.col("req_mask"))
+            & (F.col("forbid_bits") == 0)
+        )
+        .join(F.broadcast(qmap_sdf), "qidx")
+        .select("doc_id", "query_id")
+    )
 
+
+def percolate(
+    spark: SparkSession,
+    docs: DataFrame,
+    registry: CompiledRegistry,
+    content_col: str = "content",
+    id_col: str = "doc_id",
+    tokenizer=None,
+    fields: dict | str | None = None,
+) -> PercolateResult:
+    """Match every registered query against every doc of the batch.
+
+    ``fields=None`` — single-field mode: one analyzed ``content_col`` serves
+    every query field name (the flat-corpus default).
+    ``fields={qfield: src_col | (src_col, analyzer)}`` — multi-field mode
+    with per-field analyzers (A1); ``analyzer`` ∈ {"ws", "code"} or a
+    Column-function. Queries on unconfigured fields never match (treated as
+    empty fields), isolated per query.
+    ``fields="auto"`` — infer the map from query fields ∩ batch columns
+    with dtype-derived analyzers (``auto_fields``; the reference's
+    documentMapperWithAutoCreate, BatchPercolatorService.java:314).
+
+    ``EBP_SIMPLE_JOIN_VERIFY`` (``auto`` | ``force`` | ``off``) selects how
+    the join-verify lane is chosen; ``off`` and ``force`` are each other's
+    differential oracle in the tests.
+    """
+    if fields == "auto":
+        fields = auto_fields(registry, docs)
+    view = _batch_view(docs, registry, content_col, id_col, tokenizer, fields)
+    cached_frames: list[DataFrame] = []
+
+    # join-verify structures are needed BEFORE batch_terms: their probe
+    # words and expansion patterns are part of the pre-explode prune
+    # closure (cached per registry+layout, so no repeated cost)
+    jv_mode = os.environ.get("EBP_SIMPLE_JOIN_VERIFY", "auto")
+    jv = (
+        _jv_structs(
+            registry, view.resolve, view.col_idx, view.nested_cols,
+            view.scalar_cols, view.used_tok_cols,
+        )
+        if jv_mode != "off"
+        else ({}, set(), set())
+    )
+    bt_prune = (
+        _bt_prune_sets(registry, view.resolve, view.col_idx, jv[0], jv[1])
+        if _BT_PRUNE
+        else None
+    )
+    batch_terms = _batch_terms(spark, view, bt_prune, cached_frames)
+    plan = _batch_plan(spark, registry, view, jv_mode, jv, bt_prune, batch_terms)
+    # the distinct (fcol, term) batch dictionary feeds BOTH wildcard
+    # expansions (gate patterns of non-jv queries AND the jv lane's
+    # "w"/"wg" need expansion) — persisted when both lanes consume it so
+    # the dedup shuffle isn't paid twice
+    term_dict = None
+    if plan.patterns_sdf is not None or plan.jv_prows:
+        term_dict = batch_terms.select("fcol", "term").dropDuplicates(
+            ["fcol", "term"]
+        )
+        if plan.patterns_sdf is not None and plan.jv_prows:
+            term_dict = term_dict.persist()
+            cached_frames.append(term_dict)
+    candidates = _candidates(spark, view, plan, batch_terms, term_dict)
+
+    if not plan.needs_verify:
+        parts = [candidates]
+    elif plan.exact_sdf is None:
+        parts = []
+    else:
+        parts = [
+            candidates.join(F.broadcast(plan.exact_sdf), "query_id", "left_semi")
+        ]
+    if plan.vid_sdf is not None:
+        parts.append(_python_verify(spark, registry, view, plan, candidates))
+    if plan.jv_tables is not None:
+        parts.append(_join_verify(view, plan, batch_terms, term_dict))
     if not parts:
-        parts = [spark.createDataFrame([], f"doc_id {id_t}, query_id string")]
+        parts = [spark.createDataFrame([], f"doc_id {view.id_t}, query_id string")]
     matches = parts[0]
     for p in parts[1:]:
         matches = matches.unionByName(p)
-
-    _prof('verify plan assembly')
     return PercolateResult(
         matches=matches,
-        docs=batch,
-        resolve=resolve,
-        content_of=content_of,
-        analyzer_names=analyzer_names,
+        docs=view.batch,
+        resolve=view.resolve,
+        content_of=view.content_of,
+        analyzer_names=view.analyzer_names,
         cached=cached_frames,
     )
-
-
-def _is_positional(plan) -> bool:
-    """True if exact evaluation needs token positions beyond adjacency-
-    expressible Catalyst (spans, sloppy phrases) — anywhere in the tree."""
-    from ..plans.query_plan import (
-        Bool,
-        Nested,
-        Phrase,
-        SpanNear,
-        SpanNot,
-        SpanOr,
-    )
-
-    if isinstance(plan, (SpanNear, SpanOr, SpanNot)):
-        return True
-    if isinstance(plan, Nested):
-        # a positional inner query cannot run inside the Catalyst exists
-        # lambda (pandas UDFs are not allowed in higher-order functions)
-        return _is_positional(plan.query)
-    if isinstance(plan, Phrase):
-        return plan.slop > 0
-    if isinstance(plan, Bool):
-        return any(
-            _is_positional(c)
-            for g in (plan.must, plan.should, plan.must_not, plan.filter)
-            for c in g
-        )
-    return False

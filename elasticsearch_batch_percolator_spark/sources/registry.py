@@ -76,6 +76,10 @@ _LOG = logging.getLogger(__name__)
 # registry A's plans. Each freshly built broadcast takes the next token.
 _BC_SEQ = count(1)
 
+# from_df(distributed="auto") compiles on executors only from this many
+# rows up
+_DIST_COMPILE_MIN = 20000
+
 
 class CompiledQuery:
     """One registered query. Driver-registered queries hold live plan trees;
@@ -408,8 +412,8 @@ class CompiledRegistry:
         the verify broadcast ships, whole-stage codegen compiles. After a
         representative-sample warmup the first production batch runs at
         steady-state (warm) speed. Stats drift only affects gate
-        selectivity, never results; set EBP_STATS_REFRESH=N to re-probe
-        every N batches."""
+        selectivity, never results: the plan is reused until the registry
+        mutates."""
         from ..operators.percolate import _jv_structs, percolate
 
         self.broadcast_verify_plans(spark)
@@ -490,12 +494,11 @@ class CompiledRegistry:
         (mapInPandas/Arrow); the driver only unpickles and assembles the
         dict — equality with driver compilation is test-asserted. "auto"
         goes distributed only for genuinely large inputs: partitioned AND
-        ≥ EBP_DIST_COMPILE_MIN rows (default 20,000 — below that the
+        ≥ _DIST_COMPILE_MIN rows (20,000 — below that the
         serial compile is ~1s and avoids both the executor round-trip and
         any dependence on the package being shipped to executors, e.g. a
         recovery load on a session launched without --py-files).
         """
-        import os
         import pickle
 
         import pandas as _pd
@@ -505,10 +508,10 @@ class CompiledRegistry:
             # scan, not a full count — a filtered parquet/Iceberg source
             # would otherwise pay one whole-table count action before any
             # compile work
-            min_rows = int(os.environ.get("EBP_DIST_COMPILE_MIN", "20000"))
             distributed = (
                 queries_df.rdd.getNumPartitions() > 1
-                and queries_df.limit(min_rows).count() >= min_rows
+                and queries_df.limit(_DIST_COMPILE_MIN).count()
+                >= _DIST_COMPILE_MIN
             )
 
         if not distributed:
@@ -563,7 +566,7 @@ class CompiledRegistry:
             # distributed compile needs the package importable on
             # executors (spark-submit --py-files, the shipping config).
             # A recovery load on a session launched WITHOUT it (auto
-            # flips distributed at >= EBP_DIST_COMPILE_MIN rows) must
+            # flips distributed at >= _DIST_COMPILE_MIN rows) must
             # still come back: fall back to the driver-side compile the
             # pre-distributed path always used, with the same
             # skip_invalid semantics.
@@ -799,14 +802,6 @@ class CompiledRegistry:
             if not q.match_none and (q.groups is None or len(q.groups) == 0)
         ]
 
-    def verify_plans(self) -> dict[str, Plan]:
-        """query_id -> exact plan, for queries needing phase-2."""
-        return {
-            q.query_id: q.plan
-            for q in self.queries.values()
-            if q.needs_verify and not q.match_none
-        }
-
     def gate_verify_ids(self) -> list[str]:
         """Ids of queries needing phase-2 under GATED phase 1 (one group
         per query): every query whose match isn't implied by its gate group
@@ -822,11 +817,6 @@ class CompiledRegistry:
                 or (q.groups is not None and len(q.groups) > 1)
             )
         ]
-
-    def gate_verify_plans(self) -> dict[str, Plan]:
-        """Phase-2 plans for ``gate_verify_ids`` — MATERIALIZES blob-backed
-        plans; planner paths that only need ids should use the id form."""
-        return {qid: self.queries[qid].plan for qid in self.gate_verify_ids()}
 
     def gates(
         self, term_df: dict[tuple[str, str], int] | None = None

@@ -636,16 +636,10 @@ def test_percolate_dsl_compat_golden(spark):
     }
 
 
-def test_when_chain_lane_ids_exists_range(spark, monkeypatch):
-    """Regression (round-5 advice): the env-gated Catalyst when-chain
-    verify lane must agree with the default python-evaluator lane on
-    scalar-column atoms. Previously (a) Ids silently built lit(False)
-    when value_fields lacked _id — positive ids matches vanished and
-    must_not ids became vacuously true; (b) Exists on a numeric field
-    built size(<double>), an ANALYSIS-time failure the per-query
-    fallback could not isolate; (c) a NULL doc id made the whole bool
-    predicate NULL (row dropped) where eval_py treats None ids as
-    non-matching in both polarities."""
+def test_ids_exists_range_scalar_columns(spark):
+    """Scalar-column atoms in percolation: positive and must_not Ids
+    against the ``_id`` pseudo-field, Exists and Range on a numeric field
+    (null and NaN values included), and a NULL doc id."""
     queries = {
         "i1": {"ids": {"values": ["a-1", "b-2"]}},
         "i2": {"bool": {"must": [{"term": {"body": "fox"}}],
@@ -665,14 +659,10 @@ def test_when_chain_lane_ids_exists_range(spark, monkeypatch):
         res = percolate(spark, docs_df, reg, id_col="doc_id", fields=fields)
         return {(r["doc_id"], r["query_id"]) for r in res.matches.collect()}
 
-    got_default = run()
-    monkeypatch.setenv("EBP_MAX_WHEN_BRANCHES", "8")
-    got_columnar = run()
-    assert got_columnar == got_default
     # NULL-id docs are excluded from percolation entirely — doc_id is the
     # equi-join key through phase 1/2 (null keys never join), and ES
-    # itself rejects a null _id at index time — identically in BOTH lanes
-    assert got_default == {
+    # itself rejects a null _id at index time
+    assert run() == {
         ("a-1", "i1"), ("b-2", "i1"),
         ("b-2", "i2"),
         ("a-1", "en"),

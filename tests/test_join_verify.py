@@ -11,7 +11,11 @@ import pytest
 
 from elasticsearch_batch_percolator_spark.corpus import synth_corpus
 from elasticsearch_batch_percolator_spark.corpus import VOCAB
-from elasticsearch_batch_percolator_spark.operators.percolate import percolate
+from elasticsearch_batch_percolator_spark.operators import percolate as percolate_mod
+from elasticsearch_batch_percolator_spark.operators.percolate import (
+    BatchPlan,
+    percolate,
+)
 from elasticsearch_batch_percolator_spark.sources.registry import CompiledRegistry
 
 
@@ -149,7 +153,7 @@ def test_join_verify_auto_guard_rejects_hot_ungated_volume(spark, monkeypatch):
     """A tiny batch with a huge selective registry (the reference's 225k
     shape in miniature) must NOT pick the ungated join: jv_est (sum of df
     over all query terms) far exceeds batch_terms + gated candidates."""
-    monkeypatch.setenv("EBP_JV_MAX_RATIO", "0.0")  # force-reject in auto
+    monkeypatch.setattr(percolate_mod, "_JV_MAX_RATIO", 0.0)  # force-reject in auto
     reg = _registry(7, 40)
     batch = synth_corpus(spark, 500, partitions=2).persist()
     batch.count()
@@ -174,12 +178,12 @@ def test_batch_plan_cache_reuse_across_batches(spark):
         res1 = percolate(spark, b1, reg)
         got1 = {(int(r["doc_id"]), r["query_id"]) for r in res1.matches.collect()}
         res1.unpersist()
-        assert getattr(reg, "_batch_plan_cache", None) is not None
-        art_before = reg._batch_plan_cache["art"]
+        plan_before = reg._batch_plan_cache[1]
+        assert isinstance(plan_before, BatchPlan)
         res2 = percolate(spark, b2, reg)
         got2 = {(int(r["doc_id"]), r["query_id"]) for r in res2.matches.collect()}
         res2.unpersist()
-        assert reg._batch_plan_cache["art"] is art_before  # cache HIT
+        assert reg._batch_plan_cache[1] is plan_before  # cache HIT
 
         fresh = _registry(31, 40)  # identical queries, cold cache
         res3 = percolate(spark, b2, fresh)
@@ -194,19 +198,19 @@ def test_batch_plan_cache_reuse_across_batches(spark):
 def test_warmup_with_sample_prebuilds_plan_cache(spark):
     """warmup(sample=...) runs one percolation over the sample, leaving
     the batch-plan cache hot: the first real batch must HIT it (identical
-    art object) and produce the same matches as a cold registry."""
+    BatchPlan object) and produce the same matches as a cold registry."""
     reg = _registry(11, 30)
     sample = synth_corpus(spark, 200, partitions=2)
     reg.warmup(spark, sample=sample)
-    assert getattr(reg, "_batch_plan_cache", None) is not None
-    art = reg._batch_plan_cache["art"]
+    plan = reg._batch_plan_cache[1]
+    assert isinstance(plan, BatchPlan)
     batch = synth_corpus(spark, 800, partitions=2).persist()
     batch.count()
     try:
         res = percolate(spark, batch, reg)
         got = {(int(r["doc_id"]), r["query_id"]) for r in res.matches.collect()}
         res.unpersist()
-        assert reg._batch_plan_cache["art"] is art  # warm plan reused
+        assert reg._batch_plan_cache[1] is plan  # warm plan reused
         cold = _registry(11, 30)
         res2 = percolate(spark, batch, cold)
         got2 = {(int(r["doc_id"]), r["query_id"]) for r in res2.matches.collect()}
@@ -214,28 +218,6 @@ def test_warmup_with_sample_prebuilds_plan_cache(spark):
     finally:
         batch.unpersist()
     assert got == got2 and got
-
-
-def test_batch_plan_cache_refresh_interval(spark, monkeypatch):
-    """EBP_STATS_REFRESH=1 re-probes every batch: the second percolate must
-    REBUILD the plan artifacts (fresh art object), results unchanged."""
-    monkeypatch.setenv("EBP_STATS_REFRESH", "1")
-    reg = _registry(13, 20)
-    batch = synth_corpus(spark, 400, partitions=2).persist()
-    batch.count()
-    try:
-        res1 = percolate(spark, batch, reg)
-        got1 = {(int(r["doc_id"]), r["query_id"]) for r in res1.matches.collect()}
-        res1.unpersist()
-        art1 = reg._batch_plan_cache["art"]
-        res2 = percolate(spark, batch, reg)
-        got2 = {(int(r["doc_id"]), r["query_id"]) for r in res2.matches.collect()}
-        res2.unpersist()
-        art2 = reg._batch_plan_cache["art"]
-    finally:
-        batch.unpersist()
-    assert art2 is not art1  # rebuilt
-    assert got1 == got2 and got1
 
 
 def test_bt_prune_cache_not_poisoned_by_off_mode(spark):
@@ -293,7 +275,7 @@ def test_space_bearing_term_value_rejected_and_guarded(spark):
         (),
     )
     reg.jv_verify_atoms = lambda: atoms
-    specs, _, _, _ = _jv_structs(
+    specs, _, _ = _jv_structs(
         reg, {"text": "text"}, {"text": 70}, set(), set(), ["text"]
     )
     assert "sp" not in specs  # routed to the python lane
@@ -302,13 +284,12 @@ def test_space_bearing_term_value_rejected_and_guarded(spark):
 
 def test_est_q_equals_atom_df_reference():
     """The flat inlined jv cost-model pass (_est_q) must equal the per-atom
-    reference (_atom_df) over every atom kind: token, n-gram (with and
-    without an exact probe entry), wildcard, wildcard-gram — on randomized
-    stats dicts including absent keys."""
+    reference (_atom_df) over every atom kind: token, n-gram (min-unigram
+    bound), wildcard, wildcard-gram — on randomized stats dicts including
+    absent keys."""
     import random
 
     from elasticsearch_batch_percolator_spark.operators.percolate import (
-        _GRAM_FCOL_OFF,
         _atom_df,
         _est_q,
         _jv_structs,
@@ -336,23 +317,18 @@ def test_est_q_equals_atom_df_reference():
                 "producers": [{"term": {"content": rng.choice(vocab)}},
                               {"wildcard": {"content": rng.choice(vocab)[:2] + "*"}}]}}))
     reg = CompiledRegistry.from_rows(rows)
-    specs, _, gram_probe, _ = _jv_structs(
+    specs, _, _ = _jv_structs(
         reg, {"content": "tokens"}, {"tokens": 0}, set(), set(), ["tokens"]
     )
     assert specs, "no jv-eligible queries — test is vacuous"
     kinds = {k for s in specs.values() for _, k, _ in s[2]}
     assert {"t"} < kinds, kinds  # several atom kinds exercised
 
-    # randomized stats: some keys present, some absent (df defaults to 0);
-    # HALF the gram atoms get an exact probed entry, half fall back to the
-    # min-unigram bound
+    # randomized stats: some keys present, some absent (df defaults to 0)
     col_df = {}
     for w in vocab:
         if rng.random() < 0.7:
             col_df[(0, w)] = rng.randint(0, 500)
-    for j, (fc, n, v) in enumerate(sorted(gram_probe)):
-        if j % 2 == 0:
-            col_df[(fc + _GRAM_FCOL_OFF * (n - 1), v)] = rng.randint(0, 50)
     jv_pat_df = {}
     for s in specs.values():
         for _qid, fc, n, _pre, like, _suf, _req in s[5]:

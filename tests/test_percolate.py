@@ -433,12 +433,16 @@ def test_bt_prune_equivalence(spark, monkeypatch):
         "doc_id long, content string",
     )
 
-    monkeypatch.setenv("EBP_BT_PRUNE", "1")
+    from elasticsearch_batch_percolator_spark.operators import (
+        percolate as percolate_mod,
+    )
+
+    monkeypatch.setattr(percolate_mod, "_BT_PRUNE", True)
     pruned = {
         (int(r["doc_id"]), r["query_id"])
         for r in percolate(spark, docs, reg_a).matches.collect()
     }
-    monkeypatch.setenv("EBP_BT_PRUNE", "0")
+    monkeypatch.setattr(percolate_mod, "_BT_PRUNE", False)
     full = {
         (int(r["doc_id"]), r["query_id"])
         for r in percolate(spark, docs, reg_b).matches.collect()
@@ -449,8 +453,8 @@ def test_bt_prune_equivalence(spark, monkeypatch):
     assert getattr(reg_a, "_bt_prune_cache")[1] is not None
 
     # threshold exceeded -> prune disabled, results still identical
-    monkeypatch.setenv("EBP_BT_PRUNE", "1")
-    monkeypatch.setenv("EBP_BT_PRUNE_MAX_TERMS", "3")
+    monkeypatch.setattr(percolate_mod, "_BT_PRUNE", True)
+    monkeypatch.setattr(percolate_mod, "_BT_PRUNE_MAX_TERMS", 3)
     reg_c = CompiledRegistry.from_rows(queries)
     capped = {
         (int(r["doc_id"]), r["query_id"])
