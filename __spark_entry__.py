@@ -479,8 +479,7 @@ def _q_wildcard_phrase_match_lanes(spark: SparkSession, sf_dir: str) -> DataFram
 
 def _q_bm25_topk_boosted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-5: per-clause boost as a multiplicative BM25 term weight on
-    the index search path (weight = boost x idf, scaling the WAND block
-    upper bounds so pruning stays exact) — boost chosen to RE-RANK
+    the index search path (weight = boost x idf) — boost chosen to RE-RANK
     relative to the unboosted bm25_topk entry."""
     idx = _ensure_index(spark, sf_dir)
     return topk_from_index(

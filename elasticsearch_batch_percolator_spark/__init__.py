@@ -6,7 +6,7 @@ matches a large registered-query set against incoming document batches,
 see reference README.md:1-12) as idiomatic PySpark DataFrame programs:
 
 - tokenize -> posting lists -> compressed block segments (index build)
-- BM25 top-k query engine (join-based scorer + block-max WAND scorer)
+- BM25 top-k query engine (join-based scorer + one per-segment index scorer)
 - two-phase percolation (limiting-filter approximation + exact verify),
   mirroring LimitingFilterFactory.java:47-253
 - Structured Streaming percolation over document micro-batches

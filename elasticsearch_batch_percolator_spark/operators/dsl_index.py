@@ -1,18 +1,20 @@
-"""Full-DSL BM25 top-k over the persisted compressed index.
+"""The index query engine: BM25 top-k and exact matching over the persisted
+compressed index.
 
-``topk_from_index`` (operators/wand.py) answers TERM-LIST queries;
-``phrase_docs_from_index`` answers one phrase. This module closes the
-north-rule contract — "answer top-k BM25 queries with posting-list
-intersection" for ANY registrable DSL query — by compiling bool / phrase /
-span / wildcard / fuzzy / regexp trees into an index-side
-retrieve → verify → score pass:
+All three index operators run through this module's one per-segment pass:
+``dsl_topk_from_index`` (any registrable DSL query, here),
+``topk_from_index`` (term lists, operators/wand.py) and
+``phrase_docs_from_index`` (one phrase, operators/phrase_index.py). Each
+front end compiles its queries to per-query specs (``_Spec``); the engine
+answers every spec the same way, the reference's two-phase split
+(LimitingFilterFactory, README.md:127-133):
 
-retrieve  the query's limiting filter (plans/limiting.py — the reference's
-          LimitingFilterFactory approximation, exactly the two-phase split
-          README.md:127-133 describes) flattens to conjunctive term-groups;
-          candidates are docs satisfying >=1 term of EVERY group, computed
-          per segment from the decoded posting lists (numpy set ops, no
-          doc store touched).
+retrieve  the query's limiting filter (plans/limiting.py) flattens to
+          conjunctive term-groups; candidates are docs satisfying >=1 term
+          of EVERY group, computed per segment from the decoded posting
+          lists (numpy set ops, no doc store touched). A query with one
+          group, no verify plan and exactly that group's terms to score
+          skips this step: its candidates are the union the scorer builds.
 verify    candidates of inexact plans re-evaluate EXACTLY against a
           pseudo-document reconstructed from the query vocabulary's
           positional postings: every literal the (expanded) plan can
@@ -20,11 +22,11 @@ verify    candidates of inexact plans re-evaluate EXACTLY against a
           indexed positions reproduces precisely the token view the
           evaluator needs — phrases, slop, spans, msm and must_not all run
           through the same plans/eval_py evaluator the percolator uses.
-          Positions decode only when the plan is positional.
-score     BM25 with the per-term weight map (qtf x path boost x idf,
-          plans/query_plan.positive_term_weights) over the candidates'
-          precomputed norms — identical weighting to the join scorer and
-          topk_from_index, so results are rank-identical to the in-memory
+          Positions decode only for the terms a positional plan reads.
+score     BM25 over the precomputed norms with weight = multiplier x idf
+          per scoring occurrence (qtf x path boost for DSL plans,
+          plans/query_plan.positive_term_weights) — identical weighting to
+          the join scorer, so results are rank-identical to the in-memory
           engine on the same corpus.
 
 Multi-term atoms (wildcard / fuzzy / regexp) expand against the persisted
@@ -51,24 +53,24 @@ by the batch surfaces (operators/search.py, operators/percolate.py).
 
 from __future__ import annotations
 
-import heapq
+import functools
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..index.build import read_manifest, read_postings, read_term_stats
-from ..index.codec import decode_block, decode_positions
-from ..plans.compiler import compile_query
-from ..plans.eval_py import eval_plan
+from ..index.build import IndexManifest, read_manifest, read_postings, read_term_stats
+from ..index.codec import decode_positions, varint_decode
+from ..plans.compiler import DEFAULT_FIELD, compile_query
+from ..plans.eval_py import eval_plan, fuzzy_pred, regexp_regex, wildcard_regex
 from ..plans.limiting import limiting_filter
 from ..plans.query_plan import (
     Bool,
     Exists,
     Fuzzy,
     Ids,
-    MatchAll,
     MatchNone,
     Nested,
     Phrase,
@@ -83,9 +85,11 @@ from ..plans.query_plan import (
     Term,
     Wildcard,
     WildcardPhrase,
+    fields_of,
     positive_term_weights,
 )
-from .wand import _idf, _round_half_up
+from ..sources.registry import _flatten_groups, _needs_verify
+from .match import wildcard_to_like
 
 
 class UnsupportedIndexQuery(ValueError):
@@ -101,10 +105,269 @@ _HOLE = "\x00"
 _NEVER = "\x00never"  # literal for an empty span-context expansion
 
 
-def _wildcard_like(pattern: str) -> str:
-    from .match import wildcard_to_like
+def _idf(n_docs: int, df: int) -> float:
+    return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
 
-    return wildcard_to_like(pattern)
+
+def _round_half_up(x, round_to: int | None):
+    """HALF_UP rounding for non-negative scores (array or scalar) —
+    bit-identical to Spark's F.round / DuckDB round, unlike np.round
+    (banker's)."""
+    if round_to is None:
+        return x
+    m = 10.0**round_to
+    return np.floor(x * m + 0.5) / m
+
+
+def _manifest(index_dir: str) -> IndexManifest:
+    manifest = read_manifest(index_dir)
+    if manifest is None:
+        raise FileNotFoundError(f"no index at {index_dir}: manifest.json is missing")
+    return manifest
+
+
+def _decode_term(blocks, positions: bool = False):
+    """All blocks of one term → (doc_ids, norms, positions), ONE varint pass
+    per column.
+
+    Block payloads concatenate into a single stream (each block's first doc
+    delta is absolute), so one vectorized varint_decode + a per-block
+    prefix subtraction replaces len(blocks) tiny decode_block calls — the
+    same fixed-cost amortization as the build-side whole-segment encoder.
+    tf_bytes and pos_bytes decode only when ``positions`` is asked for;
+    then ``positions`` is ``(flat, offsets)`` and doc i's positions are
+    ``flat[offsets[i]:offsets[i + 1]]``, else it is None."""
+
+    def column(key: str) -> bytes:
+        return b"".join(bytes(b[key]) for b in blocks)
+
+    ids = np.cumsum(varint_decode(column("doc_bytes")).astype(np.int64))
+    if len(blocks) > 1:
+        ns = np.fromiter((b["n"] for b in blocks), dtype=np.int64, count=len(blocks))
+        starts = np.cumsum(ns)[:-1]
+        # undo the cross-block prefix: each block's first value was absolute
+        ids -= np.repeat(np.concatenate([[0], ids[starts - 1]]), ns)
+    norms = np.frombuffer(column("norm_bytes"), dtype=np.float64)
+    if not positions:
+        return ids, norms, None
+    if any(b["pos_bytes"] is None for b in blocks):
+        raise ValueError("positional query but index was built without positions=True")
+    tfs = varint_decode(column("tf_bytes")).astype(np.int64)
+    offsets = np.concatenate([[0], np.cumsum(tfs)])
+    return ids, norms, (decode_positions(column("pos_bytes"), tfs), offsets)
+
+
+@dataclass
+class _Spec:
+    """One query as the per-segment pass runs it.
+
+    groups  conjunctive gates: a match holds >=1 term of every group
+    occ     scoring occurrences (term, multiplier); weight = multiplier * idf
+    plan    exact verify plan over the reconstructed token view, or None
+            when the gates are exact; ``fields`` are the doc-view fields it
+            reads
+
+    Derived: ``lits`` (the literals verify places in the view),
+    ``positional`` (verify reads positions) and ``gated`` (False for one
+    group, no plan and exactly that group's terms to score: the candidates
+    are then the union the scorer builds, and the candidate step is
+    skipped).
+    """
+
+    groups: list[list[str]]
+    occ: list[tuple[str, float]]
+    plan: Plan | None = None
+    fields: tuple[str, ...] = ()
+    lits: list[str] = field(init=False, repr=False)
+    positional: bool = field(init=False, repr=False)
+    gated: bool = field(init=False, repr=False)
+
+    def __post_init__(self):
+        lits: set = set()
+        if self.plan is not None:
+            _literal_terms(self.plan, lits)
+            lits.discard(_NEVER)
+        self.lits = sorted(lits)
+        self.positional = self.plan is not None and _needs_positions(self.plan)
+        self.gated = (
+            self.plan is not None
+            or len(self.groups) != 1
+            or set(self.groups[0]) != {t for t, _ in self.occ}
+        )
+
+
+def _find(docs: np.ndarray, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Each candidate's index in the sorted ``docs``, and whether it is there."""
+    i = np.minimum(np.searchsorted(docs, cand), len(docs) - 1)
+    return i, docs[i] == cand
+
+
+def _candidates(groups: list[list[str]], get) -> np.ndarray:
+    """Docs holding >=1 term of every group (sorted, unique)."""
+    cand = None
+    for g in groups:
+        docs = [d[0] for d in map(get, g) if d is not None]
+        u = np.unique(np.concatenate(docs)) if docs else np.empty(0, np.int64)
+        cand = u if cand is None else np.intersect1d(cand, u, assume_unique=True)
+        if cand.size == 0:
+            break
+    return cand
+
+
+def _verify(s: _Spec, cand: np.ndarray, get) -> np.ndarray:
+    """The candidates whose reconstructed token view satisfies the plan:
+    each vocabulary literal at its indexed positions (``_HOLE`` elsewhere),
+    or, for a non-positional plan, the bag of literals the doc holds."""
+    hits = []
+    for t in s.lits:
+        d = get(t)
+        if d is None:
+            continue
+        i, hit = _find(d[0], cand)
+        hits.append((t, np.where(hit, i, -1).tolist(), d[2]))
+    keep = []
+    for j, doc in enumerate(cand.tolist()):
+        if s.positional:
+            slots = [
+                (p, t)
+                for t, idx, (flat, off) in hits
+                if (i := idx[j]) >= 0
+                for p in flat[off[i] : off[i + 1]].tolist()
+            ]
+            if not slots:
+                continue
+            toks = [_HOLE] * (max(p for p, _ in slots) + 1)
+            for p, t in slots:
+                toks[p] = t
+        else:
+            toks = [t for t, idx, _ in hits if idx[j] >= 0]
+        if eval_plan(s.plan, dict.fromkeys(s.fields, toks)):
+            keep.append(doc)
+    return np.asarray(keep, dtype=np.int64)
+
+
+def _local_cut(docs: np.ndarray, scores: np.ndarray, k: int, round_to: int | None):
+    """Indices of the local top-k on (ROUNDED score desc, doc_id asc) — the
+    total order the global merge ranks on, so the local cut can never drop
+    a doc that would have tied after rounding and won on doc_id."""
+    scores_r = _round_half_up(scores, round_to)
+    cand = np.arange(len(docs))
+    if len(docs) > k:
+        kth = scores_r[np.argpartition(-scores_r, k - 1)[k - 1]]
+        cand = np.flatnonzero(scores_r >= kth)
+    return cand[np.lexsort((docs[cand], -scores_r[cand]))[:k]]
+
+
+def _segment_topk(
+    by_term: dict[str, list],
+    specs: dict[str, _Spec],
+    idfs: dict[str, float],
+    k: int | None,
+    round_to: int | None = None,
+) -> list[tuple[str, int, float]]:
+    """One segment, every query: retrieve → verify → score → local k-cut
+    (``k=None`` keeps every match).
+
+    Each term decodes once per segment and is shared by every query that
+    reads it; scoring concatenates one weight x norm array per occurrence
+    and sums per doc with a stable argsort + ``np.add.reduceat``."""
+    pos_terms = {t for s in specs.values() if s.positional for t in s.lits}
+    decoded: dict = {}
+
+    def get(t: str):
+        if t not in decoded:
+            decoded[t] = _decode_term(by_term[t], t in pos_terms) if t in by_term else None
+        return decoded[t]
+
+    rows: list[tuple[str, int, float]] = []
+    for qid, s in specs.items():
+        parts = []
+        if s.gated:
+            cand = _candidates(s.groups, get)
+            if cand.size and s.plan is not None:
+                cand = _verify(s, cand, get)
+            if not cand.size:
+                continue
+            # a zero occurrence of every candidate: a match that holds no
+            # scoring term (e.g. filter-only) still scores 0.0
+            parts.append((cand, np.zeros(len(cand))))
+        for t, m in s.occ:
+            d = get(t)
+            if d is None:
+                continue
+            docs, norms = d[0], d[1]
+            if s.gated:
+                i, hit = _find(docs, cand)
+                docs, norms = cand[hit], norms[i[hit]]
+            parts.append((docs, m * idfs[t] * norms))
+        if not parts:
+            continue
+        if len(parts) == 1:
+            docs, scores = parts[0]
+        else:
+            docs = np.concatenate([p[0] for p in parts])
+            scores = np.concatenate([p[1] for p in parts])
+            order = np.argsort(docs, kind="stable")
+            docs, scores = docs[order], scores[order]
+            first = np.flatnonzero(np.diff(docs, prepend=docs[0] - 1))
+            docs, scores = docs[first], np.add.reduceat(scores, first)
+        if k is not None:
+            keep = _local_cut(docs, scores, k, round_to)
+            docs, scores = docs[keep], scores[keep]
+        rows.extend((qid, d, sc) for d, sc in zip(docs.tolist(), scores.tolist()))
+    return rows
+
+
+def _run(
+    spark: SparkSession,
+    index_dir: str,
+    n_docs: int,
+    specs: dict[str, _Spec],
+    k: int | None,
+    round_to: int | None,
+) -> DataFrame:
+    """Answer every spec in one pass over the index: one term-stats lookup
+    for the scoring terms' idf, ONE postings scan over the whole
+    vocabulary, one applyInPandas over the segments, then (for top-k) the
+    global merge — a window over the n_segments*k local survivors.
+    ``k=None`` returns every segment's (query_id, doc_id, score) rows."""
+    scored = sorted({t for s in specs.values() for t, _ in s.occ})
+    dfs = read_term_stats(spark, index_dir, scored) if scored else {}
+    idfs = {t: _idf(n_docs, dfs.get(t, 0)) for t in scored}
+    vocab = set(scored)
+    for s in specs.values():
+        vocab.update(s.lits)
+        for g in s.groups:
+            vocab.update(g)
+    postings = read_postings(spark, index_dir, sorted(vocab)).select(
+        "segment_id", "term", "blocks"
+    )
+
+    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
+        by_term = {r.term: r.blocks for r in pdf.itertuples()}
+        rows = _segment_topk(by_term, specs, idfs, k, round_to)
+        return pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])
+
+    local = postings.groupBy("segment_id").applyInPandas(
+        per_segment, "query_id string, doc_id long, score double"
+    )
+    if k is None:
+        return local
+    rank_score = F.round("score", round_to) if round_to is not None else F.col("score")
+    w = Window.partitionBy("query_id").orderBy(F.desc("score_r"), F.asc("doc_id"))
+    return (
+        local.withColumn("score_r", rank_score)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "doc_id", "score_r", "score")
+    )
+
+
+def _term_plan(t: str) -> Plan:
+    """A query-string term: a Lucene wildcard (``*``/``?``) or a literal."""
+    if "*" in t or "?" in t:
+        return Wildcard(DEFAULT_FIELD, t)
+    return Term(DEFAULT_FIELD, t)
 
 
 def _collect_multiterm(plan: Plan, out: dict) -> None:
@@ -149,7 +412,7 @@ def _expand_from_index(
     preds = []
     for key in atoms:
         if key[0] == "w":
-            preds.append(term.like(_wildcard_like(key[1])))
+            preds.append(term.like(wildcard_to_like(key[1])))
         elif key[0] == "f":
             _, v, fz, pl = key
             p = F.levenshtein(term, F.lit(v), fz) >= 0
@@ -158,8 +421,6 @@ def _expand_from_index(
             preds.append(p)
         else:  # regexp
             preds.append(term.rlike("^(?:" + key[1] + ")$"))
-    import functools
-
     cand = [
         r["term"]
         for r in spark.read.parquet(f"{index_dir}/term_stats")
@@ -167,8 +428,6 @@ def _expand_from_index(
         .filter(functools.reduce(lambda a, b: a | b, preds))
         .collect()
     ]
-    from ..plans.eval_py import fuzzy_pred, regexp_regex, wildcard_regex
-
     out: dict[tuple, list[str]] = {}
     for key in atoms:
         if key[0] == "w":
@@ -233,8 +492,6 @@ def _transform(plan: Plan, exp: dict, in_span: bool = False) -> Plan:
             boost=plan.boost,
         )
     if isinstance(plan, (SpanNear, SpanOr)):
-        from dataclasses import replace
-
         return replace(
             plan, clauses=tuple(_transform(c, exp, in_span=True) for c in plan.clauses)
         )
@@ -269,23 +526,6 @@ def _literal_terms(plan: Plan, out: set) -> None:
         _literal_terms(plan.match, out)
 
 
-def _fields_of(plan: Plan, out: set) -> None:
-    if isinstance(plan, (Term, SpanTerm, Phrase, Wildcard, Fuzzy, Regexp)):
-        out.add(plan.field)
-    elif isinstance(plan, Bool):
-        for g in (plan.must, plan.should, plan.must_not, plan.filter):
-            for c in g:
-                _fields_of(c, out)
-    elif isinstance(plan, (SpanNear, SpanOr)):
-        for c in plan.clauses:
-            _fields_of(c, out)
-    elif isinstance(plan, SpanNot):
-        _fields_of(plan.include, out)
-        _fields_of(plan.exclude, out)
-    elif isinstance(plan, SpanFirst):
-        _fields_of(plan.match, out)
-
-
 def _needs_positions(plan: Plan) -> bool:
     if isinstance(plan, Phrase):
         return len(plan.terms) > 1
@@ -303,8 +543,6 @@ def _needs_positions(plan: Plan) -> bool:
 def _gate_groups(plan: Plan) -> list[list[str]]:
     """Conjunctive term-group gates of the TRANSFORMED (literal-only) plan:
     a matching doc holds >=1 term of every group."""
-    from ..sources.registry import _flatten_groups
-
     approx = limiting_filter(plan)
     groups = _flatten_groups(approx) if approx is not None else None
     if not groups:
@@ -316,10 +554,31 @@ def _gate_groups(plan: Plan) -> list[list[str]]:
     return [sorted({v for _k, _f, v in g}) for g in groups]
 
 
-def _needs_verify(plan: Plan) -> bool:
-    from ..sources.registry import _needs_verify as nv
-
-    return nv(plan)
+def _dsl_specs(
+    spark: SparkSession, index_dir: str, plans: dict[str, Plan]
+) -> dict[str, _Spec]:
+    """Expand every multi-term atom in one dictionary scan, then compile
+    each plan to its spec; a plan whose expansion matches nothing (e.g. a
+    wildcard no index term fits) has no spec."""
+    atoms: dict = {}
+    for p in plans.values():
+        _collect_multiterm(p, atoms)
+    exp = _expand_from_index(spark, index_dir, atoms)
+    specs: dict[str, _Spec] = {}
+    for qid, p in plans.items():
+        pt = _transform(p, exp)
+        if isinstance(pt, MatchNone):
+            continue
+        w: dict[str, float] = {}
+        for (_f, t), wt in positive_term_weights(pt).items():
+            w[t] = w.get(t, 0.0) + wt
+        specs[qid] = _Spec(
+            _gate_groups(pt),
+            list(w.items()),
+            plan=pt if _needs_verify(pt) else None,
+            fields=tuple(sorted(fields_of(pt))) or (DEFAULT_FIELD,),
+        )
+    return specs
 
 
 def dsl_topk_from_index(
@@ -337,167 +596,9 @@ def dsl_topk_from_index(
     (positive_term_weights), same deterministic merge (rounded score desc,
     doc_id asc).
     """
-    manifest = read_manifest(index_dir)
-
+    n_docs = _manifest(index_dir).n_docs
     compiled = {
         qid: q if isinstance(q, Plan) else compile_query(q)
         for qid, q in queries.items()
     }
-    atoms: dict = {}
-    for p in compiled.values():
-        _collect_multiterm(p, atoms)
-    exp = _expand_from_index(spark, index_dir, atoms)
-
-    plans_t: dict[str, Plan] = {}
-    gates: dict[str, list[list[str]]] = {}
-    weights: dict[str, dict[str, float]] = {}
-    verify: dict[str, bool] = {}
-    fields: dict[str, tuple[str, ...]] = {}
-    vocab: set[str] = set()
-    want_pos = False
-    for qid, p in compiled.items():
-        pt = _transform(p, exp)
-        if isinstance(pt, MatchNone):
-            continue  # e.g. a wildcard matching nothing in the dictionary
-        plans_t[qid] = pt
-        gates[qid] = _gate_groups(pt)
-        w: dict[str, float] = {}
-        for (_f, t), wt in positive_term_weights(pt).items():
-            w[t] = w.get(t, 0.0) + wt
-        weights[qid] = w
-        verify[qid] = _needs_verify(pt)
-        fs: set = set()
-        _fields_of(pt, fs)
-        fields[qid] = tuple(sorted(fs)) or ("content",)
-        lits: set = set()
-        _literal_terms(pt, lits)
-        lits.discard(_NEVER)
-        vocab |= lits
-        want_pos = want_pos or (verify[qid] and _needs_positions(pt))
-
-    all_terms = sorted(vocab)
-    dfs = read_term_stats(spark, index_dir, all_terms)
-    idfs = {t: _idf(manifest.n_docs, dfs.get(t, 0)) for t in all_terms}
-
-    postings = read_postings(spark, index_dir, all_terms).select(
-        "segment_id", "term", "blocks"
-    )
-    out_schema = "query_id string, doc_id long, score double"
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {r.term: r.blocks for r in pdf.itertuples()}
-        dec: dict[str, tuple[np.ndarray, np.ndarray, list | None]] = {}
-
-        def get(t: str):
-            """(sorted doc_ids, norms, positions-per-doc|None), decoded once."""
-            if t not in dec:
-                if t not in by_term:
-                    return None
-                docs_l, norms_l, pos_l = [], [], []
-                for blk in by_term[t]:
-                    doc_ids, tfs, norms = decode_block(blk)
-                    docs_l.append(doc_ids)
-                    norms_l.append(norms)
-                    if want_pos:
-                        pb = blk["pos_bytes"]
-                        if pb is None:
-                            raise ValueError(
-                                "positional DSL query but index was built "
-                                "without positions=True"
-                            )
-                        flat = decode_positions(bytes(pb), tfs)
-                        bounds = np.concatenate([[0], np.cumsum(tfs)]).astype(np.int64)
-                        pos_l.extend(
-                            flat[bounds[i] : bounds[i + 1]]
-                            for i in range(len(doc_ids))
-                        )
-                dec[t] = (
-                    np.concatenate(docs_l),
-                    np.concatenate(norms_l),
-                    pos_l if want_pos else None,
-                )
-            return dec[t]
-
-        def docs_of(t: str) -> np.ndarray:
-            d = get(t)
-            return d[0] if d is not None else np.empty(0, np.int64)
-
-        rows: list[tuple[str, int, float]] = []
-        for qid, groups in gates.items():
-            # retrieve: intersect the union-per-group doc sets
-            cand: np.ndarray | None = None
-            for g in groups:
-                u = (
-                    np.unique(np.concatenate([docs_of(t) for t in g]))
-                    if g
-                    else np.empty(0, np.int64)
-                )
-                cand = u if cand is None else np.intersect1d(cand, u, assume_unique=True)
-                if cand.size == 0:
-                    break
-            if cand is None or cand.size == 0:
-                continue
-            # verify: exact evaluation against the reconstructed doc view
-            if verify[qid]:
-                pt = plans_t[qid]
-                lits: set = set()
-                _literal_terms(pt, lits)
-                lits.discard(_NEVER)
-                present = [(t, get(t)) for t in sorted(lits)]
-                present = [(t, d) for t, d in present if d is not None]
-                keep = []
-                for d in cand.tolist():
-                    if want_pos:
-                        slots: list[tuple[int, str]] = []
-                        for t, (docs_t, _n, pos_t) in present:
-                            i = int(np.searchsorted(docs_t, d))
-                            if i < len(docs_t) and docs_t[i] == d:
-                                slots.extend((int(p), t) for p in pos_t[i])
-                        if not slots:
-                            continue
-                        toks = [_HOLE] * (max(p for p, _ in slots) + 1)
-                        for p, t in slots:
-                            toks[p] = t
-                    else:
-                        toks = [
-                            t
-                            for t, (docs_t, _n, _p) in present
-                            if (
-                                (i := int(np.searchsorted(docs_t, d))) < len(docs_t)
-                                and docs_t[i] == d
-                            )
-                        ]
-                    doc_view = {f: toks for f in fields[qid]}
-                    if eval_plan(pt, doc_view):
-                        keep.append(d)
-                cand = np.asarray(keep, dtype=np.int64)
-                if cand.size == 0:
-                    continue
-            # score: sum of weight * norm over the query's positive terms
-            scores = np.zeros(len(cand), dtype=np.float64)
-            for t, w in weights[qid].items():
-                d = get(t)
-                if d is None:
-                    continue
-                docs_t, norms_t, _ = d
-                idx = np.searchsorted(docs_t, cand)
-                ok = (idx < len(docs_t)) & (docs_t[np.minimum(idx, len(docs_t) - 1)] == cand)
-                scores[ok] += w * idfs[t] * norms_t[idx[ok]]
-            # local k-cut on the same (rounded desc, doc asc) key the merge uses
-            pairs = heapq.nsmallest(
-                k,
-                zip(cand.tolist(), scores.tolist()),
-                key=lambda kv: (-_round_half_up(kv[1], round_to), kv[0]),
-            )
-            rows.extend((qid, d, s) for d, s in pairs)
-        return pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])
-
-    local = postings.groupBy("segment_id").applyInPandas(per_segment, out_schema)
-    rank_score = F.round("score", round_to) if round_to is not None else F.col("score")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_r"), F.asc("doc_id"))
-    return (
-        local.withColumn("score_r", rank_score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score_r", "score")
-    )
+    return _run(spark, index_dir, n_docs, _dsl_specs(spark, index_dir, compiled), k, round_to)

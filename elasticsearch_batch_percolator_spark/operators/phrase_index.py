@@ -1,37 +1,23 @@
 """Index-side phrase matching over positional postings.
 
 When the index is built with ``positions=True``, phrases run directly
-against the compressed postings — no re-tokenization of documents: decode
-the phrase terms' postings per segment, intersect doc lists, verify
-adjacency with numpy set membership (pos(t_{i+1}) == pos(t_i) + 1), exactly
-Lucene's PhraseQuery contract the reference approximates two-phase
-(LimitingFilterFactory.phraseFilter:177-192 = the AND pre-filter; this is
-the exact phase).
+against the compressed postings — no re-tokenization of documents. A front
+end of the index query engine (operators/dsl_index.py): the phrase gates
+on its terms (the AND pre-filter, LimitingFilterFactory.phraseFilter:
+177-192) and every candidate verifies exactly against its positions — the
+exact phase of Lucene's PhraseQuery contract the reference approximates
+two-phase.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 
-from ..index.build import read_manifest, read_postings
-from ..index.codec import decode_block, decode_positions
-
-
-def _decode_with_positions(blocks) -> tuple[np.ndarray, list[np.ndarray]]:
-    """term blocks → (doc_ids, per-doc position arrays)."""
-    all_docs, all_pos = [], []
-    for blk in blocks:
-        doc_ids, tfs, _ = decode_block(blk)
-        pos_bytes = blk["pos_bytes"] if not hasattr(blk, "pos_bytes") else blk.pos_bytes
-        if pos_bytes is None:
-            raise ValueError("index was built without positions=True")
-        flat = decode_positions(bytes(pos_bytes), tfs)
-        bounds = np.concatenate([[0], np.cumsum(tfs)]).astype(np.int64)
-        all_docs.append(doc_ids)
-        all_pos.extend(flat[bounds[i] : bounds[i + 1]] for i in range(len(doc_ids)))
-    return (np.concatenate(all_docs) if all_docs else np.empty(0, np.int64)), all_pos
+from ..plans.compiler import DEFAULT_FIELD
+from ..plans.query_plan import Phrase, Wildcard, WildcardPhrase
+from .dsl_index import _dsl_specs, _manifest, _run, _term_plan
 
 
 def phrase_docs_from_index(
@@ -43,63 +29,20 @@ def phrase_docs_from_index(
     expands against the index term dictionary (the reference's
     WildcardPhraseQuery — per-position term-set producers,
     WildcardTermsProducer.getTerms:26-53) and the position slot accepts
-    ANY of its expansion terms; adjacency chains across the slots'
-    position unions."""
-    from .wand import _is_pattern, expand_patterns_from_index
-
-    read_manifest(index_dir)  # validates the index exists
-    pats = sorted({t for t in terms if _is_pattern(t)})
-    exp = expand_patterns_from_index(spark, index_dir, pats) if pats else {}
-    # per-position term sets: literal -> {literal}; pattern -> expansions
-    slots = [sorted(exp[t]) if _is_pattern(t) else [t] for t in terms]
-    if any(not s for s in slots):
-        # a pattern matching NOTHING in the index: the phrase can't occur
-        return spark.createDataFrame([], "doc_id long")
-    flat_terms = sorted({t for s in slots for t in s})
-    postings = read_postings(spark, index_dir, flat_terms).select(
-        "segment_id", "term", "blocks"
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-        by_term = {r.term: r.blocks for r in pdf.itertuples()}
-        decoded = {
-            t: _decode_with_positions(by_term[t])
-            for t in flat_terms
-            if t in by_term
-        }
-        # slot i: doc -> union of its expansion terms' position arrays
-        slot_pos: list[dict[int, np.ndarray]] = []
-        for s in slots:
-            dmap: dict[int, np.ndarray] = {}
-            for t in s:
-                if t not in decoded:
-                    continue
-                docs_t, pos_t = decoded[t]
-                for i, d in enumerate(docs_t.tolist()):
-                    prev = dmap.get(d)
-                    dmap[d] = pos_t[i] if prev is None else np.union1d(prev, pos_t[i])
-            if not dmap:
-                return empty  # slot unmatched anywhere in this segment
-            slot_pos.append(dmap)
-        common = set(slot_pos[0])
-        for dmap in slot_pos[1:]:
-            common &= set(dmap)
-        out = []
-        for d in sorted(common):
-            # start positions = slot0 positions; the phrase holds if some
-            # chain p, p+1, ..., p+k-1 exists across the slots
-            cand = slot_pos[0][d]
-            for offset, dmap in enumerate(slot_pos[1:], start=1):
-                cand = cand[np.isin(cand + offset, dmap[d])]
-                if len(cand) == 0:
-                    break
-            if len(cand) > 0:
-                out.append(d)
-        return pd.DataFrame({"doc_id": pd.Series(out, dtype="int64")})
-
+    ANY of its expansion terms."""
+    n_docs = _manifest(index_dir).n_docs
+    slots = tuple(_term_plan(t) for t in terms)
+    if any(isinstance(s, Wildcard) for s in slots):
+        plan = WildcardPhrase(DEFAULT_FIELD, slots)
+    else:
+        plan = Phrase(DEFAULT_FIELD, tuple(terms))
+    # every verified doc, unscored: no scoring occurrences and no k-cut
+    specs = {
+        qid: replace(s, occ=[])
+        for qid, s in _dsl_specs(spark, index_dir, {"phrase": plan}).items()
+    }
     return (
-        postings.groupBy("segment_id")
-        .applyInPandas(per_segment, "doc_id long")
+        _run(spark, index_dir, n_docs, specs, None, None)
+        .select("doc_id")
         .dropDuplicates(["doc_id"])
     )

@@ -1,346 +1,29 @@
-"""Top-k BM25 over the compressed index: block-max WAND + exhaustive oracle.
+"""Top-k BM25 over the compressed index for batches of term-list queries.
 
-The reference's two-phase idea (cheap upper bound first, expensive exact
-work only for candidates — LimitingFilterFactory + README.md:127-133) meets
-block-max WAND here: per-term per-block ``max_norm`` gives an exact score
-upper bound ``idf * max_norm``; blocks whose combined upper bound cannot
-reach the current kth score are skipped WITHOUT decoding.
-
-Execution shape: segments score independently and in parallel
-(applyInPandas over groupBy(segment_id) — one Arrow batch per segment holds
-only the query terms' posting rows, pruned at the parquet scan), each
-emitting its local top-k; the global top-k is a tiny window over
-n_segments*k rows — the exact merge the reference does across shards
-(TransportBatchPercolateAction.mergeResults:94-143).
-
-At 1000-executor scale: segments >> executors, per-segment work is bounded
-by seg_size (skew-proof), and the only data movement is (n_segments × k)
-candidate rows.
+A front end of the index query engine (operators/dsl_index.py): each
+query becomes one spec — a single gate group of its terms and one scoring
+occurrence per term — and the engine's per-segment pass decodes each term
+once per segment, scores every query with one vectorized accumulation and
+merges the segments' local top-k in one window, the exact merge the
+reference does across shards (TransportBatchPercolateAction.mergeResults:
+94-143).
 """
 
 from __future__ import annotations
 
-import heapq
+from pyspark.sql import DataFrame, SparkSession
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from ..index.build import read_manifest, read_postings, read_term_stats
-from ..index.codec import decode_block, varint_decode
-
-
-def _idf(n_docs: int, df: int) -> float:
-    return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
-
-
-def _round_half_up(x: float, round_to: int | None) -> float:
-    """HALF_UP rounding for non-negative scores — bit-identical to Spark's
-    F.round / DuckDB round, unlike np.round (banker's)."""
-    if round_to is None:
-        return x
-    m = 10.0**round_to
-    return float(np.floor(x * m + 0.5) / m)
-
-
-def _round_half_up_arr(x: np.ndarray, round_to: int | None) -> np.ndarray:
-    if round_to is None:
-        return x
-    m = 10.0**round_to
-    return np.floor(x * m + 0.5) / m
-
-
-def _segment_topk_exhaustive(
-    term_blocks: dict[str, list],
-    idfs: dict[str, float],
-    k: int,
-    round_to: int | None = None,
-):
-    """Decode everything, accumulate, top-k. The always-correct oracle.
-
-    The local k-cut ranks on (ROUNDED score desc, doc_id asc) — the exact
-    key the global merge uses — so a doc cut here by a sub-ulp raw margin
-    cannot have tied after rounding and won on doc_id globally.
-    """
-    acc: dict[int, float] = {}
-    for term, blocks in term_blocks.items():
-        w = idfs[term]
-        for blk in blocks:
-            doc_ids, _, norms = decode_block(blk)
-            for d, nr in zip(doc_ids.tolist(), (w * norms).tolist()):
-                acc[d] = acc.get(d, 0.0) + nr
-    return heapq.nsmallest(
-        k, acc.items(), key=lambda kv: (-_round_half_up(kv[1], round_to), kv[0])
-    )
-
-
-def _decode_term(blocks) -> tuple[np.ndarray, np.ndarray]:
-    """All blocks of one term → (doc_ids, norms), ONE varint pass.
-
-    Block payloads concatenate into a single stream (each block's first doc
-    delta is absolute), so one vectorized varint_decode + a per-block
-    prefix subtraction replaces len(blocks) tiny decode_block calls — the
-    same fixed-cost amortization as the build-side whole-segment encoder.
-    tf_bytes are skipped entirely (scoring needs only norms)."""
-
-    def get(b, k):
-        return getattr(b, k) if hasattr(b, k) else b[k]
-
-    if len(blocks) == 1:
-        b = blocks[0]
-        ids = np.cumsum(varint_decode(bytes(get(b, "doc_bytes"))).astype(np.int64))
-        return ids, np.frombuffer(bytes(get(b, "norm_bytes")), dtype=np.float64)
-
-    ns = np.fromiter((get(b, "n") for b in blocks), dtype=np.int64, count=len(blocks))
-    deltas = varint_decode(
-        b"".join(bytes(get(b, "doc_bytes")) for b in blocks)
-    ).astype(np.int64)
-    ids = np.cumsum(deltas)
-    starts = np.cumsum(ns)[:-1]
-    # undo the cross-block prefix: each block's first value was absolute
-    ids -= np.repeat(np.concatenate([[0], ids[starts - 1]]), ns)
-    norms = np.frombuffer(
-        b"".join(bytes(get(b, "norm_bytes")) for b in blocks), dtype=np.float64
-    )
-    return ids, norms
-
-
-def _segment_topk_batch(
-    by_term: dict[str, list],
-    queries: dict[str, list[str]],
-    idfs: dict[str, float],
-    k: int,
-    round_to: int | None = None,
-    wts_by_qid: dict[str, dict[str, float]] | None = None,
-) -> list[tuple[str, int, float]]:
-    """Vectorized multi-query scorer: decode each term ONCE per segment,
-    then per query sort+reduceat accumulation and argpartition top-k.
-
-    This is the batch fast path: queries share hot terms, so amortizing the
-    decode dominates; numpy beats a per-doc Python WAND loop by orders of
-    magnitude at this block scale. The 'wand' path remains for sparse
-    single-query / deep-corpus use where pruning wins.
-    """
-    decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    rows: list[tuple[str, int, float]] = []
-    for qid, terms in queries.items():
-        # per-query per-term weight override (boost * idf); accumulation
-        # stays per OCCURRENCE, so a repeated boosted term contributes
-        # idf * qtf * boost — identical to the wand/exhaustive weight map
-        qw = wts_by_qid.get(qid) if wts_by_qid else None
-        wt = (lambda t: qw[t] if t in qw else idfs[t]) if qw else idfs.__getitem__
-        present = [t for t in terms if t in by_term]
-        if not present:
-            continue
-        for t in present:
-            if t not in decoded:
-                decoded[t] = _decode_term(by_term[t])
-        if len(present) == 1:
-            d, nr = decoded[present[0]]
-            scores = wt(present[0]) * nr
-            docs = d
-        else:
-            docs = np.concatenate([decoded[t][0] for t in present])
-            scores = np.concatenate([wt(t) * decoded[t][1] for t in present])
-            order = np.argsort(docs, kind="stable")
-            docs = docs[order]
-            scores = scores[order]
-            uniq_idx = np.flatnonzero(np.diff(docs, prepend=docs[0] - 1))
-            docs = docs[uniq_idx]
-            scores = np.add.reduceat(scores, uniq_idx)
-        # local selection uses the ROUNDED score — the same total order
-        # (score_r desc, doc_id asc) the global merge ranks on, so the local
-        # k-cut can never drop a doc that would have tied after rounding
-        # and won on doc_id
-        scores_r = _round_half_up_arr(scores, round_to)
-        if len(docs) > k:
-            kth = scores_r[np.argpartition(-scores_r, k - 1)[k - 1]]
-            cand = np.flatnonzero(scores_r >= kth)
-        else:
-            cand = np.arange(len(docs))
-        order = np.lexsort((docs[cand], -scores_r[cand]))[:k]
-        for i in order:
-            rows.append((qid, int(docs[cand[i]]), float(scores[cand[i]])))
-    return rows
-
-
-class _TermIter:
-    """Cursor over one term's block list: skip by max_doc, decode lazily."""
-
-    __slots__ = ("blocks", "idf", "bi", "pi", "docs", "scores", "max_norm_all")
-
-    def __init__(self, blocks: list, idf: float):
-        self.blocks = blocks
-        self.idf = idf
-        self.bi = 0
-        self.pi = 0
-        self.docs = None
-        self.scores = None
-        self.max_norm_all = idf * max(b["max_norm"] for b in blocks)
-        self._load()
-
-    def _load(self):
-        if self.bi < len(self.blocks):
-            d, _, nr = decode_block(self.blocks[self.bi])
-            self.docs = d
-            self.scores = self.idf * nr
-            self.pi = 0
-
-    @property
-    def doc(self) -> int:
-        if self.bi >= len(self.blocks):
-            return 1 << 62
-        return int(self.docs[self.pi])
-
-    @property
-    def score(self) -> float:
-        return float(self.scores[self.pi])
-
-    def block_upper(self) -> float:
-        if self.bi >= len(self.blocks):
-            return 0.0
-        return self.idf * self.blocks[self.bi]["max_norm"]
-
-    def advance_to(self, target: int) -> None:
-        """Skip blocks by max_doc (no decode), then binary-search in block."""
-        if self.bi >= len(self.blocks):
-            return
-        while self.bi < len(self.blocks) and self.blocks[self.bi]["max_doc"] < target:
-            self.bi += 1
-            self.docs = None
-        if self.bi >= len(self.blocks):
-            return
-        if self.docs is None:
-            self._load()
-        self.pi = int(np.searchsorted(self.docs, target, side="left"))
-        if self.pi >= len(self.docs):  # target beyond block end (can't happen
-            self.bi += 1               # when max_doc >= target, but be safe)
-            self.docs = None
-            self._load()
-
-    def next(self) -> None:
-        self.pi += 1
-        if self.docs is None or self.pi >= len(self.docs):
-            self.bi += 1
-            self.docs = None
-            self._load()
-
-
-def _segment_topk_wand(
-    term_blocks: dict[str, list],
-    idfs: dict[str, float],
-    k: int,
-    round_to: int | None = None,
-):
-    """Block-max WAND (Ding & Suel 2011 shape) over one segment.
-
-    The heap orders on (ROUNDED score, -doc_id) — the global merge's key —
-    and pruning thresholds are relaxed by half an ulp of the rounding grid,
-    so a doc whose raw score is a sub-ulp below theta but ties after
-    rounding (and could win on doc_id) is still scored.
-    """
-    iters = [_TermIter(b, idfs[t]) for t, b in term_blocks.items() if len(b) > 0]
-    # (rounded_score, -doc, raw_score) min-heap of size k
-    heap: list[tuple[float, int, float]] = []
-    theta = 0.0
-    half_ulp = 0.5 * 10.0 ** (-round_to) if round_to is not None else 0.0
-    EXHAUSTED = 1 << 62
-
-    while True:
-        iters.sort(key=lambda it: it.doc)
-        # find pivot: first iterator where the cumulative GLOBAL upper bound
-        # could reach theta (>= because a tie can still win on doc_id)
-        acc = 0.0
-        pivot_idx = -1
-        for i, it in enumerate(iters):
-            if it.doc == EXHAUSTED:
-                break
-            acc += it.max_norm_all
-            if acc >= theta - half_ulp or len(heap) < k:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break
-        pivot_doc = iters[pivot_idx].doc
-        if pivot_doc == EXHAUSTED:
-            break
-
-        # block-max refinement: tighter bound from the blocks that would
-        # cover pivot_doc (scanned by max_doc only — no decode). Must span
-        # EVERY iterator currently at doc <= pivot_doc, not just the pivot
-        # prefix — iterators after pivot_idx can sit at the same doc.
-        block_bound = 0.0
-        for it in iters:
-            if it.doc > pivot_doc:
-                break
-            bi = it.bi
-            while bi < len(it.blocks) and it.blocks[bi]["max_doc"] < pivot_doc:
-                bi += 1
-            if bi < len(it.blocks):
-                block_bound += it.idf * it.blocks[bi]["max_norm"]
-        if len(heap) >= k and block_bound < theta - half_ulp:
-            # no doc up to pivot can beat theta: advance the lagging iterator
-            # past pivot (shallowest first keeps others' positions)
-            iters[0].advance_to(pivot_doc + 1)
-            continue
-
-        if iters[0].doc == pivot_doc:
-            # all iterators [0..pivot_idx] are at pivot? those with doc==pivot score
-            s = 0.0
-            for it in iters:
-                if it.doc == pivot_doc:
-                    s += it.score
-            item = (_round_half_up(s, round_to), -pivot_doc, s)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item[:2] > heap[0][:2]:
-                heapq.heapreplace(heap, item)
-            if len(heap) >= k:
-                theta = heap[0][0]
-            for it in iters:
-                if it.doc == pivot_doc:
-                    it.next()
-        else:
-            iters[0].advance_to(pivot_doc)
-
-    out = sorted(((-d, raw, sr) for sr, d, raw in heap), key=lambda kv: (-kv[2], kv[0]))
-    return [(d, raw) for d, raw, _ in out]
-
-
-def expand_patterns_from_index(
-    spark: SparkSession, index_dir: str, patterns: list[str]
-) -> dict[str, list[str]]:
-    """Lucene-wildcard patterns → the index terms they match, via ONE
-    ``term LIKE`` scan over the persisted ``term_stats`` dictionary — the
-    reference expands wildcards against live index terms the same way
-    (WildcardTermsProducer.getTerms:26-53, an automaton over the terms
-    enum). Prefix patterns push StringStartsWith down to the parquet scan
-    (term_stats files are term-sorted, so row groups prune)."""
-    import functools
-
-    from ..plans.eval_py import wildcard_regex
-    from .match import wildcard_to_like
-
-    if not patterns:
-        return {}
-    likes = [F.col("term").like(wildcard_to_like(p)) for p in patterns]
-    cand = [
-        r["term"]
-        for r in spark.read.parquet(f"{index_dir}/term_stats")
-        .select("term")
-        .filter(functools.reduce(lambda a, b: a | b, likes))
-        .collect()
-    ]
-    out = {}
-    for p in patterns:
-        rx = wildcard_regex(p)
-        out[p] = sorted(t for t in cand if rx.match(t))
-    return out
-
-
-def _is_pattern(t: str) -> bool:
-    return "*" in t or "?" in t
+from ..plans.query_plan import Wildcard
+from .dsl_index import (
+    _collect_multiterm,
+    _expand_from_index,
+    _literal_terms,
+    _manifest,
+    _run,
+    _Spec,
+    _term_plan,
+    _transform,
+)
 
 
 def topk_from_index(
@@ -348,121 +31,48 @@ def topk_from_index(
     index_dir: str,
     queries: dict[str, list[str]],
     k: int = 10,
-    algorithm: str = "auto",
     round_to: int | None = 4,
     boosts: dict[str, dict[str, float]] | None = None,
 ) -> DataFrame:
     """(query_id, rank, doc_id, score_r, score) for a batch of term queries.
 
-    algorithm: 'auto' = decode-once vectorized batch scorer (fastest for
-    query batches sharing terms); 'wand' = block-max WAND pruning (fewest
-    decoded blocks — the deep-corpus single-query path); 'exhaustive' =
-    reference oracle.
-
     Query terms may be Lucene wildcards (``*``/``?``): each pattern
-    expands against the index term dictionary
-    (``expand_patterns_from_index``) and the query scores as BM25 over
-    the UNION of its literal and expanded terms (Lucene's scoring-boolean
-    MultiTermQuery rewrite; a pattern-bearing query's term multiset
-    dedups, so a term matched both literally and by a pattern scores
-    once).
+    expands against the index term dictionary and the query scores as
+    BM25 over the UNION of its literal and expanded terms (Lucene's
+    scoring-boolean MultiTermQuery rewrite; a pattern-bearing query's term
+    multiset dedups, so a term matched both literally and by a pattern
+    scores once).
 
     A repeated LITERAL term in a pattern-free query scores once per
     occurrence (query term frequency): Lucene's BooleanQuery sums every
     clause, and the join scorer (``Engine.score`` over per-occurrence
     query rows) does the same, so ``["a", "a", "b"]`` weights ``a``
-    twice. All three algorithms apply the same qtf weighting — the
-    batch scorer by per-occurrence accumulation, wand/exhaustive via a
-    per-query ``qtf * idf`` weight map (a uniform scale also scales the
-    WAND block upper bounds, so pruning stays exact).
+    twice.
 
     ``boosts``: optional per-query per-term multiplicative weight
-    (Lucene per-clause boost): contribution = boost * qtf * idf * norm,
-    applied identically in all three algorithms (the weight scales the
-    WAND block upper bound too, so pruning stays exact). Boost keys are
-    LITERAL terms — a wildcard pattern's expanded terms score unboosted.
+    (Lucene per-clause boost): contribution = boost * qtf * idf * norm.
+    Boost keys are LITERAL terms — a wildcard pattern's expanded terms
+    score unboosted.
 
     One parquet scan covers all queries' terms (IN-list pushdown); each
     segment scores every query locally; global top-k is a window over
     n_segments*k survivors.
     """
-    manifest = read_manifest(index_dir)
-    pats = sorted({t for ts in queries.values() for t in ts if _is_pattern(t)})
-    if pats:
-        exp = expand_patterns_from_index(spark, index_dir, pats)
-        queries = {
-            qid: (
-                sorted(
-                    {t for t in ts if not _is_pattern(t)}
-                    | {e for t in ts if _is_pattern(t) for e in exp[t]}
-                )
-                if any(_is_pattern(t) for t in ts)
-                else ts
-            )
-            for qid, ts in queries.items()
-        }
-    all_terms = sorted({t for ts in queries.values() for t in ts})
-    dfs = read_term_stats(spark, index_dir, all_terms)
-    idfs = {t: _idf(manifest.n_docs, dfs.get(t, 0)) for t in all_terms}
-    q_broadcast = {qid: [t for t in ts if t in dfs] for qid, ts in queries.items()}
-    # per-query idf*boost maps for the batch scorer (occurrence-wise, so
-    # qtf is NOT folded here); wand/exhaustive fold qtf below
-    wts_by_qid = (
-        {
-            qid: {t: idfs[t] * float(b) for t, b in bq.items() if t in idfs}
-            for qid, bq in boosts.items()
-            if bq
-        }
-        if boosts
-        else None
-    )
-
-    postings = read_postings(spark, index_dir, all_terms).select(
-        "segment_id", "term", "blocks"
-    )
-
-    out_schema = "query_id string, doc_id long, score double"
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {r.term: r.blocks for r in pdf.itertuples()}
-        if algorithm == "auto":
-            rows = _segment_topk_batch(
-                by_term, q_broadcast, idfs, k, round_to, wts_by_qid
-            )
-            return pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])
-        scorer = _segment_topk_wand if algorithm == "wand" else _segment_topk_exhaustive
-        rows = []
-        for qid, terms in q_broadcast.items():
-            # qtf weighting: the batch scorer accumulates one idf*norm
-            # contribution per OCCURRENCE; the dict-keyed scorers see each
-            # term once, so fold multiplicity into the per-query weight map
-            qtf: dict[str, int] = {}
-            for t in terms:
-                if t in by_term:
-                    qtf[t] = qtf.get(t, 0) + 1
-            if not qtf:
-                continue
-            tb = {t: by_term[t] for t in qtf}
-            bq = (boosts or {}).get(qid) or {}
-            wts = (
-                {
-                    t: idfs[t] * c * float(bq.get(t, 1.0))
-                    for t, c in qtf.items()
-                }
-                if any(c > 1 for c in qtf.values())
-                or any(t in bq for t in qtf)
-                else idfs
-            )
-            for d, s in scorer(tb, wts, k, round_to):
-                rows.append((qid, d, s))
-        return pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])
-
-    local = postings.groupBy("segment_id").applyInPandas(per_segment, out_schema)
-    rank_score = F.round("score", round_to) if round_to is not None else F.col("score")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_r"), F.asc("doc_id"))
-    return (
-        local.withColumn("score_r", rank_score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score_r", "score")
-    )
+    n_docs = _manifest(index_dir).n_docs
+    plans = {qid: [_term_plan(t) for t in ts] for qid, ts in queries.items()}
+    atoms: dict = {}
+    for ps in plans.values():
+        for p in ps:
+            _collect_multiterm(p, atoms)
+    exp = _expand_from_index(spark, index_dir, atoms)
+    specs = {}
+    for qid, ps in plans.items():
+        terms = list(queries[qid])
+        if any(isinstance(p, Wildcard) for p in ps):
+            lits: set = set()
+            for p in ps:
+                _literal_terms(_transform(p, exp), lits)
+            terms = sorted(lits)
+        bq = (boosts or {}).get(qid) or {}
+        specs[qid] = _Spec([sorted(set(terms))], [(t, float(bq.get(t, 1.0))) for t in terms])
+    return _run(spark, index_dir, n_docs, specs, k, round_to)

@@ -1,19 +1,22 @@
 """Fresh-seed rank-identity soak: random synthetic corpora + random query
-batches; index+WAND top-k must equal the join scorer doc-for-doc,
-score-for-score. Also soaks _segment_topk_wand vs exhaustive on fresh rngs."""
+batches; index top-k must equal the join scorer doc-for-doc,
+score-for-score. Also soaks the per-segment kernel against the exhaustive
+oracle on fresh rngs (repeated and boosted occurrences, gated candidates)."""
 import random, shutil, sys, tempfile, time
 import numpy as np
 import os; sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from elasticsearch_batch_percolator_spark.index.build import build_index
 from elasticsearch_batch_percolator_spark.index.codec import encode_postings
-from elasticsearch_batch_percolator_spark.operators.wand import (
-    topk_from_index, _segment_topk_wand, _segment_topk_exhaustive, _idf)
+from elasticsearch_batch_percolator_spark.index.codec import decode_block
+from elasticsearch_batch_percolator_spark.operators.dsl_index import _idf, _segment_topk, _Spec
+from elasticsearch_batch_percolator_spark.operators.wand import topk_from_index
+from tests.util_oracle import segment_topk_exhaustive
 from elasticsearch_batch_percolator_spark.operators.bm25 import bm25_topk
 from elasticsearch_batch_percolator_spark.engine import Engine
 from elasticsearch_batch_percolator_spark.session import get_spark
 from pyspark.sql import functions as F
 
-# part A: pure-python BMW property, fresh seeds
+# part A: kernel == exhaustive oracle, fresh seeds
 rng = np.random.default_rng(20260820)
 for trial in range(200):
     n_terms = rng.integers(1, 6)
@@ -25,12 +28,21 @@ for trial in range(200):
         norms = rng.uniform(0.05, 2.2, n_docs)
         term_blocks[f"t{t}"] = encode_postings(doc_ids, tfs, norms, block=32)
         idfs[f"t{t}"] = _idf(8000, n_docs)
+    occ = [(str(t), float(rng.choice([1.0, 0.25, 2.0, 5.0])))
+           for t in rng.choice(sorted(term_blocks), size=int(rng.integers(1, 7)))]
+    scored = sorted({t for t, _ in occ})
+    weights = {t: sum(m * idfs[t] for u, m in occ if u == t) for t in scored}
+    gate = str(rng.choice(sorted(term_blocks)))
+    docs_of = lambda ts: {d for t in ts for b in term_blocks[t] for d in decode_block(b)[0].tolist()}
+    cases = [([scored], None), ([scored, [gate]], docs_of(scored) & docs_of([gate])),
+             ([[gate]], docs_of([gate]))]
     for k in (1, 7, 100):
-        a = _segment_topk_wand(term_blocks, idfs, k)
-        b = _segment_topk_exhaustive(term_blocks, idfs, k)
-        assert [d for d, _ in a] == [d for d, _ in b], f"trial={trial} k={k}"
-        assert np.allclose([s for _, s in a], [s for _, s in b], atol=1e-12)
-print("part A (200 fresh BMW trials): PASS", flush=True)
+        for groups, cand in cases:
+            a = _segment_topk(term_blocks, {"q": _Spec(groups, occ)}, idfs, k)
+            b = segment_topk_exhaustive({t: term_blocks[t] for t in scored}, weights, k, docs=cand)
+            assert [d for _, d, _ in a] == [d for d, _ in b], f"trial={trial} k={k}"
+            assert np.allclose([s for _, _, s in a], [s for _, s in b], atol=1e-12)
+print("part A (200 fresh kernel trials): PASS", flush=True)
 
 # part B: end-to-end Spark rank identity on fresh synthetic corpora
 spark = get_spark("ebp-soak-wand", cores=16)
@@ -55,19 +67,18 @@ for it in range(4):
     qrng = random.Random(seed)
     queries = {f"q{i}": [qrng.choice(vocab) for _ in range(qrng.randint(1, 4))]
                for i in range(60)}
-    for alg in ("wand", "exhaustive"):
-        got = {(r["query_id"], r["rank"]): (int(r["doc_id"]), round(float(r["score"]), 9))
-               for r in topk_from_index(spark, idx, queries, k=10, algorithm=alg).collect()}
-        eng = Engine(spark, corpus, tokenizer="code")
-        qdf = spark.createDataFrame([(q, t) for q, ts in queries.items() for t in ts],
-                                    "query_id string, term string")
-        exp = {(r["query_id"], r["rank"]): (int(r["doc_id"]), round(float(r["score"]), 9))
-               for r in bm25_topk(eng.score(qdf), 10).collect()}
-        assert set(got) == set(exp), f"it{it} {alg}: key sets differ"
-        bad = [(k, got[k], exp[k]) for k in got
-               if got[k][0] != exp[k][0] or abs(got[k][1] - exp[k][1]) > 1e-8]
-        assert not bad, f"it{it} {alg}: {bad[:5]}"
+    got = {(r["query_id"], r["rank"]): (int(r["doc_id"]), round(float(r["score"]), 9))
+           for r in topk_from_index(spark, idx, queries, k=10).collect()}
+    eng = Engine(spark, corpus, tokenizer="code")
+    qdf = spark.createDataFrame([(q, t) for q, ts in queries.items() for t in ts],
+                                "query_id string, term string")
+    exp = {(r["query_id"], r["rank"]): (int(r["doc_id"]), round(float(r["score"]), 9))
+           for r in bm25_topk(eng.score(qdf), 10).collect()}
+    assert set(got) == set(exp), f"it{it}: key sets differ"
+    bad = [(k, got[k], exp[k]) for k in got
+           if got[k][0] != exp[k][0] or abs(got[k][1] - exp[k][1]) > 1e-8]
+    assert not bad, f"it{it}: {bad[:5]}"
     docs.unpersist(); shutil.rmtree(idx, ignore_errors=True)
-    print(f"it{it} n={n} seed={seed}: rank-identical both algorithms [{time.time()-t0:.0f}s]", flush=True)
+    print(f"it{it} n={n} seed={seed}: rank-identical to the join scorer [{time.time()-t0:.0f}s]", flush=True)
 print("PASS")
 spark.stop()

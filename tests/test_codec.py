@@ -5,6 +5,7 @@ from hypothesis import given, settings, strategies as st
 
 from elasticsearch_batch_percolator_spark.index.codec import (
     decode_block,
+    decode_positions,
     encode_postings,
     varint_decode,
     varint_encode,
@@ -69,20 +70,33 @@ def test_block_size_boundary():
     )
 )
 def test_decode_term_batched_equals_per_block(postings):
-    """operators/wand._decode_term (one varint pass over all blocks) must
-    reproduce per-block decode_block exactly, across block boundaries."""
-    from elasticsearch_batch_percolator_spark.operators.wand import _decode_term
+    """operators/dsl_index._decode_term (one varint pass over all blocks)
+    must reproduce per-block decode_block + decode_positions exactly,
+    across block boundaries."""
+    from elasticsearch_batch_percolator_spark.operators.dsl_index import _decode_term
 
     postings.sort()
     doc = np.array([p[0] for p in postings], dtype=np.int64)
     tf = np.array([p[1] for p in postings], dtype=np.int64)
     nr = np.array([p[2] for p in postings], dtype=np.float64)
-    blocks = encode_postings(doc, tf, nr, block=7)  # tiny block => many blocks
-    got_doc, got_nr = _decode_term(blocks)
-    exp_doc, exp_nr = [], []
+    # each posting's positions: tf ascending values, offset by its doc id
+    pos = np.concatenate([np.arange(t) * 3 + d % 5 for d, t in zip(doc, tf)])
+    blocks = encode_postings(doc, tf, nr, block=7, positions_flat=pos)  # tiny block => many blocks
+    got_doc, got_nr, got_pos = _decode_term(blocks, positions=True)
+    exp_doc, exp_nr, exp_pos = [], [], []
     for b in blocks:
-        d, _, n = decode_block(b)
+        d, t, n = decode_block(b)
         exp_doc.append(d)
         exp_nr.append(n)
+        flat = decode_positions(b["pos_bytes"], t)
+        bounds = np.concatenate([[0], np.cumsum(t)])
+        exp_pos += [flat[bounds[i] : bounds[i + 1]] for i in range(len(d))]
     assert np.array_equal(got_doc, np.concatenate(exp_doc))
     assert np.array_equal(got_nr, np.concatenate(exp_nr))
+    flat, offsets = got_pos
+    assert len(offsets) == len(exp_pos) + 1
+    for i, p in enumerate(exp_pos):
+        assert np.array_equal(flat[offsets[i] : offsets[i + 1]], p)
+    # without positions, doc ids and norms are unchanged and nothing else decodes
+    assert _decode_term(blocks)[2] is None
+    assert np.array_equal(_decode_term(blocks)[0], got_doc)

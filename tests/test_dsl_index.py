@@ -48,6 +48,8 @@ QUERIES = {
     "wcp": {"wildcard_phrase": {"field": "content",
                                 "producers": [{"term": {"content": "the"}},
                                               {"wildcard": {"content": "f*"}}]}},
+    # filter-only: matches without scoring terms, all scoring 0.0
+    "flt": {"bool": {"filter": [{"term": {"content": "spark"}}]}},
     # boosted scoring through the index path
     "boost": {"bool": {"must": [
         {"term": {"content": {"value": "spark", "boost": 3.0}}},
@@ -190,3 +192,42 @@ def test_dsl_index_empty_expansion(spark, pos_index):
         spark, pos_index, {"q": {"wildcard": {"content": "zzzznope*"}}}, k=5
     )
     assert out.count() == 0
+
+
+@pytest.mark.parametrize("operator", ["topk", "dsl_topk", "phrase"])
+def test_missing_index_raises_file_not_found(spark, tmp_path, operator):
+    from elasticsearch_batch_percolator_spark.operators.phrase_index import (
+        phrase_docs_from_index,
+    )
+    from elasticsearch_batch_percolator_spark.operators.wand import topk_from_index
+
+    missing = str(tmp_path / "no_such_index")
+    call = {
+        "topk": lambda: topk_from_index(spark, missing, {"q": ["spark", "sp*"]}),
+        "dsl_topk": lambda: dsl_topk_from_index(
+            spark, missing, {"q": {"term": {"content": "spark"}}}
+        ),
+        "phrase": lambda: phrase_docs_from_index(spark, missing, ["the", "f*"]),
+    }[operator]
+    with pytest.raises(FileNotFoundError, match="no_such_index"):
+        call()
+
+
+def test_one_per_segment_pass():
+    """The three index query operators share ONE per-segment UDF: exactly
+    one applyInPandas call site across their modules."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(__file__).parent.parent / (
+        "elasticsearch_batch_percolator_spark/operators"
+    )
+    sites = [
+        (name, node.lineno)
+        for name in ("wand.py", "dsl_index.py", "phrase_index.py")
+        for node in ast.walk(ast.parse((ops / name).read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "applyInPandas"
+    ]
+    assert len(sites) == 1, sites

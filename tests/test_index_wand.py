@@ -1,4 +1,4 @@
-"""Index build + resume + block-max WAND rank-identity (SURVEY.md §5 items 4-5)."""
+"""Index build + resume + index top-k rank-identity (SURVEY.md §5 items 4-5)."""
 
 import numpy as np
 import pytest
@@ -10,13 +10,14 @@ from elasticsearch_batch_percolator_spark.index.build import (
     read_manifest,
     read_term_stats,
 )
-from elasticsearch_batch_percolator_spark.operators.wand import (
+from elasticsearch_batch_percolator_spark.operators.dsl_index import (
     _idf,
-    _segment_topk_exhaustive,
-    _segment_topk_wand,
-    topk_from_index,
+    _segment_topk,
+    _Spec,
 )
-from elasticsearch_batch_percolator_spark.index.codec import encode_postings
+from elasticsearch_batch_percolator_spark.operators.wand import topk_from_index
+from elasticsearch_batch_percolator_spark.index.codec import decode_block, encode_postings
+from tests.util_oracle import segment_topk_exhaustive
 
 QUERIES = {
     "q1": ["spark"],
@@ -52,10 +53,9 @@ def test_manifest_and_stats(spark, index_dir, engine):
     assert dfs == expected
 
 
-@pytest.mark.parametrize("algorithm", ["auto", "wand", "exhaustive"])
-def test_rank_identity_vs_join_scorer(spark, index_dir, engine, algorithm):
-    """Index+WAND top-k must equal the always-correct join-based scorer."""
-    got = topk_from_index(spark, index_dir, QUERIES, k=10, algorithm=algorithm)
+def test_rank_identity_vs_join_scorer(spark, index_dir, engine):
+    """Index top-k must equal the always-correct join-based scorer."""
+    got = topk_from_index(spark, index_dir, QUERIES, k=10)
     got_rows = {
         (r["query_id"], r["rank"]): (int(r["doc_id"]), float(r["score"]))
         for r in got.collect()
@@ -78,10 +78,9 @@ def test_rank_identity_vs_join_scorer(spark, index_dir, engine, algorithm):
         assert abs(s - es) < 1e-9, f"{key}: score {s} != {es}"
 
 
-@pytest.mark.parametrize("algorithm", ["auto", "wand", "exhaustive"])
-def test_duplicate_query_terms_score_per_occurrence(spark, index_dir, engine, algorithm):
+def test_duplicate_query_terms_score_per_occurrence(spark, index_dir, engine):
     """A repeated literal query term weights by its multiplicity (Lucene
-    BooleanQuery sums every clause): every index algorithm must agree with
+    BooleanQuery sums every clause): the index scorer must agree with
     the join scorer, which scores per (query_id, term) OCCURRENCE row.
     Mixed queries like [a, a, b] re-rank under qtf weighting, so this
     pins ordering, not just a uniform score scale."""
@@ -93,9 +92,7 @@ def test_duplicate_query_terms_score_per_occurrence(spark, index_dir, engine, al
     }
     got = {
         (r["query_id"], r["rank"]): (int(r["doc_id"]), float(r["score"]))
-        for r in topk_from_index(
-            spark, index_dir, queries, k=10, algorithm=algorithm
-        ).collect()
+        for r in topk_from_index(spark, index_dir, queries, k=10).collect()
     }
     qdf = spark.createDataFrame(
         [(qid, t) for qid, ts in queries.items() for t in ts],
@@ -114,12 +111,9 @@ def test_duplicate_query_terms_score_per_occurrence(spark, index_dir, engine, al
         assert abs(s - es) < 1e-9, f"{key}: score {s} != {es}"
 
 
-@pytest.mark.parametrize("algorithm", ["auto", "wand", "exhaustive"])
-def test_boost_weighted_scoring_rank_identity(spark, index_dir, engine, algorithm):
+def test_boost_weighted_scoring_rank_identity(spark, index_dir, engine):
     """Per-clause boost as a multiplicative term weight (round-5 item):
-    contribution = boost * qtf * idf * norm, identical across the batch,
-    WAND (boost scales the block upper bound, pruning stays exact) and
-    exhaustive algorithms, and equal to the join scorer fed a ``w``
+    contribution = boost * qtf * idf * norm, equal to the join scorer fed a ``w``
     column of qtf * boost per distinct (query, term). Boosts chosen to
     RE-RANK ('the' outweighing 'fox' only when boosted), so this pins
     ordering, not a uniform scale."""
@@ -137,7 +131,7 @@ def test_boost_weighted_scoring_rank_identity(spark, index_dir, engine, algorith
     got = {
         (r["query_id"], r["rank"]): (int(r["doc_id"]), float(r["score"]))
         for r in topk_from_index(
-            spark, index_dir, queries, k=10, algorithm=algorithm, boosts=boosts
+            spark, index_dir, queries, k=10, boosts=boosts
         ).collect()
     }
     from collections import Counter
@@ -161,7 +155,11 @@ def test_boost_weighted_scoring_rank_identity(spark, index_dir, engine, algorith
 
 
 def test_wand_equals_exhaustive_random():
-    """Property: BMW pruning never changes the result (random postings)."""
+    """Property: the per-segment kernel (decode once, per-occurrence
+    accumulation, rounded k-cut) equals the block-by-block exhaustive
+    oracle on random postings, with repeated and boosted occurrences and
+    with candidates restricted by a second gate group or by a gate alone
+    (candidates no scoring term holds score 0.0)."""
     rng = np.random.default_rng(42)
     for trial in range(20):
         n_terms = rng.integers(1, 5)
@@ -173,11 +171,32 @@ def test_wand_equals_exhaustive_random():
             norms = rng.uniform(0.05, 2.2, n_docs)
             term_blocks[f"t{t}"] = encode_postings(doc_ids, tfs, norms, block=32)
             idfs[f"t{t}"] = _idf(5000, n_docs)
+        occ = [
+            (str(t), float(rng.choice([1.0, 0.5, 3.0])))
+            for t in rng.choice(sorted(term_blocks), size=int(rng.integers(1, 6)))
+        ]
+        scored = sorted({t for t, _ in occ})
+        weights = {t: sum(m * idfs[t] for u, m in occ if u == t) for t in scored}
+        gate = str(rng.choice(sorted(term_blocks)))
+
+        def docs_of(terms):
+            return {
+                d for t in terms for b in term_blocks[t] for d in decode_block(b)[0].tolist()
+            }
+
+        cases = [
+            ([scored], None),
+            ([scored, [gate]], docs_of(scored) & docs_of([gate])),
+            ([[gate]], docs_of([gate])),
+        ]
         for k in (1, 5, 50):
-            a = _segment_topk_wand(term_blocks, idfs, k)
-            b = _segment_topk_exhaustive(term_blocks, idfs, k)
-            assert [d for d, _ in a] == [d for d, _ in b], f"trial={trial} k={k}"
-            assert np.allclose([s for _, s in a], [s for _, s in b], atol=1e-12)
+            for groups, cand in cases:
+                got = _segment_topk(term_blocks, {"q": _Spec(groups, occ)}, idfs, k)
+                exp = segment_topk_exhaustive(
+                    {t: term_blocks[t] for t in scored}, weights, k, docs=cand
+                )
+                assert [d for _, d, _ in got] == [d for d, _ in exp], f"trial={trial} k={k}"
+                assert np.allclose([s for _, _, s in got], [s for _, s in exp], atol=1e-12)
 
 
 def test_resume_from_partial_build(spark, sf_dir, tmp_path):
@@ -247,17 +266,8 @@ def test_sparse_doc_id_segmentation(spark, tmp_path):
 
 def test_local_kcut_rounding_tie_break():
     """The ADVICE r1 scenario: a doc cut locally by a sub-1e-4 raw-score
-    margin that TIES after rounding must win on doc_id. All three segment
-    scorers rank their local cut on (rounded score, doc_id)."""
-    import numpy as np
-
-    from elasticsearch_batch_percolator_spark.index.codec import encode_postings
-    from elasticsearch_batch_percolator_spark.operators.wand import (
-        _segment_topk_batch,
-        _segment_topk_exhaustive,
-        _segment_topk_wand,
-    )
-
+    margin that TIES after rounding must win on doc_id. The kernel and the
+    oracle both rank their local cut on (rounded score, doc_id)."""
     # norms chosen so raw scores (idf=1 single term) are:
     # doc 5 -> 1.000044, doc 9 -> 1.000042, doc 2 -> 1.000035
     # rounded to 4 dp ALL become 1.0 -> the k=2 winners by doc_id are 2, 5
@@ -269,14 +279,11 @@ def test_local_kcut_rounding_tie_break():
     tb = {"t": blocks}
     idfs = {"t": 1.0}
 
-    got_batch = [
-        d for _, d, _ in _segment_topk_batch(tb, {"q": ["t"]}, idfs, 2, round_to=4)
-    ]
-    got_exh = [d for d, _ in _segment_topk_exhaustive(tb, idfs, 2, round_to=4)]
-    got_wand = [d for d, _ in _segment_topk_wand(tb, idfs, 2, round_to=4)]
-    assert got_batch == [2, 5]
+    spec = {"q": _Spec([["t"]], [("t", 1.0)])}
+    got_kernel = [d for _, d, _ in _segment_topk(tb, spec, idfs, 2, round_to=4)]
+    got_exh = [d for d, _ in segment_topk_exhaustive(tb, idfs, 2, round_to=4)]
+    assert got_kernel == [2, 5]
     assert got_exh == [2, 5]
-    assert got_wand == [2, 5]
     # sanity: WITHOUT rounding the raw order would have been 5, 9
-    raw = [d for d, _ in _segment_topk_exhaustive(tb, idfs, 2, round_to=None)]
+    raw = [d for d, _ in segment_topk_exhaustive(tb, idfs, 2, round_to=None)]
     assert raw == [5, 9]

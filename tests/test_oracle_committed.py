@@ -69,13 +69,12 @@ def test_wand_rank_identity(spark, expected, tmp_path):
     eng = Engine.from_documents(spark, SF)
     idx = str(tmp_path / "idx")
     build_index(spark, eng.docs.select("doc_id", "tokens"), idx, n_segments=4)
-    for algorithm in ("auto", "wand"):
-        got = {
-            (r["query_id"], r["rank"]): (int(r["doc_id"]), float(r["score"]))
-            for r in topk_from_index(spark, idx, QUERIES, k=10, algorithm=algorithm).collect()
-        }
-        assert set(got) == set(expected)
-        for key, (d, s) in expected.items():
-            gd, gs = got[key]
-            assert gd == d, f"{algorithm} {key}: doc {gd} != oracle {d}"
-            assert abs(gs - s) < 1e-9, f"{algorithm} {key}: score {gs} != {s}"
+    got = {
+        (r["query_id"], r["rank"]): (int(r["doc_id"]), float(r["score"]))
+        for r in topk_from_index(spark, idx, QUERIES, k=10).collect()
+    }
+    assert set(got) == set(expected)
+    for key, (d, s) in expected.items():
+        gd, gs = got[key]
+        assert gd == d, f"{key}: doc {gd} != oracle {d}"
+        assert abs(gs - s) < 1e-9, f"{key}: score {gs} != {s}"
