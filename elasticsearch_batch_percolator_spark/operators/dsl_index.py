@@ -36,12 +36,16 @@ rows are collected — the reference's automaton walk over the index terms,
 WildcardTermsProducer.java:26-53). Expansion happens BEFORE planning, so
 gates, verification and scoring all see literal terms only.
 
-Execution shape (the 100 TB question): ONE parquet scan covers every
-query's vocabulary (``PushedFilters: In(term, ...)``), segments verify and
-score independently in parallel (applyInPandas over groupBy(segment_id)),
-the driver never sees a posting, and the only data movement is the
+Execution shape (the 100 TB question): ONE dictionary lookup per batch
+(``_lookup``: one ``term_stats`` scan on ``term IN (literals) OR <atom
+predicates>`` yields both the expansions and every scoring term's df),
+then ONE postings scan covers every query's vocabulary
+(``PushedFilters: In(term, ...)``), segments verify and score
+independently in parallel (applyInPandas over groupBy(segment_id)), the
+driver never sees a posting, and the only data movement is the
 (n_segments x k) local-top-k rows into the final window — the same merge
 the reference does across shards (TransportBatchPercolateAction:94-143).
+Both reads declare their schema, so neither runs a schema-inference job.
 Python evaluation touches only gate-surviving candidates, the same
 boundary the reference draws for its phase 2.
 
@@ -61,7 +65,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..index.build import IndexManifest, read_manifest, read_postings, read_term_stats
+from ..index.build import (
+    IndexManifest,
+    in_collection,
+    read_manifest,
+    read_postings,
+    term_stats_table,
+)
 from ..index.codec import decode_positions, varint_decode
 from ..plans.compiler import DEFAULT_FIELD, compile_query
 from ..plans.eval_py import eval_plan, fuzzy_pred, regexp_regex, wildcard_regex
@@ -323,16 +333,17 @@ def _run(
     index_dir: str,
     n_docs: int,
     specs: dict[str, _Spec],
+    dfs: dict[str, int],
     k: int | None,
     round_to: int | None,
 ) -> DataFrame:
-    """Answer every spec in one pass over the index: one term-stats lookup
-    for the scoring terms' idf, ONE postings scan over the whole
-    vocabulary, one applyInPandas over the segments, then (for top-k) the
-    global merge — a window over the n_segments*k local survivors.
-    ``k=None`` returns every segment's (query_id, doc_id, score) rows."""
+    """Answer every spec in one pass over the index: ONE postings scan over
+    the whole vocabulary, one applyInPandas over the segments, then (for
+    top-k) the global merge — a window over the n_segments*k local
+    survivors. ``dfs`` is the front end's dictionary lookup (``_lookup``);
+    a scoring term it lacks has df 0. ``k=None`` returns every segment's
+    (query_id, doc_id, score) rows."""
     scored = sorted({t for s in specs.values() for t, _ in s.occ})
-    dfs = read_term_stats(spark, index_dir, scored) if scored else {}
     idfs = {t: _idf(n_docs, dfs.get(t, 0)) for t in scored}
     vocab = set(scored)
     for s in specs.values():
@@ -395,19 +406,30 @@ def _collect_multiterm(plan: Plan, out: dict) -> None:
             _collect_multiterm(p, out)
 
 
-def _expand_from_index(
-    spark: SparkSession, index_dir: str, atoms: dict
-) -> dict[tuple, list[str]]:
-    """Each multi-term atom -> sorted matching dictionary terms.
+def _lookup(
+    spark: SparkSession, index_dir: str, plans, literals: bool = True
+) -> tuple[dict[tuple, list[str]], dict[str, int]]:
+    """The batch's ONE dictionary scan: (each multi-term atom of ``plans``
+    -> sorted matching dictionary terms, term -> df).
 
-    One scan of ``term_stats`` with every atom's predicate OR-ed and pushed
-    into the parquet scan; only rows matching >=1 atom come back, then each
-    atom confirms its own matches driver-side (the per-atom split). The
-    dictionary is the set of ALL corpus terms, so expansion is EXHAUSTIVE —
-    replacing an atom by its expansion set is an exact rewrite.
+    ``term_stats`` is filtered on ``term IN (the plans' literals)`` OR-ed
+    with every atom's predicate, pushed into the parquet scan; each row
+    comes back with its df and a flag saying whether >=1 atom predicate
+    held, and each atom confirms its own flagged matches driver-side (the
+    per-atom split). The dictionary is the set of ALL corpus terms, so
+    expansion is EXHAUSTIVE — replacing an atom by its expansion set is an
+    exact rewrite — and the df map covers every literal and expansion term
+    the plans can score; a term it lacks is in no document (df 0).
+    ``literals=False`` (an unscored batch) looks up the atoms only.
     """
-    if not atoms:
-        return {}
+    atoms: dict = {}
+    lits: set = set()
+    for p in plans:
+        _collect_multiterm(p, atoms)
+        if literals:
+            _literal_terms(p, lits)
+    if not atoms and not lits:
+        return {}, {}
     term = F.col("term")
     preds = []
     for key in atoms:
@@ -421,13 +443,14 @@ def _expand_from_index(
             preds.append(p)
         else:  # regexp
             preds.append(term.rlike("^(?:" + key[1] + ")$"))
-    cand = [
-        r["term"]
-        for r in spark.read.parquet(f"{index_dir}/term_stats")
-        .select("term")
-        .filter(functools.reduce(lambda a, b: a | b, preds))
+    pattern = functools.reduce(lambda a, b: a | b, preds) if preds else F.lit(False)
+    rows = (
+        term_stats_table(spark, index_dir)
+        .filter(in_collection(term, sorted(lits)) | pattern)
+        .select("term", "df", pattern.alias("pattern"))
         .collect()
-    ]
+    )
+    cand = [r["term"] for r in rows if r["pattern"]]
     out: dict[tuple, list[str]] = {}
     for key in atoms:
         if key[0] == "w":
@@ -440,7 +463,7 @@ def _expand_from_index(
         else:
             rx = regexp_regex(key[1])
             out[key] = sorted(t for t in cand if rx.fullmatch(t))
-    return out
+    return out, {r["term"]: int(r["df"]) for r in rows}
 
 
 def _atom_key(plan: Plan) -> tuple:
@@ -506,12 +529,16 @@ def _transform(plan: Plan, exp: dict, in_span: bool = False) -> Plan:
 
 
 def _literal_terms(plan: Plan, out: set) -> None:
-    """Every literal the transformed plan can reference (incl. must_not —
-    verification must SEE a negated term to exclude its docs)."""
+    """Every literal the plan can reference (incl. must_not — verification
+    must SEE a negated term to exclude its docs). Multi-term atoms add
+    nothing: after ``_transform`` they are literals themselves."""
     if isinstance(plan, (Term, SpanTerm)):
         out.add(plan.value)
     elif isinstance(plan, Phrase):
         out.update(plan.terms)
+    elif isinstance(plan, WildcardPhrase):
+        for p in plan.producers:
+            _literal_terms(p, out)
     elif isinstance(plan, Bool):
         for g in (plan.must, plan.should, plan.must_not, plan.filter):
             for c in g:
@@ -555,30 +582,30 @@ def _gate_groups(plan: Plan) -> list[list[str]]:
 
 
 def _dsl_specs(
-    spark: SparkSession, index_dir: str, plans: dict[str, Plan]
-) -> dict[str, _Spec]:
-    """Expand every multi-term atom in one dictionary scan, then compile
-    each plan to its spec; a plan whose expansion matches nothing (e.g. a
-    wildcard no index term fits) has no spec."""
-    atoms: dict = {}
-    for p in plans.values():
-        _collect_multiterm(p, atoms)
-    exp = _expand_from_index(spark, index_dir, atoms)
+    spark: SparkSession, index_dir: str, plans: dict[str, Plan], scored: bool = True
+) -> tuple[dict[str, _Spec], dict[str, int]]:
+    """(specs, term -> df) from one dictionary lookup: expand every
+    multi-term atom, then compile each plan to its spec; a plan whose
+    expansion matches nothing (e.g. a wildcard no index term fits) has no
+    spec. ``scored=False`` builds specs with no scoring occurrences and
+    skips the literals' df lookup."""
+    exp, dfs = _lookup(spark, index_dir, plans.values(), literals=scored)
     specs: dict[str, _Spec] = {}
     for qid, p in plans.items():
         pt = _transform(p, exp)
         if isinstance(pt, MatchNone):
             continue
         w: dict[str, float] = {}
-        for (_f, t), wt in positive_term_weights(pt).items():
-            w[t] = w.get(t, 0.0) + wt
+        if scored:
+            for (_f, t), wt in positive_term_weights(pt).items():
+                w[t] = w.get(t, 0.0) + wt
         specs[qid] = _Spec(
             _gate_groups(pt),
             list(w.items()),
             plan=pt if _needs_verify(pt) else None,
             fields=tuple(sorted(fields_of(pt))) or (DEFAULT_FIELD,),
         )
-    return specs
+    return specs, dfs
 
 
 def dsl_topk_from_index(
@@ -601,4 +628,5 @@ def dsl_topk_from_index(
         qid: q if isinstance(q, Plan) else compile_query(q)
         for qid, q in queries.items()
     }
-    return _run(spark, index_dir, n_docs, _dsl_specs(spark, index_dir, compiled), k, round_to)
+    specs, dfs = _dsl_specs(spark, index_dir, compiled)
+    return _run(spark, index_dir, n_docs, specs, dfs, k, round_to)

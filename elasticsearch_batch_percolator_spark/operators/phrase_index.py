@@ -11,8 +11,6 @@ two-phase.
 
 from __future__ import annotations
 
-from dataclasses import replace
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.compiler import DEFAULT_FIELD
@@ -37,12 +35,9 @@ def phrase_docs_from_index(
     else:
         plan = Phrase(DEFAULT_FIELD, tuple(terms))
     # every verified doc, unscored: no scoring occurrences and no k-cut
-    specs = {
-        qid: replace(s, occ=[])
-        for qid, s in _dsl_specs(spark, index_dir, {"phrase": plan}).items()
-    }
+    specs, _ = _dsl_specs(spark, index_dir, {"phrase": plan}, scored=False)
     return (
-        _run(spark, index_dir, n_docs, specs, None, None)
+        _run(spark, index_dir, n_docs, specs, {}, None, None)
         .select("doc_id")
         .dropDuplicates(["doc_id"])
     )

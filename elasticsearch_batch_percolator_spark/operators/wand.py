@@ -15,9 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.query_plan import Wildcard
 from .dsl_index import (
-    _collect_multiterm,
-    _expand_from_index,
     _literal_terms,
+    _lookup,
     _manifest,
     _run,
     _Spec,
@@ -54,17 +53,14 @@ def topk_from_index(
     Boost keys are LITERAL terms — a wildcard pattern's expanded terms
     score unboosted.
 
-    One parquet scan covers all queries' terms (IN-list pushdown); each
-    segment scores every query locally; global top-k is a window over
-    n_segments*k survivors.
+    One dictionary scan finds every term's df and every pattern's
+    expansion, one postings scan covers all queries' terms (IN-list
+    pushdown); each segment scores every query locally; global top-k is a
+    window over n_segments*k survivors.
     """
     n_docs = _manifest(index_dir).n_docs
     plans = {qid: [_term_plan(t) for t in ts] for qid, ts in queries.items()}
-    atoms: dict = {}
-    for ps in plans.values():
-        for p in ps:
-            _collect_multiterm(p, atoms)
-    exp = _expand_from_index(spark, index_dir, atoms)
+    exp, dfs = _lookup(spark, index_dir, [p for ps in plans.values() for p in ps])
     specs = {}
     for qid, ps in plans.items():
         terms = list(queries[qid])
@@ -75,4 +71,4 @@ def topk_from_index(
             terms = sorted(lits)
         bq = (boosts or {}).get(qid) or {}
         specs[qid] = _Spec([sorted(set(terms))], [(t, float(bq.get(t, 1.0))) for t in terms])
-    return _run(spark, index_dir, n_docs, specs, k, round_to)
+    return _run(spark, index_dir, n_docs, specs, dfs, k, round_to)

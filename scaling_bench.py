@@ -464,6 +464,8 @@ def main() -> None:
             eff = report["efficiency"].get(
                 name, report["efficiency"].get(name.replace("_tasks_per_sec", ""))
             )
+            if eff is None:
+                eff = "—"  # no efficiency entry for this row
             lines.append(
                 f"| {name} | {thr[str(lo)]} | {thr[str(hi)]} | "
                 f"{eff}{cpu_note} |"

@@ -18,6 +18,9 @@ base = random.Random(int(os.environ.get("META_SEED", "1122")))
 t0 = time.time()
 FIELDS = {"f1": "f1", "f2": "f2", "num": ("num", "numeric"), "kids": ("kids", "nested")}
 RESOLVE = {"f1": "f1", "f2": "f2"}  # token columns (num/kids not scored)
+# the model sums w * bm25 per (field, term) key: two fields sharing one token
+# column would weight that column's term once per field, not once
+assert len(set(RESOLVE.values())) == len(RESOLVE), "RESOLVE must be injective"
 
 for it in range(6):
     seed = base.randrange(1 << 63)

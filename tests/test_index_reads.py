@@ -1,0 +1,156 @@
+"""Index reads: declared schemas and term filters.
+
+Every ``postings`` and ``term_stats`` read declares its schema instead of
+inferring it, so the declared schemas must keep matching what the writers
+put on disk. Term filters are built with one ``isInCollection`` call and
+the dictionary lookup ORs literals with pattern predicates; both must
+carry terms with quotes, backslashes, LIKE metacharacters and non-ASCII
+text through unchanged, and an empty term list must select nothing.
+"""
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from elasticsearch_batch_percolator_spark.engine import Engine
+from elasticsearch_batch_percolator_spark.index.build import (
+    POSTINGS_SCHEMA,
+    TERM_STATS_SCHEMA,
+    build_index,
+    read_postings,
+    read_term_stats,
+)
+from elasticsearch_batch_percolator_spark.operators.bm25 import bm25_topk
+from elasticsearch_batch_percolator_spark.operators.dsl_index import dsl_topk_from_index
+from elasticsearch_batch_percolator_spark.operators.wand import topk_from_index
+from elasticsearch_batch_percolator_spark.plans.eval_py import wildcard_regex
+from tests.test_dsl_index import _expected
+
+TEXTS = [
+    "it's a\\b 100% foo_bar café",
+    "it's it's naïve 日本 'quoted' a%b",
+    "a\\b a\\\\b foo_bar foo%bar 100%",
+    "café cafe caf_ naïve naive",
+    "'quoted' \"dq\" x_y x%y 日本語",
+    "plain words only here",
+    "it''s a_b 100%% ü",
+    "foo_bar foo_bar café 'quoted'",
+]
+ODD = ["it's", "a\\b", "a\\\\b", "100%", "foo_bar", "foo%bar", "café", "naïve",
+       "日本", "'quoted'", '"dq"', "a%b", "x_y", "it''s", "ü"]
+
+
+@pytest.fixture(scope="module")
+def odd(spark, tmp_path_factory):
+    corpus = spark.createDataFrame(list(enumerate(TEXTS)), "doc_id long, content string")
+    eng = Engine(spark, corpus, tokenizer="ws")
+    out = str(tmp_path_factory.mktemp("oddidx"))
+    build_index(spark, eng.docs.select("doc_id", "tokens"), out, n_segments=3, positions=True)
+    return eng, out
+
+
+def _fields(schema: T.StructType) -> list[tuple[str, T.DataType]]:
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+@pytest.mark.parametrize("positions", [True, False])
+def test_declared_schemas_match_inferred(spark, tmp_path, positions):
+    rows = [(i, ["a", "b", "a", "c%d" % (i % 3)]) for i in range(20)]
+    docs = spark.createDataFrame(rows, "doc_id long, tokens array<string>")
+    out = str(tmp_path / "ix")
+    build_index(spark, docs, out, n_segments=2, positions=positions)
+    inferred = spark.read.parquet(os.path.join(out, "postings")).schema
+    assert _fields(inferred) == _fields(POSTINGS_SCHEMA)
+    inferred = spark.read.parquet(os.path.join(out, "term_stats")).schema
+    assert _fields(inferred) == _fields(TERM_STATS_SCHEMA)
+
+
+def test_read_term_stats_odd_terms(spark, odd):
+    eng, idx = odd
+    want = {
+        r["term"]: int(r["df"])
+        for r in eng.dfreq.filter(F.col("term").isin(ODD)).collect()
+    }
+    assert set(want) == set(ODD)
+    assert read_term_stats(spark, idx, ODD + ["it'", "a\\", "10%"]) == want
+    assert read_postings(spark, idx, ODD).select("term").distinct().count() == len(want)
+
+
+def test_empty_term_lists_select_nothing(spark, odd):
+    _, idx = odd
+    assert read_term_stats(spark, idx, []) == {}
+    assert read_postings(spark, idx, []).count() == 0
+    assert topk_from_index(spark, idx, {"q": []}).count() == 0
+    assert topk_from_index(spark, idx, {}).count() == 0
+    assert dsl_topk_from_index(spark, idx, {}).count() == 0
+
+
+def test_topk_odd_terms_match_join_scorer(spark, odd):
+    eng, idx = odd
+    vocab = sorted({t for r in eng.docs.select("tokens").collect() for t in r["tokens"]})
+    queries = {
+        "lit": ["it's", "a\\b", "100%", "日本"],
+        "lit2": ["foo_bar", "'quoted'", "naïve", "missing'"],
+        "wc_us": ["foo_*"],
+        "wc_pct": ["foo%*", "100*", "x?y"],
+        "wc_bs": ["a\\*"],
+        "wc_uni": ["caf?", "日*"],
+        "wc_q": ["'*'", "it?s"],
+    }
+    rows = []
+    for q, ts in queries.items():
+        if any("*" in t or "?" in t for t in ts):
+            # a pattern-bearing query scores the union of its terms once each
+            terms = {t for p in ts for t in vocab if wildcard_regex(p).match(t)}
+            rows += [(q, t) for t in sorted(terms)]
+        else:
+            rows += [(q, t) for t in ts]
+    qdf = spark.createDataFrame(rows, "query_id string, term string")
+    want = {
+        (r["query_id"], int(r["rank"])): (int(r["doc_id"]), float(r["score"]))
+        for r in bm25_topk(eng.score(qdf), 5).collect()
+    }
+    got = {
+        (r["query_id"], int(r["rank"])): (int(r["doc_id"]), float(r["score"]))
+        for r in topk_from_index(spark, idx, queries, k=5).collect()
+    }
+    assert {q for q, _ in got} == set(queries)
+    assert got.keys() == want.keys()
+    for key, (doc, score) in got.items():
+        assert doc == want[key][0], key
+        assert abs(score - want[key][1]) < 1e-9, key
+
+
+@pytest.mark.parametrize(
+    "dsl",
+    [
+        {"term": {"content": "it's"}},
+        {"bool": {"should": [{"term": {"content": "a\\b"}},
+                             {"term": {"content": "100%"}},
+                             {"term": {"content": "日本"}}]}},
+        {"bool": {"must": [{"wildcard": {"content": "foo_*"}}],
+                  "must_not": [{"term": {"content": "café"}}]}},
+        {"wildcard": {"content": "'*"}},
+        {"wildcard": {"content": "a\\*"}},
+        {"phrase": {"field": "content", "terms": ["it's", "naïve"]}},
+        {"wildcard_phrase": {"field": "content",
+                             "producers": [{"term": {"content": "foo_bar"}},
+                                           {"wildcard": {"content": "caf*"}}]}},
+    ],
+    ids=["quote", "bs_pct_uni", "wc_underscore", "wc_quote", "wc_backslash",
+         "phrase", "wc_phrase"],
+)
+def test_dsl_topk_odd_terms_match_engine(spark, odd, dsl):
+    eng, idx = odd
+    got = {
+        int(r["doc_id"]): (int(r["rank"]), float(r["score"]))
+        for r in dsl_topk_from_index(spark, idx, {"q": dsl}, k=10).collect()
+    }
+    exp = _expected(spark, eng, dsl)
+    assert exp, "the fixture must give every query a match"
+    assert set(got) == set(exp)
+    for d, (rk, sc) in got.items():
+        assert rk == exp[d][0], d
+        assert abs(sc - exp[d][1]) < 1e-9, d
