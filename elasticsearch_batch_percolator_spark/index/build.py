@@ -22,8 +22,13 @@ Scale properties:
 - the shuffle is ONE repartition of DOC rows by segment (~corpus bytes on
   the wire — token-level rows would triple that); each task then builds its
   whole segments locally: numpy tf-count + (term, doc) lexsort + run
-  grouping + block encode in a single Arrow pass. Parquet min/max row-group
-  stats on the term-sorted output give term-lookup pruning at read time.
+  grouping in a single Arrow pass, then ``codec.encode_segment``. Parquet
+  min/max row-group stats on the term-sorted output give term-lookup
+  pruning at read time.
+- one codec, one writer: build, append and compaction all encode through
+  ``codec.encode_segment`` (compaction first decodes its source blocks
+  with ``codec.decode_stream``), and all three write through
+  ``_write_postings``. The block layout itself lives in ``codec.py`` only.
 - parallelism = n_segments (tasks >> cores is the sizing rule: pick
   n_segments ≈ 4×cores or corpus_bytes / ~1 GiB, whichever is larger).
 - resume: Spark dynamic partition overwrite rewrites only the segments
@@ -48,7 +53,6 @@ import time
 from dataclasses import asdict, dataclass, field
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -56,24 +60,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import BM25_B, BM25_K1
-from .codec import BLOCK, encode_postings, varint_encode_lens
+from .codec import BLOCK, BLOCKS_TYPE, decode_stream, encode_segment
 
-BLOCKS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("max_doc", T.LongType()),
-            T.StructField("max_norm", T.DoubleType()),
-            T.StructField("n", T.IntegerType()),
-            T.StructField("doc_bytes", T.BinaryType()),
-            T.StructField("tf_bytes", T.BinaryType()),
-            T.StructField("norm_bytes", T.BinaryType()),
-            T.StructField("pos_bytes", T.BinaryType()),
-        ]
-    )
-)
-
-#: one row per (segment, term), as the encoders and the compaction merge
-#: emit them; ``segment_id`` becomes the ``postings`` partition directory
+#: one row per (segment, term), as the build encoder and the compaction
+#: merge emit them; ``segment_id`` becomes the ``postings`` partition directory
 SEGMENT_SCHEMA = T.StructType(
     [
         T.StructField("segment_id", T.IntegerType()),
@@ -161,292 +151,125 @@ def read_manifest(out_dir: str) -> IndexManifest | None:
         return IndexManifest(**json.load(f))
 
 
-def _write_segments(
-    spark: SparkSession,
-    staged: DataFrame,
-    out_dir: str,
-    seg_ids: list[int],
-    manifest: IndexManifest,
-    *,
-    encoder: str,
-    stage: dict,
-    t_start: float,
-    save: bool = True,
-) -> None:
-    """Encode ``staged`` (segment_id, doc_id, tokens) rows into compressed
-    posting segments and record per-segment metrics into the manifest.
-    Shared by build_index and append_index; every scoring stat (avgdl, k1,
-    b, block, positions) comes from the manifest — FROZEN at first build so
-    resumed and appended segments score on the same scale.
+def _segment_tables(batches):
+    """A partition's Arrow batches → ``(segment id, that segment's rows as
+    one Table)`` in id order. Inputs are hash-partitioned on segment_id, so
+    a partition holds whole segments only (two segments may share one,
+    never split across two) and each table is the complete segment."""
+    per_seg: dict[int, list] = {}
+    for rb in batches:
+        seg = rb.column("segment_id")
+        for s in pc.unique(seg).to_pylist():
+            per_seg.setdefault(s, []).append(rb.filter(pc.equal(seg, s)))
+    for s in sorted(per_seg):
+        yield s, pa.Table.from_batches(per_seg[s])
 
-    ``save=False`` (the append path) leaves the on-disk manifest untouched:
-    the caller saves once, AFTER updating n_segments/n_docs, so a failed
-    append leaves a clean pre-append manifest and a re-run deterministically
-    overwrites the same segment ids."""
+
+def _rank_terms(strings) -> tuple[np.ndarray, pa.Array]:
+    """Arrow term strings → (each string's lexicographic rank, the sorted
+    distinct terms). ``dictionary_encode`` runs in C++, so no string
+    becomes a python object; UTF-8 byte order is code-point order, so the
+    ranks sort exactly as python str comparison does."""
+    enc = pc.dictionary_encode(strings)
+    chunks = enc.chunks if isinstance(enc, pa.ChunkedArray) else [enc]
+    if len(chunks) > 1 and not all(
+        c.dictionary.equals(chunks[0].dictionary) for c in chunks[1:]
+    ):
+        # kernel didn't unify dictionaries across chunks — force it
+        chunks = [pc.dictionary_encode(strings.combine_chunks())]
+    dictionary = chunks[0].dictionary
+    codes = np.concatenate(
+        [c.indices.to_numpy(zero_copy_only=False) for c in chunks]
+    ).astype(np.int64)
+    si = pc.sort_indices(dictionary).to_numpy(zero_copy_only=False).astype(np.int64)
+    rank = np.empty(len(si), dtype=np.int64)
+    rank[si] = np.arange(len(si))
+    return rank[codes], pc.take(dictionary, pa.array(si))
+
+
+def _segment_batch(s, terms, rank, doc, tf, norm, positions, block) -> pa.RecordBatch:
+    """One segment's postings, sorted by (term rank, doc), → its posting
+    rows (``SEGMENT_SCHEMA``) through ``codec.encode_segment``; ``terms``
+    are the sorted distinct terms ``rank`` indexes."""
+    t_starts, df, cf, blocks = encode_segment(rank, doc, tf, norm, positions, block)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.full(len(t_starts), s, dtype=np.int32)),
+            pc.take(terms, pa.array(rank[t_starts])),
+            pa.array(df, pa.int64()),
+            pa.array(cf, pa.int64()),
+            blocks,
+        ],
+        names=SEGMENT_SCHEMA.names,
+    )
+
+
+def _encode_docs(staged: DataFrame, manifest: IndexManifest) -> DataFrame:
+    """(segment_id, doc_id, tokens) rows → posting rows, one Arrow pass
+    per partition. Every scoring stat (avgdl, k1, b, block, positions)
+    comes from the manifest — FROZEN at first build so resumed and
+    appended segments score on the same scale.
+
+    Per segment: term ranks (``_rank_terms``), ONE stable int lexsort by
+    (term, doc) whose runs are the postings' tf groups (positions stay
+    ascending within a run), norms, then ``codec.encode_segment``."""
     avgdl, k1, b = manifest.avgdl, manifest.k1, manifest.b
     block, positions = manifest.block, bool(manifest.positions)
 
-    def encode_segments(batches):
-        # accumulate the partition's doc rows per segment (a partition
-        # holds only whole segments — same key, same partition)
-        per_seg: dict[int, list] = {}
-        for pdf in batches:
-            for s, grp in pdf.groupby("segment_id"):
-                per_seg.setdefault(int(s), []).append(
-                    (grp["doc_id"].to_numpy(), grp["tokens"])
-                )
-        for s in sorted(per_seg):
-            doc_arrs, tok_lists = [], []
-            for doc_ids, toks in per_seg[s]:
-                doc_arrs.append(doc_ids)
-                tok_lists.extend(np.asarray(t) for t in toks)
-            doc_ids = np.concatenate(doc_arrs)
-            counts = np.fromiter(
-                (len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists)
+    def encode(batches):
+        for s, t in _segment_tables(batches):
+            toks = t["tokens"]
+            counts = (
+                pc.fill_null(pc.list_value_length(toks), 0)
+                .to_numpy()
+                .astype(np.int64)
             )
-            keep = counts > 0
-            if not keep.any():
+            if not (counts > 0).any():
                 continue
-            # flat occurrence arrays: token, its doc, its in-doc position
-            flat_tok = np.concatenate([t for t, k in zip(tok_lists, keep) if k])
-            flat_doc = np.repeat(doc_ids[keep], counts[keep])
-            flat_dl = np.repeat(counts[keep], counts[keep])
-            if positions:
-                flat_pos = np.concatenate(
-                    [np.arange(c, dtype=np.int64) for c in counts[keep]]
+            flat = pc.list_flatten(toks)
+            if flat.null_count:
+                # fail loudly: a null would rank as a garbage term code
+                raise ValueError(
+                    "null token elements are not indexable — drop or "
+                    "replace nulls in the tokens array before build_index"
                 )
-            # ONE stable lexsort by (term, doc): runs of equal (term,
-            # doc) are the postings' tf groups; positions stay ascending
-            # within each run (stability + ascending original order)
-            order = np.lexsort((flat_doc, flat_tok))
-            flat_tok = flat_tok[order]
-            flat_doc = flat_doc[order]
-            flat_dl = flat_dl[order]
-            if positions:
-                flat_pos = flat_pos[order]
+            rank, terms = _rank_terms(flat)
+            doc_ids = t["doc_id"].to_numpy()
+            flat_doc = np.repeat(doc_ids, counts)
+            order = np.lexsort((flat_doc, rank))
+            rank, flat_doc = rank[order], flat_doc[order]
+            flat_dl = np.repeat(counts, counts)[order]
             pair_change = np.flatnonzero(
-                (flat_tok[1:] != flat_tok[:-1]) | (flat_doc[1:] != flat_doc[:-1])
+                (rank[1:] != rank[:-1]) | (flat_doc[1:] != flat_doc[:-1])
             )
             p_starts = np.concatenate([[0], pair_change + 1])
-            p_ends = np.concatenate([pair_change + 1, [len(flat_tok)]])
-            term = flat_tok[p_starts]
-            doc = flat_doc[p_starts]
-            tf = (p_ends - p_starts).astype(np.int64)
-            dlv = flat_dl[p_starts]
-            norm = (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dlv / avgdl))
-            # term runs over the (term, doc) rows
-            t_change = np.flatnonzero(term[1:] != term[:-1])
-            t_starts = np.concatenate([[0], t_change + 1])
-            t_ends = np.concatenate([t_change + 1, [len(term)]])
-            terms_out, dfs_out, cfs_out, blocks_out = [], [], [], []
-            for ts, te in zip(t_starts, t_ends):
-                gpos = None
-                if positions:
-                    gpos = flat_pos[p_starts[ts] : p_ends[te - 1]]
-                terms_out.append(term[ts])
-                dfs_out.append(int(te - ts))
-                cfs_out.append(int(tf[ts:te].sum()))
-                blocks_out.append(
-                    encode_postings(
-                        doc[ts:te], tf[ts:te], norm[ts:te],
-                        block=block, positions_flat=gpos,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "segment_id": np.full(len(terms_out), s, dtype=np.int32),
-                    "term": terms_out,
-                    "df": dfs_out,
-                    "cf": cfs_out,
-                    "blocks": blocks_out,
-                }
+            tf = np.diff(np.concatenate([p_starts, [len(rank)]])).astype(np.int64)
+            dl = flat_dl[p_starts]
+            norm = (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+            pos = None
+            if positions:
+                run_off = np.repeat(np.cumsum(counts) - counts, counts)
+                pos = (np.arange(len(run_off), dtype=np.int64) - run_off)[order]
+            yield _segment_batch(
+                s, terms, rank[p_starts], flat_doc[p_starts], tf, norm, pos, block
             )
 
-    _BLOCK_PA = pa.struct(
-        [
-            ("max_doc", pa.int64()),
-            ("max_norm", pa.float64()),
-            ("n", pa.int32()),
-            ("doc_bytes", pa.binary()),
-            ("tf_bytes", pa.binary()),
-            ("norm_bytes", pa.binary()),
-            ("pos_bytes", pa.binary()),
-        ]
-    )
+    return staged.mapInArrow(encode, SEGMENT_SCHEMA)
 
-    def _bin_array(buf: np.ndarray, offsets: np.ndarray) -> pa.Array:
-        # contiguous per-block byte ranges → zero-copy BinaryArray from
-        # the single encoded stream (blocks tile the posting space, so
-        # block k ends exactly where block k+1 starts)
-        if len(offsets) and int(offsets[-1]) > np.iinfo(np.int32).max:
-            raise ValueError(
-                "segment payload exceeds 2 GiB (binary offsets are "
-                "int32) — rebuild with a larger n_segments so each "
-                "segment's postings fit"
-            )
-        offs = offsets.astype(np.int32)
-        return pa.Array.from_buffers(
-            pa.binary(),
-            len(offs) - 1,
-            [None, pa.py_buffer(offs), pa.py_buffer(buf)],
-        )
 
-    def _encode_one_segment_arrow(s, parts):
-        # parts: list of (doc_ids int64[], flat pa.StringArray, counts int64[])
-        doc_ids = np.concatenate([d for d, _, _ in parts])
-        counts = np.concatenate([c for _, _, c in parts])
-        if not (counts > 0).any():
-            return None
-        flat_ch = pa.chunked_array([f for _, f, _ in parts])
-        if flat_ch.null_count:
-            # the pandas path fails loudly on null token elements
-            # (object lexsort TypeError); match that instead of letting
-            # NaN indices cast to garbage int codes
-            raise ValueError(
-                "null token elements are not indexable — drop or "
-                "replace nulls in the tokens array before build_index"
-            )
-        enc = pc.dictionary_encode(flat_ch)
-        chunks = enc.chunks if isinstance(enc, pa.ChunkedArray) else [enc]
-        if len(chunks) > 1 and not all(
-            c.dictionary.equals(chunks[0].dictionary) for c in chunks[1:]
-        ):
-            # kernel didn't unify dictionaries across chunks — force it
-            chunks = [pc.dictionary_encode(flat_ch.combine_chunks())]
-        dictionary = chunks[0].dictionary
-        codes = np.concatenate(
-            [c.indices.to_numpy(zero_copy_only=False) for c in chunks]
-        ).astype(np.int64)
-        # remap first-appearance codes to lexicographic ranks (UTF-8 byte
-        # order == code-point order, matching python str comparison)
-        si = pc.sort_indices(dictionary).to_numpy(zero_copy_only=False).astype(np.int64)
-        rank = np.empty(len(si), dtype=np.int64)
-        rank[si] = np.arange(len(si))
-        sorted_dict = pc.take(dictionary, pa.array(si))
-        rcodes = rank[codes]
-        flat_doc = np.repeat(doc_ids, counts)
-        flat_dl = np.repeat(counts, counts)
-        if positions:
-            tot = int(counts.sum())
-            run_off = np.repeat(np.cumsum(counts) - counts, counts)
-            flat_pos = np.arange(tot, dtype=np.int64) - run_off
-        # ONE stable int lexsort by (term rank, doc) — same order as the
-        # object-string lexsort, minus the per-element python compares
-        order = np.lexsort((flat_doc, rcodes))
-        rc = rcodes[order]
-        fd = flat_doc[order]
-        dl = flat_dl[order]
-        if positions:
-            fp = flat_pos[order]
-        pair_change = np.flatnonzero((rc[1:] != rc[:-1]) | (fd[1:] != fd[:-1]))
-        p_starts = np.concatenate([[0], pair_change + 1])
-        p_ends = np.concatenate([pair_change + 1, [len(rc)]])
-        pterm = rc[p_starts]
-        pdoc = fd[p_starts]
-        ptf = (p_ends - p_starts).astype(np.int64)
-        pdl = dl[p_starts]
-        norm = (ptf * (k1 + 1.0)) / (ptf + k1 * (1.0 - b + b * pdl / avgdl))
-        P = len(pterm)
-        t_change = np.flatnonzero(pterm[1:] != pterm[:-1])
-        t_starts = np.concatenate([[0], t_change + 1])
-        t_ends = np.concatenate([t_change + 1, [P]])
-        run_len = (t_ends - t_starts).astype(np.int64)
-        # block boundaries: every `block`-th posting within a term run
-        idx_in_term = np.arange(P, dtype=np.int64) - np.repeat(t_starts, run_len)
-        b_starts = np.flatnonzero(idx_in_term % block == 0)
-        b_ends = np.concatenate([b_starts[1:], [P]])
-        bounds = np.concatenate([b_starts, [P]])
-        n_blk = (b_ends - b_starts).astype(np.int32)
-        blk_maxdoc = pdoc[b_ends - 1].astype(np.int64)
-        blk_maxnorm = np.maximum.reduceat(norm, b_starts)
-        # doc deltas: in-block diffs, absolute at each block start
-        deltas = pdoc.copy()
-        deltas[1:] -= pdoc[:-1]
-        deltas[b_starts] = pdoc[b_starts]
-        doc_buf, doc_nb = varint_encode_lens(deltas.astype(np.uint64))
-        tf_buf, tf_nb = varint_encode_lens(ptf.astype(np.uint64))
-        cum_doc = np.concatenate([[0], np.cumsum(doc_nb)])
-        cum_tf = np.concatenate([[0], np.cumsum(tf_nb)])
-        doc_bytes = _bin_array(doc_buf, cum_doc[bounds])
-        tf_bytes = _bin_array(tf_buf, cum_tf[bounds])
-        norm_bytes = _bin_array(norm.view(np.uint8), bounds * 8)
-        if positions:
-            # delta-encode ALL positions once; deltas reset (absolute) at
-            # every posting start — block slices are byte-identical to
-            # per-block encode_positions because blocks align to postings
-            pb = np.concatenate([[0], np.cumsum(ptf)]).astype(np.int64)
-            pdeltas = fp.copy()
-            pdeltas[1:] -= fp[:-1]
-            pdeltas[pb[:-1]] = fp[pb[:-1]]
-            pos_buf, pos_nb = varint_encode_lens(pdeltas.astype(np.uint64))
-            cum_pos = np.concatenate([[0], np.cumsum(pos_nb)])
-            pos_bytes = _bin_array(pos_buf, cum_pos[pb[bounds]])
-        else:
-            pos_bytes = pa.nulls(len(b_starts), pa.binary())
-        struct = pa.StructArray.from_arrays(
-            [
-                pa.array(blk_maxdoc, pa.int64()),
-                pa.array(blk_maxnorm, pa.float64()),
-                pa.array(n_blk, pa.int32()),
-                doc_bytes,
-                tf_bytes,
-                norm_bytes,
-                pos_bytes,
-            ],
-            fields=list(_BLOCK_PA),
-        )
-        nbpt = (run_len + block - 1) // block
-        list_offsets = np.concatenate([[0], np.cumsum(nbpt)]).astype(np.int32)
-        blocks_arr = pa.ListArray.from_arrays(pa.array(list_offsets, pa.int32()), struct)
-        term_arr = pc.take(sorted_dict, pa.array(pterm[t_starts]))
-        cf = np.add.reduceat(ptf, t_starts).astype(np.int64)
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.full(len(t_starts), s, dtype=np.int32)),
-                term_arr.combine_chunks() if isinstance(term_arr, pa.ChunkedArray) else term_arr,
-                pa.array(run_len, pa.int64()),
-                pa.array(cf, pa.int64()),
-                blocks_arr,
-            ],
-            names=["segment_id", "term", "df", "cf", "blocks"],
-        )
-
-    def encode_segments_arrow(batches):
-        # same accumulate-then-encode shape as encode_segments, but the
-        # token strings never materialize as python objects: Arrow
-        # list_flatten + dictionary_encode (C++), int lexsort, and a
-        # single whole-segment varint pass sliced into blocks by offset
-        # arithmetic (encode_postings per term is ~30k tiny-array calls
-        # per segment; this is three big ones)
-        per_seg: dict[int, list] = {}
-        for rb in batches:
-            seg = rb.column(0).to_numpy(zero_copy_only=False)
-            docs = rb.column(1).to_numpy(zero_copy_only=False)
-            toks = rb.column(2)
-            for s in np.unique(seg):
-                mask = seg == s
-                if mask.all():
-                    sub_t, sub_d = toks, docs
-                else:
-                    sub_t = toks.take(pa.array(np.flatnonzero(mask)))
-                    sub_d = docs[mask]
-                flat = pc.list_flatten(sub_t)
-                cnts = (
-                    pc.fill_null(pc.list_value_length(sub_t), 0)
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                per_seg.setdefault(int(s), []).append((sub_d, flat, cnts))
-        for s in sorted(per_seg):
-            rb = _encode_one_segment_arrow(s, per_seg[s])
-            if rb is not None:
-                yield rb
-
+def _write_postings(
+    encoded: DataFrame,
+    out_dir: str,
+    seg_ids: list[int],
+    stage: dict,
+) -> dict[str, dict]:
+    """The one segment writer (build, append and compaction): posting rows
+    → ``out_dir/postings/segment_id=K`` by dynamic partition overwrite
+    (only segments that receive rows are rewritten), then each of
+    ``seg_ids``' (terms, postings) counts read back from the files.
+    ``stage`` gets the write (``encode_merge_s``) and readback
+    (``segment_metrics_s``) wall clocks."""
     t_enc = time.perf_counter()
-    if encoder == "pandas":
-        result = staged.mapInPandas(encode_segments, SEGMENT_SCHEMA)
-    else:
-        result = staged.mapInArrow(encode_segments_arrow, SEGMENT_SCHEMA)
     # set the overwrite mode on the session that EXECUTES the write:
     # inside Structured Streaming foreachBatch the batch DataFrame is
     # bound to a CLONED session whose SQLConf was snapshotted at stream
@@ -455,12 +278,12 @@ def _write_segments(
     # every existing segment partition. Restore the prior value after:
     # leaving dynamic mode on would change the semantics of the USER'S
     # own partitioned overwrite writes in the same session.
-    sess = result.sparkSession
+    sess = encoded.sparkSession
     _MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
     prior_mode = sess.conf.get(_MODE_KEY, None)
     sess.conf.set(_MODE_KEY, "dynamic")
     try:
-        result.write.partitionBy("segment_id").mode("overwrite").parquet(
+        encoded.write.partitionBy("segment_id").mode("overwrite").parquet(
             os.path.join(out_dir, "postings")
         )
     finally:
@@ -469,12 +292,7 @@ def _write_segments(
         else:
             sess.conf.set(_MODE_KEY, prior_mode)
     stage["encode_merge_s"] = round(time.perf_counter() - t_enc, 3)
-    if stage["encode_merge_s"] > 0:
-        stage["docs_per_sec"] = round(
-            manifest.n_docs / stage["encode_merge_s"], 1
-        )
 
-    # per-segment metrics (rows/terms/postings) from the written files
     t_met = time.perf_counter()
     postings_dir = os.path.join(out_dir, "postings")
     if not any(
@@ -487,7 +305,7 @@ def _write_segments(
             "no postings were written — every document's tokens array "
             "is empty; nothing to index"
         )
-    written = postings_table(spark, out_dir).filter(
+    written = postings_table(sess, out_dir).filter(
         in_collection(F.col("segment_id"), seg_ids)
     )
     metrics = {
@@ -501,15 +319,34 @@ def _write_segments(
         .collect()
     }
     stage["segment_metrics_s"] = round(time.perf_counter() - t_met, 3)
+    return metrics
+
+
+def _write_segments(
+    staged: DataFrame,
+    out_dir: str,
+    seg_ids: list[int],
+    manifest: IndexManifest,
+    stage: dict,
+    t_start: float,
+) -> None:
+    """Encode ``staged`` (segment_id, doc_id, tokens) rows into compressed
+    posting segments (``_encode_docs`` → ``_write_postings``) and record
+    their metrics in ``manifest`` — in memory only. build_index saves it
+    right away; append_index saves once, AFTER updating n_segments/n_docs,
+    so a failed append leaves a clean pre-append manifest and a re-run
+    deterministically overwrites the same segment ids."""
+    metrics = _write_postings(_encode_docs(staged, manifest), out_dir, seg_ids, stage)
+    if stage["encode_merge_s"] > 0:
+        stage["docs_per_sec"] = round(
+            manifest.n_docs / stage["encode_merge_s"], 1
+        )
     elapsed = time.perf_counter() - t_start
     for s in seg_ids:
         m = metrics.get(str(s), {"terms": 0, "postings": 0})
         m["wall_clock_share_s"] = round(elapsed / len(seg_ids), 3)
         manifest.completed[str(s)] = m
     manifest.stage_metrics = stage
-    if save:
-        manifest.save(out_dir)
-
 
 
 def build_index(
@@ -522,7 +359,6 @@ def build_index(
     lineage: str = "",
     fail_after_segments: int | None = None,
     positions: bool = False,
-    encoder: str = "arrow",
 ) -> IndexManifest:
     """Build (or resume) the compressed inverted index for ``docs``
     (doc_id long, tokens array<string>).
@@ -535,8 +371,9 @@ def build_index(
     spans that should run index-side (SURVEY.md §7 hard part 2: keep
     positions only where a query needs them; they dominate index size).
 
-    ``encoder``: "arrow" (default; whole-segment vectorized mapInArrow) or
-    "pandas" (the per-term reference path; bit-identical output).
+    Each segment's postings are encoded in one Arrow pass through
+    ``codec.encode_segment`` (``_encode_docs``) and written by the shared
+    segment writer (``_write_postings``).
     """
     os.makedirs(out_dir, exist_ok=True)
     manifest = read_manifest(out_dir) if resume else None
@@ -619,15 +456,13 @@ def build_index(
         # pick n_segments so a segment's docs fit an executor).
         staged = (
             docs.withColumn("segment_id", seg_col)
-            .filter(F.col("segment_id").isin(missing))
+            .filter(in_collection(F.col("segment_id"), missing))
             .select("segment_id", "doc_id", "tokens")
             .repartition(n_segments, "segment_id")
         )
 
-        _write_segments(
-            spark, staged, out_dir, missing, manifest,
-            encoder=encoder, stage=stage, t_start=t_start,
-        )
+        _write_segments(staged, out_dir, missing, manifest, stage, t_start)
+        manifest.save(out_dir)
 
     if len(manifest.completed) == n_segments:
         t_ts = time.perf_counter()
@@ -643,7 +478,6 @@ def append_index(
     docs: DataFrame,
     out_dir: str,
     n_new_segments: int = 8,
-    encoder: str = "arrow",
     lineage: str = "",
 ) -> IndexManifest:
     """Append NEW documents to a COMPLETE index as additional segments.
@@ -741,10 +575,7 @@ def append_index(
         .select("segment_id", "doc_id", "tokens")
         .repartition(k, "segment_id")
     )
-    _write_segments(
-        spark, staged, out_dir, new_ids, manifest,
-        encoder=encoder, stage=stage, t_start=t_start, save=False,
-    )
+    _write_segments(staged, out_dir, new_ids, manifest, stage, t_start)
     if stage.get("encode_merge_s"):
         stage["docs_per_sec"] = round(n_new / stage["encode_merge_s"], 1)
     manifest.n_segments += k
@@ -798,11 +629,12 @@ def compact_index(
 
     Plan shape (scale): ONE broadcast join of the (old→new) segment map
     onto the posting rows, ONE hash repartition on the new segment id,
-    then a per-partition Arrow pass merges whole segments locally — no
-    token rows, no global groupBy(term); bytes moved ≈ compressed index
-    size. Old segments group CONTIGUOUSLY by id with ~equal postings
-    (greedy cut on the manifest's per-segment posting counts), keeping
-    doc ranges clustered so delta compression survives the merge.
+    then a per-partition Arrow pass merges whole segments locally
+    (``_compact_merged``) — no token rows, no global groupBy(term); bytes
+    moved ≈ compressed index size. Old segments group CONTIGUOUSLY by id
+    with ~equal postings (greedy cut on the manifest's per-segment posting
+    counts), keeping doc ranges clustered so delta compression survives
+    the merge.
     """
     if os.path.abspath(dst_dir) == os.path.abspath(src_dir):
         raise ValueError(
@@ -826,24 +658,10 @@ def compact_index(
         shutil.rmtree(dst_dir)
     mapping, merged = _compact_merged(spark, src_dir, manifest, target_segments)
     os.makedirs(dst_dir, exist_ok=True)
-    # dst was just cleared, so static overwrite semantics are fine here —
-    # no session-conf mutation needed (see the foreachBatch-clone note in
-    # _write_segments for why conf flips are hazardous)
-    merged.write.partitionBy("segment_id").mode("overwrite").parquet(
-        os.path.join(dst_dir, "postings")
-    )
-    written = postings_table(spark, dst_dir)
-    metrics = {
-        str(r["segment_id"]): {
-            "terms": int(r["terms"]),
-            "postings": int(r["postings"]),
-            "built_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "merged_from": [s for s, n in mapping.items() if n == int(r["segment_id"])],
-        }
-        for r in written.groupBy("segment_id")
-        .agg(F.count(F.lit(1)).alias("terms"), F.sum("df").alias("postings"))
-        .collect()
-    }
+    stage: dict = {"compacted_from_segments": len(mapping)}
+    metrics = _write_postings(merged, dst_dir, sorted(set(mapping.values())), stage)
+    for s, m in metrics.items():
+        m["merged_from"] = [o for o, n in mapping.items() if n == int(s)]
     if sorted(int(s) for s in metrics) != list(range(len(metrics))):
         raise AssertionError(
             f"compaction produced non-dense segment ids {sorted(metrics)} — "
@@ -861,10 +679,7 @@ def compact_index(
         positions=bool(manifest.positions),
         input_lineage=f"compact({src_dir}): {manifest.input_lineage}",
         completed=metrics,
-        stage_metrics={
-            "compacted_from_segments": len(mapping),
-            "compact_s": round(time.perf_counter() - t_start, 3),
-        },
+        stage_metrics={**stage, "compact_s": round(time.perf_counter() - t_start, 3)},
     )
     t_ts = time.perf_counter()
     _finalize_term_stats(spark, dst_dir, out)
@@ -880,6 +695,12 @@ def _compact_merged(
     target_segments: int,
 ) -> tuple[dict, DataFrame]:
     """The compaction PLAN: (old→new segment map, merged posting rows).
+
+    Per merged segment, one ``mapInArrow`` step: its source blocks decode
+    as one stream per column (``codec.decode_stream``), terms rank with the
+    build's ``_rank_terms``, one (term, doc) lexsort interleaves the source
+    doc runs and their positions, and the build's ``codec.encode_segment``
+    re-blocks them.
 
     Split from compact_index so the physical plan is inspectable
     (gen_plans.py) without writing an index."""
@@ -926,63 +747,37 @@ def _compact_merged(
     block, positions = manifest.block, bool(manifest.positions)
 
     def merge_segments(batches):
-        from .codec import decode_block, decode_positions
-
-        per_seg: dict[int, dict[str, list]] = {}
-        for pdf in batches:
-            for s, grp in pdf.groupby("segment_id"):
-                terms = per_seg.setdefault(int(s), {})
-                for t, blks in zip(grp["term"], grp["blocks"]):
-                    terms.setdefault(t, []).append(blks)
-        for s in sorted(per_seg):
-            terms_out, dfs_out, cfs_out, blocks_out = [], [], [], []
-            for t in sorted(per_seg[s]):
-                docs_l, tfs_l, norms_l, pos_l = [], [], [], []
-                for blks in per_seg[s][t]:
-                    for b in blks:
-                        d, tf, nm = decode_block(b)
-                        docs_l.append(d)
-                        tfs_l.append(tf)
-                        norms_l.append(nm)
-                        if positions:
-                            pb = b["pos_bytes"] if not hasattr(b, "pos_bytes") else b.pos_bytes
-                            pos_l.append(decode_positions(bytes(pb), tf))
-                doc = np.concatenate(docs_l)
-                tf = np.concatenate(tfs_l)
-                nm = np.concatenate(norms_l)
-                order = np.argsort(doc, kind="stable")
-                doc, tf, nm = doc[order], tf[order], nm[order]
-                pos_flat = None
-                if positions:
-                    # gather each posting's position slice into the new
-                    # order (vectorized: no per-posting python loop)
-                    src_pos = np.concatenate(pos_l) if pos_l else np.empty(0, np.int64)
-                    tf_src = np.concatenate(tfs_l)
-                    starts = (np.cumsum(tf_src) - tf_src)[order]
-                    cnt = tf_src[order]
-                    tot = int(cnt.sum())
-                    run_off = np.repeat(np.cumsum(cnt) - cnt, cnt)
-                    idx = np.repeat(starts, cnt) + (np.arange(tot) - run_off)
-                    pos_flat = src_pos[idx]
-                terms_out.append(t)
-                dfs_out.append(int(len(doc)))
-                cfs_out.append(int(tf.sum()))
-                blocks_out.append(
-                    encode_postings(
-                        doc, tf, nm, block=block, positions_flat=pos_flat
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "segment_id": np.full(len(terms_out), s, dtype=np.int32),
-                    "term": terms_out,
-                    "df": dfs_out,
-                    "cf": cfs_out,
-                    "blocks": blocks_out,
-                }
+        # each block's first doc delta is absolute, so rows and blocks
+        # concatenate freely into one stream; source doc ids are disjoint
+        # (the append contract), so the (term, doc) order is total
+        for s, t in _segment_tables(batches):
+            blk = pc.list_flatten(t["blocks"])
+            doc, tf, pos = decode_stream(
+                _joined(blk, "doc_bytes"),
+                pc.struct_field(blk, "n").to_numpy(),
+                _joined(blk, "tf_bytes"),
+                _joined(blk, "pos_bytes") if positions else None,
+            )
+            norm = np.frombuffer(_joined(blk, "norm_bytes"), dtype=np.float64)
+            row_rank, terms = _rank_terms(t["term"])
+            rank = np.repeat(row_rank, t["df"].to_numpy())
+            order = np.lexsort((doc, rank))
+            if positions:
+                # gather each posting's position slice into the new order
+                starts = (np.cumsum(tf) - tf)[order]
+                cnt = tf[order]
+                run_off = np.repeat(np.cumsum(cnt) - cnt, cnt)
+                pos = pos[np.repeat(starts, cnt) + (np.arange(len(run_off)) - run_off)]
+            yield _segment_batch(
+                s, terms, rank[order], doc[order], tf[order], norm[order], pos, block
             )
 
-    return mapping, rows.mapInPandas(merge_segments, SEGMENT_SCHEMA)
+    return mapping, rows.mapInArrow(merge_segments, SEGMENT_SCHEMA)
+
+
+def _joined(blocks: pa.ChunkedArray, name: str) -> bytes:
+    """Block field ``name``'s payloads back to back, as one bytes object."""
+    return b"".join(pc.struct_field(blocks, name).to_pylist())
 
 
 def _merge_term_stats(

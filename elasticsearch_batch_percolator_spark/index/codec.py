@@ -3,9 +3,13 @@
 The reference leaves storage to Lucene segments (RAMDirectory,
 RamDirectoryPercolatorIndex.java:50-66); this engine persists its own
 segment layout (north_rule: "docID-delta + varint/FOR compressed blocks with
-block-max metadata").
+block-max metadata"). This module is the one place that knows that layout:
+build, append and compaction encode whole segments through
+``encode_segment`` (one vectorized pass per column) and every reader
+decodes through ``decode_stream``; ``encode_postings`` / ``decode_block``
+are the per-block reference they are tested against.
 
-Block layout (BLOCK = 128 postings, Lucene's block size):
+Block layout (``BLOCK_STRUCT``; BLOCK = 128 postings, Lucene's block size):
 - doc_bytes : varint(delta(doc_id)) — first delta is vs. the block's base
 - tf_bytes  : varint(tf)
 - norm_bytes: float64 LE of the BM25 tf-norm  tf*(k1+1)/(tf+k1*(1-b+b*dl/avgdl))
@@ -13,17 +17,33 @@ Block layout (BLOCK = 128 postings, Lucene's block size):
               scoring a block is score = idf * norm, no dl lookup)
 - max_doc   : last doc_id of the block (skip pointer)
 - max_norm  : max norm in the block (block-max WAND upper bound: idf*max_norm)
-
-Pure-numpy vectorized encode/decode — this code runs inside Arrow pandas
-UDFs on executors (no per-row Python at the DataFrame level, input_hint).
+- pos_bytes : varint(delta(position)) per posting, absolute at each posting
+              start; null in a non-positional index
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+from pyspark.sql.pandas.types import from_arrow_type
 
 BLOCK = 128
 _U64 = np.uint64
+
+#: one posting block, as Arrow carries it; ``BLOCKS_TYPE`` (a posting
+#: row's ``blocks`` column) is the Spark type derived from it
+BLOCK_STRUCT = pa.struct(
+    [
+        ("max_doc", pa.int64()),
+        ("max_norm", pa.float64()),
+        ("n", pa.int32()),
+        ("doc_bytes", pa.binary()),
+        ("tf_bytes", pa.binary()),
+        ("norm_bytes", pa.binary()),
+        ("pos_bytes", pa.binary()),
+    ]
+)
+BLOCKS_TYPE = from_arrow_type(pa.list_(BLOCK_STRUCT))
 
 
 def varint_encode_lens(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -160,11 +180,118 @@ def encode_postings(
 
 def decode_block(b) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """block (dict or Row) → (doc_ids int64, tfs int64, norms float64)."""
-    doc_bytes = b["doc_bytes"] if not hasattr(b, "doc_bytes") else b.doc_bytes
-    tf_bytes = b["tf_bytes"] if not hasattr(b, "tf_bytes") else b.tf_bytes
-    norm_bytes = b["norm_bytes"] if not hasattr(b, "norm_bytes") else b.norm_bytes
-    deltas = varint_decode(bytes(doc_bytes)).astype(np.int64)
-    doc_ids = np.cumsum(deltas)
-    tfs = varint_decode(bytes(tf_bytes)).astype(np.int64)
-    norms = np.frombuffer(bytes(norm_bytes), dtype=np.float64)
+    doc_ids = np.cumsum(varint_decode(bytes(b["doc_bytes"])).astype(np.int64))
+    tfs = varint_decode(bytes(b["tf_bytes"])).astype(np.int64)
+    norms = np.frombuffer(bytes(b["norm_bytes"]), dtype=np.float64)
     return doc_ids, tfs, norms
+
+
+def _bin_array(buf: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """Contiguous per-block byte ranges → zero-copy BinaryArray over the
+    single encoded stream (blocks tile the posting space, so block k ends
+    exactly where block k+1 starts)."""
+    if len(offsets) and int(offsets[-1]) > np.iinfo(np.int32).max:
+        raise ValueError(
+            "segment payload exceeds 2 GiB (binary offsets are int32) — "
+            "rebuild with a larger n_segments so each segment's postings fit"
+        )
+    offs = offsets.astype(np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), len(offs) - 1, [None, pa.py_buffer(offs), pa.py_buffer(buf)]
+    )
+
+
+def _varint_blocks(values: np.ndarray, bounds: np.ndarray) -> pa.Array:
+    """ONE varint pass over ``values`` → one binary value per
+    ``values[bounds[i]:bounds[i + 1]]``."""
+    buf, nbytes = varint_encode_lens(values.astype(np.uint64))
+    return _bin_array(buf, np.concatenate([[0], np.cumsum(nbytes)])[bounds])
+
+
+def encode_segment(
+    term_rank: np.ndarray,
+    doc: np.ndarray,
+    tf: np.ndarray,
+    norm: np.ndarray,
+    positions: np.ndarray | None,
+    block: int = BLOCK,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, pa.ListArray]:
+    """One segment's postings, sorted by (term, doc) → its posting rows.
+
+    ``term_rank`` is any integer term key, ``positions`` each posting's
+    ascending positions back to back (None for a non-positional index).
+    Returns ``(term starts, df, cf, blocks)``: each term's first posting
+    index, df, cf and ``list<BLOCK_STRUCT>`` — byte-identical to
+    ``encode_postings`` term by term, but each column is ONE varint pass
+    over the segment, sliced into blocks by offsets (per-term calls are
+    ~30k tiny-array calls per segment; this is three big ones)."""
+    P = len(doc)
+    t_change = np.flatnonzero(term_rank[1:] != term_rank[:-1])
+    t_starts = np.concatenate([[0], t_change + 1]).astype(np.int64)
+    run_len = np.diff(np.concatenate([t_starts, [P]])).astype(np.int64)
+    # block boundaries: every `block`-th posting within a term run
+    idx_in_term = np.arange(P, dtype=np.int64) - np.repeat(t_starts, run_len)
+    b_starts = np.flatnonzero(idx_in_term % block == 0)
+    bounds = np.concatenate([b_starts, [P]])
+    n_blk = np.diff(bounds).astype(np.int32)
+    blk_maxdoc = doc[bounds[1:] - 1].astype(np.int64)
+    blk_maxnorm = np.maximum.reduceat(norm, b_starts)
+    # doc deltas: in-block diffs, absolute at each block start
+    deltas = doc.copy()
+    deltas[1:] -= doc[:-1]
+    deltas[b_starts] = doc[b_starts]
+    if positions is not None:
+        # delta-encode ALL positions once; deltas reset (absolute) at every
+        # posting start — block slices are byte-identical to per-block
+        # encode_positions because blocks align to postings
+        pb = np.concatenate([[0], np.cumsum(tf)]).astype(np.int64)
+        pdeltas = positions.copy()
+        pdeltas[1:] -= positions[:-1]
+        pdeltas[pb[:-1]] = positions[pb[:-1]]
+        pos_bytes = _varint_blocks(pdeltas, pb[bounds])
+    else:
+        pos_bytes = pa.nulls(len(b_starts), pa.binary())
+    struct = pa.StructArray.from_arrays(
+        [
+            pa.array(blk_maxdoc, pa.int64()),
+            pa.array(blk_maxnorm, pa.float64()),
+            pa.array(n_blk, pa.int32()),
+            _varint_blocks(deltas, bounds),
+            _varint_blocks(tf, bounds),
+            _bin_array(np.ascontiguousarray(norm, np.float64).view(np.uint8), bounds * 8),
+            pos_bytes,
+        ],
+        fields=list(BLOCK_STRUCT),
+    )
+    # every term starts a block: a term's blocks start at its first one
+    list_offsets = np.searchsorted(b_starts, np.concatenate([t_starts, [P]]))
+    blocks = pa.ListArray.from_arrays(pa.array(list_offsets, pa.int32()), struct)
+    cf = np.add.reduceat(tf, t_starts).astype(np.int64)
+    return t_starts, run_len, cf, blocks
+
+
+def decode_stream(
+    doc_bytes: bytes,
+    ns: np.ndarray,
+    tf_bytes: bytes | None = None,
+    pos_bytes: bytes | None = None,
+) -> tuple[np.ndarray, np.ndarray | None, np.ndarray | None]:
+    """Concatenated block payloads (``ns``: each block's posting count) →
+    ``(doc_ids, tfs, positions)``, ONE varint pass per column.
+
+    A block's first doc delta is absolute, so one cumsum over the stream
+    plus a per-block prefix subtraction replaces a ``decode_block`` call
+    per block. ``tfs`` decode only given ``tf_bytes``, the flat positions
+    (split with ``cumsum(tfs)``) only given ``pos_bytes`` too; else None."""
+    ids = np.cumsum(varint_decode(doc_bytes).astype(np.int64))
+    ns = np.asarray(ns, dtype=np.int64)
+    if len(ns) > 1:
+        starts = np.cumsum(ns)[:-1]
+        # undo the cross-block prefix: each block's first value was absolute
+        ids -= np.repeat(np.concatenate([[0], ids[starts - 1]]), ns)
+    if tf_bytes is None:
+        return ids, None, None
+    tfs = varint_decode(tf_bytes).astype(np.int64)
+    if pos_bytes is None:
+        return ids, tfs, None
+    return ids, tfs, decode_positions(pos_bytes, tfs)

@@ -72,7 +72,7 @@ from ..index.build import (
     read_postings,
     term_stats_table,
 )
-from ..index.codec import decode_positions, varint_decode
+from ..index.codec import decode_stream
 from ..plans.compiler import DEFAULT_FIELD, compile_query
 from ..plans.eval_py import eval_plan, fuzzy_pred, regexp_regex, wildcard_regex
 from ..plans.limiting import limiting_filter
@@ -137,34 +137,24 @@ def _manifest(index_dir: str) -> IndexManifest:
 
 
 def _decode_term(blocks, positions: bool = False):
-    """All blocks of one term → (doc_ids, norms, positions), ONE varint pass
-    per column.
-
-    Block payloads concatenate into a single stream (each block's first doc
-    delta is absolute), so one vectorized varint_decode + a per-block
-    prefix subtraction replaces len(blocks) tiny decode_block calls — the
-    same fixed-cost amortization as the build-side whole-segment encoder.
-    tf_bytes and pos_bytes decode only when ``positions`` is asked for;
-    then ``positions`` is ``(flat, offsets)`` and doc i's positions are
-    ``flat[offsets[i]:offsets[i + 1]]``, else it is None."""
+    """All blocks of one term → (doc_ids, norms, positions) through
+    ``codec.decode_stream``: the blocks' payloads concatenate into one
+    stream per column, decoded in one pass. tf_bytes and pos_bytes decode
+    only when ``positions`` is asked for; then ``positions`` is ``(flat,
+    offsets)`` and doc i's positions are ``flat[offsets[i]:offsets[i + 1]]``,
+    else it is None."""
 
     def column(key: str) -> bytes:
         return b"".join(bytes(b[key]) for b in blocks)
 
-    ids = np.cumsum(varint_decode(column("doc_bytes")).astype(np.int64))
-    if len(blocks) > 1:
-        ns = np.fromiter((b["n"] for b in blocks), dtype=np.int64, count=len(blocks))
-        starts = np.cumsum(ns)[:-1]
-        # undo the cross-block prefix: each block's first value was absolute
-        ids -= np.repeat(np.concatenate([[0], ids[starts - 1]]), ns)
+    if positions and any(b["pos_bytes"] is None for b in blocks):
+        raise ValueError("positional query but index was built without positions=True")
+    pos_cols = (column("tf_bytes"), column("pos_bytes")) if positions else ()
+    ids, tfs, flat = decode_stream(column("doc_bytes"), [b["n"] for b in blocks], *pos_cols)
     norms = np.frombuffer(column("norm_bytes"), dtype=np.float64)
     if not positions:
         return ids, norms, None
-    if any(b["pos_bytes"] is None for b in blocks):
-        raise ValueError("positional query but index was built without positions=True")
-    tfs = varint_decode(column("tf_bytes")).astype(np.int64)
-    offsets = np.concatenate([[0], np.cumsum(tfs)])
-    return ids, norms, (decode_positions(column("pos_bytes"), tfs), offsets)
+    return ids, norms, (flat, np.concatenate([[0], np.cumsum(tfs)]))
 
 
 @dataclass

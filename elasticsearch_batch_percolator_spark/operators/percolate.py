@@ -55,6 +55,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..index.build import in_collection
 from ..plans.eval_py import compile_predicate_fields
 from ..sources.registry import CompiledRegistry
 
@@ -965,7 +966,7 @@ def _batch_terms(
         pats = sorted(bt_prune[1].get(fc, ()))
         if not lits and not pats:
             return False  # no query can join on this column's terms
-        c = F.col("term").isin(lits) if lits else None
+        c = in_collection(F.col("term"), lits) if lits else None
         for p in pats:
             lk = F.col("term").like(p)
             c = lk if c is None else (c | lk)

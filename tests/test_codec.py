@@ -100,3 +100,34 @@ def test_decode_term_batched_equals_per_block(postings):
     # without positions, doc ids and norms are unchanged and nothing else decodes
     assert _decode_term(blocks)[2] is None
     assert np.array_equal(_decode_term(blocks)[0], got_doc)
+
+
+def test_codec_owns_the_block_format():
+    """One module knows the posting block layout: inside the package only
+    index/codec.py calls the varint and position primitives, the index
+    writers take no ``encoder`` switch, and index/build.py runs no pandas
+    UDF pass (every encode is Arrow through ``codec.encode_segment``)."""
+    import ast
+    import inspect
+    from pathlib import Path
+
+    import elasticsearch_batch_percolator_spark as pkg
+    from elasticsearch_batch_percolator_spark.index.build import append_index, build_index
+
+    primitives = {"varint_encode_lens", "varint_decode", "decode_positions"}
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name in primitives and rel != "index/codec.py":
+                offenders.append((rel, node.lineno, name))
+            if name == "mapInPandas" and rel == "index/build.py":
+                offenders.append((rel, node.lineno, name))
+    assert offenders == []
+    for fn in (build_index, append_index):
+        assert "encoder" not in inspect.signature(fn).parameters, fn.__name__

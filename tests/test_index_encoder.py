@@ -1,11 +1,11 @@
-"""Arrow whole-segment encoder == per-term pandas encoder, bit-for-bit.
+"""Arrow whole-segment encoder == per-term reference codec, bit-for-bit.
 
-The round-4 `mapInArrow` encode path (build.py `encode_segments_arrow`)
-replaces the object-string lexsort + per-term `encode_postings` loop with
-Arrow dictionary-encode, one int lexsort, and a single whole-segment varint
-pass sliced by offsets. Its parquet output must be byte-identical to the
-pandas path on every field, including block payloads, with and without
-positions — the two paths differ only in how, never in what.
+``build_index`` encodes each segment in one Arrow pass (Arrow
+dictionary-encode, one int lexsort, and ``codec.encode_segment``'s single
+whole-segment varint pass sliced by offsets). Its parquet output must be
+byte-identical, on every field including block payloads and with and
+without positions, to ``codec.encode_postings`` run term by term on the
+same documents — the two differ only in how, never in what.
 """
 
 import os
@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import types as T
 
 from elasticsearch_batch_percolator_spark.index.build import build_index, read_manifest
+from elasticsearch_batch_percolator_spark.index.codec import encode_postings
 
 
 def _random_docs(spark, seed, n_docs, with_empty=True, sparse_ids=False):
@@ -22,9 +23,9 @@ def _random_docs(spark, seed, n_docs, with_empty=True, sparse_ids=False):
     vocab = np.array(
         ["tok%03d" % i for i in range(80)]
         + ["Zz", "aA", "éacute", "0num", "_und"]
-        # multi-byte + supplementary-plane: the arrow path sorts by UTF-8
-        # bytes, the pandas path by python str codepoints — identical
-        # orders only because UTF-8 is order-preserving; pin that here
+        # multi-byte + supplementary-plane: the encoder sorts by UTF-8
+        # bytes, python str by code points — identical orders only
+        # because UTF-8 is order-preserving; the sorted-output test pins it
         + ["ÿ", "Ā", "￿", "\U00010000", "\U0001f600", "日本語"],
         dtype=object,
     )
@@ -45,23 +46,45 @@ def _random_docs(spark, seed, n_docs, with_empty=True, sparse_ids=False):
     return spark.createDataFrame(rows, schema)
 
 
+def _block_tuple(b):
+    pos = b["pos_bytes"]
+    return (
+        b["max_doc"], b["max_norm"], b["n"], bytes(b["doc_bytes"]),
+        bytes(b["tf_bytes"]), bytes(b["norm_bytes"]), None if pos is None else bytes(pos),
+    )
+
+
 def _collect_index(spark, out_dir):
     rows = spark.read.parquet(os.path.join(out_dir, "postings")).collect()
-    out = {}
-    for r in rows:
-        blocks = tuple(
-            (
-                b["max_doc"],
-                b["max_norm"],
-                b["n"],
-                bytes(b["doc_bytes"]),
-                bytes(b["tf_bytes"]),
-                bytes(b["norm_bytes"]),
-                None if b["pos_bytes"] is None else bytes(b["pos_bytes"]),
-            )
-            for b in r["blocks"]
+    return {
+        (int(r["segment_id"]), r["term"]): (
+            int(r["df"]), int(r["cf"]), tuple(_block_tuple(b) for b in r["blocks"])
         )
-        out[(int(r["segment_id"]), r["term"])] = (int(r["df"]), int(r["cf"]), blocks)
+        for r in rows
+    }
+
+
+def _reference_index(rows, m):
+    """Per-term ``encode_postings`` over the same docs: each doc's segment
+    from the manifest's cut points, its tf/positions per term, and the
+    BM25 norm against the frozen avgdl — the expected ``_collect_index``."""
+    postings, dls = {}, {d: len(toks) for d, toks in rows}
+    for doc_id, toks in rows:
+        if m.boundaries:
+            seg = sum(doc_id > bd for bd in m.boundaries)
+        else:
+            seg = min(doc_id // m.seg_size, m.n_segments - 1)
+        for p, t in enumerate(toks):
+            postings.setdefault((seg, t), {}).setdefault(doc_id, []).append(p)
+    out = {}
+    for key, by_doc in postings.items():
+        doc = np.array(sorted(by_doc), dtype=np.int64)
+        tf = np.array([len(by_doc[d]) for d in doc], dtype=np.int64)
+        dl = np.array([dls[d] for d in doc], dtype=np.int64)
+        norm = (tf * (m.k1 + 1.0)) / (tf + m.k1 * (1.0 - m.b + m.b * dl / m.avgdl))
+        pos = np.concatenate([by_doc[d] for d in doc]) if m.positions else None
+        blocks = encode_postings(doc, tf, norm, block=m.block, positions_flat=pos)
+        out[key] = (len(doc), int(tf.sum()), tuple(_block_tuple(b) for b in blocks))
     return out
 
 
@@ -69,17 +92,17 @@ def _collect_index(spark, out_dir):
 @pytest.mark.parametrize("sparse_ids", [False, True])
 def test_arrow_encoder_bit_identical(spark, tmp_path, positions, sparse_ids):
     docs = _random_docs(spark, seed=7 + positions + 2 * sparse_ids, n_docs=400,
-                        sparse_ids=sparse_ids).cache()
-    d_pd, d_ar = str(tmp_path / "pd"), str(tmp_path / "ar")
-    build_index(spark, docs, d_pd, n_segments=5, positions=positions, encoder="pandas")
-    build_index(spark, docs, d_ar, n_segments=5, positions=positions, encoder="arrow")
-    a, b = _collect_index(spark, d_pd), _collect_index(spark, d_ar)
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k] == b[k], k
-    ma, mb = read_manifest(d_pd), read_manifest(d_ar)
-    assert (ma.n_docs, ma.avgdl, ma.boundaries) == (mb.n_docs, mb.avgdl, mb.boundaries)
-    docs.unpersist()
+                        sparse_ids=sparse_ids)
+    rows = [(r["doc_id"], list(r["tokens"])) for r in docs.collect()]
+    out = str(tmp_path / "ix")
+    # block=16 < a frequent term's postings per segment: terms span blocks
+    m = build_index(spark, docs, out, n_segments=5, block=16, positions=positions)
+    assert bool(m.boundaries) == sparse_ids
+    got, want = _collect_index(spark, out), _reference_index(rows, m)
+    assert set(got) == set(want)
+    assert max(len(v[2]) for v in want.values()) > 1
+    for k in want:
+        assert got[k] == want[k], k
 
 
 def test_arrow_encoder_output_sorted_by_term(spark, tmp_path):
@@ -94,9 +117,8 @@ def test_arrow_encoder_output_sorted_by_term(spark, tmp_path):
 
 
 def test_null_token_element_raises(spark, tmp_path):
-    """The arrow encoder must fail loudly on null token elements (the
-    pandas path TypeErrors in its object lexsort) — not cast NaN indices
-    to garbage int codes."""
+    """The encoder must fail loudly on null token elements — not rank a
+    null as a garbage term code."""
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),

@@ -3,8 +3,8 @@
 The index calls move little data, so their wall time is mostly fixed
 per-job cost: a schema-inference job on every undeclared parquet read, a
 pass per append statistic, an exchange per aggregate. These bounds pin the
-job counts of one build, one append and one batch through each top-k front
-end on a small fixture.
+job counts of one build, one append, one batch through each top-k front
+end and one compaction on a small fixture.
 """
 
 import contextlib
@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 from elasticsearch_batch_percolator_spark.index.build import (
     append_index,
     build_index,
+    compact_index,
     read_manifest,
 )
 from elasticsearch_batch_percolator_spark.operators.dsl_index import dsl_topk_from_index
@@ -77,10 +78,14 @@ def test_index_calls_job_counts(spark, tmp_path):
     with _job_group(sc, "ebp-test-jobs-dsl") as jobs:
         assert dsl_topk_from_index(spark, idx, DSL_QUERIES, k=5).collect()
         counts["dsl_topk"] = jobs()
+    with _job_group(sc, "ebp-test-jobs-compact") as jobs:
+        compact_index(spark, idx, str(tmp_path / "compacted"), target_segments=2)
+        counts["compact"] = jobs()
     assert counts["build"] <= 8, counts
     assert counts["append"] <= 8, counts
     assert counts["topk"] <= 4, counts
     assert counts["dsl_topk"] <= 4, counts
+    assert counts["compact"] <= 7, counts
 
 
 def test_tiny_append_gets_one_segment_per_row(spark, tmp_path):
