@@ -252,78 +252,53 @@ def highlight_map_col(
     # programs ship ONCE per executor via a Spark broadcast (a 225k-query
     # registry's programs dict pickled into every task would dominate);
     # per-(query, field) unit matchers memoize worker-side. Both the
-    # program build (a 10^5-query loop) and its broadcast are CACHED on
-    # the registry keyed by (app, version, field layout) — per-batch /
-    # streaming use would otherwise accumulate one full-programs broadcast
-    # per micro-batch on driver and executors; a stale-keyed predecessor
-    # is unpersisted when the registry or layout changes.
-    session = SparkSession.getActiveSession()
-    sc = session.sparkContext
-    hl_key = (
-        sc.applicationId,
-        registry.version,
-        tuple(field_order),
-        tuple(sorted(analyzers.items())),
-    )
-    cached = getattr(registry, "_hl_bc_cache", None)
-    if cached is not None and cached[0] == hl_key:
-        return _hl_udf_col(
-            cached[1], field_order, analyzers, query_id_col, content_cols
-        )
-    if cached is not None:
-        try:
-            # unpersist, NOT destroy: a Column returned from an earlier
-            # call (or a concurrent stream sharing this registry) may still
-            # reference the old broadcast — destroy() would fail its next
-            # task; unpersist frees executor copies and re-ships lazily
-            cached[1].unpersist()
-        except Exception:
-            pass
+    # program build (a 10^5-query loop) and its broadcast are derived per
+    # (app, registry version, field layout) — per-batch / streaming use
+    # would otherwise accumulate one full-programs broadcast per
+    # micro-batch on driver and executors.
+    sc = SparkSession.getActiveSession().sparkContext
 
-    # per-query highlight programs: field -> (literals, patterns) under the
-    # spec's requireFieldMatch / highlightQuery rules, resolved ONCE here
-    programs: dict[str, dict] = {}
-    for qid, cq in registry.queries.items():
-        spec = getattr(cq, "highlight", None)
-        if spec is None or not spec.fields:
-            continue
-        src_plan = spec.highlight_query or cq.plan
-        lits = positive_terms(src_plan)
-        wilds = _wildcards_of(src_plan)
-        per_field = {}
-        for f in spec.fields:
-            if f not in content_cols:
+    def build(_token):
+        # per-query highlight programs: field -> (literals, patterns) under
+        # the spec's requireFieldMatch / highlightQuery rules, resolved ONCE
+        programs: dict[str, dict] = {}
+        for qid, cq in registry.queries.items():
+            spec = getattr(cq, "highlight", None)
+            if spec is None or not spec.fields:
                 continue
-            if spec.require_field_match:
-                flits = {t for fld, t in lits if fld == f}
-                fpats = [(k, p) for fld, k, p in wilds if fld == f]
-            else:
-                flits = {t for _, t in lits}
-                fpats = [(k, p) for _, k, p in wilds]
-            if flits or fpats:
-                # matchers compile ONCE here (driver), not per row per field
-                per_field[f] = (
-                    flits, [_compile_matcher(k, p) for k, p in fpats]
-                )
-        programs[qid] = {
-            "fields": per_field,
-            "pre": spec.pre_tag,
-            "post": spec.post_tag,
-            "fsize": spec.fragment_size,
-            "nfrag": spec.number_of_fragments,
-            "order": spec.order,
-        }
+            src_plan = spec.highlight_query or cq.plan
+            lits = positive_terms(src_plan)
+            wilds = _wildcards_of(src_plan)
+            per_field = {}
+            for f in spec.fields:
+                if f not in content_cols:
+                    continue
+                if spec.require_field_match:
+                    flits = {t for fld, t in lits if fld == f}
+                    fpats = [(k, p) for fld, k, p in wilds if fld == f]
+                else:
+                    flits = {t for _, t in lits}
+                    fpats = [(k, p) for _, k, p in wilds]
+                if flits or fpats:
+                    # matchers compile ONCE here (driver), not per row
+                    per_field[f] = (
+                        flits, [_compile_matcher(k, p) for k, p in fpats]
+                    )
+            programs[qid] = {
+                "fields": per_field,
+                "pre": spec.pre_tag,
+                "post": spec.post_tag,
+                "fsize": spec.fragment_size,
+                "nfrag": spec.number_of_fragments,
+                "order": spec.order,
+            }
+        return sc.broadcast(programs)
 
-    bc_programs = sc.broadcast(programs)
-    registry._hl_bc_cache = (hl_key, bc_programs)
-    return _hl_udf_col(
-        bc_programs, field_order, analyzers, query_id_col, content_cols
+    bc_programs = registry.derived(
+        "highlight_map",
+        (sc.applicationId, tuple(field_order), tuple(sorted(analyzers.items()))),
+        build,
     )
-
-
-def _hl_udf_col(
-    bc_programs, field_order, analyzers, query_id_col, content_cols
-) -> Column:
     an_by_field = {f: analyzers.get(f, "ws") for f in field_order}
 
     @F.pandas_udf(HIGHLIGHT_MAP_TYPE)
@@ -372,29 +347,19 @@ def highlight_col(
     token matching any of the query's positive literal terms or wildcard
     patterns gets wrapped, whole doc returned. For the reference-shaped
     per-field fragment map use ``highlight_map_col``."""
-    session = SparkSession.getActiveSession()
-    sc = session.sparkContext
-    # same per-registry broadcast cache as highlight_map_col (leak fix)
-    hlc_key = (sc.applicationId, registry.version)
-    cached = getattr(registry, "_hlc_bc_cache", None)
-    if cached is not None and cached[0] == hlc_key:
-        bc_terms = cached[1]
-    else:
-        if cached is not None:
-            try:
-                # unpersist, not destroy — see highlight_map_col
-                cached[1].unpersist()
-            except Exception:
-                pass
-        terms_by_q = {
+    sc = SparkSession.getActiveSession().sparkContext
+    # derived per registry version, like highlight_map_col's programs
+    bc_terms = registry.derived(
+        "highlight",
+        (sc.applicationId,),
+        lambda _token: sc.broadcast({
             qid: (
                 {t for _, t in positive_terms(q.plan)},
                 [_compile_matcher(k, p) for _, k, p in _wildcards_of(q.plan)],
             )
             for qid, q in registry.queries.items()
-        }
-        bc_terms = sc.broadcast(terms_by_q)
-        registry._hlc_bc_cache = (hlc_key, bc_terms)
+        }),
+    )
 
     @F.pandas_udf(T.StringType())
     def hl(qids: pd.Series, contents: pd.Series) -> pd.Series:

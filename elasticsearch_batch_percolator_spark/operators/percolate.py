@@ -46,7 +46,6 @@ Scale notes (100 TB / 1000-executor thinking):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field as dc_field
 
 import numpy as np
@@ -57,7 +56,7 @@ from pyspark.sql import types as T
 
 from ..index.build import in_collection
 from ..plans.eval_py import compile_predicate_fields
-from ..sources.registry import CompiledRegistry
+from ..sources.registry import CompiledRegistry, VerifyPlans
 
 
 # join-verify n-gram streams live in an offset fcol space so ONE need
@@ -90,11 +89,13 @@ _BT_PRUNE_MAX_PATS = 64
 # gated candidates) — see _jv_take
 _JV_MAX_RATIO = 1.5
 
+# join-verify lane: "auto" (the cost model above), "force" (every eligible
+# query) or "off" (none); force and off are each other's test oracle
+_JV_MODE = "auto"
+
 # Worker-process cache of the UNPICKLED verify broadcast + its compiled-
-# predicate memo, keyed by (applicationId, verify-broadcast token) — the
-# token is a driver-process-unique sequence minted per broadcast build
-# (registry.verify_bc_token()); raw ``version`` would alias across distinct
-# registries (it is len(queries) on load) and serve the wrong plans (see
+# predicate memo, keyed by (applicationId, VerifyPlans.token) — never raw
+# ``version``, which aliases across registries (see registry._TOKENS and
 # test_worker_verify_cache_no_alias_across_registries). PySpark's own
 # per-worker broadcast value cache is unreliable across tasks (the JVM
 # re-ships broadcast metadata to reused workers and the python-side seen-set
@@ -217,10 +218,9 @@ def _jv_structs(
     scalar_cols: set,
     used_tok_cols: list,
 ) -> tuple[dict, set, set]:
-    """Layout-dependent join-verify structures, CACHED on the registry per
-    (version, field layout): recomputing atom eligibility for 10^5 queries
-    costs seconds per batch, but it only changes when the registry mutates
-    or the batch field mapping differs.
+    """Layout-dependent join-verify structures (derived once per registry
+    version and field layout, see ``_layout_state``: recomputing atom
+    eligibility for 10^5 queries costs seconds).
 
     Returns (specs, probe_terms, pat_probe):
       specs[qid] = (rows, n_required, atoms, gram_cols, never, prows)
@@ -232,17 +232,6 @@ def _jv_structs(
       probe_terms = {(fc, word)} forbidden/n-gram words for the df stats probe
       pat_probe = {(fc, like)} unigram wildcard patterns needing exact df
     """
-    layout = (
-        tuple(sorted(resolve.items())),
-        tuple(used_tok_cols),
-        tuple(sorted(nested_cols)),
-        tuple(sorted(scalar_cols)),
-    )
-    key = (registry.version, layout)
-    cached = getattr(registry, "_jv_struct_cache", None)
-    if cached is not None and cached[0] == key:
-        return cached[1]
-
     # memoized per FIELD, not per atom: at a 10^6-query registry this is
     # called ~3.1M times over a handful of distinct fields — the un-memoized
     # form alone profiled 9.2s of the 33s one-time build (round-5 profile)
@@ -379,9 +368,7 @@ def _jv_structs(
     finally:
         if _gc_was:
             gc.enable()
-    out = (specs, probe_terms, pat_probe)
-    registry._jv_struct_cache = (key, out)
-    return out
+    return specs, probe_terms, pat_probe
 
 
 def _bt_prune_sets(
@@ -402,23 +389,9 @@ def _bt_prune_sets(
     footprint exceeds the thresholds — the InSet literal and the per-token
     LIKE chain must stay cheap — or when a group member's field resolves
     outside the indexed columns (defensive; used_tok_cols construction
-    makes that impossible today). Cached per (registry version, layout)."""
+    makes that impossible today)."""
     from .match import wildcard_to_like
 
-    key = (
-        registry.version,
-        tuple(sorted(resolve.items())),
-        tuple(sorted(col_idx.items())),
-        # the closure includes jv probe words and expansion patterns, and
-        # those are EMPTY when the jv lane is off (jv_specs = {}): a set
-        # computed under off must not be reused by an auto/force call, or
-        # jv-only tokens (e.g. a forbidden wildcard's expansions) would be
-        # pruned out of batch_terms and the exclusion silently lost
-        bool(jv_specs) or bool(jv_probe_terms),
-    )
-    cached = getattr(registry, "_bt_prune_cache", None)
-    if cached is not None and cached[0] == key:
-        return cached[1]
     lits: dict[int, set[str]] = {}
     pats: dict[int, set[str]] = {}
     n_terms = 0
@@ -481,9 +454,7 @@ def _bt_prune_sets(
                         return False
         return True
 
-    out = (lits, pats) if build() else None
-    registry._bt_prune_cache = (key, out)
-    return out
+    return (lits, pats) if build() else None
 
 
 def _kind_n(kind: str) -> int:
@@ -766,9 +737,9 @@ class _BatchView:
 
 @dataclass
 class BatchPlan:
-    """Registry-derived artifacts of one percolation, cached on the registry
-    per (version, field layout, jv mode, prune active) and reused by every
-    batch until the registry mutates.
+    """Registry-derived artifacts of one percolation, derived per (version,
+    field layout, jv mode) and reused by every batch until the registry
+    mutates.
 
     Built from the FIRST batch's term statistics (stats probe → gate choice
     and join-verify lane decision). Those statistics only steer performance
@@ -794,11 +765,11 @@ class BatchPlan:
     needs_verify: bool
     exact_sdf: DataFrame | None  # queries phase 1 decides exactly
     # python lane: the candidate filter to its queries (None when they are
-    # every candidate-producing query) and the query_id -> vid map (None
-    # when no query is python-verified)
+    # every candidate-producing query), the query_id -> vid map and the
+    # verify broadcast (both None when no query is python-verified)
     pythonic_sdf: DataFrame | None
     vid_sdf: DataFrame | None
-    n_simple: int  # vids below this are simple-lane rows
+    verify: VerifyPlans | None
 
 
 def _batch_view(
@@ -913,6 +884,33 @@ def _batch_view(
         used_tok_cols=used_tok_cols,
         col_idx={tc: i for i, tc in enumerate(used_tok_cols)},
     )
+
+
+def _layout_state(
+    registry: CompiledRegistry, view: _BatchView, jv_mode: str
+) -> tuple[tuple, tuple[dict, dict] | None]:
+    """(jv structures, batch_terms prune closure) for ``view``'s field
+    layout, derived once per registry version. ``jv_mode`` is part of the
+    key: the closure includes jv probe words and expansion patterns, which
+    are EMPTY when the lane is off — a closure built under off must not be
+    reused by an auto/force call, or jv-only tokens (e.g. a forbidden
+    wildcard's expansions) would be pruned out of batch_terms and the
+    exclusion silently lost."""
+
+    def build(_token):
+        jv = ({}, set(), set())
+        if jv_mode != "off":
+            jv = _jv_structs(
+                registry, view.resolve, view.col_idx, view.nested_cols,
+                view.scalar_cols, view.used_tok_cols,
+            )
+        if not _BT_PRUNE:
+            return jv, None
+        return jv, _bt_prune_sets(
+            registry, view.resolve, view.col_idx, jv[0], jv[1]
+        )
+
+    return registry.derived("layout", (view.layout, jv_mode), build)
 
 
 def _child_token_arrays(batch: DataFrame, tc: str) -> list[Column]:
@@ -1189,16 +1187,9 @@ def _batch_plan(
     bt_prune,
     batch_terms: DataFrame,
 ) -> BatchPlan:
-    """Stage 3: the registry's cached BatchPlan. On a miss, build everything
-    registry-derived a batch needs: stats probe → gates → jv lane decision
-    → jv tables → gate/pattern/all-docs frames → python qid set → exact,
-    vid and pythonic frames."""
-    # bt_count semantics (and so the cached jv lane choice) depend on
-    # whether the pre-explode prune is active
-    key = (registry.version, view.layout, jv_mode, bt_prune is not None)
-    cached = getattr(registry, "_batch_plan_cache", None)
-    if cached is not None and cached[0] == key:
-        return cached[1]
+    """Stage 3: everything registry-derived a batch needs: stats probe →
+    gates → jv lane decision → jv tables → gate/pattern/all-docs frames →
+    python qid set → exact, vid and pythonic frames."""
     jv_specs, jv_probe_terms, jv_pat_probe = jv
     stats = _stats_probe(
         spark, registry, view, jv_probe_terms, jv_pat_probe, batch_terms
@@ -1274,23 +1265,18 @@ def _batch_plan(
         if not cq.match_none and q not in verify_set
     ]
     exact_sdf = _qid_df(spark, exact_qids) if exact_qids else None
-    vid_sdf = pythonic_sdf = None
-    n_simple = 0
+    vid_sdf = pythonic_sdf = verify = None
     if pythonic:
         # query_id -> vid map (vid = unified verify row: simple rows 0..,
         # then plan rows): candidates join it JVM-side (ONE broadcast hash
         # table per executor) so no python worker ever builds a 10^6-entry
         # qid dict or materializes 10^6 qid strings — that build measured
         # ~47s/worker at 1M queries under 32-way allocation contention.
-        registry.broadcast_verify_plans(spark)
-        s_qids, p_qids = registry.verify_qid_spaces()
-        n_simple = len(s_qids)
+        verify = registry.broadcast_verify_plans(spark)
+        qids = verify.simple_qids + verify.plan_qids
         vid_sdf = spark.createDataFrame(
             pd.DataFrame(
-                {
-                    "query_id": s_qids + p_qids,
-                    "vid": np.arange(n_simple + len(p_qids), dtype=np.int32),
-                }
+                {"query_id": qids, "vid": np.arange(len(qids), dtype=np.int32)}
             ),
             "query_id string, vid int",
         )
@@ -1299,7 +1285,7 @@ def _batch_plan(
         # is a no-op — skip it instead of broadcasting a 10^5-row filter
         if exact_sdf is not None:
             pythonic_sdf = _qid_df(spark, pythonic)
-    plan = BatchPlan(
+    return BatchPlan(
         jv_qids=jv_qids,
         jv_rows=jv_rows,
         jv_prows=jv_prows,
@@ -1328,10 +1314,8 @@ def _batch_plan(
         exact_sdf=exact_sdf,
         pythonic_sdf=pythonic_sdf,
         vid_sdf=vid_sdf,
-        n_simple=n_simple,
+        verify=verify,
     )
-    registry._batch_plan_cache = (key, plan)
-    return plan
 
 
 def _candidates(
@@ -1574,7 +1558,6 @@ def _verify_udf(bc_plans, bc_key, n_simple, qf_to_idx, nested_idx, scalar_idx):
 
 def _python_verify(
     spark: SparkSession,
-    registry: CompiledRegistry,
     view: _BatchView,
     plan: BatchPlan,
     candidates: DataFrame,
@@ -1589,16 +1572,11 @@ def _python_verify(
 
     Plans ship ONCE per executor via a Spark broadcast (pickling 10^5
     compiled closures into every task would dominate the job); predicates
-    compile lazily per worker and memoize. The broadcast is the registry's
-    CACHED verify-plan dict (a superset of pythonic — only candidate qids
-    are ever looked up) so its multi-second pickle is paid once per
-    registry, not once per batch."""
-    bc_plans = registry.broadcast_verify_plans(spark)
-    # keyed by the broadcast's own process-unique token, NOT
-    # registry.version: version is per-registry (len(queries) on load)
-    # so two registries in one app can alias and the worker cache
-    # would serve registry A's plans to registry B's batch.
-    bc_key = (spark.sparkContext.applicationId, registry.verify_bc_token())
+    compile lazily per worker and memoize. The broadcast is the plan's
+    handle on the registry's verify-plan set (a superset of pythonic — only
+    candidate qids are ever looked up) so its multi-second pickle is paid
+    once per registry, not once per batch."""
+    bc_key = (spark.sparkContext.applicationId, plan.verify.token)
     # group candidates per doc: tokens ship ONCE per doc (not once per
     # (doc, query) pair — a ~|queries|x blowup at dense candidate sets),
     # and the token list/set conversions amortize over all its queries.
@@ -1606,9 +1584,9 @@ def _python_verify(
     # shared by every query field resolving to that column.
     tok_cols = sorted(set(view.resolve.values()))
     verify_doc = _verify_udf(
-        bc_plans,
+        plan.verify.bc,
         bc_key,
-        plan.n_simple,
+        len(plan.verify.simple_qids),
         {qf: tok_cols.index(tc) for qf, tc in view.resolve.items()},
         {i for i, tc in enumerate(tok_cols) if tc in view.nested_cols},
         {i for i, tc in enumerate(tok_cols) if tc in view.scalar_cols},
@@ -1885,10 +1863,6 @@ def percolate(
     ``fields="auto"`` — infer the map from query fields ∩ batch columns
     with dtype-derived analyzers (``auto_fields``; the reference's
     documentMapperWithAutoCreate, BatchPercolatorService.java:314).
-
-    ``EBP_SIMPLE_JOIN_VERIFY`` (``auto`` | ``force`` | ``off``) selects how
-    the join-verify lane is chosen; ``off`` and ``force`` are each other's
-    differential oracle in the tests.
     """
     if fields == "auto":
         fields = auto_fields(registry, docs)
@@ -1897,23 +1871,19 @@ def percolate(
 
     # join-verify structures are needed BEFORE batch_terms: their probe
     # words and expansion patterns are part of the pre-explode prune
-    # closure (cached per registry+layout, so no repeated cost)
-    jv_mode = os.environ.get("EBP_SIMPLE_JOIN_VERIFY", "auto")
-    jv = (
-        _jv_structs(
-            registry, view.resolve, view.col_idx, view.nested_cols,
-            view.scalar_cols, view.used_tok_cols,
-        )
-        if jv_mode != "off"
-        else ({}, set(), set())
-    )
-    bt_prune = (
-        _bt_prune_sets(registry, view.resolve, view.col_idx, jv[0], jv[1])
-        if _BT_PRUNE
-        else None
-    )
+    # closure (derived per registry version + layout, so no repeated cost)
+    jv_mode = _JV_MODE
+    jv, bt_prune = _layout_state(registry, view, jv_mode)
     batch_terms = _batch_terms(spark, view, bt_prune, cached_frames)
-    plan = _batch_plan(spark, registry, view, jv_mode, jv, bt_prune, batch_terms)
+    # derived under the layout state's key (jv and bt_prune are functions
+    # of it)
+    plan = registry.derived(
+        "batch_plan",
+        (view.layout, jv_mode),
+        lambda _token: _batch_plan(
+            spark, registry, view, jv_mode, jv, bt_prune, batch_terms
+        ),
+    )
     # the distinct (fcol, term) batch dictionary feeds BOTH wildcard
     # expansions (gate patterns of non-jv queries AND the jv lane's
     # "w"/"wg" need expansion) — persisted when both lanes consume it so
@@ -1937,7 +1907,7 @@ def percolate(
             candidates.join(F.broadcast(plan.exact_sdf), "query_id", "left_semi")
         ]
     if plan.vid_sdf is not None:
-        parts.append(_python_verify(spark, registry, view, plan, candidates))
+        parts.append(_python_verify(spark, view, plan, candidates))
     if plan.jv_tables is not None:
         parts.append(_join_verify(view, plan, batch_terms, term_dict))
     if not parts:

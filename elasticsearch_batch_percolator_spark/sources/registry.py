@@ -40,7 +40,9 @@ import json
 import logging
 from dataclasses import dataclass, field
 from itertools import count
+from typing import NamedTuple
 
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.compiler import compile_query
@@ -68,13 +70,14 @@ _UNSET = "?"
 
 _LOG = logging.getLogger(__name__)
 
-# driver-process-unique sequence for verify-plan broadcasts. ``version``
-# alone is NOT a safe worker-side cache key: it is per-registry (set to
-# len(queries) on load, bumped on mutation), so two registries in one
-# application routinely share a (app, version) pair and would collide in
-# the workers' _WORKER_VERIFY_CACHE, silently evaluating batch B against
-# registry A's plans. Each freshly built broadcast takes the next token.
-_BC_SEQ = count(1)
+# driver-process-unique tokens for derived state (CompiledRegistry.derived).
+# ``version`` alone is NOT a safe worker-side cache key: it is per-registry
+# (set to len(queries) on load, bumped on mutation), so two registries in
+# one application routinely share a (app, version) pair and would collide
+# in the workers' _WORKER_VERIFY_CACHE / _WORKER_UNSUP_CACHE, silently
+# evaluating batch B against registry A's plans. Each build takes the next
+# token.
+_TOKENS = count(1)
 
 # from_df(distributed="auto") compiles on executors only from this many
 # rows up
@@ -202,19 +205,66 @@ def _rebuild_cq(
     )
 
 
+class VerifyPlans(NamedTuple):
+    """The phase-2 verify broadcast and the driver-side qid spaces
+    row-aligned with its columnar value: vid = simple row i, or
+    len(simple_qids) + plan row i (workers receive vids via the JVM
+    broadcast join, never qid strings). ``token`` keys the workers'
+    _WORKER_VERIFY_CACHE (see ``_TOKENS``)."""
+
+    bc: Broadcast
+    token: int
+    simple_qids: list
+    plan_qids: list
+
+
 @dataclass
 class CompiledRegistry:
     queries: dict[str, CompiledQuery] = field(default_factory=dict)
-    # mutation counter: invalidates the cached verify-plan broadcast
+    # mutation counter: invalidates every ``derived`` entry
     version: int = 0
+    # name -> (key, value); the one owner of registry-derived state
+    _derived_cache: dict = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     def __len__(self) -> int:
         return len(self.queries)
 
-    def broadcast_verify_plans(self, spark: SparkSession):
-        """Spark broadcast of the phase-2 verify set, cached per
-        (app, version); value = {"simple_cols": <columnar simple lane>,
-        "plans": {qid: plan_blob}}.
+    def derived(self, name: str, key: tuple, build):
+        """Registry-derived state, one entry per ``name``, reused while
+        ``(version, *key)`` is unchanged (the reference keeps each query's
+        plan and approximation in one per-shard map rebuilt only when the
+        registry changes, BatchPercolatorQueriesRegistry.java:244-266).
+
+        On a miss, ``build(token)`` makes the new value; ``token`` is drawn
+        from ``_TOKENS`` once per build, so a value can carry it as a
+        worker-cache key that stays fixed while the entry is reused. A
+        replaced value's broadcast (the value itself, or a top-level
+        element of a tuple value) is released first, so hot-swaps do not
+        leak one broadcast each: unpersist, NOT destroy — a Column, stream
+        or in-flight batch built against the old broadcast may still ship
+        it, and unpersist only drops the copies (re-shipped lazily)."""
+        key = (self.version, *key)
+        entry = self._derived_cache.get(name)
+        if entry is not None:
+            if entry[0] == key:
+                return entry[1]
+            old = entry[1]
+            for v in old if isinstance(old, tuple) else (old,):
+                if isinstance(v, Broadcast):
+                    try:
+                        v.unpersist()
+                    except Exception:  # e.g. its SparkContext is stopped
+                        _LOG.debug("unpersist of %s failed", name, exc_info=True)
+        value = build(next(_TOKENS))
+        self._derived_cache[name] = (key, value)
+        return value
+
+    def broadcast_verify_plans(self, spark: SparkSession) -> VerifyPlans:
+        """Spark broadcast of the phase-2 verify set, derived per app;
+        value = {"simple_cols": <columnar simple lane>, "plan_cols":
+        <columnar plan blobs>}.
 
         Pickling a 10^5-plan dict costs seconds; the registry outlives many
         percolation batches (the reference amortizes its registration-time
@@ -231,21 +281,12 @@ class CompiledRegistry:
         decode only the qids that actually become candidates, memoized
         (percolate._sdecode)."""
         sc = spark.sparkContext
-        key = (sc.applicationId, self.version)
-        cached = getattr(self, "_bc_cache", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        if cached is not None:
-            # hot-swap (version bump) or new app: release the stale
-            # broadcast's executor/driver storage instead of leaking one
-            # full plan-blob broadcast per swap (the highlight/windowed
-            # caches unpersist the same way). unpersist, NOT destroy: an
-            # in-flight batch planned against the old broadcast may still
-            # re-ship it from the driver on a task retry.
-            try:
-                cached[1].unpersist()
-            except Exception:
-                pass
+        return self.derived(
+            "verify", (sc.applicationId,),
+            lambda token: self._build_verify_plans(sc, token),
+        )
+
+    def _build_verify_plans(self, sc, token: int) -> VerifyPlans:
         import gc
         import pickle
 
@@ -331,7 +372,7 @@ class CompiledRegistry:
             # rows) with a JVM broadcast join — ONE Tungsten hash table per
             # executor instead of a 10^6-entry python dict (and 1.4M string
             # allocations) in EVERY worker, which measured ~47s/worker under
-            # 32-way concurrency. verify_qid_spaces() exposes the lists
+            # 32-way concurrency. VerifyPlans carries the lists
             # driver-side for the vid-map build.
             simple_cols = {
                 "fields": list(s_fields),
@@ -369,23 +410,7 @@ class CompiledRegistry:
             if _gc_was:
                 gc.enable()
         bc = sc.broadcast({"simple_cols": simple_cols, "plan_cols": plan_cols})
-        self._bc_cache = (key, bc, next(_BC_SEQ), (s_qids, p_qids))
-        return bc
-
-    def verify_qid_spaces(self) -> tuple[list, list]:
-        """(simple_qids, plan_qids) row-aligned with the CURRENT verify
-        broadcast's columnar value — vid = simple row i, or
-        len(simple_qids) + plan row i (driver-side only; workers receive
-        vids via the JVM broadcast join, never qid strings)."""
-        return self._bc_cache[3]
-
-    def verify_bc_token(self) -> int:
-        """Process-unique token for the CURRENT verify broadcast — the
-        worker-side cache key component (see percolate._WORKER_VERIFY_CACHE).
-        Unlike ``version`` it can never alias across registries: it is drawn
-        from a module-level sequence each time a new broadcast is built, and
-        stays fixed while the cached broadcast is reused."""
-        return self._bc_cache[2]
+        return VerifyPlans(bc, token, s_qids, p_qids)
 
     def warmup(
         self,
@@ -397,15 +422,16 @@ class CompiledRegistry:
     ) -> None:
         """Registration-time warmup (the reference pays its query parse at
         registration, BatchPercolatorQueriesRegistry.java:244-266): build +
-        ship the verify-plan broadcast and precompute the join-verify
-        structures for the anticipated batch field layout, so the FIRST
-        percolation batch pays neither. ``fields`` mirrors percolate()'s
-        parameter; None = the single-field default layout.
+        ship the verify-plan broadcast and, for the single-field default
+        layout (``fields=None``, mirroring percolate()'s parameter),
+        prefill percolate's layout entry (join-verify structures + the
+        batch_terms prune closure), so the FIRST percolation batch pays
+        neither.
 
         ``sample`` — a small REPRESENTATIVE document batch (a prior batch,
         a corpus sample; the reference's analog draws term stats from its
         live index). When given, warmup runs one full percolation over it,
-        which (a) builds the per-registry batch-plan cache — gate choice +
+        which (a) derives the registry's whole batch plan — gate choice +
         join-verify lane decision from the sample's term statistics, so
         the first real batch skips its stats-probe and bt-count jobs —
         and (b) exercises the execution path once: python workers spawn,
@@ -414,13 +440,23 @@ class CompiledRegistry:
         steady-state (warm) speed. Stats drift only affects gate
         selectivity, never results: the plan is reused until the registry
         mutates."""
-        from ..operators.percolate import _jv_structs, percolate
+        from ..operators.percolate import (
+            _JV_MODE,
+            _batch_view,
+            _layout_state,
+            percolate,
+        )
 
         self.broadcast_verify_plans(spark)
         if fields is None:
-            qfields = sorted(self.query_fields())
-            resolve = {qf: "tokens" for qf in qfields}
-            _jv_structs(self, resolve, {"tokens": 0}, set(), set(), ["tokens"])
+            # the view percolate itself builds for a (long id, string
+            # content) batch, so the prefilled layout key matches by
+            # construction
+            empty = spark.createDataFrame(
+                [], f"`{id_col}` long, `{content_col}` string"
+            )
+            view = _batch_view(empty, self, content_col, id_col, None, None)
+            _layout_state(self, view, _JV_MODE)
         if sample is not None:
             res = percolate(
                 spark, sample, self,
@@ -648,12 +684,12 @@ class CompiledRegistry:
         vocabulary, gate-table assembly) is pure pandas — at a 10^6-query
         registry the per-query python ``min()`` formulation of gate choice
         alone measured ~100s on the driver, the vectorized path seconds."""
+        return self.derived("flat_groups", (), lambda _token: self._flat_groups())
+
+    def _flat_groups(self):
         import numpy as np
         import pandas as _pd
 
-        cached = getattr(self, "_flat_groups_cache", None)
-        if cached is not None and cached[0] == self.version:
-            return cached[1]
         qids: list[str] = []
         qixs: list[int] = []
         gis: list[int] = []
@@ -682,16 +718,18 @@ class CompiledRegistry:
                 "value": vals,
             }
         )
-        out = (np.asarray(qids, dtype=object), tbl)
-        self._flat_groups_cache = (self.version, out)
-        return out
+        return (np.asarray(qids, dtype=object), tbl)
 
     def gates_pdf(self, term_df_pdf=None):
-        """Vectorized gate choice — identical semantics to ``gates()``
-        (one gate group per filterable query: the literal-only group with
-        the lowest summed batch df, first-in-order on ties; a query with
-        no literal-only group gates on its smallest group, whose wildcard
-        members expand against the batch dictionary downstream).
+        """Vectorized gate choice — choose ONE gate group per filterable
+        query: a doc can match only if it satisfies every group, so any
+        single group is a sound candidate filter. Pick the literal-only
+        group with the lowest summed batch df (the rarest-term trick;
+        first-in-order on ties); a query with no literal-only group gates
+        on its smallest group, whose wildcard members expand against the
+        batch dictionary downstream. Semantics pinned against the
+        per-query loop ``_loop_gates`` in tests/test_gates_vectorized.py
+        (that loop measured ~100s at a 10^6-query registry).
 
         ``term_df_pdf``: pandas DataFrame (field, value, df) of batch
         document frequencies; absent terms count 0. Returns
@@ -731,8 +769,8 @@ class CompiledRegistry:
             n=("nonlit", "size"), nonlit=("nonlit", "sum"), score=("score", "sum")
         ).reset_index()
         lit_g = agg[agg["nonlit"] == 0]
-        # first minimal in gi order == gates()' min() tie-break (agg is
-        # sorted (qix, gi), idxmin keeps the first occurrence)
+        # first minimal in gi order == _loop_gates' min() tie-break (agg
+        # is sorted (qix, gi), idxmin keeps the first occurrence)
         best_lit = lit_g.loc[lit_g.groupby("qix")["score"].idxmin(), ["qix", "gi"]]
         rest = agg[~agg["qix"].isin(best_lit["qix"])]
         best_sz = rest.loc[rest.groupby("qix")["n"].idxmin(), ["qix", "gi"]]
@@ -817,40 +855,6 @@ class CompiledRegistry:
                 or (q.groups is not None and len(q.groups) > 1)
             )
         ]
-
-    def gates(
-        self, term_df: dict[tuple[str, str], int] | None = None
-    ) -> tuple[list, list]:
-        """Choose ONE gate group per filterable query: a doc can match only
-        if it satisfies every group, so any single group is a sound
-        candidate filter — pick the most selective (lowest summed df; the
-        rarest-term trick). Literal-only groups are preferred; a query with
-        no literal-only group gates on a pattern group (expanded against the
-        batch term dictionary downstream).
-
-        ``term_df`` is keyed by (field, term); absent-from-batch terms have
-        df=0 — gating on them is optimal (zero candidates, correctly).
-        Returns (literal_gates, pattern_gates): literal_gates =
-        [(query_id, field, term)], pattern_gates = [(query_id, field,
-        like_pattern)]. Tuple-building wrapper over the vectorized
-        ``gates_pdf`` (one python loop per registered query measured ~100s
-        at a 10^6-query registry)."""
-        import pandas as _pd
-
-        tdf_pdf = None
-        if term_df:
-            tdf_pdf = _pd.DataFrame(
-                [(f, v, d) for (f, v), d in term_df.items()],
-                columns=["field", "value", "df"],
-            )
-        lit_pdf, pat_pdf = self.gates_pdf(tdf_pdf)
-        lit_rows = list(
-            zip(lit_pdf["query_id"], lit_pdf["field"], lit_pdf["term"])
-        )
-        pat_rows = list(
-            zip(pat_pdf["query_id"], pat_pdf["field"], pat_pdf["pattern"])
-        )
-        return lit_rows, pat_rows
 
 
 # longest slop-0 phrase the join-verify n-gram streams cover; longer

@@ -42,8 +42,6 @@ the conjunction check.
 
 from __future__ import annotations
 
-from itertools import count
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,7 +56,6 @@ from ..sources.registry import CompiledRegistry, _UNSET, _jv_requirements
 # and re-compiles every unsupported query's predicate in EVERY task of
 # EVERY micro-batch.
 _WORKER_UNSUP_CACHE: dict = {}
-_UNSUP_SEQ = count(1)
 
 
 def _ngrams_expr(n: int) -> str:
@@ -327,39 +324,24 @@ def windowed_match_counts(
             fs = cq.fields_fs if cq.fields_fs is not None else fields_of(cq.plan)
             return (b, tuple(sorted(fs)))
 
-        # the broadcast is CACHED on the registry keyed by (app, version,
-        # unsupported set) — a driver that rebuilds the windowed query per
-        # restart / registry hot-swap would otherwise accumulate one full
-        # plan-blob broadcast per call for the app's lifetime (same leak
-        # highlight_map_col fixes); a stale-keyed predecessor is
-        # unpersisted (not destroyed: an earlier stream may still run it)
-        bc_key = (
-            spark.sparkContext.applicationId,
-            registry.version,
-            tuple(sorted(unsupported)),
-        )
-        cached_bc = getattr(registry, "_unsup_bc_cache", None)
-        if cached_bc is not None and cached_bc[0] == bc_key:
-            bc_plans, tok = cached_bc[1], cached_bc[2]
-        else:
-            if cached_bc is not None:
-                try:
-                    cached_bc[1].unpersist()
-                except Exception:
-                    pass
+        # the broadcast is derived per (app, registry version, unsupported
+        # set) — a driver that rebuilds the windowed query per restart /
+        # registry hot-swap would otherwise accumulate one full plan-blob
+        # broadcast per call for the app's lifetime
+        def build(token):
             blobs = {qid: _blob(registry.queries[qid]) for qid in unsupported}
-            bc_plans = spark.sparkContext.broadcast(blobs)
-            # process-unique token drawn per broadcast BUILD, fixed while
-            # the cached broadcast is reused (the verify_bc_token pattern:
-            # `version` alone can alias across registries in one app)
-            tok = next(_UNSUP_SEQ)
-            registry._unsup_bc_cache = (bc_key, bc_plans, tok)
+            return spark.sparkContext.broadcast(blobs), token
+
+        app = spark.sparkContext.applicationId
+        bc_plans, tok = registry.derived(
+            "windowed_unsupported", (app, tuple(sorted(unsupported))), build
+        )
         # process-persistent worker cache key (see _WORKER_UNSUP_CACHE):
-        # stable across every task and micro-batch of every stream reusing
-        # this broadcast, so the worker memo actually hits; a hot-swap
-        # builds a new broadcast + token and the len>=2 eviction drops
-        # the stale entry
-        _ck = (bc_key[0], tok)
+        # the build's token is stable across every task and micro-batch of
+        # every stream reusing this broadcast, so the worker memo hits; a
+        # hot-swap builds a new broadcast + token and the len>=2 eviction
+        # drops the stale entry
+        _ck = (app, tok)
 
         # NB: no pd.Series annotations — pandas is function-local here and
         # pandas_udf resolves annotation strings at definition time
@@ -368,14 +350,11 @@ def windowed_match_counts(
             # the cache dict MUST be resolved via runtime import — closing
             # over _WORKER_UNSUP_CACHE would copy it per task (the memo
             # would never hit across tasks/micro-batches)
-            try:
-                from elasticsearch_batch_percolator_spark.streaming import (
-                    windowed as _wm,
-                )
+            from elasticsearch_batch_percolator_spark.streaming import (
+                windowed as _wm,
+            )
 
-                cache = _wm._WORKER_UNSUP_CACHE
-            except ImportError:  # package not shipped: per-task fallback
-                cache = _WORKER_UNSUP_CACHE
+            cache = _wm._WORKER_UNSUP_CACHE
             st = cache.get(_ck)
             if st is None:
                 while len(cache) >= 2:

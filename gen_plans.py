@@ -3,6 +3,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from elasticsearch_batch_percolator_spark.session import get_spark
 from elasticsearch_batch_percolator_spark.engine import Engine
 from elasticsearch_batch_percolator_spark.index.build import build_index, read_postings
+from elasticsearch_batch_percolator_spark.operators import percolate as percolate_mod
 from elasticsearch_batch_percolator_spark.operators.percolate import percolate
 from elasticsearch_batch_percolator_spark.sources.registry import CompiledRegistry
 from pyspark.sql import functions as F
@@ -37,24 +38,24 @@ p3 = grab(percolate(spark, docs, reg).matches)
 sections.append(("Percolation phase 1: broadcast rarest-group gate table joined to the persisted batch (doc, field, term) rows; phase 2 = one Arrow UDF over doc-grouped candidates (broadcast compiled plans) — candidate volume is sum_q df(gate_q), never batch x queries", p3))
 
 # 4. join-verify lane: term + 2-term-phrase conjunction fully in Catalyst
-os.environ["EBP_SIMPLE_JOIN_VERIFY"] = "force"
+percolate_mod._JV_MODE = "force"
 reg_jv = CompiledRegistry.from_rows([
     ("jv1", {"bool": {"must": [{"term": {"content": "spark"}},
                                 {"phrase": {"field": "content", "terms": ["the", "fast"]}}],
              "must_not": [{"term": {"content": "wolf"}}]}}),
 ])
 p4 = grab(percolate(spark, docs, reg_jv).matches)
-os.environ.pop("EBP_SIMPLE_JOIN_VERIFY")
+percolate_mod._JV_MODE = "auto"
 sections.append(("Join-verify lane (forced): the whole conjunction — required term, required bigram (2-term phrase), forbidden term — is ONE broadcast hash join of the (doc, fcol, term) + bigram streams against the need/forbid table, a partial-aggregating HashAggregate on (doc_id, query_id), and a count filter. No Python, no Arrow; every operator inside WholeStageCodegen", p4))
 
 # 5. join-verify with a 3-term slop-0 phrase: trigram stream in the smallint
 # offset fcol space — long phrases stay JVM-side
-os.environ["EBP_SIMPLE_JOIN_VERIFY"] = "force"
+percolate_mod._JV_MODE = "force"
 reg_g3 = CompiledRegistry.from_rows([
     ("g3", {"phrase": {"field": "content", "terms": ["the", "fast", "spark"]}}),
 ])
 p5 = grab(percolate(spark, docs, reg_g3).matches)
-os.environ.pop("EBP_SIMPLE_JOIN_VERIFY")
+percolate_mod._JV_MODE = "auto"
 sections.append(("Join-verify n-gram generalization: a 3-term slop-0 phrase is EXACT trigram containment — the contiguous-trigram stream (transform/sequence/slice inside Generate) joins the broadcast need table under fcol + 64*(n-1); same single aggregate, still zero Python", p5))
 
 # 6. IVF ANN probe over the written partitioned index: centroid_id IN-filter

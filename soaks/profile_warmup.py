@@ -8,7 +8,8 @@ cost centers. Stages timed separately:
   compile        distributed blob compile (executor-side parse + pickle)
   gate_meta      gate_verify_ids() (the per-query metadata sweep)
   broadcast      broadcast_verify_plans() (columnar assembly + ship)
-  jv_structs     _jv_structs() for the single-field layout
+  layout         warmup()'s layout prefill for the single-field layout
+                 (_jv_structs + the batch_terms prune closure)
   sample_perc    one full percolation over a 6k-doc sample (lane
                  decision, gate choice, worker warmup)
   rep0/rep1      20k-doc production batches (cold/warm check)
@@ -28,10 +29,7 @@ os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/ebp-spark")
 os.environ.setdefault("EBP_IO_CODEC", "lz4")
 
 from elasticsearch_batch_percolator_spark.corpus import _full_vocab, synth_corpus
-from elasticsearch_batch_percolator_spark.operators.percolate import (
-    _jv_structs,
-    percolate,
-)
+from elasticsearch_batch_percolator_spark.operators.percolate import percolate
 from elasticsearch_batch_percolator_spark.session import get_spark
 from elasticsearch_batch_percolator_spark.sources.registry import CompiledRegistry
 
@@ -97,10 +95,9 @@ reg = stage("compile", lambda: CompiledRegistry.from_df(
     spark.createDataFrame(qpdf), distributed=True))
 stage("gate_meta", lambda: len(reg.gate_verify_ids()))
 stage("broadcast", lambda: reg.broadcast_verify_plans(spark))
-qfields = sorted(reg.query_fields())
-resolve = {qf: "tokens" for qf in qfields}
-stage("jv_structs", lambda: _jv_structs(
-    reg, resolve, {"tokens": 0}, set(), set(), ["tokens"]))
+# the verify broadcast is already derived: warmup() now pays only the
+# layout prefill percolate's first batch reuses
+stage("layout", lambda: reg.warmup(spark))
 
 warm = synth_corpus(spark, 6000, partitions=128, vocab_size=10000)
 

@@ -8,6 +8,7 @@ sys.path.insert(0, _R); sys.path.insert(0, os.path.join(_R, "tests"))
 import test_multi_field_random as M
 import importlib.util as _iu
 _spec = _iu.spec_from_file_location("soak_rich", os.path.join(_R, "soaks", "soak_rich.py"))
+from elasticsearch_batch_percolator_spark.operators import percolate as percolate_mod
 from elasticsearch_batch_percolator_spark.operators.percolate import percolate
 from elasticsearch_batch_percolator_spark.plans.eval_py import eval_plan
 from elasticsearch_batch_percolator_spark.sources.registry import CompiledRegistry
@@ -90,7 +91,7 @@ for it in range(rounds):
     nd = rng.choice(
         [int(x) for x in os.environ.get("ND_CHOICES", "80,150,300").split(",")])
     jv = rng.choice(["auto", "force", "off"])
-    os.environ["EBP_SIMPLE_JOIN_VERIFY"] = jv
+    percolate_mod._JV_MODE = jv
     str_ids = rng.random() < 0.3
     queries = {}
     while len(queries) < nq:

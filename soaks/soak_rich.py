@@ -3,6 +3,7 @@ phrases, span or/not nesting, msm spec strings, nested blocks with inner
 negation, terms queries — across jv modes and id dtypes."""
 import os, random, sys, time
 import os; sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from elasticsearch_batch_percolator_spark.operators import percolate as percolate_mod
 from elasticsearch_batch_percolator_spark.operators.percolate import percolate
 from elasticsearch_batch_percolator_spark.plans.eval_py import eval_plan
 from elasticsearch_batch_percolator_spark.sources.registry import CompiledRegistry
@@ -82,7 +83,7 @@ fail = 0
 for it in range(12):
     seed = base.randrange(1 << 63)
     jv = ["auto", "force", "off"][it % 3]
-    os.environ["EBP_SIMPLE_JOIN_VERIFY"] = jv
+    percolate_mod._JV_MODE = jv
     rng = random.Random(seed)
     queries = {}
     i = 0

@@ -1,9 +1,10 @@
 """Fresh-seed Spark percolation soak: random multi-field/nested/numeric
-registries vs eval_plan ground truth, cycling EBP_SIMPLE_JOIN_VERIFY
-(auto/force/off) and long-vs-string doc ids."""
+registries vs eval_plan ground truth, cycling the join-verify lane mode
+(percolate._JV_MODE: auto/force/off) and long-vs-string doc ids."""
 import os, random, sys, time
 import os; _R = os.path.dirname(os.path.dirname(os.path.abspath(__file__))); sys.path.insert(0, _R); sys.path.insert(0, os.path.join(_R, "tests"))
 import test_multi_field_random as M
+from elasticsearch_batch_percolator_spark.operators import percolate as percolate_mod
 from elasticsearch_batch_percolator_spark.operators.percolate import percolate
 from elasticsearch_batch_percolator_spark.plans.eval_py import eval_plan
 from elasticsearch_batch_percolator_spark.sources.registry import CompiledRegistry
@@ -18,7 +19,7 @@ for it in range(18):
     seed = base.randrange(1 << 63)
     jv = ["auto", "force", "off"][it % 3]
     str_ids = it % 2 == 1
-    os.environ["EBP_SIMPLE_JOIN_VERIFY"] = jv
+    percolate_mod._JV_MODE = jv
     rng = random.Random(seed)
     queries = {f"q{i}": M._rand_query(rng) for i in range(300)}
     docs = [M._rand_doc(rng, i) for i in range(150)]

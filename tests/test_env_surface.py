@@ -1,7 +1,6 @@
 """The package's environment surface: behavior is configured in code, and
-only two EBP_* variables are read — the shuffle codec (a host setting) and
-the join-verify lane selector the differential tests drive. Any new
-``os.environ`` knob must be added here on purpose."""
+only one EBP_* variable is read — the shuffle codec (a host setting). Any
+new ``os.environ`` knob must be added here on purpose."""
 
 import ast
 import pathlib
@@ -49,6 +48,6 @@ def _env_names() -> set[str]:
     return names
 
 
-def test_package_reads_only_two_ebp_env_vars():
+def test_package_reads_only_the_codec_env_var():
     ebp = {n for n in _env_names() if n.startswith("EBP_")}
-    assert ebp == {"EBP_IO_CODEC", "EBP_SIMPLE_JOIN_VERIFY"}
+    assert ebp == {"EBP_IO_CODEC"}

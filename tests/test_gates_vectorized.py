@@ -46,6 +46,22 @@ def _loop_gates(reg: CompiledRegistry, term_df=None):
     return lit_rows, pat_rows
 
 
+def _gates(reg: CompiledRegistry, term_df=None):
+    """``gates_pdf`` as (literal_gates, pattern_gates) tuple lists:
+    [(query_id, field, term)] and [(query_id, field, like_pattern)]."""
+    import pandas as pd
+
+    tdf = pd.DataFrame(
+        [(f, v, d) for (f, v), d in (term_df or {}).items()],
+        columns=["field", "value", "df"],
+    )
+    lit_pdf, pat_pdf = reg.gates_pdf(tdf)
+    return (
+        list(zip(lit_pdf["query_id"], lit_pdf["field"], lit_pdf["term"])),
+        list(zip(pat_pdf["query_id"], pat_pdf["field"], pat_pdf["pattern"])),
+    )
+
+
 @pytest.fixture(scope="module")
 def mixed_registry():
     rng = random.Random(7)
@@ -87,7 +103,7 @@ def test_gates_pdf_equals_loop_with_stats(mixed_registry):
         {("title", w): rng.randint(0, 50) for w in vocab if rng.random() < 0.5}
     )
     lo, po = _loop_gates(mixed_registry, term_df)
-    ln, pn = mixed_registry.gates(term_df)
+    ln, pn = _gates(mixed_registry, term_df)
     # set equality == identical per-query group choice incl. tie-breaks
     # (a different choice would emit that query's OTHER group's rows)
     assert set(lo) == set(ln) and len(lo) == len(ln)
@@ -96,7 +112,7 @@ def test_gates_pdf_equals_loop_with_stats(mixed_registry):
 
 def test_gates_pdf_equals_loop_no_stats(mixed_registry):
     lo, po = _loop_gates(mixed_registry, {})
-    ln, pn = mixed_registry.gates({})
+    ln, pn = _gates(mixed_registry, {})
     assert set(lo) == set(ln) and len(lo) == len(ln)
     assert set(po) == set(pn) and len(po) == len(pn)
 
@@ -113,4 +129,4 @@ def test_flat_groups_cached_and_invalidated(mixed_registry):
 
 def test_empty_registry_gates():
     reg = CompiledRegistry()
-    assert reg.gates({}) == ([], [])
+    assert _gates(reg, {}) == ([], [])

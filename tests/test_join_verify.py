@@ -4,7 +4,6 @@ EXACTLY the matches of the broadcast python evaluator for every simple
 registry shape — multi-field, must_not, unconfigured fields, duplicated
 terms, required∩forbidden — in both single- and multi-field modes."""
 
-import os
 import random
 
 import pytest
@@ -103,30 +102,37 @@ def _registry(seed: int, n: int) -> CompiledRegistry:
 
 
 def _matches(spark, batch, reg, mode, fields):
-    os.environ["EBP_SIMPLE_JOIN_VERIFY"] = mode
+    saved = percolate_mod._JV_MODE
+    percolate_mod._JV_MODE = mode
     try:
         res = percolate(spark, batch, reg, fields=fields)
         out = {(int(r["doc_id"]), r["query_id"]) for r in res.matches.collect()}
         res.unpersist()
         return out
     finally:
-        os.environ.pop("EBP_SIMPLE_JOIN_VERIFY", None)
+        percolate_mod._JV_MODE = saved
+
+
+def _entry(reg, name):
+    """The registry's derived-state value under ``name``."""
+    return reg._derived_cache[name][1]
 
 
 def test_warmup_prebuilds_structs_and_matches_unchanged(spark):
-    """Registration-time warmup precomputes the jv structures for the
-    default single-field layout; the first percolate must HIT that cache
-    (same key) and produce identical matches."""
+    """Registration-time warmup precomputes the layout state (jv
+    structures + prune closure) for the default single-field layout; the
+    first percolate must HIT that entry (same key) and produce identical
+    matches."""
     reg = _registry(5, 30)
     reg.warmup(spark)
-    prebuilt = reg._jv_struct_cache[1]
+    prebuilt = _entry(reg, "layout")
     batch = synth_corpus(spark, 800, partitions=2).persist()
     batch.count()
     try:
         res = percolate(spark, batch, reg)
         got = {(int(r["doc_id"]), r["query_id"]) for r in res.matches.collect()}
         res.unpersist()
-        assert reg._jv_struct_cache[1] is prebuilt  # cache hit, no rebuild
+        assert _entry(reg, "layout") is prebuilt  # hit, no rebuild
         res2 = percolate(spark, batch, reg)
         got2 = {(int(r["doc_id"]), r["query_id"]) for r in res2.matches.collect()}
         res2.unpersist()
@@ -178,12 +184,12 @@ def test_batch_plan_cache_reuse_across_batches(spark):
         res1 = percolate(spark, b1, reg)
         got1 = {(int(r["doc_id"]), r["query_id"]) for r in res1.matches.collect()}
         res1.unpersist()
-        plan_before = reg._batch_plan_cache[1]
+        plan_before = _entry(reg, "batch_plan")
         assert isinstance(plan_before, BatchPlan)
         res2 = percolate(spark, b2, reg)
         got2 = {(int(r["doc_id"]), r["query_id"]) for r in res2.matches.collect()}
         res2.unpersist()
-        assert reg._batch_plan_cache[1] is plan_before  # cache HIT
+        assert _entry(reg, "batch_plan") is plan_before  # HIT
 
         fresh = _registry(31, 40)  # identical queries, cold cache
         res3 = percolate(spark, b2, fresh)
@@ -202,7 +208,7 @@ def test_warmup_with_sample_prebuilds_plan_cache(spark):
     reg = _registry(11, 30)
     sample = synth_corpus(spark, 200, partitions=2)
     reg.warmup(spark, sample=sample)
-    plan = reg._batch_plan_cache[1]
+    plan = _entry(reg, "batch_plan")
     assert isinstance(plan, BatchPlan)
     batch = synth_corpus(spark, 800, partitions=2).persist()
     batch.count()
@@ -210,7 +216,7 @@ def test_warmup_with_sample_prebuilds_plan_cache(spark):
         res = percolate(spark, batch, reg)
         got = {(int(r["doc_id"]), r["query_id"]) for r in res.matches.collect()}
         res.unpersist()
-        assert reg._batch_plan_cache[1] is plan  # warm plan reused
+        assert _entry(reg, "batch_plan") is plan  # warm plan reused
         cold = _registry(11, 30)
         res2 = percolate(spark, batch, cold)
         got2 = {(int(r["doc_id"]), r["query_id"]) for r in res2.matches.collect()}
@@ -222,7 +228,7 @@ def test_warmup_with_sample_prebuilds_plan_cache(spark):
 
 def test_bt_prune_cache_not_poisoned_by_off_mode(spark):
     """The batch_terms prune closure includes jv expansion patterns, which
-    are EMPTY under EBP_SIMPLE_JOIN_VERIFY=off. A prune set cached by an
+    are EMPTY under _JV_MODE="off". A prune set cached by an
     off-mode call must NOT be reused by a later force-mode call on the
     same registry — that dropped a forbidden wildcard's tokens from
     batch_terms and silently lost the exclusion (superset matches)."""

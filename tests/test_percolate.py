@@ -340,8 +340,8 @@ def test_distributed_registry_compile_equals_driver(spark):
 
     # the verify broadcast + jv atoms + field set assemble WITHOUT
     # unpickling any plan tree on the driver
-    bc = dist.broadcast_verify_plans(qdf.sparkSession)
-    s_qids, p_qids = dist.verify_qid_spaces()
+    verify = dist.broadcast_verify_plans(qdf.sparkSession)
+    bc, s_qids, p_qids = verify.bc, verify.simple_qids, verify.plan_qids
     assert set(s_qids) | set(p_qids) == set(dist.gate_verify_ids())
     # the plan buffer slices back to per-query blobs that unpickle
     import pickle as _pickle
@@ -449,8 +449,9 @@ def test_bt_prune_equivalence(spark, monkeypatch):
     }
     assert pruned == full and pruned
 
-    # prune actually engaged for reg_a (cache holds a non-None closure)
-    assert getattr(reg_a, "_bt_prune_cache")[1] is not None
+    # prune actually engaged for reg_a (the layout entry holds a non-None
+    # closure next to the jv structures)
+    assert reg_a._derived_cache["layout"][1][1] is not None
 
     # threshold exceeded -> prune disabled, results still identical
     monkeypatch.setattr(percolate_mod, "_BT_PRUNE", True)
@@ -461,7 +462,7 @@ def test_bt_prune_equivalence(spark, monkeypatch):
         for r in percolate(spark, docs, reg_c).matches.collect()
     }
     assert capped == full
-    assert getattr(reg_c, "_bt_prune_cache")[1] is None
+    assert reg_c._derived_cache["layout"][1][1] is None
 
 
 def test_worker_verify_cache_persists_across_tasks(spark):
@@ -564,7 +565,10 @@ def test_worker_verify_cache_no_alias_across_registries(spark):
     }
     assert got_a == {(i, "q1") for i in range(n)}
     assert got_b == {(i, "q1") for i in range(n)}
-    assert reg_a.verify_bc_token() != reg_b.verify_bc_token()
+    assert (
+        reg_a.broadcast_verify_plans(spark).token
+        != reg_b.broadcast_verify_plans(spark).token
+    )
 
 
 def test_from_df_auto_small_stays_serial(spark, monkeypatch):

@@ -510,12 +510,12 @@ def test_windowed_hybrid_broadcast_cached_per_registry_version(spark):
         spark, docs, reg, window_duration="10 minutes", watermark=None,
         hybrid=True,
     )
-    key1, bc1, tok1 = reg._unsup_bc_cache
+    _, (bc1, tok1) = reg._derived_cache["windowed_unsupported"]
     out2 = windowed_match_counts(
         spark, docs, reg, window_duration="10 minutes", watermark=None,
         hybrid=True,
     )
-    key2, bc2, tok2 = reg._unsup_bc_cache
+    _, (bc2, tok2) = reg._derived_cache["windowed_unsupported"]
     assert bc2 is bc1 and tok2 == tok1  # reused, not re-broadcast
     assert out1.collect() and out2.collect()
     # a version bump invalidates: new broadcast, new worker token
@@ -524,5 +524,5 @@ def test_windowed_hybrid_broadcast_cached_per_registry_version(spark):
         spark, docs, reg, window_duration="10 minutes", watermark=None,
         hybrid=True,
     )
-    key3, bc3, tok3 = reg._unsup_bc_cache
+    _, (bc3, tok3) = reg._derived_cache["windowed_unsupported"]
     assert bc3 is not bc1 and tok3 != tok1
