@@ -258,7 +258,7 @@ def highlight_map_col(
     # micro-batch on driver and executors.
     sc = SparkSession.getActiveSession().sparkContext
 
-    def build(_token):
+    def build(_token, _prev):
         # per-query highlight programs: field -> (literals, patterns) under
         # the spec's requireFieldMatch / highlightQuery rules, resolved ONCE
         programs: dict[str, dict] = {}
@@ -352,7 +352,7 @@ def highlight_col(
     bc_terms = registry.derived(
         "highlight",
         (sc.applicationId,),
-        lambda _token: sc.broadcast({
+        lambda _token, _prev: sc.broadcast({
             qid: (
                 {t for _, t in positive_terms(q.plan)},
                 [_compile_matcher(k, p) for _, k, p in _wildcards_of(q.plan)],

@@ -23,9 +23,9 @@ Its per-query loop (E1) is replaced by ONE set-oriented joined plan:
             BatchPercolatorService.java:364-368; YouScan aborts)
 
 ``percolate()`` runs these as stages over one ``BatchPlan`` — the
-registry-derived driver work, cached per registry version and field layout:
-batch view → batch_terms explode → plan → phase-1 candidates → python verify
-UDF → join-verify lane.
+registry-derived driver work, cached per registry version and field layout,
+its batch statistics carried across versions: batch view → batch_terms
+explode → plan → phase-1 candidates → python verify UDF → join-verify lane.
 
 Multi-field documents (A1): ``fields={query_field: source_col | (source_col,
 analyzer)}`` mirrors the reference's PerFieldAnalyzerWrapper
@@ -46,6 +46,7 @@ Scale notes (100 TB / 1000-executor thinking):
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field as dc_field
 
 import numpy as np
@@ -57,6 +58,8 @@ from pyspark.sql import types as T
 from ..index.build import in_collection
 from ..plans.eval_py import compile_predicate_fields
 from ..sources.registry import CompiledRegistry, VerifyPlans
+
+_LOG = logging.getLogger(__name__)
 
 
 # join-verify n-gram streams live in an offset fcol space so ONE need
@@ -530,8 +533,8 @@ class PercolateResult:
         for df in self.cached:
             try:
                 df.unpersist()
-            except Exception:
-                pass
+            except Exception:  # e.g. its SparkContext is stopped
+                _LOG.debug("unpersist of a batch frame failed", exc_info=True)
 
     def per_doc(self) -> DataFrame:
         """E7: every doc gets an entry, docs with no matches get []
@@ -736,17 +739,47 @@ class _BatchView:
 
 
 @dataclass
+class BatchStats:
+    """Batch term statistics behind a plan's gate choice and join-verify
+    lane decision, carried from plan to plan across registry versions.
+
+    A registry mutation whose probe closure the previous plan's statistics
+    cover replans from them with no Spark job (the reference registers or
+    deletes a query with one put or remove in the shard's query map,
+    BatchPercolatorQueriesRegistry.java:129-136, and the next batch does no
+    extra work); one that brings a new key probes the whole closure on the
+    current batch, so all of a plan's statistics come from one batch. Each
+    plan keeps only the keys of its own probe closure, so the size is
+    bounded by the live registry, not by its history. Reused values may
+    come from an earlier batch; like every plan statistic they steer
+    performance, never results."""
+
+    # (fcol, term) -> batch df; ``probed`` holds every key of the probe
+    # closure, df 0 included (absent from col_df)
+    col_df: dict
+    probed: frozenset
+    # (fcol, like) -> batch_terms rows matching a jv wildcard pattern
+    pat_df: dict
+    pat_probed: frozenset
+    # the python lane's fixed-cost proxy (see _jv_take); None when no
+    # "auto" lane decision needed it
+    token_volume: int | None
+
+
+@dataclass
 class BatchPlan:
     """Registry-derived artifacts of one percolation, derived per (version,
     field layout, jv mode) and reused by every batch until the registry
     mutates.
 
-    Built from the FIRST batch's term statistics (stats probe → gate choice
-    and join-verify lane decision). Those statistics only steer performance
-    — which gate each query joins on, which lane verifies it — never
+    Chosen from batch term statistics (``BatchStats`` → gate choice and
+    join-verify lane decision). Those statistics only steer performance —
+    which gate each query joins on, which lane verifies it — never
     results, so a later batch with different statistics reuses the plan
-    safely. At the 225k-query shape this build measured 6.5s of a 17.1s
-    batch (BENCH r2); reusing it skips the stats-probe and bt_count jobs.
+    safely, and a registry mutation over known vocabulary replans from the
+    replaced plan's statistics (a new key re-probes from cold). At the
+    225k-query shape a cold build measured 6.5s of a 17.1s batch (BENCH
+    r2); a replan over known vocabulary launches no Spark job.
     """
 
     # join-verify lane: the queries it owns (they skip phase 1), their
@@ -770,6 +803,9 @@ class BatchPlan:
     pythonic_sdf: DataFrame | None
     vid_sdf: DataFrame | None
     verify: VerifyPlans | None
+    # the statistics the plan was chosen from; the next registry version's
+    # plan starts from them
+    stats: BatchStats
 
 
 def _batch_view(
@@ -897,7 +933,7 @@ def _layout_state(
     wildcard's expansions) would be pruned out of batch_terms and the
     exclusion silently lost."""
 
-    def build(_token):
+    def build(_token, _prev):
         jv = ({}, set(), set())
         if jv_mode != "off":
             jv = _jv_structs(
@@ -1030,17 +1066,55 @@ def _batch_terms(
     return batch_terms
 
 
-def _stats_probe(
+def _probe_terms(spark: SparkSession, batch_terms: DataFrame, keys) -> dict:
+    """Batch df of each (fcol, term) in ``keys`` (df 0 keys absent): one
+    broadcast-join aggregate over the persisted explode."""
+    ipdf = pd.DataFrame(sorted(keys), columns=["fcol", "term"])
+    ipdf["fcol"] = ipdf["fcol"].astype("int8")
+    inv_df = spark.createDataFrame(ipdf, "fcol tinyint, term string")
+    return {
+        (int(r["fcol"]), r["term"]): int(r["df"])
+        for r in batch_terms.join(F.broadcast(inv_df), ["fcol", "term"])
+        .groupBy("fcol", "term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .collect()
+    }
+
+
+def _probe_patterns(spark: SparkSession, batch_terms: DataFrame, pats) -> dict:
+    """Exact hit volume of each jv "w" pattern (fcol, like): rows of
+    batch_terms matching it (the join the lane would actually pay). One
+    LIKE-join job on the persisted explode."""
+    ppdf = pd.DataFrame(sorted(pats), columns=["fcol", "like_pat"])
+    ppdf["fcol"] = ppdf["fcol"].astype("int8")
+    probe_sdf = spark.createDataFrame(ppdf, "fcol tinyint, like_pat string")
+    return {
+        (int(r["fcol"]), r["like_pat"]): int(r["df"])
+        for r in batch_terms.join(F.broadcast(probe_sdf), "fcol")
+        .filter(F.expr("term LIKE like_pat"))
+        .groupBy("fcol", "like_pat")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .collect()
+    }
+
+
+def _batch_stats(
     spark: SparkSession,
     registry: CompiledRegistry,
     view: _BatchView,
-    jv_probe_terms: set,
-    jv_pat_probe: set,
+    jv: tuple,
+    jv_mode: str,
+    bt_prune,
     batch_terms: DataFrame,
-) -> tuple[dict, dict, "pd.DataFrame", "pd.DataFrame", dict]:
+    prev: BatchStats | None,
+) -> BatchStats:
     """Batch df of every involved (fcol, term) and of every jv wildcard
-    pattern, and the gate choice they steer. Returns (col_df, term_df,
-    literal-gate pdf, pattern-gate pdf, jv_pat_df)."""
+    pattern, plus the batch's token volume. ``prev`` (the replaced plan's
+    statistics, None on a cold plan) is reused, filtered to the live keys,
+    when it covers the whole probe closure; otherwise the whole closure is
+    probed on this batch. Either way every statistic of a plan comes from
+    one batch, so df and volume stay comparable."""
+    jv_specs, jv_probe_terms, jv_pat_probe = jv
     # stats-probe vocabulary from the registry's flat gate-group table
     # (cached per version; the per-query python set comprehension
     # measured ~10s of driver time at a 10^6-query registry)
@@ -1051,55 +1125,68 @@ def _stats_probe(
     # forbidden atoms of join-verify candidates aren't gate-group
     # members — add their words to the stats probe so the volume
     # estimate covers them
-    involved = sorted(set(zip(inv["fcol"].astype(int), inv["value"])) | jv_probe_terms)
-    col_df, term_df = {}, {}
-    if involved:
-        ipdf = pd.DataFrame(involved, columns=["fcol", "term"])
-        ipdf["fcol"] = ipdf["fcol"].astype("int8")
-        inv_df = spark.createDataFrame(ipdf, "fcol tinyint, term string")
-        col_df = {
-            (int(r["fcol"]), r["term"]): int(r["df"])
-            for r in batch_terms.join(F.broadcast(inv_df), ["fcol", "term"])
-            .groupBy("fcol", "term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .collect()
-        }
-        # registry.gates keys by (query_field, term): project through
-        # resolve (fields outside every gate group have no column
-        # index — skip them). One pass over col_df grouped by fcol,
-        # then one pass per field over ITS terms — the per-field scan
-        # of the whole col_df was O(fields x batch vocabulary)
-        by_fc: dict[int, list] = {}
-        for (ci, t), d in col_df.items():
-            by_fc.setdefault(ci, []).append((t, d))
-        term_df = {
-            (qf, t): d
-            for qf, fc in view.fcol_of.items()
-            for t, d in by_fc.get(fc, ())
-        }
+    involved = set(zip(inv["fcol"].astype(int).tolist(), inv["value"])) | jv_probe_terms
+    needs_volume = bool(jv_specs) and jv_mode == "auto"
+    if (
+        prev is not None
+        and involved <= prev.probed
+        and jv_pat_probe <= prev.pat_probed
+        and (prev.token_volume is not None or not needs_volume)
+    ):
+        return BatchStats(
+            col_df={k: d for k, d in prev.col_df.items() if k in involved},
+            probed=frozenset(involved),
+            pat_df={k: d for k, d in prev.pat_df.items() if k in jv_pat_probe},
+            pat_probed=frozenset(jv_pat_probe),
+            token_volume=prev.token_volume,
+        )
+    token_volume = None
+    if needs_volume:
+        # the pruned stream no longer proxies the python lane's fixed cost
+        # (Arrow-shipping candidate docs' FULL token arrays) — measure the
+        # batch's raw token volume instead. Either count proxies the same
+        # cost, so a reused value serves a plan whose prune state differs
+        token_volume = (
+            _raw_token_volume(view) if bt_prune is not None
+            else batch_terms.count()
+        )
+    return BatchStats(
+        col_df=_probe_terms(spark, batch_terms, involved) if involved else {},
+        probed=frozenset(involved),
+        pat_df=(
+            _probe_patterns(spark, batch_terms, jv_pat_probe)
+            if jv_pat_probe else {}
+        ),
+        pat_probed=frozenset(jv_pat_probe),
+        token_volume=token_volume,
+    )
+
+
+def _gate_choice(
+    registry: CompiledRegistry, view: _BatchView, col_df: dict
+) -> tuple[dict, "pd.DataFrame", "pd.DataFrame"]:
+    """(term_df, literal-gate pdf, pattern-gate pdf): the gate choice the
+    batch statistics steer, on the driver."""
+    # registry.gates_pdf keys by (query_field, term): project through
+    # resolve (fields outside every gate group have no column index —
+    # skip them). One pass over col_df grouped by fcol, then one pass per
+    # field over ITS terms — the per-field scan of the whole col_df was
+    # O(fields x batch vocabulary)
+    by_fc: dict[int, list] = {}
+    for (ci, t), d in col_df.items():
+        by_fc.setdefault(ci, []).append((t, d))
+    term_df = {
+        (qf, t): d
+        for qf, fc in view.fcol_of.items()
+        for t, d in by_fc.get(fc, ())
+    }
     lit_pdf, pat_pdf = registry.gates_pdf(
         pd.DataFrame(
             [(f, v, d) for (f, v), d in term_df.items()],
             columns=["field", "value", "df"],
         )
     )
-    # exact hit-volume of jv "w" pattern atoms: rows of batch_terms
-    # matching each pattern (the join the lane would actually pay).
-    # One LIKE-join job on the persisted explode.
-    jv_pat_df: dict[tuple[int, str], int] = {}
-    if jv_pat_probe:
-        ppdf = pd.DataFrame(sorted(jv_pat_probe), columns=["fcol", "like_pat"])
-        ppdf["fcol"] = ppdf["fcol"].astype("int8")
-        probe_sdf = spark.createDataFrame(ppdf, "fcol tinyint, like_pat string")
-        jv_pat_df = {
-            (int(r["fcol"]), r["like_pat"]): int(r["df"])
-            for r in batch_terms.join(F.broadcast(probe_sdf), "fcol")
-            .filter(F.expr("term LIKE like_pat"))
-            .groupBy("fcol", "like_pat")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .collect()
-        }
-    return col_df, term_df, lit_pdf, pat_pdf, jv_pat_df
+    return term_df, lit_pdf, pat_pdf
 
 
 def _raw_token_volume(view: _BatchView) -> int:
@@ -1126,11 +1213,10 @@ def _raw_token_volume(view: _BatchView) -> int:
 
 def _jv_take(
     jv_mode: str,
-    view: _BatchView,
     jv_specs: dict,
-    stats: tuple,
-    bt_prune,
-    batch_terms: DataFrame,
+    stats: BatchStats,
+    term_df: dict,
+    lit_pdf: "pd.DataFrame",
 ) -> set:
     """The join-verify lane decision: which jv-eligible queries it owns.
 
@@ -1147,10 +1233,9 @@ def _jv_take(
     total estimate is comparable to the python lane's fixed + variable
     cost, take everything (no python lane at all); otherwise fall back to
     the static-atom subset, else nothing."""
-    col_df, term_df, lit_pdf, _, jv_pat_df = stats
     if jv_mode == "force":
         return set(jv_specs)
-    est_q = _est_q(jv_specs, col_df, jv_pat_df)
+    est_q = _est_q(jv_specs, stats.col_df, stats.pat_df)
     if len(lit_pdf):
         ldf = lit_pdf[lit_pdf["query_id"].isin(jv_specs.keys())]
         ldf = ldf.assign(
@@ -1159,21 +1244,16 @@ def _jv_take(
         gate_df_q = ldf.groupby("query_id")["df"].sum().to_dict()
     else:
         gate_df_q = {}
-    # the pruned stream no longer proxies the python lane's fixed cost
-    # (Arrow-shipping candidate docs' FULL token arrays) — measure the
-    # batch's raw token volume instead
-    bt_count = (
-        _raw_token_volume(view) if bt_prune is not None else batch_terms.count()
-    )
+    vol = stats.token_volume
     gated_all = sum(gate_df_q.get(q, 0) for q in jv_specs)
-    if sum(est_q.values()) <= _JV_MAX_RATIO * (bt_count + gated_all):
+    if sum(est_q.values()) <= _JV_MAX_RATIO * (vol + gated_all):
         return set(jv_specs)
     # pattern-bearing queries' expansions blew the budget: fall back to
     # the static-atom subset (never worse than the pre-wildcard lane)
     static = {q for q, s in jv_specs.items() if not s[5]}
     est_static = sum(est_q[q] for q in static)
     gated_static = sum(gate_df_q.get(q, 0) for q in static)
-    if static and est_static <= _JV_MAX_RATIO * (bt_count + gated_static):
+    if static and est_static <= _JV_MAX_RATIO * (vol + gated_static):
         return static
     return set()
 
@@ -1186,16 +1266,20 @@ def _batch_plan(
     jv: tuple,
     bt_prune,
     batch_terms: DataFrame,
+    prev_stats: BatchStats | None,
 ) -> BatchPlan:
-    """Stage 3: everything registry-derived a batch needs: stats probe →
-    gates → jv lane decision → jv tables → gate/pattern/all-docs frames →
-    python qid set → exact, vid and pythonic frames."""
-    jv_specs, jv_probe_terms, jv_pat_probe = jv
-    stats = _stats_probe(
-        spark, registry, view, jv_probe_terms, jv_pat_probe, batch_terms
+    """Stage 3: everything registry-derived a batch needs: batch stats
+    (reused from ``prev_stats``, those of the plan this one replaces, when
+    they cover it) → gates → jv lane decision → jv tables →
+    gate/pattern/all-docs frames → python qid set → exact, vid and
+    pythonic frames."""
+    jv_specs = jv[0]
+    stats = _batch_stats(
+        spark, registry, view, jv, jv_mode, bt_prune, batch_terms, prev_stats
     )
+    term_df, lit_pdf, pat_pdf = _gate_choice(registry, view, stats.col_df)
     jv_qids = (
-        _jv_take(jv_mode, view, jv_specs, stats, bt_prune, batch_terms)
+        _jv_take(jv_mode, jv_specs, stats, term_df, lit_pdf)
         if jv_specs
         else set()
     )
@@ -1244,7 +1328,6 @@ def _batch_plan(
             cols[c] = out[c].to_numpy()
         return pd.DataFrame(cols)
 
-    _, _, lit_pdf, pat_pdf, _ = stats
     gpdf = _map_gates(lit_pdf, "term")
     ppdf = _map_gates(pat_pdf, "pattern", ("pkind", "fz", "pfx"))
     all_doc_qids = registry.all_docs_query_ids()
@@ -1315,6 +1398,7 @@ def _batch_plan(
         pythonic_sdf=pythonic_sdf,
         vid_sdf=vid_sdf,
         verify=verify,
+        stats=stats,
     )
 
 
@@ -1880,8 +1964,9 @@ def percolate(
     plan = registry.derived(
         "batch_plan",
         (view.layout, jv_mode),
-        lambda _token: _batch_plan(
-            spark, registry, view, jv_mode, jv, bt_prune, batch_terms
+        lambda _token, prev: _batch_plan(
+            spark, registry, view, jv_mode, jv, bt_prune, batch_terms,
+            prev.stats if prev is not None else None,
         ),
     )
     # the distinct (fcol, term) batch dictionary feeds BOTH wildcard

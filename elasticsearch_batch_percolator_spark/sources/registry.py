@@ -237,16 +237,21 @@ class CompiledRegistry:
         plan and approximation in one per-shard map rebuilt only when the
         registry changes, BatchPercolatorQueriesRegistry.java:244-266).
 
-        On a miss, ``build(token)`` makes the new value; ``token`` is drawn
-        from ``_TOKENS`` once per build, so a value can carry it as a
-        worker-cache key that stays fixed while the entry is reused. A
-        replaced value's broadcast (the value itself, or a top-level
-        element of a tuple value) is released first, so hot-swaps do not
-        leak one broadcast each: unpersist, NOT destroy — a Column, stream
-        or in-flight batch built against the old broadcast may still ship
-        it, and unpersist only drops the copies (re-shipped lazily)."""
+        On a miss, ``build(token, prev)`` makes the new value; ``token`` is
+        drawn from ``_TOKENS`` once per build, so a value can carry it as a
+        worker-cache key that stays fixed while the entry is reused.
+        ``prev`` is the value being replaced when only ``version`` moved
+        (same ``key``), else None. It serves percolate's ``batch_plan``
+        alone, which reads only its batch statistics (``prev.stats``); every
+        other builder ignores it. A replaced value's broadcast (the value itself,
+        or a top-level element of a tuple value) is released first, so
+        hot-swaps do not leak one broadcast each: unpersist, NOT destroy —
+        a Column, stream or in-flight batch built against the old broadcast
+        may still ship it, and unpersist only drops the copies (re-shipped
+        lazily)."""
         key = (self.version, *key)
         entry = self._derived_cache.get(name)
+        prev = None
         if entry is not None:
             if entry[0] == key:
                 return entry[1]
@@ -257,7 +262,9 @@ class CompiledRegistry:
                         v.unpersist()
                     except Exception:  # e.g. its SparkContext is stopped
                         _LOG.debug("unpersist of %s failed", name, exc_info=True)
-        value = build(next(_TOKENS))
+            if entry[0][1:] == key[1:]:
+                prev = old
+        value = build(next(_TOKENS), prev)
         self._derived_cache[name] = (key, value)
         return value
 
@@ -283,7 +290,7 @@ class CompiledRegistry:
         sc = spark.sparkContext
         return self.derived(
             "verify", (sc.applicationId,),
-            lambda token: self._build_verify_plans(sc, token),
+            lambda token, _prev: self._build_verify_plans(sc, token),
         )
 
     def _build_verify_plans(self, sc, token: int) -> VerifyPlans:
@@ -433,13 +440,15 @@ class CompiledRegistry:
         live index). When given, warmup runs one full percolation over it,
         which (a) derives the registry's whole batch plan — gate choice +
         join-verify lane decision from the sample's term statistics, so
-        the first real batch skips its stats-probe and bt-count jobs —
+        the first real batch skips its df-probe and token-volume jobs —
         and (b) exercises the execution path once: python workers spawn,
         the verify broadcast ships, whole-stage codegen compiles. After a
         representative-sample warmup the first production batch runs at
         steady-state (warm) speed. Stats drift only affects gate
         selectivity, never results: the plan is reused until the registry
-        mutates."""
+        mutates, and the sample's statistics outlive a mutation over
+        vocabulary the sample was probed for (a new key re-probes the whole
+        closure on the current batch)."""
         from ..operators.percolate import (
             _JV_MODE,
             _batch_view,
@@ -684,7 +693,9 @@ class CompiledRegistry:
         vocabulary, gate-table assembly) is pure pandas — at a 10^6-query
         registry the per-query python ``min()`` formulation of gate choice
         alone measured ~100s on the driver, the vectorized path seconds."""
-        return self.derived("flat_groups", (), lambda _token: self._flat_groups())
+        return self.derived(
+            "flat_groups", (), lambda _token, _prev: self._flat_groups()
+        )
 
     def _flat_groups(self):
         import numpy as np

@@ -328,7 +328,7 @@ def windowed_match_counts(
         # set) — a driver that rebuilds the windowed query per restart /
         # registry hot-swap would otherwise accumulate one full plan-blob
         # broadcast per call for the app's lifetime
-        def build(token):
+        def build(token, _prev):
             blobs = {qid: _blob(registry.queries[qid]) for qid in unsupported}
             return spark.sparkContext.broadcast(blobs), token
 

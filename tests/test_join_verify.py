@@ -173,7 +173,7 @@ def test_join_verify_auto_guard_rejects_hot_ungated_volume(spark, monkeypatch):
 
 def test_batch_plan_cache_reuse_across_batches(spark):
     """Second percolate with the SAME registry must reuse the cached plan
-    artifacts (no stats probe / bt_count jobs) and still produce exactly
+    artifacts (no df probe / token volume jobs) and still produce exactly
     the fresh-registry results on a DIFFERENT batch — stale df stats may
     only degrade gate choice, never results."""
     reg = _registry(31, 40)

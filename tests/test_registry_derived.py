@@ -4,8 +4,8 @@ Every driver-side artifact computed from the registry (verify broadcast,
 flat gate groups, percolate's layout state and batch plan, highlight and
 windowed broadcasts) lives in one store keyed by ``(version, *key)``. It
 rebuilds on a version bump, releases a replaced broadcast with unpersist
-(never destroy) and hands each build a process-unique token for
-worker-side cache keys."""
+(never destroy), hands each build a process-unique token for worker-side
+cache keys and, when only ``version`` moved, the value it replaces."""
 
 import ast
 import pathlib
@@ -34,7 +34,7 @@ def test_hit_returns_same_object():
     reg = _reg()
     tokens = []
 
-    def build(token):
+    def build(token, _prev):
         tokens.append(token)
         return object()
 
@@ -48,15 +48,36 @@ def test_hit_returns_same_object():
 
 def test_register_and_unregister_rebuild():
     reg = _reg()
-    first = reg.derived("x", (), lambda _t: object())
+    first = reg.derived("x", (), lambda _t, _p: object())
     reg.register("dog", {"term": {"content": "dog"}})
-    second = reg.derived("x", (), lambda _t: object())
+    second = reg.derived("x", (), lambda _t, _p: object())
     assert second is not first
     reg.unregister("dog")
-    assert reg.derived("x", (), lambda _t: object()) is not second
+    assert reg.derived("x", (), lambda _t, _p: object()) is not second
 
 
-def test_replaced_broadcast_unpersisted_never_destroyed(spark, monkeypatch):
+def test_builder_gets_replaced_value_only_when_key_matches():
+    """The replaced value reaches the builder when only ``version`` moved;
+    a different key (a new field layout or jv mode for percolate's plan)
+    builds from nothing."""
+    reg = _reg()
+    seen = []
+
+    def build(_token, prev):
+        seen.append(prev)
+        return object()
+
+    a = reg.derived("x", ("layout", "auto"), build)
+    reg.register("dog", {"term": {"content": "dog"}})
+    b = reg.derived("x", ("layout", "auto"), build)
+    c = reg.derived("x", ("layout", "off"), build)  # same version, new key
+    reg.unregister("dog")
+    reg.derived("x", ("other", "off"), build)  # new version AND new key
+    assert seen == [None, a, None, None]
+    assert b is not a and c is not b
+
+
+def _spy_broadcast_release(monkeypatch) -> list:
     calls = []
     monkeypatch.setattr(
         Broadcast, "unpersist",
@@ -66,19 +87,40 @@ def test_replaced_broadcast_unpersisted_never_destroyed(spark, monkeypatch):
         Broadcast, "destroy",
         lambda self, blocking=False: calls.append(("destroy", self)),
     )
+    return calls
+
+
+def test_handed_over_broadcast_still_unpersisted_never_destroyed(
+    spark, monkeypatch
+):
+    calls = _spy_broadcast_release(monkeypatch)
     sc = spark.sparkContext
     reg = _reg()
-    bc1 = reg.derived("bc", (), lambda _t: sc.broadcast([1]))
+    bc1 = reg.derived("bc", (), lambda _t, _p: sc.broadcast([1]))
+    reg.register("dog", {"term": {"content": "dog"}})
+    handed = []
+    bc2 = reg.derived(
+        "bc", (), lambda _t, prev: handed.append(prev) or sc.broadcast([2])
+    )
+    assert handed == [bc1] and bc2 is not bc1
+    assert calls == [("unpersist", bc1)]
+
+
+def test_replaced_broadcast_unpersisted_never_destroyed(spark, monkeypatch):
+    calls = _spy_broadcast_release(monkeypatch)
+    sc = spark.sparkContext
+    reg = _reg()
+    bc1 = reg.derived("bc", (), lambda _t, _p: sc.broadcast([1]))
     # tuple values release their top-level broadcast (windowed's shape)
-    pair1 = reg.derived("pair", (), lambda t: (sc.broadcast([2]), t))
+    pair1 = reg.derived("pair", (), lambda t, _p: (sc.broadcast([2]), t))
     verify1 = reg.broadcast_verify_plans(spark)
-    assert reg.derived("bc", (), lambda _t: sc.broadcast([0])) is bc1
+    assert reg.derived("bc", (), lambda _t, _p: sc.broadcast([0])) is bc1
     assert reg.broadcast_verify_plans(spark) is verify1
     assert calls == []  # builds and hits release nothing
 
     reg.register("dog", {"term": {"content": "dog"}})
-    bc2 = reg.derived("bc", (), lambda _t: sc.broadcast([3]))
-    pair2 = reg.derived("pair", (), lambda t: (sc.broadcast([4]), t))
+    bc2 = reg.derived("bc", (), lambda _t, _p: sc.broadcast([3]))
+    pair2 = reg.derived("pair", (), lambda t, _p: (sc.broadcast([4]), t))
     verify2 = reg.broadcast_verify_plans(spark)
     assert bc2 is not bc1 and pair2[0] is not pair1[0]
     assert verify2.bc is not verify1.bc
@@ -90,10 +132,10 @@ def test_replaced_broadcast_unpersisted_never_destroyed(spark, monkeypatch):
 def test_equal_versions_get_distinct_tokens(spark):
     a, b = _reg(), _reg()
     assert a.version == b.version
-    ta = a.derived("x", (), lambda t: t)
-    tb = b.derived("x", (), lambda t: t)
+    ta = a.derived("x", (), lambda t, _p: t)
+    tb = b.derived("x", (), lambda t, _p: t)
     assert ta != tb
-    assert a.derived("x", (), lambda t: t) == ta  # fixed while reused
+    assert a.derived("x", (), lambda t, _p: t) == ta  # fixed while reused
     va = a.broadcast_verify_plans(spark)
     vb = b.broadcast_verify_plans(spark)
     assert va.token != vb.token
