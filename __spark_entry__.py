@@ -547,7 +547,7 @@ def _q_dismax_boosting_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_bm25_topk_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2+E3 via the compressed index + block-max WAND — same oracle as
+    """E2+E3 via the compressed index's per-segment scorer — same oracle as
     the join-based scorer (rank-identity is the contract)."""
     idx = _ensure_index(spark, sf_dir)
     return topk_from_index(spark, idx, {"q": ["spark", "join"]}, k=10).select(
@@ -639,28 +639,23 @@ def _q_wildcard_topk_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_index_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index round-trip integrity: decode blocks back to (term, df, cf) and
-    compare against token-level SQL over the raw corpus — validates the
-    varint/delta codec through the driver gate."""
+    """Index round-trip integrity: decode every posting row back to (term,
+    df, cf) and compare against token-level SQL over the raw corpus —
+    validates the varint/delta codec through the driver gate."""
     import pandas as pd
 
-    from elasticsearch_batch_percolator_spark.index.codec import decode_block
+    from elasticsearch_batch_percolator_spark.index.codec import decode_postings
 
     idx = _ensure_index(spark, sf_dir)
 
     def decode_rows(batches):
         for pdf in batches:
             terms, dfs, cfs = [], [], []
-            for r in pdf.itertuples():
-                n_docs = 0
-                tf_sum = 0
-                for blk in r.blocks:
-                    d, t, _ = decode_block(blk)
-                    n_docs += len(d)
-                    tf_sum += int(t.sum())
-                terms.append(r.term)
-                dfs.append(n_docs)
-                cfs.append(tf_sum)
+            for r in pdf.to_dict("records"):
+                d, t, _ = decode_postings(r)
+                terms.append(r["term"])
+                dfs.append(len(d))
+                cfs.append(int(t.sum()))
             yield pd.DataFrame({"term": terms, "df_decoded": dfs, "cf_decoded": cfs})
 
     return (

@@ -1,10 +1,10 @@
 """Benchmark harness — driver runs this per round; prints ONE JSON line.
 
 Headline numbers (BASELINE.json metric):
-- index_build_files_per_sec : tokenize → posting lists → compressed block
+- index_build_files_per_sec : tokenize → posting lists → compressed posting
   segments written to parquet (the north_rule build path)
-- wand_queries_per_sec      : batched BM25 top-k via block-max WAND over the
-  compressed index (100 queries in one plan)
+- wand_queries_per_sec      : batched BM25 top-k via the per-segment scorer
+  over the compressed index (100 queries in one plan)
 - join_queries_per_sec      : the same workload on the join-based scorer
 - percolate_docs_per_sec    : registered-query set (200 queries) percolated
   against the full documents batch (reference anecdote: ~1000 docs/s at

@@ -5,7 +5,7 @@ YouScan/elasticsearch-batch-percolator (an Elasticsearch 2.4 plugin that
 matches a large registered-query set against incoming document batches,
 see reference README.md:1-12) as idiomatic PySpark DataFrame programs:
 
-- tokenize -> posting lists -> compressed block segments (index build)
+- tokenize -> posting lists -> compressed posting segments (index build)
 - BM25 top-k query engine (join-based scorer + one per-segment index scorer)
 - two-phase percolation (limiting-filter approximation + exact verify),
   mirroring LimitingFilterFactory.java:47-253
@@ -17,7 +17,7 @@ Everything is DataFrame/Catalyst-first; Python crosses the JVM boundary
 only through Arrow-vectorized pandas UDFs (codec, positional verify).
 """
 
-__version__ = "0.4.0"
+__version__ = "0.5.0"
 
 TOKEN_PATTERN = "[^a-z0-9_]+"  # code-aware: identifiers survive, case-folded
 BM25_K1 = 1.2

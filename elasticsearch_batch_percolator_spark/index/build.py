@@ -6,15 +6,15 @@ TransportBatchPercolateAction.java:156-159 — document partitioning is the
 same design):
 
     out_dir/postings/segment_id=K/*.parquet
-        (term, df, cf, blocks array<struct<max_doc, max_norm, n,
-         doc_bytes, tf_bytes, norm_bytes, pos_bytes>>)  sorted by term
+        (term, df, cf, doc_bytes, tf_bytes, norm_bytes, pos_bytes)
+        one row per term, its whole posting list; sorted by term
     out_dir/term_stats/*.parquet              (term, df, cf) global
     out_dir/manifest.json                     stats + lineage + per-segment
                                               metrics + completed set
 
 Scale properties:
 - segment_id = doc_id // seg_size → contiguous doc ranges per segment →
-  small deltas, dense blocks, and NO global groupBy(term): the widest row a
+  small deltas, and NO global groupBy(term): the widest row a
   hot term ("def", "the") can produce is bounded by the segment size, which
   is the explicit skew handling the north_rule asks for (a term-partitioned
   layout would put 10^10 postings of "the" in one row/task at 10^12-file
@@ -26,9 +26,11 @@ Scale properties:
   min/max row-group stats on the term-sorted output give term-lookup
   pruning at read time.
 - one codec, one writer: build, append and compaction all encode through
-  ``codec.encode_segment`` (compaction first decodes its source blocks
+  ``codec.encode_segment`` (compaction first decodes its source rows
   with ``codec.decode_stream``), and all three write through
-  ``_write_postings``. The block layout itself lives in ``codec.py`` only.
+  ``_write_postings``. The posting layout itself lives in ``codec.py``
+  only; the manifest records its name and ``read_manifest`` refuses an
+  index written in another.
 - parallelism = n_segments (tasks >> cores is the sizing rule: pick
   n_segments ≈ 4×cores or corpus_bytes / ~1 GiB, whichever is larger).
 - resume: Spark dynamic partition overwrite rewrites only the segments
@@ -60,7 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import BM25_B, BM25_K1
-from .codec import BLOCK, BLOCKS_TYPE, decode_stream, encode_segment
+from .codec import LAYOUT, POSTING_COLUMNS, decode_stream, encode_segment
 
 #: one row per (segment, term), as the build encoder and the compaction
 #: merge emit them; ``segment_id`` becomes the ``postings`` partition directory
@@ -70,8 +72,8 @@ SEGMENT_SCHEMA = T.StructType(
         T.StructField("term", T.StringType()),
         T.StructField("df", T.LongType()),
         T.StructField("cf", T.LongType()),
-        T.StructField("blocks", BLOCKS_TYPE),
     ]
+    + [T.StructField(c, T.BinaryType()) for c in POSTING_COLUMNS]
 )
 #: ``postings`` as a reader sees it: the file columns, then the partition
 #: column (the order a schema-inferring read reports)
@@ -114,7 +116,6 @@ class IndexManifest:
     avgdl: float
     n_segments: int
     seg_size: int
-    block: int = BLOCK
     k1: float = BM25_K1
     b: float = BM25_B
     tokenizer: str = "ws"
@@ -135,6 +136,8 @@ class IndexManifest:
     # term_stats_s (global df/cf merge scan), plus docs_per_sec for the
     # encode stage. Stages not run in a resume keep 0.0.
     stage_metrics: dict = field(default_factory=dict)
+    # the posting layout the segments are written in (``codec.LAYOUT``)
+    layout: str = LAYOUT
 
     def save(self, out_dir: str) -> None:
         tmp = os.path.join(out_dir, "manifest.json.tmp")
@@ -144,11 +147,23 @@ class IndexManifest:
 
 
 def read_manifest(out_dir: str) -> IndexManifest | None:
+    """The index's manifest, or None when there is none. Every reader and
+    writer of an existing index comes through here, so this is where an
+    index in another posting layout is refused: its rows would read as
+    nulls under ``POSTINGS_SCHEMA`` and answer with postings missing."""
     p = os.path.join(out_dir, "manifest.json")
     if not os.path.exists(p):
         return None
     with open(p) as f:
-        return IndexManifest(**json.load(f))
+        raw = json.load(f)
+    # manifests from before the layout was recorded hold 128-posting blocks
+    found = raw.get("layout", "blocks")
+    if found != LAYOUT:
+        raise ValueError(
+            f"index at {out_dir} is in posting layout {found!r}, this "
+            f"version reads {LAYOUT!r} — delete it and rebuild with build_index"
+        )
+    return IndexManifest(**raw)
 
 
 def _segment_tables(batches):
@@ -187,18 +202,18 @@ def _rank_terms(strings) -> tuple[np.ndarray, pa.Array]:
     return rank[codes], pc.take(dictionary, pa.array(si))
 
 
-def _segment_batch(s, terms, rank, doc, tf, norm, positions, block) -> pa.RecordBatch:
+def _segment_batch(s, terms, rank, doc, tf, norm, positions) -> pa.RecordBatch:
     """One segment's postings, sorted by (term rank, doc), → its posting
     rows (``SEGMENT_SCHEMA``) through ``codec.encode_segment``; ``terms``
     are the sorted distinct terms ``rank`` indexes."""
-    t_starts, df, cf, blocks = encode_segment(rank, doc, tf, norm, positions, block)
+    t_starts, df, cf, payload = encode_segment(rank, doc, tf, norm, positions)
     return pa.RecordBatch.from_arrays(
         [
             pa.array(np.full(len(t_starts), s, dtype=np.int32)),
             pc.take(terms, pa.array(rank[t_starts])),
             pa.array(df, pa.int64()),
             pa.array(cf, pa.int64()),
-            blocks,
+            *payload,
         ],
         names=SEGMENT_SCHEMA.names,
     )
@@ -206,7 +221,7 @@ def _segment_batch(s, terms, rank, doc, tf, norm, positions, block) -> pa.Record
 
 def _encode_docs(staged: DataFrame, manifest: IndexManifest) -> DataFrame:
     """(segment_id, doc_id, tokens) rows → posting rows, one Arrow pass
-    per partition. Every scoring stat (avgdl, k1, b, block, positions)
+    per partition. Every scoring stat (avgdl, k1, b, positions)
     comes from the manifest — FROZEN at first build so resumed and
     appended segments score on the same scale.
 
@@ -214,7 +229,7 @@ def _encode_docs(staged: DataFrame, manifest: IndexManifest) -> DataFrame:
     (term, doc) whose runs are the postings' tf groups (positions stay
     ascending within a run), norms, then ``codec.encode_segment``."""
     avgdl, k1, b = manifest.avgdl, manifest.k1, manifest.b
-    block, positions = manifest.block, bool(manifest.positions)
+    positions = bool(manifest.positions)
 
     def encode(batches):
         for s, t in _segment_tables(batches):
@@ -251,7 +266,7 @@ def _encode_docs(staged: DataFrame, manifest: IndexManifest) -> DataFrame:
                 run_off = np.repeat(np.cumsum(counts) - counts, counts)
                 pos = (np.arange(len(run_off), dtype=np.int64) - run_off)[order]
             yield _segment_batch(
-                s, terms, rank[p_starts], flat_doc[p_starts], tf, norm, pos, block
+                s, terms, rank[p_starts], flat_doc[p_starts], tf, norm, pos
             )
 
     return staged.mapInArrow(encode, SEGMENT_SCHEMA)
@@ -354,7 +369,6 @@ def build_index(
     docs: DataFrame,
     out_dir: str,
     n_segments: int = 8,
-    block: int = BLOCK,
     resume: bool = True,
     lineage: str = "",
     fail_after_segments: int | None = None,
@@ -413,7 +427,6 @@ def build_index(
             avgdl=avgdl,
             n_segments=n_segments,
             seg_size=seg_size,
-            block=block,
             positions=positions,
             input_lineage=lineage,
             boundaries=boundaries,
@@ -450,7 +463,7 @@ def build_index(
         # routing keeps every segment WHOLE in one partition (collisions
         # only co-locate two segments, never split one), so each task can
         # build its segments' complete posting lists locally in numpy —
-        # tf-count, (term, doc) lexsort, run grouping and block encoding
+        # tf-count, (term, doc) lexsort, run grouping and posting encoding
         # all happen in ONE Arrow pass with zero further data movement.
         # Task memory is bounded by seg_size (the explicit 100-TB contract:
         # pick n_segments so a segment's docs fit an executor).
@@ -486,7 +499,7 @@ def append_index(
     micro-batches — a full rebuild per batch is a non-starter. Appending
     follows the Lucene segment-add model the reference's shards inherit
     (new segments join the searcher; collection stats drift until a
-    rebuild): scoring stats (avgdl, k1, b, block, positions) stay FROZEN
+    rebuild): scoring stats (avgdl, k1, b, positions) stay FROZEN
     from the original manifest, because norms bake avgdl at encode time —
     per-append avgdl would make scores incomparable across segments. idf
     DOES see the updated ``n_docs`` at query time, exactly as Lucene's
@@ -616,7 +629,7 @@ def compact_index(
     are bit-identical: norms were baked against the avgdl FROZEN at the
     base build, so merged postings carry them unchanged; per-term doc
     lists from the source segments (disjoint doc_ids by the append
-    contract) interleave into one sorted run and re-block. df/cf per term
+    contract) interleave into one sorted run and re-encode. df/cf per term
     are sums, global term_stats is invariant (re-derived and checkable).
 
     Compaction writes a COMPLETE new index (postings + term_stats + a
@@ -672,7 +685,6 @@ def compact_index(
         avgdl=manifest.avgdl,
         n_segments=len(metrics),
         seg_size=manifest.seg_size,
-        block=manifest.block,
         k1=manifest.k1,
         b=manifest.b,
         tokenizer=manifest.tokenizer,
@@ -696,11 +708,11 @@ def _compact_merged(
 ) -> tuple[dict, DataFrame]:
     """The compaction PLAN: (old→new segment map, merged posting rows).
 
-    Per merged segment, one ``mapInArrow`` step: its source blocks decode
+    Per merged segment, one ``mapInArrow`` step: its source rows decode
     as one stream per column (``codec.decode_stream``), terms rank with the
     build's ``_rank_terms``, one (term, doc) lexsort interleaves the source
     doc runs and their positions, and the build's ``codec.encode_segment``
-    re-blocks them.
+    re-encodes them.
 
     Split from compact_index so the physical plan is inspectable
     (gen_plans.py) without writing an index."""
@@ -740,27 +752,27 @@ def _compact_merged(
         postings_table(spark, src_dir)
         .join(F.broadcast(map_df), "segment_id")
         .select(
-            F.col("new_seg").alias("segment_id"), "term", "df", "cf", "blocks"
+            F.col("new_seg").alias("segment_id"), "term", "df", "cf", *POSTING_COLUMNS
         )
         .repartition(target, "segment_id")
     )
-    block, positions = manifest.block, bool(manifest.positions)
+    positions = bool(manifest.positions)
 
     def merge_segments(batches):
-        # each block's first doc delta is absolute, so rows and blocks
-        # concatenate freely into one stream; source doc ids are disjoint
-        # (the append contract), so the (term, doc) order is total
+        # each row's first doc delta is absolute, so rows concatenate
+        # freely into one stream; source doc ids are disjoint (the append
+        # contract), so the (term, doc) order is total
         for s, t in _segment_tables(batches):
-            blk = pc.list_flatten(t["blocks"])
+            dfs = t["df"].to_numpy()
             doc, tf, pos = decode_stream(
-                _joined(blk, "doc_bytes"),
-                pc.struct_field(blk, "n").to_numpy(),
-                _joined(blk, "tf_bytes"),
-                _joined(blk, "pos_bytes") if positions else None,
+                _joined(t["doc_bytes"]),
+                dfs,
+                _joined(t["tf_bytes"]),
+                _joined(t["pos_bytes"]) if positions else None,
             )
-            norm = np.frombuffer(_joined(blk, "norm_bytes"), dtype=np.float64)
+            norm = np.frombuffer(_joined(t["norm_bytes"]), dtype=np.float64)
             row_rank, terms = _rank_terms(t["term"])
-            rank = np.repeat(row_rank, t["df"].to_numpy())
+            rank = np.repeat(row_rank, dfs)
             order = np.lexsort((doc, rank))
             if positions:
                 # gather each posting's position slice into the new order
@@ -769,15 +781,15 @@ def _compact_merged(
                 run_off = np.repeat(np.cumsum(cnt) - cnt, cnt)
                 pos = pos[np.repeat(starts, cnt) + (np.arange(len(run_off)) - run_off)]
             yield _segment_batch(
-                s, terms, rank[order], doc[order], tf[order], norm[order], pos, block
+                s, terms, rank[order], doc[order], tf[order], norm[order], pos
             )
 
     return mapping, rows.mapInArrow(merge_segments, SEGMENT_SCHEMA)
 
 
-def _joined(blocks: pa.ChunkedArray, name: str) -> bytes:
-    """Block field ``name``'s payloads back to back, as one bytes object."""
-    return b"".join(pc.struct_field(blocks, name).to_pylist())
+def _joined(column: pa.ChunkedArray) -> bytes:
+    """A binary column's values back to back, as one bytes object."""
+    return b"".join(column.to_pylist())
 
 
 def _merge_term_stats(

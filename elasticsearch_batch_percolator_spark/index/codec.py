@@ -1,49 +1,42 @@
-"""Posting-list block codec: docID-delta + varint, block-max metadata.
+"""Posting-list codec: docID-delta + varint, one row per (segment, term).
 
 The reference leaves storage to Lucene segments (RAMDirectory,
 RamDirectoryPercolatorIndex.java:50-66); this engine persists its own
-segment layout (north_rule: "docID-delta + varint/FOR compressed blocks with
-block-max metadata"). This module is the one place that knows that layout:
-build, append and compaction encode whole segments through
-``encode_segment`` (one vectorized pass per column) and every reader
-decodes through ``decode_stream``; ``encode_postings`` / ``decode_block``
-are the per-block reference they are tested against.
+segment layout: docID-delta + varint compressed posting lists, each term's
+whole list in one row, decoded in vectorized passes (the columnar inverted
+index shape of ICDE 2025, with no per-block skip structure — nothing reads
+one since the decode-once batch scorer replaced block-max WAND). This
+module is the one place that knows that layout: build, append and
+compaction encode whole segments through ``encode_segment`` (one
+vectorized pass per column) and every reader decodes through
+``decode_stream``; ``encode_postings`` / ``decode_postings`` are the
+per-term reference they are tested against.
 
-Block layout (``BLOCK_STRUCT``; BLOCK = 128 postings, Lucene's block size):
-- doc_bytes : varint(delta(doc_id)) — first delta is vs. the block's base
+Posting row payload (``POSTING_COLUMNS``, each a binary column holding the
+term's whole posting list in one segment; the row also carries df and cf):
+- doc_bytes : varint(delta(doc_id)) — the first delta is absolute
 - tf_bytes  : varint(tf)
 - norm_bytes: float64 LE of the BM25 tf-norm  tf*(k1+1)/(tf+k1*(1-b+b*dl/avgdl))
               (precomputed at build — avgdl is fixed per index build — so
-              scoring a block is score = idf * norm, no dl lookup)
-- max_doc   : last doc_id of the block (skip pointer)
-- max_norm  : max norm in the block (block-max WAND upper bound: idf*max_norm)
+              scoring a posting is score = idf * norm, no dl lookup)
 - pos_bytes : varint(delta(position)) per posting, absolute at each posting
               start; null in a non-positional index
+
+``LAYOUT`` names this layout in the index manifest, so a reader refuses an
+index written in any other one.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql.pandas.types import from_arrow_type
 
-BLOCK = 128
 _U64 = np.uint64
 
-#: one posting block, as Arrow carries it; ``BLOCKS_TYPE`` (a posting
-#: row's ``blocks`` column) is the Spark type derived from it
-BLOCK_STRUCT = pa.struct(
-    [
-        ("max_doc", pa.int64()),
-        ("max_norm", pa.float64()),
-        ("n", pa.int32()),
-        ("doc_bytes", pa.binary()),
-        ("tf_bytes", pa.binary()),
-        ("norm_bytes", pa.binary()),
-        ("pos_bytes", pa.binary()),
-    ]
-)
-BLOCKS_TYPE = from_arrow_type(pa.list_(BLOCK_STRUCT))
+#: the posting layout this module reads and writes, as the manifest records it
+LAYOUT = "term-rows-1"
+#: a posting row's payload columns (all binary), in schema order
+POSTING_COLUMNS = ("doc_bytes", "tf_bytes", "norm_bytes", "pos_bytes")
 
 
 def varint_encode_lens(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -51,9 +44,9 @@ def varint_encode_lens(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
     Returns ``(buf uint8[], nbytes int64[])`` — the encoded stream plus the
     per-value byte length, so a caller encoding a WHOLE segment in one pass
-    can slice per-block byte ranges with an offset cumsum instead of calling
-    the encoder once per tiny block (the per-call fixed cost dominates at
-    df≈1-5 terms).
+    can slice per-term byte ranges with an offset cumsum instead of calling
+    the encoder once per tiny posting list (the per-call fixed cost
+    dominates at df≈1-5 terms).
     """
     v = values.astype(np.uint64, copy=True)
     n = len(v)
@@ -138,10 +131,11 @@ def encode_postings(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     norms: np.ndarray,
-    block: int = BLOCK,
     positions_flat: np.ndarray | None = None,
-) -> list[dict]:
-    """Sorted postings → list of block dicts (one term, one segment).
+) -> dict:
+    """One term's postings in one segment → its posting row (df, cf and
+    ``POSTING_COLUMNS``) — the per-term reference ``encode_segment`` is
+    tested against.
 
     ``positions_flat``: optional concatenated per-posting positions aligned
     with doc_ids order (caller must pre-sort when providing positions).
@@ -152,44 +146,30 @@ def encode_postings(
     doc_ids = np.asarray(doc_ids, dtype=np.int64)[order]
     tfs = np.asarray(tfs, dtype=np.int64)[order]
     norms = np.asarray(norms, dtype=np.float64)[order]
-    pos_bounds = None
-    if positions_flat is not None:
-        pos_bounds = np.concatenate([[0], np.cumsum(tfs)]).astype(np.int64)
-    blocks = []
-    for s in range(0, len(doc_ids), block):
-        d = doc_ids[s : s + block]
-        t = tfs[s : s + block]
-        deltas = np.empty(len(d), dtype=np.uint64)
-        deltas[0] = d[0]  # base-absolute first value
-        deltas[1:] = np.diff(d).astype(np.uint64)
-        blk = {
-            "max_doc": int(d[-1]),
-            "max_norm": float(norms[s : s + block].max()),
-            "n": int(len(d)),
-            "doc_bytes": varint_encode(deltas),
-            "tf_bytes": varint_encode(t.astype(np.uint64)),
-            "norm_bytes": norms[s : s + block].tobytes(),
-            "pos_bytes": None,
-        }
-        if positions_flat is not None:
-            lo, hi = pos_bounds[s], pos_bounds[min(s + block, len(doc_ids))]
-            blk["pos_bytes"] = encode_positions(positions_flat[lo:hi], t)
-        blocks.append(blk)
-    return blocks
+    deltas = np.diff(doc_ids, prepend=0).astype(np.uint64)  # first is absolute
+    return {
+        "df": len(doc_ids),
+        "cf": int(tfs.sum()),
+        "doc_bytes": varint_encode(deltas),
+        "tf_bytes": varint_encode(tfs.astype(np.uint64)),
+        "norm_bytes": norms.tobytes(),
+        "pos_bytes": None if positions_flat is None else encode_positions(positions_flat, tfs),
+    }
 
 
-def decode_block(b) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """block (dict or Row) → (doc_ids int64, tfs int64, norms float64)."""
-    doc_ids = np.cumsum(varint_decode(bytes(b["doc_bytes"])).astype(np.int64))
-    tfs = varint_decode(bytes(b["tf_bytes"])).astype(np.int64)
-    norms = np.frombuffer(bytes(b["norm_bytes"]), dtype=np.float64)
+def decode_postings(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Posting row (dict, Row or pandas record) → (doc_ids int64, tfs int64,
+    norms float64)."""
+    doc_ids = np.cumsum(varint_decode(bytes(row["doc_bytes"])).astype(np.int64))
+    tfs = varint_decode(bytes(row["tf_bytes"])).astype(np.int64)
+    norms = np.frombuffer(bytes(row["norm_bytes"]), dtype=np.float64)
     return doc_ids, tfs, norms
 
 
 def _bin_array(buf: np.ndarray, offsets: np.ndarray) -> pa.Array:
-    """Contiguous per-block byte ranges → zero-copy BinaryArray over the
-    single encoded stream (blocks tile the posting space, so block k ends
-    exactly where block k+1 starts)."""
+    """Contiguous per-term byte ranges → zero-copy BinaryArray over the
+    single encoded stream (terms tile the posting space, so term k ends
+    exactly where term k+1 starts)."""
     if len(offsets) and int(offsets[-1]) > np.iinfo(np.int32).max:
         raise ValueError(
             "segment payload exceeds 2 GiB (binary offsets are int32) — "
@@ -201,7 +181,7 @@ def _bin_array(buf: np.ndarray, offsets: np.ndarray) -> pa.Array:
     )
 
 
-def _varint_blocks(values: np.ndarray, bounds: np.ndarray) -> pa.Array:
+def _varint_runs(values: np.ndarray, bounds: np.ndarray) -> pa.Array:
     """ONE varint pass over ``values`` → one binary value per
     ``values[bounds[i]:bounds[i + 1]]``."""
     buf, nbytes = varint_encode_lens(values.astype(np.uint64))
@@ -214,81 +194,64 @@ def encode_segment(
     tf: np.ndarray,
     norm: np.ndarray,
     positions: np.ndarray | None,
-    block: int = BLOCK,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, pa.ListArray]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, list[pa.Array]]:
     """One segment's postings, sorted by (term, doc) → its posting rows.
 
     ``term_rank`` is any integer term key, ``positions`` each posting's
     ascending positions back to back (None for a non-positional index).
-    Returns ``(term starts, df, cf, blocks)``: each term's first posting
-    index, df, cf and ``list<BLOCK_STRUCT>`` — byte-identical to
+    Returns ``(term starts, df, cf, payload)``: each term's first posting
+    index, df, cf and the ``POSTING_COLUMNS`` arrays — byte-identical to
     ``encode_postings`` term by term, but each column is ONE varint pass
-    over the segment, sliced into blocks by offsets (per-term calls are
+    over the segment, sliced into terms by offsets (per-term calls are
     ~30k tiny-array calls per segment; this is three big ones)."""
     P = len(doc)
     t_change = np.flatnonzero(term_rank[1:] != term_rank[:-1])
     t_starts = np.concatenate([[0], t_change + 1]).astype(np.int64)
-    run_len = np.diff(np.concatenate([t_starts, [P]])).astype(np.int64)
-    # block boundaries: every `block`-th posting within a term run
-    idx_in_term = np.arange(P, dtype=np.int64) - np.repeat(t_starts, run_len)
-    b_starts = np.flatnonzero(idx_in_term % block == 0)
-    bounds = np.concatenate([b_starts, [P]])
-    n_blk = np.diff(bounds).astype(np.int32)
-    blk_maxdoc = doc[bounds[1:] - 1].astype(np.int64)
-    blk_maxnorm = np.maximum.reduceat(norm, b_starts)
-    # doc deltas: in-block diffs, absolute at each block start
+    bounds = np.concatenate([t_starts, [P]])
+    # doc deltas: in-term diffs, absolute at each term start
     deltas = doc.copy()
     deltas[1:] -= doc[:-1]
-    deltas[b_starts] = doc[b_starts]
+    deltas[t_starts] = doc[t_starts]
     if positions is not None:
         # delta-encode ALL positions once; deltas reset (absolute) at every
-        # posting start — block slices are byte-identical to per-block
-        # encode_positions because blocks align to postings
+        # posting start — term slices are byte-identical to per-term
+        # encode_positions because terms align to postings
         pb = np.concatenate([[0], np.cumsum(tf)]).astype(np.int64)
         pdeltas = positions.copy()
         pdeltas[1:] -= positions[:-1]
         pdeltas[pb[:-1]] = positions[pb[:-1]]
-        pos_bytes = _varint_blocks(pdeltas, pb[bounds])
+        pos_bytes = _varint_runs(pdeltas, pb[bounds])
     else:
-        pos_bytes = pa.nulls(len(b_starts), pa.binary())
-    struct = pa.StructArray.from_arrays(
-        [
-            pa.array(blk_maxdoc, pa.int64()),
-            pa.array(blk_maxnorm, pa.float64()),
-            pa.array(n_blk, pa.int32()),
-            _varint_blocks(deltas, bounds),
-            _varint_blocks(tf, bounds),
-            _bin_array(np.ascontiguousarray(norm, np.float64).view(np.uint8), bounds * 8),
-            pos_bytes,
-        ],
-        fields=list(BLOCK_STRUCT),
-    )
-    # every term starts a block: a term's blocks start at its first one
-    list_offsets = np.searchsorted(b_starts, np.concatenate([t_starts, [P]]))
-    blocks = pa.ListArray.from_arrays(pa.array(list_offsets, pa.int32()), struct)
+        pos_bytes = pa.nulls(len(t_starts), pa.binary())
+    payload = [
+        _varint_runs(deltas, bounds),
+        _varint_runs(tf, bounds),
+        _bin_array(np.ascontiguousarray(norm, np.float64).view(np.uint8), bounds * 8),
+        pos_bytes,
+    ]
     cf = np.add.reduceat(tf, t_starts).astype(np.int64)
-    return t_starts, run_len, cf, blocks
+    return t_starts, np.diff(bounds), cf, payload
 
 
 def decode_stream(
     doc_bytes: bytes,
-    ns: np.ndarray,
+    dfs: np.ndarray,
     tf_bytes: bytes | None = None,
     pos_bytes: bytes | None = None,
 ) -> tuple[np.ndarray, np.ndarray | None, np.ndarray | None]:
-    """Concatenated block payloads (``ns``: each block's posting count) →
+    """Concatenated posting rows' payloads (``dfs``: each row's df) →
     ``(doc_ids, tfs, positions)``, ONE varint pass per column.
 
-    A block's first doc delta is absolute, so one cumsum over the stream
-    plus a per-block prefix subtraction replaces a ``decode_block`` call
-    per block. ``tfs`` decode only given ``tf_bytes``, the flat positions
+    A row's first doc delta is absolute, so one cumsum over the stream
+    plus a per-row prefix subtraction replaces a ``decode_postings`` call
+    per row. ``tfs`` decode only given ``tf_bytes``, the flat positions
     (split with ``cumsum(tfs)``) only given ``pos_bytes`` too; else None."""
     ids = np.cumsum(varint_decode(doc_bytes).astype(np.int64))
-    ns = np.asarray(ns, dtype=np.int64)
-    if len(ns) > 1:
-        starts = np.cumsum(ns)[:-1]
-        # undo the cross-block prefix: each block's first value was absolute
-        ids -= np.repeat(np.concatenate([[0], ids[starts - 1]]), ns)
+    dfs = np.asarray(dfs, dtype=np.int64)
+    if len(dfs) > 1:
+        starts = np.cumsum(dfs)[:-1]
+        # undo the cross-row prefix: each row's first value was absolute
+        ids -= np.repeat(np.concatenate([[0], ids[starts - 1]]), dfs)
     if tf_bytes is None:
         return ids, None, None
     tfs = varint_decode(tf_bytes).astype(np.int64)

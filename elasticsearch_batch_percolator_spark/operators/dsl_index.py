@@ -72,7 +72,7 @@ from ..index.build import (
     read_postings,
     term_stats_table,
 )
-from ..index.codec import decode_stream
+from ..index.codec import POSTING_COLUMNS, decode_stream
 from ..plans.compiler import DEFAULT_FIELD, compile_query
 from ..plans.eval_py import eval_plan, fuzzy_pred, regexp_regex, wildcard_regex
 from ..plans.limiting import limiting_filter
@@ -136,22 +136,17 @@ def _manifest(index_dir: str) -> IndexManifest:
     return manifest
 
 
-def _decode_term(blocks, positions: bool = False):
-    """All blocks of one term → (doc_ids, norms, positions) through
-    ``codec.decode_stream``: the blocks' payloads concatenate into one
-    stream per column, decoded in one pass. tf_bytes and pos_bytes decode
-    only when ``positions`` is asked for; then ``positions`` is ``(flat,
-    offsets)`` and doc i's positions are ``flat[offsets[i]:offsets[i + 1]]``,
-    else it is None."""
-
-    def column(key: str) -> bytes:
-        return b"".join(bytes(b[key]) for b in blocks)
-
-    if positions and any(b["pos_bytes"] is None for b in blocks):
+def _decode_term(row, positions: bool = False):
+    """One term's posting row → (doc_ids, norms, positions) through
+    ``codec.decode_stream``. tf_bytes and pos_bytes decode only when
+    ``positions`` is asked for; then ``positions`` is ``(flat, offsets)``
+    and doc i's positions are ``flat[offsets[i]:offsets[i + 1]]``, else it
+    is None."""
+    if positions and row["pos_bytes"] is None:
         raise ValueError("positional query but index was built without positions=True")
-    pos_cols = (column("tf_bytes"), column("pos_bytes")) if positions else ()
-    ids, tfs, flat = decode_stream(column("doc_bytes"), [b["n"] for b in blocks], *pos_cols)
-    norms = np.frombuffer(column("norm_bytes"), dtype=np.float64)
+    pos_cols = (row["tf_bytes"], row["pos_bytes"]) if positions else ()
+    ids, tfs, flat = decode_stream(row["doc_bytes"], [row["df"]], *pos_cols)
+    norms = np.frombuffer(row["norm_bytes"], dtype=np.float64)
     if not positions:
         return ids, norms, None
     return ids, norms, (flat, np.concatenate([[0], np.cumsum(tfs)]))
@@ -259,7 +254,7 @@ def _local_cut(docs: np.ndarray, scores: np.ndarray, k: int, round_to: int | Non
 
 
 def _segment_topk(
-    by_term: dict[str, list],
+    by_term: dict[str, dict],
     specs: dict[str, _Spec],
     idfs: dict[str, float],
     k: int | None,
@@ -341,11 +336,11 @@ def _run(
         for g in s.groups:
             vocab.update(g)
     postings = read_postings(spark, index_dir, sorted(vocab)).select(
-        "segment_id", "term", "blocks"
+        "segment_id", "term", "df", *POSTING_COLUMNS
     )
 
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {r.term: r.blocks for r in pdf.itertuples()}
+        by_term = {r["term"]: r for r in pdf.to_dict("records")}
         rows = _segment_topk(by_term, specs, idfs, k, round_to)
         return pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])
 

@@ -284,9 +284,9 @@ class CompiledRegistry:
         worker (~800MB resident x workers; under 32 concurrent workers the
         kernel-bound allocation measured ~110s/worker — BASELINE.md 1M
         study); the columnar form unpickles as a handful of buffer copies
-        (~13x faster single-threaded, ~4x smaller resident) and workers
-        decode only the qids that actually become candidates, memoized
-        (percolate._sdecode)."""
+        (~13x faster single-threaded, ~4x smaller resident) and the verify
+        UDF runs its containment checks straight off those columnar
+        buffers, decoding no per-query tuple."""
         sc = spark.sparkContext
         return self.derived(
             "verify", (sc.applicationId,),

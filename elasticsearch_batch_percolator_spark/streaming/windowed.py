@@ -146,16 +146,8 @@ def _specs(
         if cq.match_none or (qid in all_docs and not cq.needs_verify):
             continue
         # blob-backed registries precompute jv_req on the executors —
-        # avoid unpickling the plan tree here (_jv_requirements covers
-        # the bare-Term shortcut too: a Term is a single "t" atom)
-        if cq.jv_req is not _UNSET:
-            req = cq.jv_req
-        else:
-            plan = cq.plan
-            if isinstance(plan, Term):
-                req = ((("t", plan.field, plan.value),), ())
-            else:
-                req = _jv_requirements(plan)
+        # avoid unpickling the plan tree here
+        req = cq.jv_req if cq.jv_req is not _UNSET else _jv_requirements(cq.plan)
         if req is None or any(
             # wildcard atoms ("w"/"wg<n>") need the per-batch term
             # dictionary — no static atom stream exists for them; they

@@ -1,11 +1,12 @@
-"""Codec fuzz: varint + positions + postings round-trip at adversarial
-shapes (64-bit boundaries, single-element, giant gaps, max tfs, block=1)."""
+"""Codec fuzz: varint + positions + posting-row round-trip at adversarial
+shapes (64-bit boundaries, single-element, giant gaps, max tfs), and
+decode_stream over many rows back to back."""
 import random, sys
 import numpy as np
 import os; sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from elasticsearch_batch_percolator_spark.index.codec import (
     varint_encode, varint_decode, varint_encode_lens,
-    encode_positions, decode_positions, encode_postings, decode_block)
+    encode_positions, decode_positions, encode_postings, decode_postings, decode_stream)
 
 rng = np.random.default_rng(20260820)
 # varint: boundary values
@@ -32,6 +33,7 @@ for trial in range(200):
     assert np.array_equal(got, pos), f"positions trial {trial}"
 print("positions: PASS (200 trials)")
 
+rows = []
 for trial in range(200):
     n = int(rng.integers(1, 1000))
     space = int(rng.integers(n, max(n + 1, 2**int(rng.integers(10, 40)))))
@@ -40,15 +42,19 @@ for trial in range(200):
         doc_ids += (2**55 - space - 2)  # giant absolute ids
     tfs = rng.integers(1, 255, size=n).astype(np.int64)
     norms = rng.uniform(1e-9, 1e6, size=n)
-    block = int(rng.choice([1, 2, 32, 128, 4096]))
-    blocks = encode_postings(doc_ids, tfs, norms, block=block)
-    rd, rt, rn = [], [], []
-    for b in blocks:
-        d, t, nr = decode_block(b)
-        rd.append(d); rt.append(t); rn.append(nr)
-        assert b["max_doc"] == int(d[-1])
-        assert abs(b["max_norm"] - nr.max()) < 1e-12
-    assert np.array_equal(np.concatenate(rd), doc_ids), f"postings trial {trial}"
-    assert np.array_equal(np.concatenate(rt), tfs)
-    assert np.allclose(np.concatenate(rn), norms, rtol=0, atol=0)
-print("postings: PASS (200 trials incl. 2^55 ids, block=1)")
+    row = encode_postings(doc_ids, tfs, norms)
+    d, t, nr = decode_postings(row)
+    assert row["df"] == n and row["cf"] == int(tfs.sum())
+    assert np.array_equal(d, doc_ids), f"postings trial {trial}"
+    assert np.array_equal(t, tfs)
+    assert nr.tobytes() == norms.tobytes()
+    rows.append((row, doc_ids, tfs))
+# compaction's path: many rows' payloads back to back, one decode_stream
+for trial in range(50):
+    pick = [rows[i] for i in rng.choice(len(rows), size=int(rng.integers(1, 12)))]
+    ids, tfs, _ = decode_stream(b"".join(r["doc_bytes"] for r, _, _ in pick),
+                                [r["df"] for r, _, _ in pick],
+                                b"".join(r["tf_bytes"] for r, _, _ in pick))
+    assert np.array_equal(ids, np.concatenate([d for _, d, _ in pick])), f"stream trial {trial}"
+    assert np.array_equal(tfs, np.concatenate([t for _, _, t in pick]))
+print("postings: PASS (200 rows incl. 2^55 ids, 50 concatenated-row streams)")

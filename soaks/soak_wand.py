@@ -6,8 +6,7 @@ import random, shutil, sys, tempfile, time
 import numpy as np
 import os; sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from elasticsearch_batch_percolator_spark.index.build import build_index
-from elasticsearch_batch_percolator_spark.index.codec import encode_postings
-from elasticsearch_batch_percolator_spark.index.codec import decode_block
+from elasticsearch_batch_percolator_spark.index.codec import decode_postings, encode_postings
 from elasticsearch_batch_percolator_spark.operators.dsl_index import _idf, _segment_topk, _Spec
 from elasticsearch_batch_percolator_spark.operators.wand import topk_from_index
 from tests.util_oracle import segment_topk_exhaustive
@@ -20,26 +19,26 @@ from pyspark.sql import functions as F
 rng = np.random.default_rng(20260820)
 for trial in range(200):
     n_terms = rng.integers(1, 6)
-    term_blocks, idfs = {}, {}
+    term_rows, idfs = {}, {}
     for t in range(n_terms):
         n_docs = int(rng.integers(1, 600))
         doc_ids = np.sort(rng.choice(8000, size=n_docs, replace=False)).astype(np.int64)
         tfs = rng.integers(1, 20, n_docs).astype(np.int64)
         norms = rng.uniform(0.05, 2.2, n_docs)
-        term_blocks[f"t{t}"] = encode_postings(doc_ids, tfs, norms, block=32)
+        term_rows[f"t{t}"] = encode_postings(doc_ids, tfs, norms)
         idfs[f"t{t}"] = _idf(8000, n_docs)
     occ = [(str(t), float(rng.choice([1.0, 0.25, 2.0, 5.0])))
-           for t in rng.choice(sorted(term_blocks), size=int(rng.integers(1, 7)))]
+           for t in rng.choice(sorted(term_rows), size=int(rng.integers(1, 7)))]
     scored = sorted({t for t, _ in occ})
     weights = {t: sum(m * idfs[t] for u, m in occ if u == t) for t in scored}
-    gate = str(rng.choice(sorted(term_blocks)))
-    docs_of = lambda ts: {d for t in ts for b in term_blocks[t] for d in decode_block(b)[0].tolist()}
+    gate = str(rng.choice(sorted(term_rows)))
+    docs_of = lambda ts: {d for t in ts for d in decode_postings(term_rows[t])[0].tolist()}
     cases = [([scored], None), ([scored, [gate]], docs_of(scored) & docs_of([gate])),
              ([[gate]], docs_of([gate]))]
     for k in (1, 7, 100):
         for groups, cand in cases:
-            a = _segment_topk(term_blocks, {"q": _Spec(groups, occ)}, idfs, k)
-            b = segment_topk_exhaustive({t: term_blocks[t] for t in scored}, weights, k, docs=cand)
+            a = _segment_topk(term_rows, {"q": _Spec(groups, occ)}, idfs, k)
+            b = segment_topk_exhaustive({t: term_rows[t] for t in scored}, weights, k, docs=cand)
             assert [d for _, d, _ in a] == [d for d, _ in b], f"trial={trial} k={k}"
             assert np.allclose([s for _, _, s in a], [s for _, s in b], atol=1e-12)
 print("part A (200 fresh kernel trials): PASS", flush=True)

@@ -1,7 +1,7 @@
 """Incremental segment append (the Lucene segment-add model).
 
 New document micro-batches join a COMPLETE index as additional segments:
-scoring stats (avgdl/k1/b/block/positions) stay frozen from the original
+scoring stats (avgdl/k1/b/positions) stay frozen from the original
 manifest (norms bake avgdl at encode time — per-append avgdl would make
 scores incomparable across segments), while idf sees the updated n_docs,
 exactly Lucene's collection-statistics behavior on segment add. Scores
@@ -249,9 +249,7 @@ def test_resume_keeps_frozen_positions(spark, tmp_path):
     build_index(spark, _docs(spark, rows), out, n_segments=4)  # no positions arg
     pdf = spark.read.parquet(os.path.join(out, "postings")).toPandas()
     assert set(pdf["segment_id"]) == {0, 1, 2, 3}
-    assert all(
-        b["pos_bytes"] is not None for blocks in pdf["blocks"] for b in blocks
-    )
+    assert pdf["pos_bytes"].notna().all()
 
 
 def test_append_rerun_clears_orphaned_higher_ids(spark, tmp_path):

@@ -20,8 +20,9 @@ from elasticsearch_batch_percolator_spark.index.build import (
     read_manifest,
 )
 from elasticsearch_batch_percolator_spark.index.codec import (
-    decode_block,
+    POSTING_COLUMNS,
     decode_positions,
+    decode_postings,
     encode_postings,
 )
 from elasticsearch_batch_percolator_spark.operators.wand import topk_from_index
@@ -94,48 +95,49 @@ def test_compact_scores_bit_identical(spark, tmp_path):
 
 
 def _postings_rows(spark, idx):
-    """(segment_id, term) -> (df, cf, blocks as dicts) of every postings row."""
+    """(segment_id, term) -> posting row (df, cf and payload columns) as a dict."""
     return {
-        (int(r["segment_id"]), r["term"]): (
-            int(r["df"]), int(r["cf"]), [b.asDict() for b in r["blocks"]]
-        )
+        (int(r["segment_id"]), r["term"]): {
+            c: r[c] for c in ("df", "cf", *POSTING_COLUMNS)
+        }
         for r in spark.read.parquet(os.path.join(idx, "postings")).collect()
     }
 
 
 @pytest.mark.parametrize("positions", [False, True])
 def test_compact_blocks_equal_reference_codec(spark, tmp_path, positions):
-    """Each compacted term's blocks equal per-term ``encode_postings`` over
-    its source postings: every source block decoded with ``decode_block``
-    (positions with ``decode_positions``), sorted by doc. ``block=8`` makes
-    frequent terms span several blocks on both sides of the merge."""
+    """Each compacted term's posting row equals per-term ``encode_postings``
+    over its source postings: every source row decoded with
+    ``decode_postings`` (positions with ``decode_positions``), sorted by
+    doc. Frequent terms hold more than 128 postings per merged segment."""
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
-    build_index(spark, _docs(spark, _rand_rows(21, range(0, 120), vocab_n=12)), src,
-                n_segments=3, block=8, positions=positions)
-    append_index(spark, _docs(spark, _rand_rows(22, range(500, 560), vocab_n=12)), src,
+    build_index(spark, _docs(spark, _rand_rows(21, range(0, 600, 2), vocab_n=12)), src,
+                n_segments=3, positions=positions)
+    append_index(spark, _docs(spark, _rand_rows(22, range(1000, 1120), vocab_n=12)), src,
                  n_new_segments=2)
     # interleaves the base build's doc range
-    append_index(spark, _docs(spark, _rand_rows(23, range(130, 160), vocab_n=12)), src,
+    append_index(spark, _docs(spark, _rand_rows(23, range(1, 120, 2), vocab_n=12)), src,
                  n_new_segments=2)
     m = compact_index(spark, src, dst, target_segments=2)
     source, merged = _postings_rows(spark, src), _postings_rows(spark, dst)
     new_seg = {s: int(g) for g, meta in m.completed.items() for s in meta["merged_from"]}
     expected: dict = {}
-    for (s, t), (_, _, blocks) in source.items():
-        for b in blocks:
-            d, tf, nm = decode_block(b)
-            pos = np.split(decode_positions(b["pos_bytes"], tf), np.cumsum(tf)[:-1]) \
-                if positions else [None] * len(d)
-            expected.setdefault((new_seg[s], t), []).extend(zip(d, tf, nm, pos))
+    for (s, t), row in source.items():
+        d, tf, nm = decode_postings(row)
+        pos = np.split(decode_positions(bytes(row["pos_bytes"]), tf), np.cumsum(tf)[:-1]) \
+            if positions else [None] * len(d)
+        expected.setdefault((new_seg[s], t), []).extend(zip(d, tf, nm, pos))
     assert set(merged) == set(expected)
-    assert max(len(v[2]) for v in merged.values()) > 1
+    assert max(row["df"] for row in merged.values()) > 128
     for key, posts in expected.items():
         posts.sort(key=lambda p: p[0])
         doc, tf, nm = (np.array([p[i] for p in posts]) for i in range(3))
         flat = np.concatenate([p[3] for p in posts]) if positions else None
-        want = encode_postings(doc, tf, nm, block=m.block, positions_flat=flat)
-        assert merged[key] == (len(doc), int(tf.sum()), want), key
+        want = encode_postings(doc, tf, nm, positions_flat=flat)
+        got = {c: bytes(v) if isinstance(v, (bytes, bytearray)) else v
+               for c, v in merged[key].items()}
+        assert got == want, key
 
 
 def test_compact_positional_index_preserves_phrases(spark, tmp_path):

@@ -3,9 +3,9 @@
 ``build_index`` encodes each segment in one Arrow pass (Arrow
 dictionary-encode, one int lexsort, and ``codec.encode_segment``'s single
 whole-segment varint pass sliced by offsets). Its parquet output must be
-byte-identical, on every field including block payloads and with and
-without positions, to ``codec.encode_postings`` run term by term on the
-same documents — the two differ only in how, never in what.
+byte-identical, on every field including the posting payloads and with
+and without positions, to ``codec.encode_postings`` run term by term on
+the same documents — the two differ only in how, never in what.
 """
 
 import os
@@ -15,10 +15,10 @@ import pytest
 from pyspark.sql import types as T
 
 from elasticsearch_batch_percolator_spark.index.build import build_index, read_manifest
-from elasticsearch_batch_percolator_spark.index.codec import encode_postings
+from elasticsearch_batch_percolator_spark.index.codec import POSTING_COLUMNS, encode_postings
 
 
-def _random_docs(spark, seed, n_docs, with_empty=True, sparse_ids=False):
+def _random_docs(spark, seed, n_docs, with_empty=True, sparse_ids=False, hot=False):
     rng = np.random.default_rng(seed)
     vocab = np.array(
         ["tok%03d" % i for i in range(80)]
@@ -36,6 +36,8 @@ def _random_docs(spark, seed, n_docs, with_empty=True, sparse_ids=False):
         if with_empty and i % 17 == 0:
             n = 0
         toks = [str(v) for v in vocab[rng.integers(0, len(vocab), n)]]
+        if hot and n:
+            toks.append("the")  # a term in every non-empty doc
         rows.append((doc_id, toks))
     schema = T.StructType(
         [
@@ -46,22 +48,16 @@ def _random_docs(spark, seed, n_docs, with_empty=True, sparse_ids=False):
     return spark.createDataFrame(rows, schema)
 
 
-def _block_tuple(b):
-    pos = b["pos_bytes"]
-    return (
-        b["max_doc"], b["max_norm"], b["n"], bytes(b["doc_bytes"]),
-        bytes(b["tf_bytes"]), bytes(b["norm_bytes"]), None if pos is None else bytes(pos),
+def _row_tuple(r):
+    return tuple(
+        None if r[c] is None else bytes(r[c]) if c in POSTING_COLUMNS else int(r[c])
+        for c in ("df", "cf", *POSTING_COLUMNS)
     )
 
 
 def _collect_index(spark, out_dir):
     rows = spark.read.parquet(os.path.join(out_dir, "postings")).collect()
-    return {
-        (int(r["segment_id"]), r["term"]): (
-            int(r["df"]), int(r["cf"]), tuple(_block_tuple(b) for b in r["blocks"])
-        )
-        for r in rows
-    }
+    return {(int(r["segment_id"]), r["term"]): _row_tuple(r) for r in rows}
 
 
 def _reference_index(rows, m):
@@ -83,8 +79,7 @@ def _reference_index(rows, m):
         dl = np.array([dls[d] for d in doc], dtype=np.int64)
         norm = (tf * (m.k1 + 1.0)) / (tf + m.k1 * (1.0 - m.b + m.b * dl / m.avgdl))
         pos = np.concatenate([by_doc[d] for d in doc]) if m.positions else None
-        blocks = encode_postings(doc, tf, norm, block=m.block, positions_flat=pos)
-        out[key] = (len(doc), int(tf.sum()), tuple(_block_tuple(b) for b in blocks))
+        out[key] = _row_tuple(encode_postings(doc, tf, norm, positions_flat=pos))
     return out
 
 
@@ -92,15 +87,15 @@ def _reference_index(rows, m):
 @pytest.mark.parametrize("sparse_ids", [False, True])
 def test_arrow_encoder_bit_identical(spark, tmp_path, positions, sparse_ids):
     docs = _random_docs(spark, seed=7 + positions + 2 * sparse_ids, n_docs=400,
-                        sparse_ids=sparse_ids)
+                        sparse_ids=sparse_ids, hot=True)
     rows = [(r["doc_id"], list(r["tokens"])) for r in docs.collect()]
     out = str(tmp_path / "ix")
-    # block=16 < a frequent term's postings per segment: terms span blocks
-    m = build_index(spark, docs, out, n_segments=5, block=16, positions=positions)
+    m = build_index(spark, docs, out, n_segments=2, positions=positions)
     assert bool(m.boundaries) == sparse_ids
     got, want = _collect_index(spark, out), _reference_index(rows, m)
     assert set(got) == set(want)
-    assert max(len(v[2]) for v in want.values()) > 1
+    # a term with more postings per segment than Lucene's 128-posting block
+    assert max(v[0] for v in want.values()) > 128
     for k in want:
         assert got[k] == want[k], k
 

@@ -6,8 +6,10 @@ put on disk. Term filters are built with one ``isInCollection`` call and
 the dictionary lookup ORs literals with pattern predicates; both must
 carry terms with quotes, backslashes, LIKE metacharacters and non-ASCII
 text through unchanged, and an empty term list must select nothing.
+An index in another posting layout is refused before any read.
 """
 
+import json
 import os
 
 import pytest
@@ -18,12 +20,15 @@ from elasticsearch_batch_percolator_spark.engine import Engine
 from elasticsearch_batch_percolator_spark.index.build import (
     POSTINGS_SCHEMA,
     TERM_STATS_SCHEMA,
+    append_index,
     build_index,
+    compact_index,
     read_postings,
     read_term_stats,
 )
 from elasticsearch_batch_percolator_spark.operators.bm25 import bm25_topk
 from elasticsearch_batch_percolator_spark.operators.dsl_index import dsl_topk_from_index
+from elasticsearch_batch_percolator_spark.operators.phrase_index import phrase_docs_from_index
 from elasticsearch_batch_percolator_spark.operators.wand import topk_from_index
 from elasticsearch_batch_percolator_spark.plans.eval_py import wildcard_regex
 from tests.test_dsl_index import _expected
@@ -154,3 +159,38 @@ def test_dsl_topk_odd_terms_match_engine(spark, odd, dsl):
     for d, (rk, sc) in got.items():
         assert rk == exp[d][0], d
         assert abs(sc - exp[d][1]) < 1e-9, d
+
+
+def test_block_layout_index_is_refused(spark, tmp_path):
+    """An index written in the 128-posting block layout (its manifest has a
+    ``block`` size and names no layout) would read as null payload columns
+    under ``POSTINGS_SCHEMA`` and answer with postings missing. Every
+    reader and writer refuses it instead, naming the directory."""
+    old = str(tmp_path / "old")
+    os.makedirs(os.path.join(old, "postings", "segment_id=0"))
+    with open(os.path.join(old, "manifest.json"), "w") as f:
+        json.dump(
+            {
+                "n_docs": 2, "avgdl": 2.0, "n_segments": 1, "seg_size": 2,
+                "block": 128, "k1": 1.2, "b": 0.75, "tokenizer": "ws",
+                "positions": True, "input_lineage": "",
+                "completed": {"0": {"terms": 2, "postings": 3}},
+                "boundaries": [], "stage_metrics": {},
+            },
+            f,
+        )
+    docs = spark.createDataFrame([(7, ["a", "b"])], "doc_id long, tokens array<string>")
+    calls = {
+        "topk_from_index": lambda: topk_from_index(spark, old, {"q": ["a"]}),
+        "dsl_topk_from_index": lambda: dsl_topk_from_index(
+            spark, old, {"q": {"term": {"content": "a"}}}
+        ),
+        "phrase_docs_from_index": lambda: phrase_docs_from_index(spark, old, ["a", "b"]),
+        "append_index": lambda: append_index(spark, docs, old),
+        "compact_index": lambda: compact_index(spark, old, str(tmp_path / "dst")),
+        "build_index": lambda: build_index(spark, docs, old, resume=True),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match="posting layout 'blocks'.*rebuild") as e:
+            call()
+        assert old in str(e.value), name

@@ -16,7 +16,7 @@ from elasticsearch_batch_percolator_spark.operators.dsl_index import (
     _Spec,
 )
 from elasticsearch_batch_percolator_spark.operators.wand import topk_from_index
-from elasticsearch_batch_percolator_spark.index.codec import decode_block, encode_postings
+from elasticsearch_batch_percolator_spark.index.codec import decode_postings, encode_postings
 from tests.util_oracle import segment_topk_exhaustive
 
 QUERIES = {
@@ -156,33 +156,31 @@ def test_boost_weighted_scoring_rank_identity(spark, index_dir, engine):
 
 def test_wand_equals_exhaustive_random():
     """Property: the per-segment kernel (decode once, per-occurrence
-    accumulation, rounded k-cut) equals the block-by-block exhaustive
+    accumulation, rounded k-cut) equals the posting-by-posting exhaustive
     oracle on random postings, with repeated and boosted occurrences and
     with candidates restricted by a second gate group or by a gate alone
     (candidates no scoring term holds score 0.0)."""
     rng = np.random.default_rng(42)
     for trial in range(20):
         n_terms = rng.integers(1, 5)
-        term_blocks, idfs = {}, {}
+        term_rows, idfs = {}, {}
         for t in range(n_terms):
             n_docs = int(rng.integers(1, 400))
             doc_ids = np.sort(rng.choice(5000, size=n_docs, replace=False)).astype(np.int64)
             tfs = rng.integers(1, 20, n_docs).astype(np.int64)
             norms = rng.uniform(0.05, 2.2, n_docs)
-            term_blocks[f"t{t}"] = encode_postings(doc_ids, tfs, norms, block=32)
+            term_rows[f"t{t}"] = encode_postings(doc_ids, tfs, norms)
             idfs[f"t{t}"] = _idf(5000, n_docs)
         occ = [
             (str(t), float(rng.choice([1.0, 0.5, 3.0])))
-            for t in rng.choice(sorted(term_blocks), size=int(rng.integers(1, 6)))
+            for t in rng.choice(sorted(term_rows), size=int(rng.integers(1, 6)))
         ]
         scored = sorted({t for t, _ in occ})
         weights = {t: sum(m * idfs[t] for u, m in occ if u == t) for t in scored}
-        gate = str(rng.choice(sorted(term_blocks)))
+        gate = str(rng.choice(sorted(term_rows)))
 
         def docs_of(terms):
-            return {
-                d for t in terms for b in term_blocks[t] for d in decode_block(b)[0].tolist()
-            }
+            return {d for t in terms for d in decode_postings(term_rows[t])[0].tolist()}
 
         cases = [
             ([scored], None),
@@ -191,9 +189,9 @@ def test_wand_equals_exhaustive_random():
         ]
         for k in (1, 5, 50):
             for groups, cand in cases:
-                got = _segment_topk(term_blocks, {"q": _Spec(groups, occ)}, idfs, k)
+                got = _segment_topk(term_rows, {"q": _Spec(groups, occ)}, idfs, k)
                 exp = segment_topk_exhaustive(
-                    {t: term_blocks[t] for t in scored}, weights, k, docs=cand
+                    {t: term_rows[t] for t in scored}, weights, k, docs=cand
                 )
                 assert [d for _, d, _ in got] == [d for d, _ in exp], f"trial={trial} k={k}"
                 assert np.allclose([s for _, _, s in got], [s for _, s in exp], atol=1e-12)
@@ -274,9 +272,8 @@ def test_local_kcut_rounding_tie_break():
     docs = np.array([2, 5, 9], dtype=np.int64)
     tfs = np.array([1, 1, 1], dtype=np.int64)
     norms = np.array([1.000035, 1.000044, 1.000042])
-    blocks = encode_postings(docs, tfs, norms)
-    # dict-shaped blocks are what the scorers consume
-    tb = {"t": blocks}
+    # dict-shaped posting rows are what the scorers consume
+    tb = {"t": encode_postings(docs, tfs, norms)}
     idfs = {"t": 1.0}
 
     spec = {"q": _Spec([["t"]], [("t", 1.0)])}

@@ -49,14 +49,15 @@ def topk_oracle(scores: dict[int, float], k: int) -> list[tuple[int, float]]:
 
 
 def segment_topk_exhaustive(
-    term_blocks: dict[str, list],
+    term_rows: dict[str, dict],
     weights: dict[str, float],
     k: int,
     round_to: int | None = None,
     docs: set[int] | None = None,
 ) -> list[tuple[int, float]]:
-    """Per-segment oracle for the index scorer: decode every block block by
-    block, accumulate weight * norm per doc, top-k.
+    """Per-segment oracle for the index scorer: decode every term's posting
+    row with the per-term reference decoder, accumulate weight * norm per
+    doc, top-k.
 
     ``docs`` restricts scoring to a candidate set, every candidate scoring
     at least 0.0. The k-cut ranks on (ROUNDED score desc, doc_id asc) — the
@@ -65,17 +66,15 @@ def segment_topk_exhaustive(
     """
     import heapq
 
-    from elasticsearch_batch_percolator_spark.index.codec import decode_block
+    from elasticsearch_batch_percolator_spark.index.codec import decode_postings
     from elasticsearch_batch_percolator_spark.operators.dsl_index import _round_half_up
 
     acc: dict[int, float] = dict.fromkeys(docs, 0.0) if docs is not None else {}
-    for term, blocks in term_blocks.items():
-        w = weights[term]
-        for blk in blocks:
-            doc_ids, _, norms = decode_block(blk)
-            for d, nr in zip(doc_ids.tolist(), (w * norms).tolist()):
-                if docs is None or d in docs:
-                    acc[d] = acc.get(d, 0.0) + nr
+    for term, row in term_rows.items():
+        doc_ids, _, norms = decode_postings(row)
+        for d, nr in zip(doc_ids.tolist(), (weights[term] * norms).tolist()):
+            if docs is None or d in docs:
+                acc[d] = acc.get(d, 0.0) + nr
     return heapq.nsmallest(
         k, acc.items(), key=lambda kv: (-_round_half_up(kv[1], round_to), kv[0])
     )
