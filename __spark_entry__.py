@@ -640,8 +640,10 @@ def _q_wildcard_topk_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_index_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index round-trip integrity: decode every posting row back to (term,
-    df, cf) and compare against token-level SQL over the raw corpus —
-    validates the varint/delta codec through the driver gate."""
+    df, cf) with the per-term reference decoder ``codec.decode_postings``
+    and compare against token-level SQL over the raw corpus — validates
+    the posting layout (doc-id delta lists, tf lists) against an
+    independent oracle."""
     import pandas as pd
 
     from elasticsearch_batch_percolator_spark.index.codec import decode_postings

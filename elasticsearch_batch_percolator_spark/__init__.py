@@ -17,7 +17,7 @@ Everything is DataFrame/Catalyst-first; Python crosses the JVM boundary
 only through Arrow-vectorized pandas UDFs (codec, positional verify).
 """
 
-__version__ = "0.5.0"
+__version__ = "0.6.0"
 
 TOKEN_PATTERN = "[^a-z0-9_]+"  # code-aware: identifiers survive, case-folded
 BM25_K1 = 1.2

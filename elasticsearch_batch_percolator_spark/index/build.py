@@ -6,8 +6,9 @@ TransportBatchPercolateAction.java:156-159 — document partitioning is the
 same design):
 
     out_dir/postings/segment_id=K/*.parquet
-        (term, df, cf, doc_bytes, tf_bytes, norm_bytes, pos_bytes)
-        one row per term, its whole posting list; sorted by term
+        (term, df, cf, docs, tfs, norms, positions)
+        one row per term, its whole posting list as integer and float
+        list columns; sorted by term
     out_dir/term_stats/*.parquet              (term, df, cf) global
     out_dir/manifest.json                     stats + lineage + per-segment
                                               metrics + completed set
@@ -26,11 +27,12 @@ Scale properties:
   min/max row-group stats on the term-sorted output give term-lookup
   pruning at read time.
 - one codec, one writer: build, append and compaction all encode through
-  ``codec.encode_segment`` (compaction first decodes its source rows
-  with ``codec.decode_stream``), and all three write through
-  ``_write_postings``. The posting layout itself lives in ``codec.py``
-  only; the manifest records its name and ``read_manifest`` refuses an
-  index written in another.
+  ``codec.encode_segment`` (compaction first flattens its source rows'
+  list columns and turns doc deltas back into ids with
+  ``codec.decode_docs``), and all three write through ``_write_postings``,
+  Spark's default Parquet writer. The posting layout itself lives in
+  ``codec.py`` only; the manifest records its name and ``read_manifest``
+  refuses an index written in another.
 - parallelism = n_segments (tasks >> cores is the sizing rule: pick
   n_segments ≈ 4×cores or corpus_bytes / ~1 GiB, whichever is larger).
 - resume: Spark dynamic partition overwrite rewrites only the segments
@@ -60,9 +62,10 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from .. import BM25_B, BM25_K1
-from .codec import LAYOUT, POSTING_COLUMNS, decode_stream, encode_segment
+from .codec import LAYOUT, POSTING_COLUMNS, POSTING_TYPES, decode_docs, encode_segment
 
 #: one row per (segment, term), as the build encoder and the compaction
 #: merge emit them; ``segment_id`` becomes the ``postings`` partition directory
@@ -73,7 +76,7 @@ SEGMENT_SCHEMA = T.StructType(
         T.StructField("df", T.LongType()),
         T.StructField("cf", T.LongType()),
     ]
-    + [T.StructField(c, T.BinaryType()) for c in POSTING_COLUMNS]
+    + [T.StructField(c, from_arrow_type(pa.list_(t))) for c, t in POSTING_TYPES.items()]
 )
 #: ``postings`` as a reader sees it: the file columns, then the partition
 #: column (the order a schema-inferring read reports)
@@ -381,7 +384,7 @@ def build_index(
     many segments to exercise the resume path.
 
     ``positions=True`` stores within-doc token positions per posting
-    (delta+varint) — needed only when registered queries include phrases/
+    — needed only when registered queries include phrases/
     spans that should run index-side (SURVEY.md §7 hard part 2: keep
     positions only where a query needs them; they dominate index size).
 
@@ -708,11 +711,11 @@ def _compact_merged(
 ) -> tuple[dict, DataFrame]:
     """The compaction PLAN: (old→new segment map, merged posting rows).
 
-    Per merged segment, one ``mapInArrow`` step: its source rows decode
-    as one stream per column (``codec.decode_stream``), terms rank with the
-    build's ``_rank_terms``, one (term, doc) lexsort interleaves the source
-    doc runs and their positions, and the build's ``codec.encode_segment``
-    re-encodes them.
+    Per merged segment, one ``mapInArrow`` step: its source rows' list
+    columns flatten into one array each (doc ids through
+    ``codec.decode_docs``), terms rank with the build's ``_rank_terms``,
+    one (term, doc) lexsort interleaves the source doc runs and their
+    positions, and the build's ``codec.encode_segment`` re-encodes them.
 
     Split from compact_index so the physical plan is inspectable
     (gen_plans.py) without writing an index."""
@@ -759,18 +762,14 @@ def _compact_merged(
     positions = bool(manifest.positions)
 
     def merge_segments(batches):
-        # each row's first doc delta is absolute, so rows concatenate
-        # freely into one stream; source doc ids are disjoint (the append
-        # contract), so the (term, doc) order is total
+        # source doc ids are disjoint (the append contract), so the
+        # (term, doc) order is total
         for s, t in _segment_tables(batches):
             dfs = t["df"].to_numpy()
-            doc, tf, pos = decode_stream(
-                _joined(t["doc_bytes"]),
-                dfs,
-                _joined(t["tf_bytes"]),
-                _joined(t["pos_bytes"]) if positions else None,
-            )
-            norm = np.frombuffer(_joined(t["norm_bytes"]), dtype=np.float64)
+            doc = decode_docs(pc.list_flatten(t["docs"]).to_numpy(), dfs)
+            tf = pc.list_flatten(t["tfs"]).to_numpy().astype(np.int64)
+            norm = pc.list_flatten(t["norms"]).to_numpy()
+            pos = pc.list_flatten(t["positions"]).to_numpy() if positions else None
             row_rank, terms = _rank_terms(t["term"])
             rank = np.repeat(row_rank, dfs)
             order = np.lexsort((doc, rank))
@@ -785,11 +784,6 @@ def _compact_merged(
             )
 
     return mapping, rows.mapInArrow(merge_segments, SEGMENT_SCHEMA)
-
-
-def _joined(column: pa.ChunkedArray) -> bytes:
-    """A binary column's values back to back, as one bytes object."""
-    return b"".join(column.to_pylist())
 
 
 def _merge_term_stats(

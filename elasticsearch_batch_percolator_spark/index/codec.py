@@ -1,26 +1,29 @@
-"""Posting-list codec: docID-delta + varint, one row per (segment, term).
+"""Posting-list codec: one row per (segment, term), its lists as Parquet
+integer and float list columns.
 
 The reference leaves storage to Lucene segments (RAMDirectory,
 RamDirectoryPercolatorIndex.java:50-66); this engine persists its own
-segment layout: docID-delta + varint compressed posting lists, each term's
-whole list in one row, decoded in vectorized passes (the columnar inverted
-index shape of ICDE 2025, with no per-block skip structure — nothing reads
-one since the decode-once batch scorer replaced block-max WAND). This
-module is the one place that knows that layout: build, append and
-compaction encode whole segments through ``encode_segment`` (one
-vectorized pass per column) and every reader decodes through
-``decode_stream``; ``encode_postings`` / ``decode_postings`` are the
+segment layout: each term's whole posting list in one row, as native
+columnar arrays (the columnar inverted index shape of ICDE 2025) that
+Spark's default Parquet writer encodes — dictionary and bit-packed
+integer encodings do what a hand-rolled varint stream did. This module is
+the one place that knows that layout: build, append and compaction encode
+whole segments through ``encode_segment`` (one Arrow list array per column,
+sliced by term offsets) and every reader turns doc deltas back into ids
+through ``decode_docs``; ``encode_postings`` / ``decode_postings`` are the
 per-term reference they are tested against.
 
-Posting row payload (``POSTING_COLUMNS``, each a binary column holding the
-term's whole posting list in one segment; the row also carries df and cf):
-- doc_bytes : varint(delta(doc_id)) — the first delta is absolute
-- tf_bytes  : varint(tf)
-- norm_bytes: float64 LE of the BM25 tf-norm  tf*(k1+1)/(tf+k1*(1-b+b*dl/avgdl))
-              (precomputed at build — avgdl is fixed per index build — so
-              scoring a posting is score = idf * norm, no dl lookup)
-- pos_bytes : varint(delta(position)) per posting, absolute at each posting
-              start; null in a non-positional index
+Posting row payload (``POSTING_COLUMNS``, each a list holding the term's
+whole posting list in one segment; the row also carries df and cf):
+- docs     : int64 doc-id deltas — the first delta is absolute. Deltas keep
+             the Parquet dictionary small in large segments, where absolute
+             ids would fall back to PLAIN encoding.
+- tfs      : int32 within-doc term frequencies
+- norms    : float64 BM25 tf-norm  tf*(k1+1)/(tf+k1*(1-b+b*dl/avgdl))
+             (precomputed at build — avgdl is fixed per index build — so
+             scoring a posting is score = idf * norm, no dl lookup)
+- positions: int32 within-doc positions, each posting's tf of them back to
+             back (split with cumsum(tfs)); null in a non-positional index
 
 ``LAYOUT`` names this layout in the index manifest, so a reader refuses an
 index written in any other one.
@@ -31,100 +34,16 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-_U64 = np.uint64
-
 #: the posting layout this module reads and writes, as the manifest records it
-LAYOUT = "term-rows-1"
-#: a posting row's payload columns (all binary), in schema order
-POSTING_COLUMNS = ("doc_bytes", "tf_bytes", "norm_bytes", "pos_bytes")
-
-
-def varint_encode_lens(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """LEB128 varint for a uint64 array, vectorized.
-
-    Returns ``(buf uint8[], nbytes int64[])`` — the encoded stream plus the
-    per-value byte length, so a caller encoding a WHOLE segment in one pass
-    can slice per-term byte ranges with an offset cumsum instead of calling
-    the encoder once per tiny posting list (the per-call fixed cost
-    dominates at df≈1-5 terms).
-    """
-    v = values.astype(np.uint64, copy=True)
-    n = len(v)
-    if n == 0:
-        return np.empty(0, dtype=np.uint8), np.empty(0, dtype=np.int64)
-    # byte length per value: ceil(bitlen/7), min 1
-    nbytes = np.ones(n, dtype=np.int64)
-    tmp = v >> _U64(7)
-    while tmp.any():
-        nbytes += (tmp > 0).astype(np.int64)
-        tmp >>= _U64(7)
-    total = int(nbytes.sum())
-    out = np.empty(total, dtype=np.uint8)
-    pos = np.concatenate([[0], np.cumsum(nbytes)[:-1]])
-    rem = v.copy()
-    max_len = int(nbytes.max())
-    for i in range(max_len):
-        mask = nbytes > i
-        idx = pos[mask] + i
-        byte = (rem[mask] & _U64(0x7F)).astype(np.uint8)
-        cont = (nbytes[mask] - 1 > i).astype(np.uint8) << 7
-        out[idx] = byte | cont
-        rem[mask] >>= _U64(7)
-    return out, nbytes
-
-
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128 varint for a uint64 array, vectorized."""
-    buf, _ = varint_encode_lens(values)
-    return buf.tobytes()
-
-
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Inverse of varint_encode, vectorized (values <= 10 bytes each)."""
-    if not buf:
-        return np.empty(0, dtype=np.uint64)
-    arr = np.frombuffer(buf, dtype=np.uint8)
-    ends = np.flatnonzero(arr < 128)
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    n = len(ends)
-    out = np.zeros(n, dtype=np.uint64)
-    max_len = int(lengths.max())
-    for i in range(max_len):
-        mask = lengths > i
-        byte = arr[starts[mask] + i].astype(np.uint64)
-        out[mask] |= (byte & _U64(0x7F)) << _U64(7 * i)
-    return out
-
-
-def encode_positions(positions_flat: np.ndarray, tfs: np.ndarray) -> bytes:
-    """Within-doc token positions, concatenated per posting, delta+varint.
-
-    ``positions_flat`` holds each posting's ascending positions back to
-    back; ``tfs`` gives each posting's count. Deltas reset at every posting
-    boundary (the first value of a posting is absolute).
-    """
-    p = np.asarray(positions_flat, dtype=np.int64)
-    if len(p) == 0:
-        return b""
-    deltas = p.copy()
-    deltas[1:] -= p[:-1]
-    starts = np.concatenate([[0], np.cumsum(tfs)[:-1]]).astype(np.int64)
-    deltas[starts] = p[starts]
-    return varint_encode(deltas.astype(np.uint64))
-
-
-def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
-    """Inverse of encode_positions → flat positions (split with cumsum(tfs))."""
-    vals = varint_decode(buf).astype(np.int64)
-    if len(vals) == 0:
-        return vals
-    c = np.cumsum(vals)
-    ends = np.cumsum(np.asarray(tfs, dtype=np.int64))
-    offsets = np.concatenate([[0], c[ends[:-1] - 1]])
-    return c - np.repeat(offsets, tfs)
+LAYOUT = "term-lists-1"
+#: a posting row's payload columns → their list element types, in schema order
+POSTING_TYPES = {
+    "docs": pa.int64(),
+    "tfs": pa.int32(),
+    "norms": pa.float64(),
+    "positions": pa.int32(),
+}
+POSTING_COLUMNS = tuple(POSTING_TYPES)
 
 
 def encode_postings(
@@ -134,8 +53,8 @@ def encode_postings(
     positions_flat: np.ndarray | None = None,
 ) -> dict:
     """One term's postings in one segment → its posting row (df, cf and
-    ``POSTING_COLUMNS``) — the per-term reference ``encode_segment`` is
-    tested against.
+    ``POSTING_COLUMNS`` as numpy arrays) — the per-term reference
+    ``encode_segment`` is tested against.
 
     ``positions_flat``: optional concatenated per-posting positions aligned
     with doc_ids order (caller must pre-sort when providing positions).
@@ -145,47 +64,56 @@ def encode_postings(
         raise ValueError("positions require pre-sorted postings")
     doc_ids = np.asarray(doc_ids, dtype=np.int64)[order]
     tfs = np.asarray(tfs, dtype=np.int64)[order]
-    norms = np.asarray(norms, dtype=np.float64)[order]
-    deltas = np.diff(doc_ids, prepend=0).astype(np.uint64)  # first is absolute
     return {
         "df": len(doc_ids),
         "cf": int(tfs.sum()),
-        "doc_bytes": varint_encode(deltas),
-        "tf_bytes": varint_encode(tfs.astype(np.uint64)),
-        "norm_bytes": norms.tobytes(),
-        "pos_bytes": None if positions_flat is None else encode_positions(positions_flat, tfs),
+        "docs": np.diff(doc_ids, prepend=0),  # first is absolute
+        "tfs": tfs.astype(np.int32),
+        "norms": np.asarray(norms, dtype=np.float64)[order],
+        "positions": None
+        if positions_flat is None
+        else np.asarray(positions_flat, dtype=np.int32),
     }
 
 
 def decode_postings(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Posting row (dict, Row or pandas record) → (doc_ids int64, tfs int64,
     norms float64)."""
-    doc_ids = np.cumsum(varint_decode(bytes(row["doc_bytes"])).astype(np.int64))
-    tfs = varint_decode(bytes(row["tf_bytes"])).astype(np.int64)
-    norms = np.frombuffer(bytes(row["norm_bytes"]), dtype=np.float64)
-    return doc_ids, tfs, norms
-
-
-def _bin_array(buf: np.ndarray, offsets: np.ndarray) -> pa.Array:
-    """Contiguous per-term byte ranges → zero-copy BinaryArray over the
-    single encoded stream (terms tile the posting space, so term k ends
-    exactly where term k+1 starts)."""
-    if len(offsets) and int(offsets[-1]) > np.iinfo(np.int32).max:
-        raise ValueError(
-            "segment payload exceeds 2 GiB (binary offsets are int32) — "
-            "rebuild with a larger n_segments so each segment's postings fit"
-        )
-    offs = offsets.astype(np.int32)
-    return pa.Array.from_buffers(
-        pa.binary(), len(offs) - 1, [None, pa.py_buffer(offs), pa.py_buffer(buf)]
+    return (
+        decode_docs(row["docs"], [row["df"]]),
+        np.asarray(row["tfs"], dtype=np.int64),
+        np.asarray(row["norms"], dtype=np.float64),
     )
 
 
-def _varint_runs(values: np.ndarray, bounds: np.ndarray) -> pa.Array:
-    """ONE varint pass over ``values`` → one binary value per
-    ``values[bounds[i]:bounds[i + 1]]``."""
-    buf, nbytes = varint_encode_lens(values.astype(np.uint64))
-    return _bin_array(buf, np.concatenate([[0], np.cumsum(nbytes)])[bounds])
+def decode_docs(deltas, dfs) -> np.ndarray:
+    """Posting rows' ``docs`` values back to back (``dfs``: each row's df)
+    → their doc ids.
+
+    A row's first delta is absolute, so one cumsum over all rows plus a
+    per-row prefix subtraction decodes any number of rows at once."""
+    ids = np.cumsum(np.asarray(deltas, dtype=np.int64))
+    dfs = np.asarray(dfs, dtype=np.int64)
+    if len(dfs) > 1:
+        starts = np.cumsum(dfs)[:-1]
+        # undo the cross-row prefix: each row's first value was absolute
+        ids -= np.repeat(np.concatenate([[0], ids[starts - 1]]), dfs)
+    return ids
+
+
+def _lists(name: str, values: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """``values`` cut at ``offsets`` → one list per term (terms tile the
+    posting space, so term k ends exactly where term k+1 starts), in the
+    column's element type (a value that does not fit raises)."""
+    if len(offsets) and int(offsets[-1]) > np.iinfo(np.int32).max:
+        raise ValueError(
+            f"a segment's {name} exceed 2^31 values (list offsets are int32) — "
+            "rebuild with a larger n_segments so each segment's postings fit"
+        )
+    return pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32)),
+        pa.array(values, POSTING_TYPES[name]),
+    )
 
 
 def encode_segment(
@@ -200,61 +128,27 @@ def encode_segment(
     ``term_rank`` is any integer term key, ``positions`` each posting's
     ascending positions back to back (None for a non-positional index).
     Returns ``(term starts, df, cf, payload)``: each term's first posting
-    index, df, cf and the ``POSTING_COLUMNS`` arrays — byte-identical to
-    ``encode_postings`` term by term, but each column is ONE varint pass
-    over the segment, sliced into terms by offsets (per-term calls are
-    ~30k tiny-array calls per segment; this is three big ones)."""
+    index, df, cf and the ``POSTING_COLUMNS`` arrays — equal to
+    ``encode_postings`` term by term, but each column is ONE list array
+    over the segment, cut into terms by offsets."""
     P = len(doc)
     t_change = np.flatnonzero(term_rank[1:] != term_rank[:-1])
     t_starts = np.concatenate([[0], t_change + 1]).astype(np.int64)
     bounds = np.concatenate([t_starts, [P]])
     # doc deltas: in-term diffs, absolute at each term start
-    deltas = doc.copy()
+    deltas = doc.astype(np.int64)
     deltas[1:] -= doc[:-1]
     deltas[t_starts] = doc[t_starts]
     if positions is not None:
-        # delta-encode ALL positions once; deltas reset (absolute) at every
-        # posting start — term slices are byte-identical to per-term
-        # encode_positions because terms align to postings
         pb = np.concatenate([[0], np.cumsum(tf)]).astype(np.int64)
-        pdeltas = positions.copy()
-        pdeltas[1:] -= positions[:-1]
-        pdeltas[pb[:-1]] = positions[pb[:-1]]
-        pos_bytes = _varint_runs(pdeltas, pb[bounds])
+        pos = _lists("positions", positions, pb[bounds])
     else:
-        pos_bytes = pa.nulls(len(t_starts), pa.binary())
+        pos = pa.nulls(len(t_starts), pa.list_(POSTING_TYPES["positions"]))
     payload = [
-        _varint_runs(deltas, bounds),
-        _varint_runs(tf, bounds),
-        _bin_array(np.ascontiguousarray(norm, np.float64).view(np.uint8), bounds * 8),
-        pos_bytes,
+        _lists("docs", deltas, bounds),
+        _lists("tfs", tf, bounds),
+        _lists("norms", norm, bounds),
+        pos,
     ]
     cf = np.add.reduceat(tf, t_starts).astype(np.int64)
     return t_starts, np.diff(bounds), cf, payload
-
-
-def decode_stream(
-    doc_bytes: bytes,
-    dfs: np.ndarray,
-    tf_bytes: bytes | None = None,
-    pos_bytes: bytes | None = None,
-) -> tuple[np.ndarray, np.ndarray | None, np.ndarray | None]:
-    """Concatenated posting rows' payloads (``dfs``: each row's df) →
-    ``(doc_ids, tfs, positions)``, ONE varint pass per column.
-
-    A row's first doc delta is absolute, so one cumsum over the stream
-    plus a per-row prefix subtraction replaces a ``decode_postings`` call
-    per row. ``tfs`` decode only given ``tf_bytes``, the flat positions
-    (split with ``cumsum(tfs)``) only given ``pos_bytes`` too; else None."""
-    ids = np.cumsum(varint_decode(doc_bytes).astype(np.int64))
-    dfs = np.asarray(dfs, dtype=np.int64)
-    if len(dfs) > 1:
-        starts = np.cumsum(dfs)[:-1]
-        # undo the cross-row prefix: each row's first value was absolute
-        ids -= np.repeat(np.concatenate([[0], ids[starts - 1]]), dfs)
-    if tf_bytes is None:
-        return ids, None, None
-    tfs = varint_decode(tf_bytes).astype(np.int64)
-    if pos_bytes is None:
-        return ids, tfs, None
-    return ids, tfs, decode_positions(pos_bytes, tfs)

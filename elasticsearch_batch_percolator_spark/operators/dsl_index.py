@@ -1,5 +1,5 @@
 """The index query engine: BM25 top-k and exact matching over the persisted
-compressed index.
+index.
 
 All three index operators run through this module's one per-segment pass:
 ``dsl_topk_from_index`` (any registrable DSL query, here),
@@ -22,7 +22,9 @@ verify    candidates of inexact plans re-evaluate EXACTLY against a
           indexed positions reproduces precisely the token view the
           evaluator needs — phrases, slop, spans, msm and must_not all run
           through the same plans/eval_py evaluator the percolator uses.
-          Positions decode only for the terms a positional plan reads.
+          Positions are read only for the terms a positional plan reads,
+          and the scan selects the ``tfs`` and ``positions`` columns only
+          when some query is positional.
 score     BM25 over the precomputed norms with weight = multiplier x idf
           per scoring occurrence (qtf x path boost for DSL plans,
           plans/query_plan.positive_term_weights) — identical weighting to
@@ -72,7 +74,7 @@ from ..index.build import (
     read_postings,
     term_stats_table,
 )
-from ..index.codec import POSTING_COLUMNS, decode_stream
+from ..index.codec import decode_docs
 from ..plans.compiler import DEFAULT_FIELD, compile_query
 from ..plans.eval_py import eval_plan, fuzzy_pred, regexp_regex, wildcard_regex
 from ..plans.limiting import limiting_filter
@@ -137,19 +139,19 @@ def _manifest(index_dir: str) -> IndexManifest:
 
 
 def _decode_term(row, positions: bool = False):
-    """One term's posting row → (doc_ids, norms, positions) through
-    ``codec.decode_stream``. tf_bytes and pos_bytes decode only when
+    """One term's posting row → (doc_ids, norms, positions), doc ids through
+    ``codec.decode_docs``. ``tfs`` and ``positions`` are read only when
     ``positions`` is asked for; then ``positions`` is ``(flat, offsets)``
     and doc i's positions are ``flat[offsets[i]:offsets[i + 1]]``, else it
     is None."""
-    if positions and row["pos_bytes"] is None:
+    if positions and row["positions"] is None:
         raise ValueError("positional query but index was built without positions=True")
-    pos_cols = (row["tf_bytes"], row["pos_bytes"]) if positions else ()
-    ids, tfs, flat = decode_stream(row["doc_bytes"], [row["df"]], *pos_cols)
-    norms = np.frombuffer(row["norm_bytes"], dtype=np.float64)
+    ids = decode_docs(row["docs"], [row["df"]])
+    norms = np.asarray(row["norms"], dtype=np.float64)
     if not positions:
         return ids, norms, None
-    return ids, norms, (flat, np.concatenate([[0], np.cumsum(tfs)]))
+    offsets = np.concatenate([[0], np.cumsum(row["tfs"], dtype=np.int64)])
+    return ids, norms, (np.asarray(row["positions"]), offsets)
 
 
 @dataclass
@@ -327,7 +329,8 @@ def _run(
     top-k) the global merge — a window over the n_segments*k local
     survivors. ``dfs`` is the front end's dictionary lookup (``_lookup``);
     a scoring term it lacks has df 0. ``k=None`` returns every segment's
-    (query_id, doc_id, score) rows."""
+    (query_id, doc_id, score) rows. The scan reads ``tfs`` and
+    ``positions`` only when some spec is positional."""
     scored = sorted({t for s in specs.values() for t, _ in s.occ})
     idfs = {t: _idf(n_docs, dfs.get(t, 0)) for t in scored}
     vocab = set(scored)
@@ -335,8 +338,10 @@ def _run(
         vocab.update(s.lits)
         for g in s.groups:
             vocab.update(g)
+    positional = any(s.positional for s in specs.values())
     postings = read_postings(spark, index_dir, sorted(vocab)).select(
-        "segment_id", "term", "df", *POSTING_COLUMNS
+        "segment_id", "term", "df", "docs", "norms",
+        *(("tfs", "positions") if positional else ()),
     )
 
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:

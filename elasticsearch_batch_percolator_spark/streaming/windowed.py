@@ -189,15 +189,12 @@ def windowed_match_counts(
     content_col: str = "content",
     id_col: str = "doc_id",
     tokenizer=None,
-    term_df: dict | None = None,
     skip_unsupported: bool = False,
     hybrid: bool = False,
 ) -> DataFrame:
     """docs (streaming or batch) → (window_start, window_end, query_id,
     n_docs): matched-document counts per event-time window per registered
-    query. ``term_df`` is accepted for compatibility but no longer used:
-    the atom-count verify needs no gate selection (every atom joins; the
-    aggregate settles the conjunction).
+    query.
 
     ``hybrid=True`` routes the query shapes the slim atom-stream plan
     can't express (spans, sloppy phrases, wildcards — the reference's

@@ -80,7 +80,7 @@ from elasticsearch_batch_percolator_spark.index.build import (
 docs_tok = eng.docs.select((F.col("doc_id") + 10_000_000).alias("doc_id"), "tokens")
 append_index(spark, docs_tok, idx, n_new_segments=2)
 p7 = grab(_compact_merged(spark, idx, read_manifest(idx), 2)[1])
-sections.append(("Segment compaction: old segments route to merged ones via a BROADCAST segment-map join (BroadcastHashJoin on the partition column), ONE hash Exchange on the new segment id, then the posting merge (decode_stream → lexsort → encode_segment) runs whole-segment-local in a single MapInArrow pass — bytes moved ~= compressed index size, no token rows, no groupBy(term)", p7))
+sections.append(("Segment compaction: old segments route to merged ones via a BROADCAST segment-map join (BroadcastHashJoin on the partition column), ONE hash Exchange on the new segment id, then the posting merge (list_flatten + decode_docs → lexsort → encode_segment) runs whole-segment-local in a single MapInArrow pass — bytes moved ~= compressed index size, no token rows, no groupBy(term)", p7))
 
 
 # 8. full-DSL index search (round 5): one scan covers every query's

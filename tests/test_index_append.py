@@ -249,7 +249,7 @@ def test_resume_keeps_frozen_positions(spark, tmp_path):
     build_index(spark, _docs(spark, rows), out, n_segments=4)  # no positions arg
     pdf = spark.read.parquet(os.path.join(out, "postings")).toPandas()
     assert set(pdf["segment_id"]) == {0, 1, 2, 3}
-    assert pdf["pos_bytes"].notna().all()
+    assert pdf["positions"].notna().all()
 
 
 def test_append_rerun_clears_orphaned_higher_ids(spark, tmp_path):

@@ -21,7 +21,6 @@ from elasticsearch_batch_percolator_spark.index.build import (
 )
 from elasticsearch_batch_percolator_spark.index.codec import (
     POSTING_COLUMNS,
-    decode_positions,
     decode_postings,
     encode_postings,
 )
@@ -105,11 +104,11 @@ def _postings_rows(spark, idx):
 
 
 @pytest.mark.parametrize("positions", [False, True])
-def test_compact_blocks_equal_reference_codec(spark, tmp_path, positions):
+def test_compact_rows_equal_reference_codec(spark, tmp_path, positions):
     """Each compacted term's posting row equals per-term ``encode_postings``
     over its source postings: every source row decoded with
-    ``decode_postings`` (positions with ``decode_positions``), sorted by
-    doc. Frequent terms hold more than 128 postings per merged segment."""
+    ``decode_postings`` (positions split by its tfs), sorted by doc.
+    Frequent terms hold more than 128 postings per merged segment."""
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     build_index(spark, _docs(spark, _rand_rows(21, range(0, 600, 2), vocab_n=12)), src,
@@ -125,7 +124,7 @@ def test_compact_blocks_equal_reference_codec(spark, tmp_path, positions):
     expected: dict = {}
     for (s, t), row in source.items():
         d, tf, nm = decode_postings(row)
-        pos = np.split(decode_positions(bytes(row["pos_bytes"]), tf), np.cumsum(tf)[:-1]) \
+        pos = np.split(np.asarray(row["positions"]), np.cumsum(tf)[:-1]) \
             if positions else [None] * len(d)
         expected.setdefault((new_seg[s], t), []).extend(zip(d, tf, nm, pos))
     assert set(merged) == set(expected)
@@ -135,9 +134,13 @@ def test_compact_blocks_equal_reference_codec(spark, tmp_path, positions):
         doc, tf, nm = (np.array([p[i] for p in posts]) for i in range(3))
         flat = np.concatenate([p[3] for p in posts]) if positions else None
         want = encode_postings(doc, tf, nm, positions_flat=flat)
-        got = {c: bytes(v) if isinstance(v, (bytes, bytearray)) else v
-               for c, v in merged[key].items()}
-        assert got == want, key
+        got = merged[key]
+        assert (got["df"], got["cf"]) == (want["df"], want["cf"]), key
+        for c in POSTING_COLUMNS:
+            if want[c] is None:
+                assert got[c] is None, (key, c)
+            else:
+                assert np.asarray(got[c], want[c].dtype).tobytes() == want[c].tobytes(), (key, c)
 
 
 def test_compact_positional_index_preserves_phrases(spark, tmp_path):

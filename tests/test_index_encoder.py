@@ -1,10 +1,10 @@
 """Arrow whole-segment encoder == per-term reference codec, bit-for-bit.
 
 ``build_index`` encodes each segment in one Arrow pass (Arrow
-dictionary-encode, one int lexsort, and ``codec.encode_segment``'s single
-whole-segment varint pass sliced by offsets). Its parquet output must be
-byte-identical, on every field including the posting payloads and with
-and without positions, to ``codec.encode_postings`` run term by term on
+dictionary-encode, one int lexsort, and ``codec.encode_segment``'s
+whole-segment list arrays cut by term offsets). Its parquet output must
+equal, on every field including the posting lists (norms bit for bit) and
+with and without positions, ``codec.encode_postings`` run term by term on
 the same documents — the two differ only in how, never in what.
 """
 
@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import types as T
 
 from elasticsearch_batch_percolator_spark.index.build import build_index, read_manifest
-from elasticsearch_batch_percolator_spark.index.codec import POSTING_COLUMNS, encode_postings
+from elasticsearch_batch_percolator_spark.index.codec import POSTING_TYPES, encode_postings
 
 
 def _random_docs(spark, seed, n_docs, with_empty=True, sparse_ids=False, hot=False):
@@ -49,9 +49,11 @@ def _random_docs(spark, seed, n_docs, with_empty=True, sparse_ids=False, hot=Fal
 
 
 def _row_tuple(r):
-    return tuple(
-        None if r[c] is None else bytes(r[c]) if c in POSTING_COLUMNS else int(r[c])
-        for c in ("df", "cf", *POSTING_COLUMNS)
+    """A posting row's fields as comparable values: df, cf, then each list
+    as its bytes in the column's element type (None when null)."""
+    return (int(r["df"]), int(r["cf"])) + tuple(
+        None if r[c] is None else np.asarray(r[c], t.to_pandas_dtype()).tobytes()
+        for c, t in POSTING_TYPES.items()
     )
 
 

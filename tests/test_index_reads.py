@@ -6,11 +6,14 @@ put on disk. Term filters are built with one ``isInCollection`` call and
 the dictionary lookup ORs literals with pattern predicates; both must
 carry terms with quotes, backslashes, LIKE metacharacters and non-ASCII
 text through unchanged, and an empty term list must select nothing.
-An index in another posting layout is refused before any read.
+The posting scan reads the ``tfs`` and ``positions`` columns only for a
+positional query. An index in another posting layout is refused before
+any read.
 """
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -161,21 +164,28 @@ def test_dsl_topk_odd_terms_match_engine(spark, odd, dsl):
         assert abs(sc - exp[d][1]) < 1e-9, d
 
 
-def test_block_layout_index_is_refused(spark, tmp_path):
-    """An index written in the 128-posting block layout (its manifest has a
-    ``block`` size and names no layout) would read as null payload columns
-    under ``POSTINGS_SCHEMA`` and answer with postings missing. Every
-    reader and writer refuses it instead, naming the directory."""
+@pytest.mark.parametrize(
+    "layout, fields",
+    [("blocks", {"block": 128}), ("term-rows-1", {"layout": "term-rows-1"})],
+    ids=["blocks", "term-rows-1"],
+)
+def test_block_layout_index_is_refused(spark, tmp_path, layout, fields):
+    """An index written in an older posting layout would read as null
+    payload columns under ``POSTINGS_SCHEMA`` and answer with postings
+    missing: the 128-posting block layout (its manifest has a ``block``
+    size and names no layout) and the varint-bytes row layout
+    (``term-rows-1``). Every reader and writer refuses it instead, naming
+    the directory."""
     old = str(tmp_path / "old")
     os.makedirs(os.path.join(old, "postings", "segment_id=0"))
     with open(os.path.join(old, "manifest.json"), "w") as f:
         json.dump(
             {
                 "n_docs": 2, "avgdl": 2.0, "n_segments": 1, "seg_size": 2,
-                "block": 128, "k1": 1.2, "b": 0.75, "tokenizer": "ws",
+                "k1": 1.2, "b": 0.75, "tokenizer": "ws",
                 "positions": True, "input_lineage": "",
                 "completed": {"0": {"terms": 2, "postings": 3}},
-                "boundaries": [], "stage_metrics": {},
+                "boundaries": [], "stage_metrics": {}, **fields,
             },
             f,
         )
@@ -191,6 +201,46 @@ def test_block_layout_index_is_refused(spark, tmp_path):
         "build_index": lambda: build_index(spark, docs, old, resume=True),
     }
     for name, call in calls.items():
-        with pytest.raises(ValueError, match="posting layout 'blocks'.*rebuild") as e:
+        with pytest.raises(ValueError, match=f"posting layout '{layout}'.*rebuild") as e:
             call()
         assert old in str(e.value), name
+
+
+def _postings_scan_columns(df) -> set[str]:
+    """The columns the plan's ``postings`` file scan reads."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = [
+        {c.split("#")[0] for c in cols.split(",")}
+        for cols in re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
+    ]
+    (cols,) = [c for c in scans if "segment_id" in c]
+    return cols
+
+
+def test_scan_reads_positions_only_for_positional_queries(spark, tmp_path):
+    """A term top-k and a non-positional DSL query score from doc ids and
+    norms alone, so their scan reads neither ``tfs`` nor ``positions``; a
+    phrase query verifies on positions and reads both."""
+    idx = str(tmp_path / "ix")
+    docs = spark.createDataFrame(
+        [(1, ["a", "b", "c"]), (2, ["b", "a"]), (3, ["a", "c", "b"])],
+        "doc_id long, tokens array<string>",
+    )
+    build_index(spark, docs, idx, n_segments=2, positions=True)
+    cases = {
+        "term top-k": (topk_from_index(spark, idx, {"q": ["a", "b"]}), False, [1, 2, 3]),
+        "dsl term": (
+            dsl_topk_from_index(spark, idx, {"q": {"term": {"content": "c"}}}), False, [1, 3]
+        ),
+        "phrase": (
+            dsl_topk_from_index(spark, idx, {"q": {"match_phrase": {"content": "a b"}}}),
+            True,
+            [1],
+        ),
+    }
+    for name, (df, positional, want) in cases.items():
+        cols = _postings_scan_columns(df)
+        assert {"docs", "norms"} <= cols, name
+        want_pos = {"tfs", "positions"} if positional else set()
+        assert cols & {"tfs", "positions"} == want_pos, (name, cols)
+        assert sorted(r["doc_id"] for r in df.collect()) == want, name

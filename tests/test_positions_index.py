@@ -1,37 +1,14 @@
-"""Positional postings: codec round-trip + index-side phrase == Catalyst phrase."""
+"""Positional postings: index-side phrase == Catalyst phrase."""
 
-import numpy as np
-from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from elasticsearch_batch_percolator_spark.engine import Engine
 from elasticsearch_batch_percolator_spark.index.build import build_index
-from elasticsearch_batch_percolator_spark.index.codec import (
-    decode_positions,
-    encode_positions,
-)
 from elasticsearch_batch_percolator_spark.operators.match import match_col
 from elasticsearch_batch_percolator_spark.operators.phrase_index import (
     phrase_docs_from_index,
 )
 from elasticsearch_batch_percolator_spark.plans import compile_query
-
-
-@settings(max_examples=200, deadline=None, derandomize=True)
-@given(
-    st.lists(
-        st.lists(st.integers(0, 5000), min_size=1, max_size=30).map(
-            lambda xs: sorted(set(xs))
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_positions_round_trip(per_posting):
-    flat = np.concatenate([np.array(p, dtype=np.int64) for p in per_posting])
-    tfs = np.array([len(p) for p in per_posting], dtype=np.int64)
-    got = decode_positions(encode_positions(flat, tfs), tfs)
-    assert got.tolist() == flat.tolist()
 
 
 def test_phrase_from_index_matches_catalyst(spark, sf_dir, tmp_path):
@@ -56,9 +33,9 @@ def test_phrase_from_index_matches_catalyst(spark, sf_dir, tmp_path):
 
 
 def test_positionless_index_unchanged(spark, sf_dir, tmp_path):
-    """Default build stores no positions (pos_bytes null) — size guard."""
+    """Default build stores no positions (``positions`` null) — size guard."""
     eng = Engine.from_documents(spark, sf_dir)
     idx = str(tmp_path / "noposidx")
     build_index(spark, eng.docs.select("doc_id", "tokens"), idx, n_segments=2)
-    rows = spark.read.parquet(f"{idx}/postings").select("pos_bytes").collect()
-    assert rows and all(r["pos_bytes"] is None for r in rows)
+    rows = spark.read.parquet(f"{idx}/postings").select("positions").collect()
+    assert rows and all(r["positions"] is None for r in rows)
