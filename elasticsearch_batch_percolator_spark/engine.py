@@ -14,6 +14,8 @@ stats resident per shard (BatchPercolatorQueriesRegistry.java:78).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,6 +25,8 @@ from .operators.bm25 import bm25_topk, score_terms
 from .operators.stats import corpus_stats, doc_freq, doc_lengths, term_frequencies
 
 TOKENIZERS = {"ws": tokenize_ws, "code": tokenize_code}
+
+_LOG = logging.getLogger(__name__)
 
 
 class Engine:
@@ -85,5 +89,5 @@ class Engine:
         for df in (self.docs, self.tf, self.dl, self.dfreq):
             try:
                 df.unpersist()
-            except Exception:
-                pass
+            except Exception:  # e.g. its SparkContext is stopped
+                _LOG.debug("unpersist of a corpus frame failed", exc_info=True)

@@ -12,15 +12,17 @@ Its per-query loop (E1) is replaced by ONE set-oriented joined plan:
   wildcards expanded against the BATCH term dictionary, exactly like the
             reference's automaton over the index terms
             (WildcardTermsProducer.getTerms:26-53)
-  phase 2   exact evaluator (plans/eval_py.py) in ONE Arrow pandas UDF over
-            surviving (query, doc) pairs: dict-dispatched compiled
-            predicates + a set-containment fast lane for term conjunctions;
-            pure term/phrase/wildcard conjunctions may instead verify in
-            Catalyst (the join-verify lane, chosen per registry by cost)
+  phase 2   exact evaluator (plans/eval_py.py) in ONE Arrow pandas UDF
+            (operators/verify.py) over surviving (query, doc) pairs:
+            dict-dispatched compiled predicates + a set-containment fast
+            lane for term conjunctions; pure term/phrase/wildcard
+            conjunctions may instead verify in Catalyst (the join-verify
+            lane, chosen per registry by cost)
   errors    per-query isolation: a failing phase-2 eval drops that query for
-            that doc and the error itself is dropped — neither counted nor
-            logged (the reference skips and logs,
-            BatchPercolatorService.java:364-368; YouScan aborts)
+            that doc and adds one to a per-batch Spark accumulator,
+            read back as ``PercolateResult.verify_errors`` (the reference
+            skips and logs, BatchPercolatorService.java:364-368; YouScan
+            aborts)
 
 ``percolate()`` runs these as stages over one ``BatchPlan`` — the
 registry-derived driver work, cached per registry version and field layout,
@@ -51,13 +53,14 @@ from dataclasses import dataclass, field as dc_field
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import Accumulator
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..index.build import in_collection
-from ..plans.eval_py import compile_predicate_fields
-from ..sources.registry import CompiledRegistry, VerifyPlans
+from ..sources.registry import CompiledRegistry
+from .verify import VerifyPlans, verify_udf
 
 _LOG = logging.getLogger(__name__)
 
@@ -95,70 +98,6 @@ _JV_MAX_RATIO = 1.5
 # join-verify lane: "auto" (the cost model above), "force" (every eligible
 # query) or "off" (none); force and off are each other's test oracle
 _JV_MODE = "auto"
-
-# Worker-process cache of the UNPICKLED verify broadcast + its compiled-
-# predicate memo, keyed by (applicationId, VerifyPlans.token) — never raw
-# ``version``, which aliases across registries (see registry._TOKENS and
-# test_worker_verify_cache_no_alias_across_registries). PySpark's own
-# per-worker broadcast value cache is unreliable across tasks (the JVM
-# re-ships broadcast metadata to reused workers and the python-side seen-set
-# is weakly held), which drops the cached value and re-unpickles it —
-# measured at a 10^6-query registry: ~110s PER TASK per worker with 32
-# workers allocating ~800MB of small objects concurrently (kernel-bound page
-# allocation), paid again on later batches, i.e. the entire cold-start cliff
-# of the 1M-query study in BASELINE.md.
-#
-# IMPORTANT: this dict must be resolved via a RUNTIME IMPORT inside the UDF
-# (``import ...percolate as _pm; _pm._WORKER_VERIFY_CACHE``), never by
-# closing over the name — cloudpickle serializes nested UDF closures by
-# value, so a closed-over module global becomes a fresh per-task copy and
-# the cache silently never hits (measured: memo0 == 0 on every task). The
-# runtime import resolves to the worker process's real module instance,
-# which survives for the worker's lifetime (spark.python.worker.reuse), so
-# the unpickle and every lazily compiled predicate are paid ONCE per worker
-# per registry version regardless of how pyspark shuffles its Broadcast
-# handles. Requires the package importable on workers (true in local mode
-# and under ``spark-submit --py-files``, the shipping config) — the UDF's
-# pickled references to package functions need it anyway.
-# Capped at 2 entries so a registry hot-swap (version bump → new key)
-# releases the old value instead of accumulating.
-_WORKER_VERIFY_CACHE: dict = {}
-
-# True after any worker-side gc.freeze() that ran while an Arrow batch was
-# in flight: freeze() pins the WHOLE live graph, including that batch's
-# pandas transients (which participate in reference cycles and would
-# otherwise never be collected). The next verify call unfreezes and
-# collects the now-dead batch, bounding the frozen-transient pin to at
-# most one batch per worker; the memo then lives in (large) gen2, where
-# CPython's 25%-of-long-lived heuristic keeps full collections rare.
-_WORKER_FREEZE_PENDING: list = [False]
-
-
-def _sdecode(c: dict, i: int) -> tuple:
-    """Decode simple-lane row ``i`` of the COLUMNAR verify broadcast back
-    into (need, forbid) — each a tuple of (field, term) — exactly the shape
-    ``_simple_required`` produced driver-side (see
-    registry.broadcast_verify_plans: the columnar form exists so workers
-    unpickle buffers, not 10^6 dicts-of-tuples). REFERENCE IMPLEMENTATION
-    only, pinned by test_percolate.py's columnar round-trip test: the verify
-    UDF deliberately does NOT call it (it checks terms straight off the
-    shared buffers — materializing a tuple per candidate re-creates the
-    object graph the columnar form exists to avoid, measured 4-5x slower
-    cold batches at a 10^6-query registry)."""
-    flds = c["fields"]
-    out = []
-    for off, farr, tbuf, toff in (
-        (c["need_off"], c["need_f"], c["need_t"], c["need_t_off"]),
-        (c["forb_off"], c["forb_f"], c["forb_t"], c["forb_t_off"]),
-    ):
-        a, b = int(off[i]), int(off[i + 1])
-        out.append(
-            tuple(
-                (flds[farr[j]], tbuf[toff[j] : toff[j + 1]].decode())
-                for j in range(a, b)
-            )
-        )
-    return (out[0], out[1])
 
 
 def _atom_df(fc: int, kind: str, v: str, col_df: dict, jv_pat_df: dict) -> int:
@@ -527,6 +466,15 @@ class PercolateResult:
     content_of: dict = dc_field(default_factory=dict)
     analyzer_names: dict = dc_field(default_factory=dict)
     cached: list = dc_field(default_factory=list)
+    # the python lane's verify-error accumulator (None: no python lane)
+    _errors: Accumulator | None = dc_field(default=None, repr=False)
+
+    @property
+    def verify_errors(self) -> int:
+        """(query, doc) pairs whose phase-2 evaluation raised and were
+        dropped (E10). Valid after an action on ``matches``; every
+        evaluation of ``matches`` counts again."""
+        return self._errors.value if self._errors is not None else 0
 
     def unpersist(self) -> None:
         """E11 per-batch cleanup: release every DataFrame percolate cached."""
@@ -618,20 +566,11 @@ class PercolateResult:
             tc for qf, tc in self.resolve.items()
             if self.analyzer_names.get(qf) == "nested"
         }
-        import pickle as _pickle
-
         for qid in sorted(matched):
             cq = registry.queries.get(qid)
             if cq is None:
                 continue
-            # transient unpickle for blob-backed queries: the `plan`
-            # property would CACHE the tree on the CompiledQuery, pinning
-            # one live tree per matched query on the driver for the
-            # registry's lifetime (defeating the blob-backed design);
-            # positive_terms only needs it for this pass
-            plan = cq._plan
-            if plan is None and cq.plan_blob is not None:
-                plan = _pickle.loads(cq.plan_blob)
+            plan = cq.transient_plan()
             for (fld, t), w in sorted(positive_term_weights(plan).items()):
                 tc = self.resolve.get(fld)
                 if tc is not None and tc not in nested:
@@ -1459,218 +1398,33 @@ def _candidates(
     return candidates.dropDuplicates(["doc_id", "query_id"])
 
 
-def _verify_udf(bc_plans, bc_key, n_simple, qf_to_idx, nested_idx, scalar_idx):
-    """The phase-2 pandas UDF: (vids, *token columns) per doc → hit vids.
-
-    Every name the nested functions close over is picklable driver state
-    (no DataFrames): cloudpickle ships them by value with the UDF."""
-
-    def _bc_state():
-        # worker-side: unpickled broadcast value + predicate memo,
-        # process-persistent. The cache dict MUST come from a runtime
-        # import (see _WORKER_VERIFY_CACHE above) — closing over it
-        # would hand every task a private copy.
-        from elasticsearch_batch_percolator_spark.operators import (
-            percolate as _pm,
-        )
-
-        cache = _pm._WORKER_VERIFY_CACHE
-        fpend = _pm._WORKER_FREEZE_PENDING
-        st = cache.get(bc_key)
-        if st is None:
-            val = bc_plans.value
-            while len(cache) >= 2:
-                cache.pop(next(iter(cache)))
-            # (value, compiled-plan memo). No qid index of any kind is
-            # built worker-side — candidates arrive as integer vids
-            # (JVM broadcast join, see BatchPlan.vid_sdf). Simple-lane rows
-            # are NOT memoized as python tuples either: materializing a
-            # tuple per candidate vid re-creates, spread over the first
-            # batches, the very ~500MB-per-worker object graph the
-            # columnar form exists to avoid — measured as a 4-5x
-            # slowdown of the first two production batches at 1M
-            # queries (32 workers allocating concurrently). The verify
-            # UDF checks terms straight off the shared buffers instead
-            # (~2-3us per candidate pair, short-circuiting, zero
-            # persistent allocation).
-            st = (val, {})
-            cache[bc_key] = st
-            # Freeze the freshly built state out of the GC generations.
-            # The columnar broadcast leaves the worker's tracked-object
-            # count SMALL (buffers and strings aren't gc-tracked), so
-            # as the decode/predicate memos grow, CPython's gen2
-            # heuristic (pending > 25% of long-lived) fires full
-            # collections almost continuously over the growing graph —
-            # measured +100s per 20k-doc batch at a 10^6-query registry
-            # (the dict-form broadcast accidentally suppressed this:
-            # its one-burst unpickle pushed long-lived to ~5M objects).
-            # freeze() moves everything alive into the permanent
-            # generation so those scans stay proportional to NEW
-            # objects; the state is worker-lifetime anyway.
-            import gc
-
-            gc.freeze()
-            fpend[0] = True  # this call's transients are pinned too
-        return st, fpend
-
-    def _pred(vid, i, pcols, memo):
-        # plan blobs live in ONE shared buffer (see
-        # broadcast_verify_plans): slice plan row ``i``'s bytes out
-        # lazily — only candidate vids ever pay an unpickle +
-        # predicate compile, memoized per worker (int-keyed)
-        import pickle
-
-        p = memo.get(vid)
-        if p is None:
-            off = pcols["off"]
-            blob = pcols["buf"][off[i] : off[i + 1]]
-            p = compile_predicate_fields(pickle.loads(blob))
-            memo[vid] = p
-        return p
-
-    _EMPTY = ([], frozenset())
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def verify_doc(vid_lists: pd.Series, *tok_series: pd.Series) -> pd.Series:
-        import gc
-
-        (_val, memo), _fpend = _bc_state()
-        if _fpend[0]:
-            # a prior call's freeze pinned that call's Arrow batch;
-            # its transients are dead now — unpin everything, collect
-            # their cycles, and leave the memo in gen2 (large
-            # long-lived count => rare full collections). A cold
-            # growth phase below re-freezes and re-arms the flag.
-            gc.unfreeze()
-            gc.collect()
-            _fpend[0] = False
-        scols = _val["simple_cols"]
-        pcols = _val["plan_cols"]
-        # simple-lane buffers, bound locally for the hot loop
-        _flds = scols["fields"]
-        _noff = scols["need_off"]
-        _nf = scols["need_f"]
-        _nt = scols["need_t"]
-        _ntoff = scols["need_t_off"]
-        _foff = scols["forb_off"]
-        _ff = scols["forb_f"]
-        _ft = scols["forb_t"]
-        _ftoff = scols["forb_t_off"]
-        _g0 = len(memo)
-        out = []
-        for row in zip(vid_lists, *tok_series):
-            vids = row[0]
-            views = []
-            for ci, s in enumerate(row[1:]):
-                if ci in scalar_idx:
-                    views.append(s)  # raw scalar for Range predicates
-                    continue
-                if ci in nested_idx:
-                    # array-typed child fields become lists; scalar
-                    # children (numeric weights etc.) pass through for
-                    # Range predicates — list() on a scalar would raise
-                    # OUTSIDE the per-query try below and abort the
-                    # whole batch (E10 isolation violation)
-                    kids = []
-                    for kid in (s if s is not None else []):
-                        view = {}
-                        for k, v in dict(kid).items():
-                            if v is None:
-                                view[k] = []
-                            elif isinstance(v, (list, tuple, np.ndarray)):
-                                view[k] = list(v)
-                            else:
-                                view[k] = v
-                        kids.append(view)
-                    views.append(kids)
-                else:
-                    tl = s.tolist() if s is not None else []
-                    views.append((tl, set(tl)))
-            fmap = {qf: views[i] for qf, i in qf_to_idx.items()}
-            hit = []
-            for vid in vids:
-                try:
-                    if vid < n_simple:
-                        # term-conjunction fast lane: containment
-                        # checks straight off the columnar buffers —
-                        # short-circuits on the first missing required
-                        # term, allocates nothing that outlives the
-                        # pair (no closure compile, no decoded memo)
-                        ok = True
-                        for j in range(_noff[vid], _noff[vid + 1]):
-                            v = fmap.get(_flds[_nf[j]], _EMPTY)
-                            if (
-                                type(v) is not tuple
-                                or _nt[_ntoff[j] : _ntoff[j + 1]].decode()
-                                not in v[1]
-                            ):
-                                ok = False
-                                break
-                        if ok:
-                            for j in range(_foff[vid], _foff[vid + 1]):
-                                v = fmap.get(_flds[_ff[j]], _EMPTY)
-                                if (
-                                    type(v) is tuple
-                                    and _ft[_ftoff[j] : _ftoff[j + 1]].decode()
-                                    in v[1]
-                                ):
-                                    ok = False
-                                    break
-                        if ok:
-                            hit.append(vid)
-                        continue
-                    p = _pred(vid, vid - n_simple, pcols, memo)
-                    if p is not None and p(fmap):
-                        hit.append(vid)
-                except Exception:
-                    pass  # per-query error isolation (E10)
-            out.append(hit)
-            if len(memo) - _g0 > 25000:
-                # the memos grew a lot: freeze the new worker-lifetime
-                # entries MID-CALL (a cold batch is one huge Arrow call
-                # per worker — an end-of-call freeze would let gen2
-                # churn over the growing graph the whole way through;
-                # see the note in _bc_state). freeze() is list-merge
-                # cheap, and the 25k step amortizes it to nothing.
-                gc.freeze()
-                _g0 = len(memo)
-                _fpend[0] = True  # next call unpins this batch
-        return pd.Series(out)
-
-    return verify_doc
-
-
 def _python_verify(
     spark: SparkSession,
     view: _BatchView,
     plan: BatchPlan,
     candidates: DataFrame,
-) -> DataFrame:
+) -> tuple[DataFrame, Accumulator]:
     """Stage 5 (phase 2): exact verify of the pythonic queries' candidates
-    by the broadcast compiled-python evaluator — per candidate ONE dict
+    by the shared verify UDF (operators/verify.py) — per candidate ONE dict
     dispatch + a compiled predicate (or the simple-MUST set-containment
     lane), with doc-grouped token views. Positional queries (spans, sloppy
     phrases, positional nested) always verify here — the same boundary the
     reference draws ("positional queries are magnitudes slower",
     README.md:127-133).
 
-    Plans ship ONCE per executor via a Spark broadcast (pickling 10^5
-    compiled closures into every task would dominate the job); predicates
-    compile lazily per worker and memoize. The broadcast is the plan's
-    handle on the registry's verify-plan set (a superset of pythonic — only
-    candidate qids are ever looked up) so its multi-second pickle is paid
-    once per registry, not once per batch."""
-    bc_key = (spark.sparkContext.applicationId, plan.verify.token)
+    Plans ship ONCE per executor via the registry's verify broadcast (a
+    superset of pythonic — only candidate vids are ever looked up), so its
+    multi-second pickle is paid once per registry, not once per batch.
+    Returns the matches and this batch's verify-error accumulator."""
     # group candidates per doc: tokens ship ONCE per doc (not once per
     # (doc, query) pair — a ~|queries|x blowup at dense candidate sets),
     # and the token list/set conversions amortize over all its queries.
     # fieldmap views (one per tokens column) are built once per doc and
     # shared by every query field resolving to that column.
     tok_cols = sorted(set(view.resolve.values()))
-    verify_doc = _verify_udf(
-        plan.verify.bc,
-        bc_key,
-        len(plan.verify.simple_qids),
+    verify_doc, errors = verify_udf(
+        spark,
+        plan.verify,
         {qf: tok_cols.index(tc) for qf, tc in view.resolve.items()},
         {i for i, tc in enumerate(tok_cols) if tc in view.nested_cols},
         {i for i, tc in enumerate(tok_cols) if tc in view.scalar_cols},
@@ -1699,9 +1453,10 @@ def _python_verify(
     )
     # hit vids (small) map back through the same broadcast DataFrame
     # (the exchange is reused within the action)
-    return hit_vids.join(F.broadcast(plan.vid_sdf), "vid").select(
+    matches = hit_vids.join(F.broadcast(plan.vid_sdf), "vid").select(
         "doc_id", "query_id"
     )
+    return matches, errors
 
 
 def _jv_tables(
@@ -1991,8 +1746,10 @@ def percolate(
         parts = [
             candidates.join(F.broadcast(plan.exact_sdf), "query_id", "left_semi")
         ]
+    errors = None
     if plan.vid_sdf is not None:
-        parts.append(_python_verify(spark, view, plan, candidates))
+        verified, errors = _python_verify(spark, view, plan, candidates)
+        parts.append(verified)
     if plan.jv_tables is not None:
         parts.append(_join_verify(view, plan, batch_terms, term_dict))
     if not parts:
@@ -2007,4 +1764,5 @@ def percolate(
         content_of=view.content_of,
         analyzer_names=view.analyzer_names,
         cached=cached_frames,
+        _errors=errors,
     )

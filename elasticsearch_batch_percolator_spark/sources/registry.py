@@ -40,7 +40,7 @@ import json
 import logging
 from dataclasses import dataclass, field
 from itertools import count
-from typing import NamedTuple
+from typing import TYPE_CHECKING
 
 from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
@@ -63,6 +63,9 @@ from ..plans.query_plan import (
     WildcardPhrase,
 )
 
+if TYPE_CHECKING:
+    from ..operators.verify import VerifyPlans
+
 
 # sentinel for "metadata not precomputed" (None is a meaningful value for
 # simple_req / jv_req: "plan is not expressible in that lane")
@@ -74,9 +77,9 @@ _LOG = logging.getLogger(__name__)
 # ``version`` alone is NOT a safe worker-side cache key: it is per-registry
 # (set to len(queries) on load, bumped on mutation), so two registries in
 # one application routinely share a (app, version) pair and would collide
-# in the workers' _WORKER_VERIFY_CACHE / _WORKER_UNSUP_CACHE, silently
-# evaluating batch B against registry A's plans. Each build takes the next
-# token.
+# in the workers' verify cache (operators/verify.py _WORKER_VERIFY_CACHE),
+# silently evaluating batch B against registry A's plans. Each build takes
+# the next token.
 _TOKENS = count(1)
 
 # from_df(distributed="auto") compiles on executors only from this many
@@ -142,6 +145,18 @@ class CompiledQuery:
             self._plan = pickle.loads(self.plan_blob)
         return self._plan
 
+    def transient_plan(self) -> Plan:
+        """The plan tree without caching it: a blob-backed query unpickles
+        a copy the caller drops, where ``plan`` would pin one live tree per
+        query on the driver for the registry's lifetime (defeating the
+        blob-backed design) — for driver passes over many queries, e.g.
+        scoring every matched query once."""
+        if self._plan is None and self.plan_blob is not None:
+            import pickle
+
+            return pickle.loads(self.plan_blob)
+        return self._plan
+
     @property
     def approx(self) -> Plan | None:
         if self._approx is None and self.approx_blob is not None:
@@ -205,19 +220,6 @@ def _rebuild_cq(
     )
 
 
-class VerifyPlans(NamedTuple):
-    """The phase-2 verify broadcast and the driver-side qid spaces
-    row-aligned with its columnar value: vid = simple row i, or
-    len(simple_qids) + plan row i (workers receive vids via the JVM
-    broadcast join, never qid strings). ``token`` keys the workers'
-    _WORKER_VERIFY_CACHE (see ``_TOKENS``)."""
-
-    bc: Broadcast
-    token: int
-    simple_qids: list
-    plan_qids: list
-
-
 @dataclass
 class CompiledRegistry:
     queries: dict[str, CompiledQuery] = field(default_factory=dict)
@@ -268,156 +270,24 @@ class CompiledRegistry:
         self._derived_cache[name] = (key, value)
         return value
 
-    def broadcast_verify_plans(self, spark: SparkSession) -> VerifyPlans:
-        """Spark broadcast of the phase-2 verify set, derived per app;
-        value = {"simple_cols": <columnar simple lane>, "plan_cols":
-        <columnar plan blobs>}.
+    def broadcast_verify_plans(self, spark: SparkSession) -> "VerifyPlans":
+        """Spark broadcast of the phase-2 verify set (``gate_verify_ids``),
+        derived per app in the columnar format of
+        ``operators.verify.build_verify_plans``.
 
-        Pickling a 10^5-plan dict costs seconds; the registry outlives many
+        Pickling a 10^5-plan set costs seconds; the registry outlives many
         percolation batches (the reference amortizes its registration-time
         parse the same way), so the broadcast is built once and reused until
-        register/unregister bumps ``version``. Pure term-conjunctions — the
-        bulk of a realistic registry — ship COLUMNAR: one qid list, int64
-        offset arrays, an int32 field-index array and one utf-8 term buffer
-        (``simple_cols``), NOT a dict of per-query tuples. At a 10^6-query
-        registry the dict form unpickled ~8M small objects in EVERY python
-        worker (~800MB resident x workers; under 32 concurrent workers the
-        kernel-bound allocation measured ~110s/worker — BASELINE.md 1M
-        study); the columnar form unpickles as a handful of buffer copies
-        (~13x faster single-threaded, ~4x smaller resident) and the verify
-        UDF runs its containment checks straight off those columnar
-        buffers, decoding no per-query tuple."""
+        register/unregister bumps ``version``."""
+        from ..operators.verify import build_verify_plans
+
         sc = spark.sparkContext
         return self.derived(
             "verify", (sc.applicationId,),
-            lambda token, _prev: self._build_verify_plans(sc, token),
+            lambda token, _prev: build_verify_plans(
+                sc, self, self.gate_verify_ids(), token
+            ),
         )
-
-    def _build_verify_plans(self, sc, token: int) -> VerifyPlans:
-        import gc
-        import pickle
-
-        import numpy as np
-
-        s_qids: list[str] = []
-        s_fields: dict[str, int] = {}
-        need_f: list[int] = []
-        need_t: list[str] = []
-        need_off: list[int] = [0]
-        forb_f: list[int] = []
-        forb_t: list[str] = []
-        forb_off: list[int] = [0]
-        p_qids: list[str] = []
-        p_blobs: list[bytes] = []
-        # pause cyclic GC for the build: the container churn here triggers
-        # gen2 collections that each scan the WHOLE driver heap — at a
-        # 10^7-query registry (10^8-object heap) the build measured 56s vs
-        # ~3s/1M-linear expectation, nearly all collector time. Nothing in
-        # this loop creates cycles; the pause defers, never skips,
-        # collection.
-        _gc_was = gc.isenabled()
-        gc.disable()
-        try:
-            for qid in self.gate_verify_ids():
-                cq = self.queries[qid]
-                req = (
-                    cq.simple_req
-                    if cq.simple_req is not _UNSET
-                    else _simple_required(cq.plan)
-                )
-                if req is not None:
-                    s_qids.append(qid)
-                    for pairs, fs, ts in (
-                        (req[0], need_f, need_t),
-                        (req[1], forb_f, forb_t),
-                    ):
-                        for f, t in pairs:
-                            fs.append(s_fields.setdefault(f, len(s_fields)))
-                            ts.append(t)
-                    need_off.append(len(need_t))
-                    forb_off.append(len(forb_t))
-                else:
-                    # plans ship INDIVIDUALLY pickled: a plan that cannot
-                    # unpickle on a worker (exotic class, bad state) fails only
-                    # its own per-query lookup under the verify UDF's
-                    # try/except, never the whole broadcast load (E10). A
-                    # blob-backed query forwards its executor-pickled bytes
-                    # untouched — the broadcast build is a dict assembly, not
-                    # a 10^5-plan re-pickle.
-                    p_qids.append(qid)
-                    p_blobs.append(
-                        cq.plan_blob
-                        if cq.plan_blob is not None
-                        else pickle.dumps(cq.plan)
-                    )
-
-            def _tbuf(terms: list[str]) -> tuple[bytes, "np.ndarray"]:
-                # one utf-8 buffer + int64 byte offsets. ASCII fast path: one
-                # join+encode; char offsets == byte offsets. Otherwise per-term
-                # encode (byte lengths differ from char lengths).
-                joined = "".join(terms)
-                buf = joined.encode()
-                if len(buf) == len(joined):
-                    lens = np.fromiter(
-                        (len(t) for t in terms), dtype=np.int64, count=len(terms)
-                    )
-                else:
-                    enc = [t.encode() for t in terms]
-                    buf = b"".join(enc)
-                    lens = np.fromiter(
-                        (len(e) for e in enc), dtype=np.int64, count=len(enc)
-                    )
-                off = np.zeros(len(terms) + 1, dtype=np.int64)
-                np.cumsum(lens, out=off[1:])
-                return buf, off
-
-            nt_buf, nt_off = _tbuf(need_t)
-            ft_buf, ft_off = _tbuf(forb_t)
-            # qid lists deliberately stay OUT of the broadcast value: workers
-            # never see query-id strings. The candidate pipeline maps
-            # query_id -> vid (unified row id: simple rows first, then plan
-            # rows) with a JVM broadcast join — ONE Tungsten hash table per
-            # executor instead of a 10^6-entry python dict (and 1.4M string
-            # allocations) in EVERY worker, which measured ~47s/worker under
-            # 32-way concurrency. VerifyPlans carries the lists
-            # driver-side for the vid-map build.
-            simple_cols = {
-                "fields": list(s_fields),
-                "need_off": np.asarray(need_off, dtype=np.int64),
-                "need_f": np.asarray(need_f, dtype=np.int32),
-                "need_t": nt_buf,
-                "need_t_off": nt_off,
-                "forb_off": np.asarray(forb_off, dtype=np.int64),
-                "forb_f": np.asarray(forb_f, dtype=np.int32),
-                "forb_t": ft_buf,
-                "forb_t_off": ft_off,
-            }
-            # plan blobs ship columnar too — ONE buffer + offsets, not a
-            # {qid: bytes} dict: 10^5-10^6 bytes objects unpickling in every
-            # worker measured ~68s/worker under 32-way concurrency; a buffer
-            # is one copy, and a worker slices out only the blobs whose qids
-            # actually become candidates (percolate._pred). Per-query unpickle
-            # isolation is preserved: a corrupt blob still fails only its own
-            # pickle.loads under the verify UDF's per-query try (E10).
-            p_off = np.zeros(len(p_blobs) + 1, dtype=np.int64)
-            if p_blobs:
-                np.cumsum(
-                    np.fromiter(
-                        (len(b) for b in p_blobs),
-                        dtype=np.int64,
-                        count=len(p_blobs),
-                    ),
-                    out=p_off[1:],
-                )
-            plan_cols = {
-                "buf": b"".join(p_blobs),
-                "off": p_off,
-            }
-        finally:
-            if _gc_was:
-                gc.enable()
-        bc = sc.broadcast({"simple_cols": simple_cols, "plan_cols": plan_cols})
-        return VerifyPlans(bc, token, s_qids, p_qids)
 
     def warmup(
         self,

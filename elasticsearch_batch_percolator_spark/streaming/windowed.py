@@ -3,7 +3,8 @@
 The reference's percolation responses are strictly per-batch
 (BatchPercolatorService.java:131-178); trend counts over match streams are
 what its users build downstream. Spark-first, that downstream is ONE
-declarative incremental pipeline — no foreachBatch, no python UDF:
+declarative incremental pipeline — no foreachBatch, and no python UDF
+outside the opt-in hybrid lane below:
 
     tokenize → SLIM atom streams (ts, doc_id, kind, atom): distinct
                unigrams and n-grams, NO token/ngram arrays carried
@@ -26,9 +27,10 @@ Supported query shapes: conjunctions of Term / slop-0-Phrase atoms up to
 the join-verify n-gram cap (must + must_not), bare Terms, MatchAll.
 Wildcards need the per-batch term dictionary and positional queries need
 the evaluator — ``hybrid=True`` runs those (and other token-evaluable
-shapes, e.g. must_not-only bools) through an in-stream
-compiled-predicate Arrow UDF feeding the same windowed aggregate
-(round 4); otherwise they stay on the foreachBatch path
+shapes, e.g. must_not-only bools) in-stream through the phase-2 verify
+UDF of operators/verify.py (the one percolate's python lane uses, over
+its own broadcast of just those queries), feeding the same windowed
+aggregate; otherwise they stay on the foreachBatch path
 (percolate_stream). Range / Nested plans need the full document row and
 are never evaluable from the token stream — they raise (or are skipped
 with ``skip_unsupported``) even under ``hybrid=True``.
@@ -42,21 +44,12 @@ the conjunction check.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.query_plan import Term
 from ..sources.registry import CompiledRegistry, _UNSET, _jv_requirements
-
-# Worker-process cache for the hybrid lane's compiled predicates, same
-# mechanism as percolate._WORKER_VERIFY_CACHE: reached via RUNTIME import
-# inside the UDF (a closure-captured dict is copied per task by
-# cloudpickle and never hits), keyed by (applicationId, plan-unique
-# token), capped at 2 entries. Without it a long-lived stream re-unpickles
-# and re-compiles every unsupported query's predicate in EVERY task of
-# EVERY micro-batch.
-_WORKER_UNSUP_CACHE: dict = {}
-
 
 def _ngrams_expr(n: int) -> str:
     """Distinct contiguous n-grams of the ``tokens`` column (space-joined,
@@ -292,110 +285,57 @@ def windowed_match_counts(
         )
     if hybrid and unsupported:
         # python sub-lane: spans / sloppy phrases / wildcards evaluate
-        # exactly per event through the broadcast compiled-predicate
-        # evaluator (the same verifier percolate's python lane uses), and
-        # their hits join the windowed aggregate as single-satisfied-atom
-        # rows (kind/atom "*" collapses repeated events of one doc, same
-        # as match_all). Per-query isolation: a failing predicate drops
-        # only its own query for that doc.
-        import pickle
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from ..plans.eval_py import compile_predicate_fields
+        # exactly per event through the shared verify UDF
+        # (operators/verify.py, the evaluator percolate's python lane
+        # uses) against every unsupported query, and their hits join the
+        # windowed aggregate as single-satisfied-atom rows (kind/atom "*"
+        # collapses repeated events of one doc, same as match_all).
+        # Per-query isolation: a failing predicate drops only its own
+        # query for that doc.
+        from ..operators.verify import build_verify_plans, verify_udf
         from ..plans.query_plan import fields_of
-
-        def _blob(cq):
-            # blob-backed queries already carry executor-pickled bytes +
-            # a precomputed field set — forward them without unpickling
-            b = cq.plan_blob if cq.plan_blob is not None else pickle.dumps(cq.plan)
-            fs = cq.fields_fs if cq.fields_fs is not None else fields_of(cq.plan)
-            return (b, tuple(sorted(fs)))
 
         # the broadcast is derived per (app, registry version, unsupported
         # set) — a driver that rebuilds the windowed query per restart /
         # registry hot-swap would otherwise accumulate one full plan-blob
         # broadcast per call for the app's lifetime
-        def build(token, _prev):
-            blobs = {qid: _blob(registry.queries[qid]) for qid in unsupported}
-            return spark.sparkContext.broadcast(blobs), token
-
-        app = spark.sparkContext.applicationId
-        bc_plans, tok = registry.derived(
-            "windowed_unsupported", (app, tuple(sorted(unsupported))), build
+        sc = spark.sparkContext
+        verify = registry.derived(
+            "windowed_unsupported",
+            (sc.applicationId, tuple(sorted(unsupported))),
+            lambda token, _prev: build_verify_plans(
+                sc, registry, unsupported, token
+            ),
         )
-        # process-persistent worker cache key (see _WORKER_UNSUP_CACHE):
-        # the build's token is stable across every task and micro-batch of
-        # every stream reusing this broadcast, so the worker memo hits; a
-        # hot-swap builds a new broadcast + token and the len>=2 eviction
-        # drops the stale entry
-        _ck = (app, tok)
-
-        # NB: no pd.Series annotations — pandas is function-local here and
-        # pandas_udf resolves annotation strings at definition time
-        @F.pandas_udf(T.ArrayType(T.StringType()))
-        def eval_unsup(tok_s, id_s):
-            # the cache dict MUST be resolved via runtime import — closing
-            # over _WORKER_UNSUP_CACHE would copy it per task (the memo
-            # would never hit across tasks/micro-batches)
-            from elasticsearch_batch_percolator_spark.streaming import (
-                windowed as _wm,
+        # every field those queries read views the stream's one tokens
+        # column (view 0); the reserved _id field reads the event's doc
+        # id as a string scalar (view 1), as percolate's value___id does.
+        # Blob-backed queries carry a precomputed field set.
+        fields = set()
+        for qid in unsupported:
+            cq = registry.queries[qid]
+            fields |= (
+                cq.fields_fs if cq.fields_fs is not None else fields_of(cq.plan)
             )
-
-            cache = _wm._WORKER_UNSUP_CACHE
-            st = cache.get(_ck)
-            if st is None:
-                while len(cache) >= 2:
-                    cache.pop(next(iter(cache)))
-                st = (bc_plans.value, {})
-                cache[_ck] = st
-                # worker-lifetime state: freeze it out of the GC
-                # generations (see percolate._bc_state — a growing memo
-                # over a small tracked set otherwise fires near-continuous
-                # full gen2 collections)
-                import gc
-
-                gc.freeze()
-            plans, memo = st
-
-            def pred_of(qid):
-                p = memo.get(qid)
-                if p is None:
-                    blob, flds = plans[qid]
-                    p = (compile_predicate_fields(pickle.loads(blob)), flds)
-                    memo[qid] = p
-                return p
-
-            out = []
-            for toks, did in zip(tok_s, id_s):
-                tl = list(toks) if toks is not None else []
-                view = (tl, set(tl))
-                hit = []
-                for qid in plans:
-                    try:
-                        p, flds = pred_of(qid)
-                        # reserved _id view: the event's doc id (string),
-                        # for Ids predicates; every other field gets the
-                        # content-token view
-                        fm = {f: view for f in flds if f != "_id"}
-                        if "_id" in flds:
-                            fm["_id"] = did
-                        if p(fm):
-                            hit.append(qid)
-                    except Exception:
-                        pass
-                out.append(hit)
-            return pd.Series(out)
-
+        qf_to_idx = dict.fromkeys(fields, 0)
+        qf_to_idx["_id"] = 1
+        # the count is not exposed yet (ROADMAP direction 6)
+        verify_doc, _errors = verify_udf(spark, verify, qf_to_idx, set(), {1})
+        qids = verify.simple_qids + verify.plan_qids
         parts.append(
             base.select(
                 "ts", "doc_id",
                 F.explode(
-                    eval_unsup("tokens", F.col("doc_id").cast("string"))
-                ).alias("query_id"),
+                    verify_doc(
+                        F.lit(np.arange(len(qids), dtype=np.int32)),
+                        F.col("tokens"),
+                        F.col("doc_id").cast("string"),
+                    )
+                ).alias("vid"),
             ).select(
-                "ts", "doc_id", "query_id",
+                "ts", "doc_id",
+                # hit vids map back to query ids JVM-side
+                F.element_at(F.lit(qids), F.col("vid") + 1).alias("query_id"),
                 F.lit(False).alias("is_forbid"),
                 F.lit(1).alias("n_need"),
                 F.lit("*").alias("kind"),

@@ -160,11 +160,10 @@ def test_per_query_error_isolation(spark):
         query_id="boom", plan=BoomPlan(), approx=None, groups=None, needs_verify=True
     )
     docs_df = spark.createDataFrame([(0, "a b"), (1, "c d")], "doc_id long, content string")
-    got = {
-        (int(r["doc_id"]), r["query_id"])
-        for r in percolate(spark, docs_df, reg).matches.collect()
-    }
+    res = percolate(spark, docs_df, reg)
+    got = {(int(r["doc_id"]), r["query_id"]) for r in res.matches.collect()}
     assert got == {(0, "ok")}  # boom dropped everywhere, batch succeeded
+    assert res.verify_errors == 2  # boom raised once per doc, counted
 
 
 def test_registry_save_load_roundtrip(spark, tmp_path):
@@ -354,7 +353,7 @@ def test_distributed_registry_compile_equals_driver(spark):
         assert _pickle.loads(blob).to_dict() == driver.queries[qid].plan.to_dict()
     # columnar round-trip: every simple row decodes back to the driver's
     # _simple_required tuples
-    from elasticsearch_batch_percolator_spark.operators.percolate import _sdecode
+    from elasticsearch_batch_percolator_spark.operators.verify import _sdecode
 
     for i, qid in enumerate(s_qids):
         assert _sdecode(bc.value["simple_cols"], i) == _simple_required(
@@ -479,11 +478,11 @@ def test_worker_verify_cache_persists_across_tasks(spark):
     def probe(_):
         import os
 
-        from elasticsearch_batch_percolator_spark.operators import percolate as pm
+        from elasticsearch_batch_percolator_spark.operators import verify as vm
 
         key = "__test_cache_probe__"
-        pm._WORKER_VERIFY_CACHE[key] = pm._WORKER_VERIFY_CACHE.get(key, 0) + 1
-        yield (os.getpid(), pm._WORKER_VERIFY_CACHE[key])
+        vm._WORKER_VERIFY_CACHE[key] = vm._WORKER_VERIFY_CACHE.get(key, 0) + 1
+        yield (os.getpid(), vm._WORKER_VERIFY_CACHE[key])
 
     try:
         seen = []
@@ -503,10 +502,10 @@ def test_worker_verify_cache_persists_across_tasks(spark):
         # scrub the probe key from reused workers
         def scrub(_):
             from elasticsearch_batch_percolator_spark.operators import (
-                percolate as pm,
+                verify as vm,
             )
 
-            pm._WORKER_VERIFY_CACHE.pop("__test_cache_probe__", None)
+            vm._WORKER_VERIFY_CACHE.pop("__test_cache_probe__", None)
             yield 0
 
         sc.parallelize(range(64), 64).mapPartitions(scrub).count()

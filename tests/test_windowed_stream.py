@@ -128,12 +128,16 @@ def test_windowed_counts_randomized_vs_python_model(spark):
     assert got
 
 
-def test_windowed_hybrid_randomized_vs_eval_plan(spark):
+@pytest.mark.parametrize("compile_on", ["driver", "distributed"])
+def test_windowed_hybrid_randomized_vs_eval_plan(spark, compile_on):
     """Randomized registries spanning BOTH lanes — atom-stream shapes plus
     hybrid-only shapes (must_not-only bools, wildcards, span_near, sloppy
     phrases) and duplicate doc events — checked against eval_plan on the
     compiled plans (the engine's own reference evaluator, itself pinned by
-    the Lucene goldens)."""
+    the Lucene goldens). The distributed registry is blob-backed: its
+    executor-pickled plans and precomputed field sets reach the hybrid
+    lane's broadcast without a driver-side compile."""
+    import json
     import random
 
     from elasticsearch_batch_percolator_spark.plans.eval_py import eval_plan
@@ -169,7 +173,15 @@ def test_windowed_hybrid_randomized_vs_eval_plan(spark):
             qs[f"q{j}"] = {"phrase": {"field": "content",
                                       "terms": [rng.choice(vocab), rng.choice(vocab)],
                                       "slop": rng.randint(1, 2)}}
-    reg = CompiledRegistry.from_rows(list(qs.items()))
+    if compile_on == "driver":
+        reg = CompiledRegistry.from_rows(list(qs.items()))
+    else:
+        qdf = spark.createDataFrame(
+            [(q, json.dumps(d)) for q, d in qs.items()],
+            "query_id string, query_json string",
+        ).repartition(4)
+        reg = CompiledRegistry.from_df(qdf, distributed=True)
+        assert all(cq.plan_blob is not None for cq in reg.queries.values())
 
     df = spark.createDataFrame(
         [(i, c, f"2026-02-02 00:{m:02d}:30") for i, c, m in docs + dups],
@@ -510,12 +522,14 @@ def test_windowed_hybrid_broadcast_cached_per_registry_version(spark):
         spark, docs, reg, window_duration="10 minutes", watermark=None,
         hybrid=True,
     )
-    _, (bc1, tok1) = reg._derived_cache["windowed_unsupported"]
+    _, vp1 = reg._derived_cache["windowed_unsupported"]
+    bc1, tok1 = vp1.bc, vp1.token
     out2 = windowed_match_counts(
         spark, docs, reg, window_duration="10 minutes", watermark=None,
         hybrid=True,
     )
-    _, (bc2, tok2) = reg._derived_cache["windowed_unsupported"]
+    _, vp2 = reg._derived_cache["windowed_unsupported"]
+    bc2, tok2 = vp2.bc, vp2.token
     assert bc2 is bc1 and tok2 == tok1  # reused, not re-broadcast
     assert out1.collect() and out2.collect()
     # a version bump invalidates: new broadcast, new worker token
@@ -524,5 +538,6 @@ def test_windowed_hybrid_broadcast_cached_per_registry_version(spark):
         spark, docs, reg, window_duration="10 minutes", watermark=None,
         hybrid=True,
     )
-    _, (bc3, tok3) = reg._derived_cache["windowed_unsupported"]
+    _, vp3 = reg._derived_cache["windowed_unsupported"]
+    bc3, tok3 = vp3.bc, vp3.token
     assert bc3 is not bc1 and tok3 != tok1
